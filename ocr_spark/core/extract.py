@@ -1,7 +1,7 @@
 """Unified per-document extraction entry: bytes in → structured result out.
 
 This is the pure-Python core the Spark job ships via --py-files and invokes
-from ``mapInPandas`` (one call per row, many rows per Arrow batch — the
+from ``mapInArrow`` (one call per row, many rows per Arrow batch — the
 *batching* is Arrow's; this function is the per-document kernel).
 
 Payload routing:

@@ -91,7 +91,7 @@ def _case_sensitive_default() -> bool:
     """Read the env flag at CALL time, not import time: an executor's
     module import happens before any job-specific env could land, and
     the extraction kernel propagates the driver's value by setting the
-    worker env (extraction.py captures it in the mapInPandas closure)."""
+    worker env (extraction.py captures it in the mapInArrow closure)."""
     return os.environ.get("OCR_SPARK_SYMSPELL_CASE",
                           "insensitive") == "sensitive"
 

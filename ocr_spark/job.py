@@ -1,4 +1,4 @@
-"""End-to-end extraction job: Iceberg-shim scan → salted mapInPandas
+"""End-to-end extraction job: Iceberg-shim scan → salted mapInArrow
 extraction → snapshot write → per-wave checkpoint/lineage/metrics commit.
 
 Execution model (SURVEY.md §3.4): one Catalyst-planned job per commit wave —
@@ -6,7 +6,7 @@ Execution model (SURVEY.md §3.4): one Catalyst-planned job per commit wave —
     input snapshot scan (url, html only — column pruning)
       → [resume filter: skip checkpointed buckets — partition-level skip]
       → salted repartition                    [the ONE shuffle]
-      → mapInPandas(extract)                  [Arrow boundary]
+      → mapInArrow(extract)                   [Arrow boundary]
       → snapshot write partitioned by bucket  [shuffle-free]
       → bookkeeping appends                   [JVM-side aggregation]
 
@@ -28,7 +28,7 @@ from ocr_spark.operators.bookkeeping import (
     checkpointed_out_snapshots, commit_bucket_bookkeeping, completed_buckets,
 )
 from ocr_spark.operators.extraction import (
-    DEFAULT_BIG_THRESHOLD, DEFAULT_BUCKETS, run_extraction,
+    DEFAULT_BIG_THRESHOLD, DEFAULT_BUCKETS, run_extraction, url_bucket,
 )
 from ocr_spark.sources import iceberg_shim as shim
 
@@ -56,6 +56,25 @@ def _roll_forward_orphans(spark: SparkSession, work_dir: str) -> int:
             shim.publish_snapshot(root, sid)
             published += 1
     return published
+
+
+def _check_n_buckets(work_dir: str, n_buckets: int) -> None:
+    """Refuse to resume under a different bucket count. Checkpoints name
+    buckets by number, and a bucket number means a different url set
+    under another modulus: a 32-bucket resume of a partial 64-bucket run
+    would treat docs with ``h mod 64`` in 32..47 as done and never
+    extract them. Every wave manifest (and a compaction's) records the
+    value, so the CURRENT output snapshot carries it."""
+    root = output_root(work_dir)
+    sid = shim.current_snapshot_id(root)
+    if sid is None:
+        return
+    recorded = shim.read_manifest(root, sid).get("n_buckets")
+    if recorded is not None and recorded != n_buckets:
+        raise ValueError(
+            f"n_buckets={n_buckets} does not match n_buckets={recorded} "
+            f"recorded by the committed output under {root}; resume with "
+            f"n_buckets={recorded}")
 
 
 def run_extraction_job(spark: SparkSession, input_table_root: str,
@@ -137,6 +156,7 @@ def _run_chain(spark: SparkSession, input_table_root: str, work_dir: str,
     from ocr_spark.sources import PAGES_SCHEMA
 
     rolled_forward = _roll_forward_orphans(spark, work_dir)
+    _check_n_buckets(work_dir, n_buckets)
     done_by_sid = completed_buckets_by_snapshot(spark, work_dir)
     run_id = uuid.uuid4().hex[:12]
     combined: dict = {"run_id": run_id, "input_snapshot": input_sid,
@@ -154,29 +174,36 @@ def _run_chain(spark: SparkSession, input_table_root: str, work_dir: str,
         if respect_robots:
             pages = pages.filter(
                 ~F.col("html").cast("string").rlike(_ROBOTS_NOINDEX))
+        routed = None
         if route_filter:
             from ocr_spark.plans.htmlfeat import route_for_html
-            # route census FIRST (the streaming router_sink's
-            # nothing-silently-vanishes discipline): condemned pages
+            # the router runs ONCE per snapshot: census, kept set and
+            # every wave read the persisted route column (the streaming
+            # router_sink's discipline). Census first — condemned pages
             # never reach the kernel, but their counts are committed
-            # per snapshot — idempotent overwrite keyed on sid
-            census = (pages
-                      .groupBy(route_for_html(F.col("html"))
-                               .alias("route"))
+            # per snapshot (idempotent overwrite keyed on sid)
+            routed = pages.withColumn(
+                "route", route_for_html(F.col("html"))).persist()
+            census = (routed.groupBy("route")
                       .agg(F.count("*").cast("long").alias("n_pages"),
                            F.sum(F.length("html")).cast("long")
                            .alias("bytes_in")))
             census.coalesce(1).write.mode("overwrite").parquet(
                 os.path.join(work_dir, "route_census",
                              f"snapshot={sid}"))
-            pages = pages.filter(route_for_html(F.col("html"))
-                                 .isin("extract", "oversized"))
-        s = _run_waves(
-            spark, pages, work_dir, sid, [data_dir],
-            run_id=run_id, done=done_by_sid.get(sid, set()),
-            partitions=partitions, big_partitions=big_partitions,
-            big_threshold=big_threshold, n_buckets=n_buckets, waves=waves,
-            fail_after_waves=fail_after_waves, fail_point=fail_point)
+            pages = routed.filter(F.col("route")
+                                  .isin("extract", "oversized"))
+        try:
+            s = _run_waves(
+                spark, pages, work_dir, sid, [data_dir],
+                run_id=run_id, done=done_by_sid.get(sid, set()),
+                partitions=partitions, big_partitions=big_partitions,
+                big_threshold=big_threshold, n_buckets=n_buckets,
+                waves=waves, fail_after_waves=fail_after_waves,
+                fail_point=fail_point)
+        finally:
+            if routed is not None:
+                routed.unpersist()
         combined["output_snapshots"] += s["output_snapshots"]
         combined["buckets_skipped"] += s["buckets_skipped"]
         combined["buckets_processed"] += s["buckets_processed"]
@@ -211,10 +238,7 @@ def _run_waves(spark: SparkSession, pages: DataFrame, work_dir: str,
     for w, bucket_group in enumerate(wave_groups):
         if not bucket_group:
             continue
-        wave_pages = pages.withColumn(
-            "bucket",
-            F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int"),
-        ).filter(F.col("bucket").isin(bucket_group)).drop("bucket")
+        wave_pages = pages.filter(url_bucket(n_buckets).isin(bucket_group))
 
         extracted = run_extraction(
             wave_pages, partitions=partitions, big_partitions=big_partitions,
@@ -227,6 +251,7 @@ def _run_waves(spark: SparkSession, pages: DataFrame, work_dir: str,
         out_sid = shim.prepare_snapshot(
             extracted, output_root(work_dir), partition_by=["bucket"],
             snapshot_id=f"{input_sid[:8]}-{run_id}-w{w}",
+            extra={"n_buckets": n_buckets},
         )
         if fail_after_waves is not None and (w + 1) >= fail_after_waves \
                 and fail_point == "after_stage":
@@ -290,6 +315,7 @@ def run_incremental_extraction_job(spark: SparkSession,
         raise FileNotFoundError(f"no input snapshot at {input_table_root}")
 
     from ocr_spark.operators.bookkeeping import completed_buckets_by_snapshot
+    _check_n_buckets(work_dir, n_buckets)
     done_by_sid = completed_buckets_by_snapshot(spark, work_dir)
 
     def fully_done(sid: str) -> bool:
@@ -363,7 +389,10 @@ def compact_snapshots(spark: SparkSession, work_dir: str) -> dict:
     new_sid = shim.prepare_snapshot(
         df, root, partition_by=["bucket"],
         snapshot_id=f"compact-{uuid.uuid4().hex[:12]}",
-        parent_id=None, extra={"compacted_from": sorted(set(absorbed))})
+        parent_id=None, extra={
+            "compacted_from": sorted(set(absorbed)),
+            "n_buckets": shim.read_manifest(root, sids[-1])
+                         .get("n_buckets")})
     shim.publish_snapshot(root, new_sid)
     return {"compacted": len(sids), "snapshot": new_sid}
 

@@ -1,10 +1,18 @@
-"""The extraction operator: salted repartition → Arrow-batched mapInPandas.
+"""The extraction operator: salted repartition → Arrow-batched mapInArrow.
 
 This is the Spark-side realization of SURVEY.md §3.4 — the reference's
-entire per-document pipeline collapses into ONE mapInPandas stage because
+entire per-document pipeline collapses into ONE mapInArrow stage because
 every operator from layout detection onward is per-document. Exactly one
 shuffle happens (the explicit salted repartition); the write is
 shuffle-free.
+
+One Python boundary: ``extract_pages`` is the only way a page reaches
+the kernel — the batch job (through ``run_extraction``), the query plans
+and every streaming sink call it. mapInArrow reads the input columns
+straight off each RecordBatch and builds the output as pa.arrays, so no
+pandas conversion happens on either side of the boundary
+(BENCH/arrow_impl.json measured a mapInPandas runner at parity).
+``url_bucket`` is the one spelling of the url-hash bucket decision.
 
 Skew control (north rule, SURVEY.md §4.2.1): AQE rebalances by *bytes*, not
 by Python-kernel *cost*, so the skew handling is explicit job design:
@@ -27,9 +35,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType, DoubleType, IntegerType, LongType, StringType, StructField,
@@ -38,50 +44,6 @@ from pyspark.sql.types import (
 
 DEFAULT_BIG_THRESHOLD = 2_000_000  # bytes of html → "oversized" route
 DEFAULT_BUCKETS = 64               # url-hash buckets: checkpoint/commit unit
-
-# JVM-side boilerplate pre-scan (OCR_SPARK_JVM_PRESCAN=1): delete
-# comments / <script> / <style> spans BEFORE the Arrow boundary, so the
-# bytes that dominate real Common-Crawl pages (scripts are commonly well
-# over half the html) never reach the Python worker. MEASURED VERDICT
-# (BENCH/prescan.json): a net wall-time LOSS on this host at both 12 KB
-# and 48 KB of script per page — the kernel's rawtext skip is cheaper
-# than the JVM regexp_replace — so the mode stays default-OFF and is
-# claimed only as a bytes-in-flight reduction for plans that shuffle or
-# persist pages between stages. One alternation
-# regex applied left-to-right replicates the kernel scanner's own
-# left-to-right region discovery (html_extract._scan_fast): at each
-# position the leftmost of comment-open / script-open / style-open wins,
-# and each region ends exactly where the scanner ends it (first '-->',
-# first '</script\\s*>' / '</style\\s*>' — rawtext semantics, no tag
-# nesting). Since every deleted span is one the kernel never emits text
-# from, extraction output is unchanged — pinned byte-identical over the
-# golden corpus + adversarial cases by tests/test_webops.py. Known
-# residual edge (documented, not reachable by the kernel's own
-# semantics): a comment INSIDE a quoted attribute value is deleted here
-# but treated as attribute text by the kernel; if that attribute was a
-# class/id whose boilerplate-ness depended on the comment bytes, the
-# block's classification could differ. Default therefore stays OFF.
-# Each branch uses the "unrolled loop" form ([^x]* runs + guarded x)
-# instead of a lazy .*? — same first-close semantics, but the Java regex
-# engine consumes long script bodies in linear chunk scans rather than
-# re-attempting the close-tag match at every character.
-PRESCAN_PAT = (
-    r"(?is)<!--[^-]*(?:-(?!->)[^-]*)*-->"
-    r"|<script\b[^>]*>[^<]*(?:<(?!/script\s*>)[^<]*)*</script\s*>"
-    r"|<style\b[^>]*>[^<]*(?:<(?!/style\s*>)[^<]*)*</style\s*>"
-)
-
-
-def jvm_boilerplate_prescan(html: Column) -> Column:
-    """binary/string html → string html with kernel-invisible spans
-    removed, entirely JVM-side (whole-stage codegen regexp_replace).
-
-    Non-HTML documents (fixture payloads, identified by the same
-    ``%OCRFIX1\\n`` magic the kernel routes on) pass through untouched —
-    a regex hit inside a fixture's JSON body would corrupt it."""
-    s = html.cast("string")
-    return F.when(s.startswith("%OCRFIX1\n"), s) \
-            .otherwise(F.regexp_replace(s, PRESCAN_PAT, ""))
 
 EXTRACT_RESULT_SCHEMA = StructType([
     StructField("url", StringType(), False),
@@ -129,20 +91,24 @@ MATCH_STRUCT = ArrayType(StructType([
 ]))
 
 
+def url_bucket(n_buckets: int = DEFAULT_BUCKETS) -> Column:
+    """The url's output bucket, ``pmod(xxhash64(url), n_buckets)``: the
+    checkpoint/commit unit. The one place the bucket decision is spelled,
+    so the job's wave filter and every written ``bucket`` column agree."""
+    return F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int")
+
+
 def salted_repartition(pages: DataFrame, partitions: int = 128,
                        big_partitions: int = 8,
-                       big_threshold: int = DEFAULT_BIG_THRESHOLD,
-                       n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
+                       big_threshold: int = DEFAULT_BIG_THRESHOLD
+                       ) -> DataFrame:
     """Explicit two-level skew-aware repartition (the job's ONE shuffle).
 
-    Adds ``bucket`` (stable url-hash output bucket, the checkpoint unit) and
-    ``is_big``; returns a frame whose partitions are: P url-hash-spread
-    normal partitions followed by P_big oversized-row partitions.
+    Adds ``is_big``; returns a frame whose partitions are: P_big
+    oversized-row partitions followed by P url-hash-spread normal
+    partitions.
     """
     keyed = pages.withColumn(
-        "bucket",
-        F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int"),
-    ).withColumn(
         # NULL html must route to the normal path (coalesce, not a bare
         # length comparison — NULL > t is NULL, which both filters drop,
         # silently losing the row); the kernel then emits its null_html
@@ -196,10 +162,30 @@ def rehydrate_blocks(text: str, blocks: list[dict]) -> list[dict]:
     return out
 
 
-def _extract_batches_fn(blocks_mode: str):
-    """Build the mapInPandas kernel closure. ``blocks_mode`` is captured
-    in the closure (cloudpickle ships it to executors — no env-var
-    propagation needed on a real cluster).
+def _arrow_result_schema(use_large: bool):
+    """EXTRACT_RESULT_SCHEMA as a pyarrow schema. Spark's mapInArrow
+    validates the returned batches against the DECLARED Spark schema
+    converted with the session's useLargeVarTypes setting, so the
+    string flavor must be captured driver-side and shipped in the
+    closure (the worker cannot read the session conf)."""
+    import pyarrow as pa
+
+    s = pa.large_string() if use_large else pa.string()
+    return pa.schema([
+        ("url", s), ("bucket", pa.int32()), ("kind", s), ("text", s),
+        ("n_pages", pa.int32()), ("n_blocks", pa.int32()),
+        ("n_spans", pa.int32()), ("n_matches", pa.int32()),
+        ("n_blocks_dropped", pa.int32()),
+        ("blocks_json", s), ("spans_json", s), ("matches_json", s),
+        ("error", s), ("bytes_in", pa.int64()),
+        ("extract_ms", pa.float64()),
+    ])
+
+
+def _kernel_fn(blocks_mode: str, use_large: bool):
+    """Build the mapInArrow kernel closure. ``blocks_mode`` and the Arrow
+    string flavor are captured in the closure (cloudpickle ships them to
+    executors — no env-var propagation needed on a real cluster).
 
     Imports stay inside the function so the worker resolves them from the
     --py-files-shipped package, and heavyweight per-executor state (model
@@ -221,8 +207,9 @@ def _extract_batches_fn(blocks_mode: str):
         "OCR_SPARK_CRF_ARTIFACT",        # (mentions.py)
     )}
 
-    def _extract_batches(
-            batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _extract_batches(batches):
+        import pyarrow as pa
+
         for k, v in kernel_env.items():
             if v is not None:
                 os.environ[k] = v
@@ -232,103 +219,15 @@ def _extract_batches_fn(blocks_mode: str):
                 os.environ.pop(k, None)
         from ocr_spark.core.extract import extract_document
 
-        col_names = [f.name for f in EXTRACT_RESULT_SCHEMA]
-
-        for pdf in batches:
-            # column-wise accumulation: pd.DataFrame from dict-of-lists
-            # is ~5× cheaper than from list-of-dicts in this hot path
-            cols: dict[str, list] = {name: [] for name in col_names}
-            has_bucket = "bucket" in pdf.columns
-            urls = pdf["url"].tolist()
-            htmls = pdf["html"].tolist()
-            buckets = pdf["bucket"].tolist() if has_bucket else None
-            for i, (url, raw) in enumerate(zip(urls, htmls)):
-                if isinstance(raw, str):
-                    raw = raw.encode("utf-8")
-                t0 = time.perf_counter()
-                res = extract_document(url, raw)
-                ms = (time.perf_counter() - t0) * 1000.0
-                blocks = (compact_blocks(res.blocks, res.text)
-                          if offsets else res.blocks)
-                cols["url"].append(url)
-                cols["bucket"].append(int(buckets[i]) if buckets is not None
-                                      else None)
-                cols["kind"].append(res.kind)
-                cols["text"].append(res.text)
-                cols["n_pages"].append(res.n_pages)
-                cols["n_blocks"].append(len(res.blocks))
-                cols["n_spans"].append(len(res.spans))
-                cols["n_matches"].append(len(res.matches))
-                cols["n_blocks_dropped"].append(res.n_blocks_dropped)
-                cols["blocks_json"].append(json.dumps(blocks,
-                                                      ensure_ascii=False))
-                cols["spans_json"].append(json.dumps(res.spans,
-                                                     ensure_ascii=False))
-                cols["matches_json"].append(json.dumps(res.matches,
-                                                       ensure_ascii=False))
-                cols["error"].append(res.error)
-                cols["bytes_in"].append(len(raw) if raw is not None else 0)
-                cols["extract_ms"].append(ms)
-            yield pd.DataFrame(cols, columns=col_names)
-
-    return _extract_batches
-
-
-def _arrow_result_schema(use_large: bool):
-    """EXTRACT_RESULT_SCHEMA as a pyarrow schema. Spark's mapInArrow
-    validates the returned batches against the DECLARED Spark schema
-    converted with the session's useLargeVarTypes setting, so the
-    string flavor must be captured driver-side and shipped in the
-    closure (the worker cannot read the session conf)."""
-    import pyarrow as pa
-
-    s = pa.large_string() if use_large else pa.string()
-    return pa.schema([
-        ("url", s), ("bucket", pa.int32()), ("kind", s), ("text", s),
-        ("n_pages", pa.int32()), ("n_blocks", pa.int32()),
-        ("n_spans", pa.int32()), ("n_matches", pa.int32()),
-        ("n_blocks_dropped", pa.int32()),
-        ("blocks_json", s), ("spans_json", s), ("matches_json", s),
-        ("error", s), ("bytes_in", pa.int64()),
-        ("extract_ms", pa.float64()),
-    ])
-
-
-def _extract_batches_arrow_fn(blocks_mode: str, use_large: bool):
-    """mapInArrow twin of ``_extract_batches_fn``: identical kernel
-    loop, but the Arrow boundary is crossed WITHOUT pandas — input
-    columns read straight off the RecordBatch (no block consolidation,
-    no object-Series boxing of multi-MB html bytes), output built as
-    pa.arrays. Same rows, same values, byte-identical text (pinned by
-    tests/test_arrow_impl.py); only the serialization path differs."""
-    offsets = blocks_mode == "offsets"
-    kernel_env = {k: os.environ.get(k) for k in (
-        "OCR_SPARK_SYMSPELL_CASE",
-        "OCR_SPARK_LAYOUT_IMPL", "OCR_SPARK_LAYOUT_ARTIFACT",
-        "OCR_SPARK_OCR_IMPL", "OCR_SPARK_OCR_ARTIFACT",
-        "OCR_SPARK_CRF_IMPL", "OCR_SPARK_CRF_ARTIFACT",
-    )}
-
-    def _extract_batches(batches):
-        import pyarrow as pa
-
-        for k, v in kernel_env.items():
-            if v is not None:
-                os.environ[k] = v
-            else:
-                os.environ.pop(k, None)
-        from ocr_spark.core.extract import extract_document
-
         schema = _arrow_result_schema(use_large)
-        col_names = schema.names
 
         for batch in batches:
-            idx = {n: i for i, n in enumerate(batch.schema.names)}
-            urls = batch.column(idx["url"]).to_pylist()
-            htmls = batch.column(idx["html"]).to_pylist()
-            buckets = (batch.column(idx["bucket"]).to_pylist()
-                       if "bucket" in idx else [None] * len(urls))
-            cols: dict[str, list] = {name: [] for name in col_names}
+            # input columns read straight off the RecordBatch: no pandas
+            # block consolidation, no object-Series boxing of multi-MB html
+            urls = batch.column("url").to_pylist()
+            htmls = batch.column("html").to_pylist()
+            buckets = batch.column("bucket").to_pylist()
+            cols: dict[str, list] = {name: [] for name in schema.names}
             for url, raw, bucket in zip(urls, htmls, buckets):
                 if isinstance(raw, str):
                     raw = raw.encode("utf-8")
@@ -362,66 +261,42 @@ def _extract_batches_arrow_fn(blocks_mode: str, use_large: bool):
     return _extract_batches
 
 
-def run_extraction(pages: DataFrame, partitions: int = 128,
-                   big_partitions: int = 8,
-                   big_threshold: int = DEFAULT_BIG_THRESHOLD,
-                   n_buckets: int = DEFAULT_BUCKETS,
-                   salt: bool = True,
-                   blocks_mode: str | None = None,
-                   jvm_prescan: bool | None = None,
-                   impl: str | None = None) -> DataFrame:
-    """pages(url, warc_ts, html, text, lang) → extracted results DataFrame.
+def extract_pages(pages: DataFrame, n_buckets: int = DEFAULT_BUCKETS,
+                  blocks_mode: str | None = None) -> DataFrame:
+    """pages(url, html, ...) → one EXTRACT_RESULT_SCHEMA row per page.
+
+    The engine's one Python boundary: adds ``bucket`` (``url_bucket``),
+    prunes to the columns the kernel reads, and runs the kernel in one
+    mapInArrow stage. No shuffle — partitioning is the caller's (the
+    batch job salts first via ``run_extraction``; a streaming
+    micro-batch is already bounded).
 
     ``blocks_mode``: 'full' (default) serializes complete block dicts;
     'offsets' emits offsets-only blocks (see ``compact_blocks``) to cut
     the Arrow IPC bytes leaving the Python worker. Defaults from the
     ``OCR_SPARK_BLOCKS_MODE`` env var so bench/driver runs can flip it
     without a code change.
-
-    ``impl`` ('pandas' default, or 'arrow'; env
-    ``OCR_SPARK_EXTRACT_IMPL``): which Python-boundary runner carries
-    the kernel — mapInPandas, or the mapInArrow twin that skips the
-    pandas layer on both sides of the Arrow boundary. Identical rows
-    and byte-identical text either way (tests/test_arrow_impl.py);
-    see BENCH/arrow_impl.json for the measured throughput verdict.
-
-    ``jvm_prescan`` (default off, env ``OCR_SPARK_JVM_PRESCAN=1``):
-    strip comment/script/style spans JVM-side before the Arrow boundary
-    (see ``jvm_boilerplate_prescan``) — cuts Arrow-IN bytes on
-    script-heavy pages with byte-identical extraction output, at a
-    measured net CPU cost (BENCH/prescan.json) — use only when bytes
-    in flight, not CPU, is the constraint. Note
-    ``bytes_in`` / the oversized-row threshold then measure the
-    pre-scanned size (scripts no longer make a row "big", which is
-    exactly right: the Python kernel's cost scales with what IT parses).
     """
     mode = blocks_mode or os.environ.get("OCR_SPARK_BLOCKS_MODE", "full")
-    impl = impl or os.environ.get("OCR_SPARK_EXTRACT_IMPL", "pandas")
-    if impl not in ("pandas", "arrow"):
-        raise ValueError(f"unknown extraction impl {impl!r}: "
-                         "expected 'pandas' or 'arrow'")
-    if jvm_prescan is None:
-        jvm_prescan = os.environ.get("OCR_SPARK_JVM_PRESCAN") == "1"
-    if jvm_prescan:
-        pages = pages.withColumn("html",
-                                 jvm_boilerplate_prescan(F.col("html")))
-    src = (salted_repartition(pages, partitions, big_partitions,
-                              big_threshold, n_buckets)
-           if salt else pages.withColumn(
-               "bucket",
-               F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int")))
-    # column pruning: the kernel only needs url/html/bucket — select BEFORE
-    # mapInPandas so Arrow never serializes warc_ts/text/lang to Python.
-    src = src.select("url", "html", "bucket")
-    if impl == "arrow":
-        spark = src.sparkSession
-        use_large = str(spark.conf.get(
-            "spark.sql.execution.arrow.useLargeVarTypes",
-            "false")).lower() == "true"
-        return src.mapInArrow(_extract_batches_arrow_fn(mode, use_large),
-                              schema=EXTRACT_RESULT_SCHEMA)
-    return src.mapInPandas(_extract_batches_fn(mode),
-                           schema=EXTRACT_RESULT_SCHEMA)
+    use_large = str(pages.sparkSession.conf.get(
+        "spark.sql.execution.arrow.useLargeVarTypes",
+        "false")).lower() == "true"
+    src = pages.select("url", "html", url_bucket(n_buckets).alias("bucket"))
+    return src.mapInArrow(_kernel_fn(mode, use_large),
+                          schema=EXTRACT_RESULT_SCHEMA)
+
+
+def run_extraction(pages: DataFrame, partitions: int = 128,
+                   big_partitions: int = 8,
+                   big_threshold: int = DEFAULT_BIG_THRESHOLD,
+                   n_buckets: int = DEFAULT_BUCKETS,
+                   blocks_mode: str | None = None) -> DataFrame:
+    """pages(url, warc_ts, html, text, lang) → extracted results DataFrame:
+    the salted repartition (the ONE shuffle) followed by ``extract_pages``.
+    """
+    return extract_pages(
+        salted_repartition(pages, partitions, big_partitions, big_threshold),
+        n_buckets=n_buckets, blocks_mode=blocks_mode)
 
 
 def with_typed_structs(extracted: DataFrame) -> DataFrame:

@@ -4,7 +4,7 @@
 deterministic boilerplate-laden MULTI-BLOCK HTML page (gen/wrap.py:
 title + optional section heading + document text + optional closing
 paragraph, 2-5 content blocks per page), push it through the full salted
-mapInPandas extraction pipeline, and return (url, text). The DuckDB
+mapInArrow extraction pipeline, and return (url, text). The DuckDB
 oracle recomputes the expected extracted text from (doc_id, text) alone
 — so the driver's value-hash compare *is* the north rule's
 byte-identical-text gate, executed end-to-end through Spark.

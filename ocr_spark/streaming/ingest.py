@@ -9,8 +9,9 @@ Spark-native incremental path a production crawl ingest would use:
     driven with ``Trigger.AvailableNow``: each invocation processes
     exactly the files that arrived since the last run, exactly once,
     tracked by Spark's own streaming checkpoint (offsets + commits).
-    The transformation is the SAME salted-partition-free mapInPandas
-    extraction kernel as the batch job — streaming micro-batches are
+    The transformation is the batch job's own Python boundary,
+    ``extract_pages`` (one mapInArrow stage, same ``bucket`` column),
+    without its salted repartition — streaming micro-batches are
     already bounded, so the explicit two-level salting of the batch job
     is replaced by ``maxFilesPerTrigger``-bounded batches.
   * ``stream_page_metrics`` — event-time windowed aggregation with a
@@ -36,6 +37,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from ocr_spark.operators.extraction import extract_pages
 from ocr_spark.sources import PAGES_SCHEMA
 
 HOST_STATE_SCHEMA = StructType([
@@ -68,14 +70,8 @@ def stream_extract(spark: SparkSession, input_dir: str, output_dir: str,
     bounded micro-batches, then stops — rerunning after new files land
     processes ONLY the new files (exactly-once via the streaming
     checkpoint). Returns the query handle (caller awaits termination)."""
-    from ocr_spark.operators.extraction import (
-        EXTRACT_RESULT_SCHEMA, _extract_batches_fn,
-    )
-
     pages = read_pages_stream(spark, input_dir)
-    extracted = pages.select("url", "html").withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(64)).cast("int")
-    ).mapInPandas(_extract_batches_fn("full"), schema=EXTRACT_RESULT_SCHEMA)
+    extracted = extract_pages(pages)
 
     return (extracted.writeStream
             .format("parquet")
@@ -104,17 +100,11 @@ def stream_extract_dedup(spark: SparkSession, input_dir: str,
     by the batch layer's exact dedup (plans/queries.py
     docs_exact_dedup / docs_dedup_keepers) — the classic
     streaming-approximate + batch-exact split."""
-    from ocr_spark.operators.extraction import (
-        EXTRACT_RESULT_SCHEMA, _extract_batches_fn,
-    )
-
     pages = read_pages_stream(spark, input_dir)
     deduped = (pages
                .withWatermark("warc_ts", dedup_window)
                .dropDuplicatesWithinWatermark(["url"]))
-    extracted = deduped.select("url", "html").withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(64)).cast("int")
-    ).mapInPandas(_extract_batches_fn("full"), schema=EXTRACT_RESULT_SCHEMA)
+    extracted = extract_pages(deduped)
 
     return (extracted.writeStream
             .format("parquet")
@@ -142,14 +132,8 @@ def stream_extract_with_lineage(spark: SparkSession, input_dir: str,
         StructType as _S,
     )
 
-    from ocr_spark.operators.extraction import (
-        EXTRACT_RESULT_SCHEMA, _extract_batches_fn,
-    )
-
     pages = read_pages_stream(spark, input_dir)
-    extracted = pages.select("url", "html").withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(64)).cast("int")
-    ).mapInPandas(_extract_batches_fn("full"), schema=EXTRACT_RESULT_SCHEMA)
+    extracted = extract_pages(pages)
 
     # batch_id lives in the partition directory name, not the data —
     # partition discovery restores it on read without a column clash
@@ -259,7 +243,6 @@ def _update_host_state_fn(ttl_ms: int | None):
     callback — the state store stays bounded by the *active* host
     population instead of growing monotonically with every host ever
     seen (the one unbounded-state surface flagged in round 1)."""
-
     def update(key: tuple, pdfs: Iterator[pd.DataFrame],
                state: GroupState) -> Iterator[pd.DataFrame]:
         if ttl_ms is not None and state.hasTimedOut:
@@ -364,14 +347,8 @@ def stream_extract_near_dup(spark: SparkSession, input_dir: str,
     normal Spark table, pruned by the bucket join and the batch
     partition filter, never the raw text); batch-internal duplicates
     are collapsed within the batch first (cheapest work wins)."""
-    from ocr_spark.operators.extraction import (
-        EXTRACT_RESULT_SCHEMA, _extract_batches_fn,
-    )
-
     pages = read_pages_stream(spark, input_dir)
-    extracted = pages.select("url", "html").withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(64)).cast("int")
-    ).mapInPandas(_extract_batches_fn("full"), schema=EXTRACT_RESULT_SCHEMA)
+    extracted = extract_pages(pages)
 
     return (extracted.writeStream
             .foreachBatch(near_dup_sink(output_dir, sigstore_dir,
@@ -498,14 +475,8 @@ def stream_wet_export(spark: SparkSession, input_dir: str,
     narrow string build into an append-only text sink — Structured
     Streaming's checkpoint gives exactly-once file output natively
     (the manifest-tracked file sink), no foreachBatch needed."""
-    from ocr_spark.operators.extraction import (
-        EXTRACT_RESULT_SCHEMA, _extract_batches_fn,
-    )
-
     pages = read_pages_stream(spark, input_dir)
-    extracted = pages.select("url", "html").withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(64)).cast("int")
-    ).mapInPandas(_extract_batches_fn("full"), schema=EXTRACT_RESULT_SCHEMA)
+    extracted = extract_pages(pages)
     ok = extracted.filter(F.col("error").isNull()
                           & F.col("text").isNotNull())
     clen = F.octet_length("text")
@@ -596,17 +567,12 @@ def stream_quality_gate(spark: SparkSession, input_dir: str,
     columns and verdict (the audit row), not just the survivors — the
     downstream sink filters on ``keep``. Everything past extraction
     is a narrow JVM map; the parquet sink is natively exactly-once."""
-    from ocr_spark.operators.extraction import (
-        EXTRACT_RESULT_SCHEMA, _extract_batches_fn,
-    )
     from ocr_spark.plans.dataops import (
         gopher_gate_frame, langid_hit_cols, langid_pred_col,
     )
 
     pages = read_pages_stream(spark, input_dir)
-    extracted = pages.select("url", "html").withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(64)).cast("int")
-    ).mapInPandas(_extract_batches_fn("full"), schema=EXTRACT_RESULT_SCHEMA)
+    extracted = extract_pages(pages)
     ok = extracted.filter(F.col("error").isNull()
                           & F.col("text").isNotNull())
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
@@ -660,9 +626,6 @@ def psi_sink(reference_dir: str, out_dir: str):
     trains anything."""
     import os as _os
 
-    from ocr_spark.operators.extraction import (
-        EXTRACT_RESULT_SCHEMA, _extract_batches_fn,
-    )
     from ocr_spark.plans.curation import (
         PSI_BINS, classifier_score_frame,
     )
@@ -670,10 +633,7 @@ def psi_sink(reference_dir: str, out_dir: str):
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         ref = spark.read.parquet(reference_dir)  # ≤ PSI_BINS rows
-        extracted = batch_df.select("url", "html").withColumn(
-            "bucket", F.pmod(F.xxhash64("url"), F.lit(64)).cast("int")
-        ).mapInPandas(_extract_batches_fn("full"),
-                      schema=EXTRACT_RESULT_SCHEMA)
+        extracted = extract_pages(batch_df)
         ok = extracted.filter(F.col("error").isNull()
                               & F.col("text").isNotNull()
                               & (F.length("text") > 0))
@@ -784,14 +744,8 @@ def stream_extract_dlq(spark: SparkSession, input_dir: str,
     violating rows (extract errors, empty text, missing blocks, bad
     byte accounting) to the quarantine table with their reason.
     Exactly-once on both sides via batch_id-keyed overwrite commits."""
-    from ocr_spark.operators.extraction import (
-        EXTRACT_RESULT_SCHEMA, _extract_batches_fn,
-    )
-
     pages = read_pages_stream(spark, input_dir)
-    extracted = pages.select("url", "html").withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(64)).cast("int")
-    ).mapInPandas(_extract_batches_fn("full"), schema=EXTRACT_RESULT_SCHEMA)
+    extracted = extract_pages(pages)
     return (extracted.writeStream
             .foreachBatch(dlq_sink(output_dir, quarantine_dir))
             .option("checkpointLocation", checkpoint_dir)
@@ -858,15 +812,16 @@ def stream_extract_validated(spark: SparkSession, input_dir: str,
     the loop that dlq_sink's per-row routing leaves open: a
     systemically bad batch must not promote even one row). Gate
     verdicts land in the lineage table either way; exactly-once on
-    both sides via batch_id-keyed overwrite commits."""
-    from ocr_spark.operators.extraction import (
-        EXTRACT_RESULT_SCHEMA, _extract_batches_fn,
-    )
+    both sides via batch_id-keyed overwrite commits.
 
+    The suite sees one micro-batch at a time, so ``url_unique`` holds
+    per batch only: a url arriving in two different batches passes both
+    gates. Uniqueness across batches is checked by the same suite run
+    over the accumulated output, as ``job.run_validation_job`` does for
+    the batch table: ``constraint_suite(spark.read.parquet(output_dir),
+    frac)`` counts every url committed by any batch."""
     pages = read_pages_stream(spark, input_dir)
-    extracted = pages.select("url", "html").withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(64)).cast("int")
-    ).mapInPandas(_extract_batches_fn("full"), schema=EXTRACT_RESULT_SCHEMA)
+    extracted = extract_pages(pages)
     return (extracted.writeStream
             .foreachBatch(validation_gate_sink(output_dir, lineage_dir,
                                                max_error_frac))
@@ -894,9 +849,6 @@ def router_sink(output_dir: str, lineage_dir: str):
     re-delivery reproduces both partitions byte-identically."""
     import os as _os
 
-    from ocr_spark.operators.extraction import (
-        EXTRACT_RESULT_SCHEMA, _extract_batches_fn,
-    )
     from ocr_spark.plans.htmlfeat import route_for_html
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -909,11 +861,7 @@ def router_sink(output_dir: str, lineage_dir: str):
                            .alias("bytes_in")))
             keep = routed.filter(F.col("route")
                                  .isin("extract", "oversized"))
-            extracted = keep.select("url", "html").withColumn(
-                "bucket",
-                F.pmod(F.xxhash64("url"), F.lit(64)).cast("int")
-            ).mapInPandas(_extract_batches_fn("full"),
-                          schema=EXTRACT_RESULT_SCHEMA)
+            extracted = extract_pages(keep)
             extracted.write.mode("overwrite").parquet(
                 _os.path.join(output_dir, f"batch_id={batch_id}"))
             census.coalesce(1).write.mode("overwrite").parquet(
@@ -957,18 +905,12 @@ def stream_hll_sketch(spark: SparkSession, input_dir: str,
     never a rescan of history."""
     import os as _os
 
-    from ocr_spark.operators.extraction import (
-        EXTRACT_RESULT_SCHEMA, _extract_batches_fn,
-    )
     from ocr_spark.plans.sketches import _register_frame
 
     pages = read_pages_stream(spark, input_dir)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        extracted = batch_df.select("url", "html").withColumn(
-            "bucket", F.pmod(F.xxhash64("url"), F.lit(64)).cast("int")
-        ).mapInPandas(_extract_batches_fn("full"),
-                      schema=EXTRACT_RESULT_SCHEMA)
+        extracted = extract_pages(batch_df)
         ok = extracted.filter(F.col("error").isNull()
                               & F.col("text").isNotNull())
         _register_frame(ok).write.mode("overwrite").parquet(
@@ -1008,18 +950,12 @@ def stream_cms_sketch(spark: SparkSession, input_dir: str,
     history."""
     import os as _os
 
-    from ocr_spark.operators.extraction import (
-        EXTRACT_RESULT_SCHEMA, _extract_batches_fn,
-    )
     from ocr_spark.plans.sketches import _cms_frame, _tok_col
 
     pages = read_pages_stream(spark, input_dir)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        extracted = batch_df.select("url", "html").withColumn(
-            "bucket", F.pmod(F.xxhash64("url"), F.lit(64)).cast("int")
-        ).mapInPandas(_extract_batches_fn("full"),
-                      schema=EXTRACT_RESULT_SCHEMA)
+        extracted = extract_pages(batch_df)
         ok = extracted.filter(F.col("error").isNull()
                               & F.col("text").isNotNull())
         _cms_frame(ok.select(_tok_col())).write.mode("overwrite").parquet(
@@ -1059,18 +995,12 @@ def stream_kmv_sketch(spark: SparkSession, input_dir: str,
     only ≤k stored rows per batch."""
     import os as _os
 
-    from ocr_spark.operators.extraction import (
-        EXTRACT_RESULT_SCHEMA, _extract_batches_fn,
-    )
     from ocr_spark.plans.sketches import KMV_K, _kmv_frame, _tok_col
 
     pages = read_pages_stream(spark, input_dir)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        extracted = batch_df.select("url", "html").withColumn(
-            "bucket", F.pmod(F.xxhash64("url"), F.lit(64)).cast("int")
-        ).mapInPandas(_extract_batches_fn("full"),
-                      schema=EXTRACT_RESULT_SCHEMA)
+        extracted = extract_pages(batch_df)
         ok = extracted.filter(F.col("error").isNull()
                               & F.col("text").isNotNull())
         _kmv_frame(ok.select(_tok_col()), KMV_K).write.mode(
@@ -1223,18 +1153,13 @@ def stream_near_dup_state(spark: SparkSession, input_dir: str,
     Exactly-once: the stateful operator's output commits through the
     streaming checkpoint; a re-delivered epoch replays against the
     checkpointed state version, yielding identical verdicts."""
-    from ocr_spark.operators.extraction import (
-        EXTRACT_RESULT_SCHEMA, _extract_batches_fn,
-    )
     from ocr_spark.plans.dataops import (
         LSH_BUCKET_CAP, NEAR_DUP_JACCARD, lsh_bands_frame,
         minhash_sigs_frame,
     )
 
     pages = read_pages_stream(spark, input_dir)
-    extracted = pages.select("url", "html").withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(64)).cast("int")
-    ).mapInPandas(_extract_batches_fn("full"), schema=EXTRACT_RESULT_SCHEMA)
+    extracted = extract_pages(pages)
     ok = extracted.filter(
         F.col("error").isNull() & F.col("text").isNotNull()
         & (F.col("text") != ""))

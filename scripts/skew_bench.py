@@ -9,7 +9,7 @@ one host out of 41 (~20x a uniform host share) and carries the
 generator's oversized (~10 MB) rows. The claim under test (the
 test_skew_metrics_and_partition_balance bound, never measured at this
 size): with salting, the NORMAL route's per-partition wall time (sum of
-per-doc extract_ms, partition-preserved through mapInPandas) keeps
+per-doc extract_ms, partition-preserved through mapInArrow) keeps
 max/median <= 4 and p99/median well under it, because url-hash
 partitioning spreads the hot host uniformly and the big route removes
 the rows that would stretch a normal partition's tail.
@@ -68,7 +68,7 @@ def _walls(df, big_partitions: int) -> dict:
 def main() -> int:
     from pyspark.sql import functions as F
 
-    from ocr_spark.operators.extraction import run_extraction
+    from ocr_spark.operators.extraction import extract_pages, run_extraction
     from ocr_spark.session import get_spark
 
     corpus = os.path.join(REPO, ".bench_tmp", f"corpus_{N_DOCS}")
@@ -98,8 +98,7 @@ def main() -> int:
     out["salted"]["job_wall_sec"] = round(time.perf_counter() - t0, 1)
 
     t0 = time.perf_counter()
-    unsalted = run_extraction(pages, partitions=PARTS,
-                              big_partitions=BIG_PARTS, salt=False)
+    unsalted = extract_pages(pages)
     out["unsalted"] = _walls(unsalted, 0)
     out["unsalted"]["job_wall_sec"] = round(time.perf_counter() - t0, 1)
 

@@ -97,7 +97,7 @@ def test_layout_artifact_vocab_mismatch_is_loud(monkeypatch, tmp_path):
 
 
 def test_layout_artifact_head_through_spark_job(spark, monkeypatch):
-    """Same dry run through the REAL surface: mapInPandas extraction
+    """Same dry run through the REAL surface: mapInArrow extraction
     with the artifact head enabled (env captured driver-side, re-exported
     in the worker) produces byte-identical text to the fixture path for
     every url."""
@@ -191,7 +191,7 @@ def test_crf_artifact_vocab_mismatch_is_loud(monkeypatch, tmp_path):
 
 
 def test_all_artifact_heads_through_spark_job(spark, monkeypatch):
-    """All three model seams through the REAL mapInPandas surface:
+    """All three model seams through the REAL mapInArrow surface:
     byte-identical text and matches for every url (env captured
     driver-side and re-exported in the workers)."""
     import json as _json

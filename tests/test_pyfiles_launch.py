@@ -19,18 +19,42 @@ from ocr_spark.sources import iceberg_shim as shim
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def _make_zip(out=None):
+    sys.path.insert(0, os.path.join(REPO, "scripts"))
+    try:
+        from make_pyfiles import main
+    finally:
+        sys.path.pop(0)
+    return main(out)
+
+
+def test_pyfiles_zip_is_reproducible(tmp_path):
+    """Same tree → same zip bytes, even when a file's mtime moves, so
+    rebuilding never dirties the committed dist/ocr_spark.zip."""
+    import hashlib
+
+    def sha(path):
+        with open(path, "rb") as fh:
+            return hashlib.sha256(fh.read()).hexdigest()
+
+    first = _make_zip(str(tmp_path / "a.zip"))
+    touched = os.path.join(REPO, "ocr_spark", "__init__.py")
+    st = os.stat(touched)
+    os.utime(touched, (st.st_atime, st.st_mtime + 3600))
+    try:
+        second = _make_zip(str(tmp_path / "b.zip"))
+    finally:
+        os.utime(touched, (st.st_atime, st.st_mtime))
+    assert sha(first) == sha(second)
+
+
 def test_spark_submit_pyfiles_launch(spark, tmp_path):
     spark_submit = shutil.which("spark-submit")
     if spark_submit is None:
         pytest.skip("spark-submit not on PATH")
 
     # rebuild the zip from the current tree (stale-zip test is useless)
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
-    try:
-        from make_pyfiles import main as make_zip
-    finally:
-        sys.path.pop(0)
-    zip_path = make_zip()
+    zip_path = _make_zip()
 
     from ocr_spark.plans.extract_queries import pages_from_documents
     input_root = str(tmp_path / "in")

@@ -1,4 +1,4 @@
-"""Spark-level tests: mapInPandas ≡ sequential (batching/order safety),
+"""Spark-level tests: mapInArrow ≡ sequential (batching/order safety),
 resume/checkpoint idempotency, skew smoke (SURVEY.md §5.2.3/5/7)."""
 
 from __future__ import annotations
@@ -29,7 +29,7 @@ def pages_table(spark, tmp_path_factory):
 
 
 def test_spark_equals_sequential(spark, pages_table):
-    """Bit-for-bit: the distributed mapInPandas run must equal the pure
+    """Bit-for-bit: the distributed mapInArrow run must equal the pure
     sequential run for every url (catches batching/order bugs)."""
     from ocr_spark.operators.extraction import run_extraction
 
@@ -219,6 +219,38 @@ def test_crash_after_bookkeeping_rolls_forward(spark, pages_table, tmp_path):
     summary = run_extraction_job(spark, root, work, partitions=16,
                                  big_partitions=2, waves=4)
     assert summary["rolled_forward"] >= 1
+    urls = [r.url for r in read_extracted(spark, work).select("url").collect()]
+    assert len(urls) == N_ROWS and len(set(urls)) == N_ROWS
+
+
+def test_resume_with_different_n_buckets_raises(spark, pages_table,
+                                                tmp_path):
+    """Checkpoints name buckets by number, so a 32-bucket resume of a
+    partial 64-bucket run would count docs with h mod 64 in 32..47 as
+    done and never extract them. It must raise instead, from the full
+    and the incremental job and after compaction, and the output must
+    stay resumable under the recorded value."""
+    from ocr_spark.job import (
+        compact_snapshots, read_extracted, run_extraction_job,
+        run_incremental_extraction_job,
+    )
+
+    root, _rows = pages_table
+    work = str(tmp_path / "work_nb")
+    kw = dict(partitions=8, big_partitions=1, waves=4)
+    for _ in range(2):  # two partial runs → two output snapshots
+        with pytest.raises(RuntimeError, match="injected failure"):
+            run_extraction_job(spark, root, work, n_buckets=64,
+                               fail_after_waves=1, **kw)
+    for job in (run_extraction_job, run_incremental_extraction_job):
+        with pytest.raises(ValueError,
+                           match="n_buckets=32 does not match n_buckets=64"):
+            job(spark, root, work, n_buckets=32, **kw)
+    assert compact_snapshots(spark, work)["compacted"] == 2
+    with pytest.raises(ValueError, match="n_buckets=64"):
+        run_extraction_job(spark, root, work, n_buckets=32, **kw)
+
+    run_extraction_job(spark, root, work, n_buckets=64, **kw)
     urls = [r.url for r in read_extracted(spark, work).select("url").collect()]
     assert len(urls) == N_ROWS and len(set(urls)) == N_ROWS
 
@@ -504,7 +536,7 @@ def test_skew_metrics_and_partition_balance(spark, pages_table, tmp_path):
     assert hot and max(r.max_doc_ms for r in hot) > 10 * typical
 
     # normal-route partition balance: per-partition wall (sum of
-    # extract_ms, partition-preserved through mapInPandas) outside the
+    # extract_ms, partition-preserved through mapInArrow) outside the
     # big route stays within 4x of the median partition — the p99 bound
     # the salting design promises (url-hash spread, big rows removed)
     df = spark.createDataFrame(

@@ -303,9 +303,7 @@ def test_stream_near_dup_sink_idempotent(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from ocr_spark.gen.wrap import html_for_document
-    from ocr_spark.operators.extraction import (
-        EXTRACT_RESULT_SCHEMA, _extract_batches_fn,
-    )
+    from ocr_spark.operators.extraction import extract_pages
     from ocr_spark.streaming.ingest import near_dup_sink
 
     out_dir = str(tmp_path / "out")
@@ -319,11 +317,7 @@ def test_stream_near_dup_sink_idempotent(spark, tmp_path):
              "warc_ts": datetime.datetime(2025, 1, 1),
              "html": html_for_document(r.doc_id, r.text),
              "text": "", "lang": "en"} for r in docs]
-    batch = (spark.createDataFrame(rows)
-             .select("url", "html")
-             .withColumn("bucket", F.lit(0))
-             .mapInPandas(_extract_batches_fn("full"),
-                          schema=EXTRACT_RESULT_SCHEMA))
+    batch = extract_pages(spark.createDataFrame(rows))
 
     sink = near_dup_sink(out_dir, sig_dir)
     sink(batch, 0)
@@ -345,10 +339,7 @@ def test_stream_near_dup_sink_idempotent(spark, tmp_path):
               "warc_ts": datetime.datetime(2025, 1, 2),
               "html": html_for_document(3, docs2[0].text),
               "text": "", "lang": "en"}]
-    batch2 = (spark.createDataFrame(rows2)
-              .select("url", "html").withColumn("bucket", F.lit(0))
-              .mapInPandas(_extract_batches_fn("full"),
-                           schema=EXTRACT_RESULT_SCHEMA))
+    batch2 = extract_pages(spark.createDataFrame(rows2))
     sink(batch2, 1)
     out = sorted(r.url for r in
                  spark.read.parquet(out_dir).select("url").collect())
@@ -364,9 +355,7 @@ def test_compact_near_dup_store(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from ocr_spark.gen.wrap import html_for_document
-    from ocr_spark.operators.extraction import (
-        EXTRACT_RESULT_SCHEMA, _extract_batches_fn,
-    )
+    from ocr_spark.operators.extraction import extract_pages
     from ocr_spark.streaming.ingest import (
         compact_near_dup_store, near_dup_sink,
     )
@@ -378,10 +367,7 @@ def test_compact_near_dup_store(spark, tmp_path):
                  "warc_ts": datetime.datetime(2025, 1, 1),
                  "html": html_for_document(d, t), "text": "",
                  "lang": "en"} for u, d, t in pairs]
-        return (spark.createDataFrame(rows).select("url", "html")
-                .withColumn("bucket", F.lit(0))
-                .mapInPandas(_extract_batches_fn("full"),
-                             schema=EXTRACT_RESULT_SCHEMA))
+        return extract_pages(spark.createDataFrame(rows))
 
     docs = {r.doc_id: r.text for r in spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet")
@@ -420,9 +406,7 @@ def test_near_dup_sink_periodic_compaction(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from ocr_spark.gen.wrap import html_for_document
-    from ocr_spark.operators.extraction import (
-        EXTRACT_RESULT_SCHEMA, _extract_batches_fn,
-    )
+    from ocr_spark.operators.extraction import extract_pages
     from ocr_spark.streaming.ingest import near_dup_sink
 
     out_dir, sig_dir = str(tmp_path / "out"), str(tmp_path / "sigs")
@@ -432,10 +416,7 @@ def test_near_dup_sink_periodic_compaction(spark, tmp_path):
                  "warc_ts": datetime.datetime(2025, 1, 1),
                  "html": html_for_document(d, t), "text": "",
                  "lang": "en"} for u, d, t in pairs]
-        return (spark.createDataFrame(rows).select("url", "html")
-                .withColumn("bucket", F.lit(0))
-                .mapInPandas(_extract_batches_fn("full"),
-                             schema=EXTRACT_RESULT_SCHEMA))
+        return extract_pages(spark.createDataFrame(rows))
 
     docs = {r.doc_id: r.text for r in spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet")
@@ -1040,18 +1021,13 @@ def test_stream_validation_gate_fails_batch_and_resumes(spark, stream_dirs):
     # exactly-once on the FAILED epoch: re-delivering batch 1's frame
     # through the sink body re-evaluates to the identical verdict and
     # still commits nothing
-    from ocr_spark.operators.extraction import (
-        EXTRACT_RESULT_SCHEMA, _extract_batches_fn)
-    from pyspark.sql import functions as F
+    from ocr_spark.operators.extraction import extract_pages
     pages = spark.createDataFrame(
         [(r["url"], r["warc_ts"], bytearray(r["html"]), r["text"],
           r["lang"]) for r in poison],
         "url string, warc_ts timestamp, html binary, text string, "
         "lang string")
-    frame = pages.select("url", "html").withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(64)).cast("int")
-    ).mapInPandas(_extract_batches_fn("full"),
-                  schema=EXTRACT_RESULT_SCHEMA).localCheckpoint()
+    frame = extract_pages(pages).localCheckpoint()
     before = sorted(map(tuple, pdf[pdf["batch_id"] == 1]
                         [["constraint", "violations", "passed"]]
                         .itertuples(index=False)))
