@@ -1,19 +1,22 @@
 """End-to-end extraction job: Iceberg-shim scan → salted mapInArrow
-extraction → snapshot write → per-wave checkpoint/lineage/metrics commit.
+extraction → snapshot write → per-wave commit record in the manifest.
 
 Execution model (SURVEY.md §3.4): one Catalyst-planned job per commit wave —
 
     input snapshot scan (url, html only — column pruning)
-      → [resume filter: skip checkpointed buckets — partition-level skip]
+      → [resume filter: skip committed buckets — partition-level skip]
       → salted repartition                    [the ONE shuffle]
       → mapInArrow(extract)                   [Arrow boundary]
       → snapshot write partitioned by bucket  [shuffle-free]
-      → bookkeeping appends                   [JVM-side aggregation]
+      → commit record: one groupBy(bucket) over the staged rows
 
-Buckets are grouped into ``waves``; each wave commits atomically through the
-shim pointer + a checkpoint append, so a killed run resumes at wave
-granularity without reprocessing committed buckets — the cluster-scale
-version of the reference's processed-files dedup sets
+Buckets are grouped into ``waves``. A wave's output manifest is its commit
+record (input snapshot, bucket group, per-bucket counters) and the shim
+pointer swap is its only commit point; the checkpoint / lineage / metrics
+tables are exported from the record after the swap. Resume state is one
+fold over the published output chain's manifests, so a killed run resumes
+at wave granularity without reprocessing committed buckets — the
+cluster-scale version of the reference's processed-files dedup sets
 (/root/reference/service/api/main.py:21-48).
 """
 
@@ -24,8 +27,9 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ocr_spark.operators import bookkeeping
 from ocr_spark.operators.bookkeeping import (
-    checkpointed_out_snapshots, commit_bucket_bookkeeping, completed_buckets,
+    commit_bucket_bookkeeping, export_wave_tables,
 )
 from ocr_spark.operators.extraction import (
     DEFAULT_BIG_THRESHOLD, DEFAULT_BUCKETS, run_extraction, url_bucket,
@@ -43,38 +47,40 @@ def output_root(work_dir: str) -> str:
 _ROBOTS_NOINDEX = r'name="robots" content="[^"]*noindex'
 
 
-def _roll_forward_orphans(spark: SparkSession, work_dir: str) -> int:
-    """Crash recovery for the bookkeeping→publish window: any output
-    snapshot referenced by a checkpoint row but not yet visible in the
-    output table's history is published now (idempotent pointer swap).
-    The inverse window (staged data, no checkpoint yet) needs nothing —
-    the staged snapshot is unreachable and its buckets simply re-run."""
-    root = output_root(work_dir)
-    published = 0
-    for sid in checkpointed_out_snapshots(spark, work_dir):
-        if not shim.is_published(root, sid):
-            shim.publish_snapshot(root, sid)
-            published += 1
-    return published
+def _roll_forward_orphans(work_dir: str, manifests: list[dict]) -> int:
+    """Crash repair for the publish→export window: a published wave
+    whose table files are missing gets them written from its manifest
+    (path checks, no Spark job, no data scan). Returns the number of
+    waves repaired. A wave staged but never published needs nothing —
+    it is unreachable garbage and its buckets simply re-run."""
+    return sum(1 for m in manifests if "input_snapshot" in m
+               and export_wave_tables(work_dir, m))
 
 
-def _check_n_buckets(work_dir: str, n_buckets: int) -> None:
-    """Refuse to resume under a different bucket count. Checkpoints name
-    buckets by number, and a bucket number means a different url set
-    under another modulus: a 32-bucket resume of a partial 64-bucket run
-    would treat docs with ``h mod 64`` in 32..47 as done and never
+def _check_n_buckets(manifests: list[dict], n_buckets: int) -> None:
+    """Refuse to resume under a different bucket count. Commit records
+    name buckets by number, and a bucket number means a different url
+    set under another modulus: a 32-bucket resume of a partial 64-bucket
+    run would treat docs with ``h mod 64`` in 32..47 as done and never
     extract them. Every wave manifest (and a compaction's) records the
     value, so the CURRENT output snapshot carries it."""
-    root = output_root(work_dir)
-    sid = shim.current_snapshot_id(root)
-    if sid is None:
-        return
-    recorded = shim.read_manifest(root, sid).get("n_buckets")
+    recorded = manifests[-1].get("n_buckets") if manifests else None
     if recorded is not None and recorded != n_buckets:
         raise ValueError(
             f"n_buckets={n_buckets} does not match n_buckets={recorded} "
-            f"recorded by the committed output under {root}; resume with "
+            f"recorded by the committed output; resume with "
             f"n_buckets={recorded}")
+
+
+def _resume_state(work_dir: str, n_buckets: int
+                  ) -> tuple[dict[str, set[int]], int]:
+    """Job-start state from ONE walk of the output chain (each manifest
+    read once): repair missing table exports, check ``n_buckets``, fold
+    the committed buckets per input snapshot. Returns (done, repaired)."""
+    manifests = shim.chain_manifests(output_root(work_dir))
+    repaired = _roll_forward_orphans(work_dir, manifests)
+    _check_n_buckets(manifests, n_buckets)
+    return bookkeeping.completed_buckets_by_snapshot(manifests), repaired
 
 
 def run_extraction_job(spark: SparkSession, input_table_root: str,
@@ -89,8 +95,8 @@ def run_extraction_job(spark: SparkSession, input_table_root: str,
                        fail_point: str = "after_wave") -> dict:
     """Run (or resume) extraction of the input table's full logical
     content at CURRENT — the whole snapshot chain, processed
-    per-snapshot (oldest first) so checkpoints stay (snapshot, bucket)
-    granular and already-processed ancestors are skipped, not
+    per-snapshot (oldest first) so commit records stay (snapshot,
+    bucket) granular and already-processed ancestors are skipped, not
     re-extracted.
 
     ``respect_robots=True`` drops pages whose meta-robots directive
@@ -111,9 +117,10 @@ def run_extraction_job(spark: SparkSession, input_table_root: str,
 
     ``fail_after_waves``/``fail_point`` are test hooks simulating a
     mid-job crash for the resume tests (SURVEY.md §5.2.5): raise after N
-    waves, either ``after_wave`` (full commit done), ``after_stage``
-    (data staged, no bookkeeping, no publish) or ``after_bookkeeping``
-    (bookkeeping appended, publish skipped → exercises roll-forward).
+    waves, either ``after_stage`` (data and manifest staged, nothing
+    published), ``after_publish`` (pointer swapped, table export
+    skipped → exercises the repair) or ``after_wave`` (full commit
+    done).
 
     Returns a summary dict (snapshot ids, bucket/doc counts, skipped).
     """
@@ -121,43 +128,39 @@ def run_extraction_job(spark: SparkSession, input_table_root: str,
     if input_sid is None:
         raise FileNotFoundError(f"no input snapshot at {input_table_root}")
     # The LOGICAL table at CURRENT = the whole snapshot chain (append-
-    # chain model), but resume bookkeeping is bucket-granular PER
-    # SNAPSHOT — so the chain is processed one snapshot at a time,
-    # oldest first, each keyed on its own sid. A first-ever run on a
-    # multi-snapshot table covers every ancestor's rows; a rerun after
-    # an append skips fully-processed ancestors through their own
-    # checkpoints instead of re-extracting them (which would duplicate
-    # every ancestor document in the output).
+    # chain model), but resume state is bucket-granular PER SNAPSHOT —
+    # so the chain is processed one snapshot at a time, oldest first,
+    # each keyed on its own sid. A first-ever run on a multi-snapshot
+    # table covers every ancestor's rows; a rerun after an append skips
+    # fully-processed ancestors through their own commit records
+    # instead of re-extracting them (which would duplicate every
+    # ancestor document in the output).
+    done_by_sid, repaired = _resume_state(work_dir, n_buckets)
     return _run_chain(
         spark, input_table_root, work_dir, shim.history(input_table_root),
-        input_sid, partitions=partitions, big_partitions=big_partitions,
-        big_threshold=big_threshold, n_buckets=n_buckets, waves=waves,
-        respect_robots=respect_robots, route_filter=route_filter,
-        fail_after_waves=fail_after_waves, fail_point=fail_point)
+        input_sid, done_by_sid, repaired, partitions=partitions,
+        big_partitions=big_partitions, big_threshold=big_threshold,
+        n_buckets=n_buckets, waves=waves, respect_robots=respect_robots,
+        route_filter=route_filter, fail_after_waves=fail_after_waves,
+        fail_point=fail_point)
 
 
 def _run_chain(spark: SparkSession, input_table_root: str, work_dir: str,
-               sids: list[str], input_sid: str, *, partitions: int,
-               big_partitions: int, big_threshold: int, n_buckets: int,
-               waves: int, respect_robots: bool = False,
+               sids: list[str], input_sid: str,
+               done_by_sid: dict[str, set[int]], rolled_forward: int, *,
+               partitions: int, big_partitions: int, big_threshold: int,
+               n_buckets: int, waves: int, respect_robots: bool = False,
                route_filter: bool = False,
                fail_after_waves: int | None = None,
                fail_point: str = "after_wave") -> dict:
     """Process ``sids`` (oldest → newest), each snapshot's own data dir
-    keyed on its own sid — the uniform (snapshot, bucket) checkpoint
+    keyed on its own sid — the uniform (snapshot, bucket) commit
     granularity that lets full runs, incremental runs, and reruns
     compose without ever re-extracting (duplicating) a processed
-    snapshot's rows.
-
-    Chain-invariant bookkeeping happens ONCE per job, not per snapshot:
-    one roll-forward pass, one checkpoint-table scan (grouped by
-    snapshot), one run_id shared by every snapshot's metrics rows."""
-    from ocr_spark.operators.bookkeeping import completed_buckets_by_snapshot
+    snapshot's rows. ``done_by_sid`` is the job-start resume state;
+    one run_id is shared by every snapshot's waves."""
     from ocr_spark.sources import PAGES_SCHEMA
 
-    rolled_forward = _roll_forward_orphans(spark, work_dir)
-    _check_n_buckets(work_dir, n_buckets)
-    done_by_sid = completed_buckets_by_snapshot(spark, work_dir)
     run_id = uuid.uuid4().hex[:12]
     combined: dict = {"run_id": run_id, "input_snapshot": input_sid,
                       "output_snapshots": [], "buckets_skipped": 0,
@@ -213,70 +216,57 @@ def _run_chain(spark: SparkSession, input_table_root: str, work_dir: str,
 
 
 def _run_waves(spark: SparkSession, pages: DataFrame, work_dir: str,
-               input_sid: str, input_files: list[str], *,
-               partitions: int, big_partitions: int, big_threshold: int,
-               n_buckets: int, waves: int,
-               run_id: str | None = None,
-               done: set[int] | None = None,
+               input_sid: str, input_files: list[str], *, run_id: str,
+               done: set[int], partitions: int, big_partitions: int,
+               big_threshold: int, n_buckets: int, waves: int,
                fail_after_waves: int | None = None,
                fail_point: str = "after_wave") -> dict:
-    """One snapshot's waves. ``run_id``/``done`` are normally provided
-    by _run_chain (shared id, single checkpoint scan); standalone calls
-    fall back to computing them here."""
-    if done is None:
-        _roll_forward_orphans(spark, work_dir)
-        done = completed_buckets(spark, work_dir, input_sid)
-    run_id = run_id or uuid.uuid4().hex[:12]
+    """One snapshot's waves. Each wave stages its data and manifest,
+    writes its commit record into the still-unpublished manifest,
+    publishes (the commit point), then exports the record's table rows.
+    A crash before the swap leaves unreachable garbage whose buckets
+    re-run; a crash after it is repaired at the next job start."""
+    from ocr_spark.operators.extraction import EXTRACT_RESULT_SCHEMA
 
+    root = output_root(work_dir)
     all_buckets = list(range(n_buckets))
     todo = [b for b in all_buckets if b not in done]
     wave_size = max(1, (len(all_buckets) + waves - 1) // waves)
     wave_groups = [todo[i:i + wave_size] for i in range(0, len(todo), wave_size)]
 
+    def crash_at(point: str, w: int) -> None:
+        if fail_after_waves is not None and (w + 1) >= fail_after_waves \
+                and fail_point == point:
+            raise RuntimeError(
+                f"injected failure {point.replace('_', ' ')}, wave {w}")
+
     out_sids: list[str] = []
     docs_total = 0
     for w, bucket_group in enumerate(wave_groups):
-        if not bucket_group:
-            continue
-        wave_pages = pages.filter(url_bucket(n_buckets).isin(bucket_group))
-
         extracted = run_extraction(
-            wave_pages, partitions=partitions, big_partitions=big_partitions,
+            pages.filter(url_bucket(n_buckets).isin(bucket_group)),
+            partitions=partitions, big_partitions=big_partitions,
             big_threshold=big_threshold, n_buckets=n_buckets,
         )
-        # two-phase commit: stage data (invisible) → bookkeeping append →
-        # publish (atomic pointer swap). Crash between stage and
-        # bookkeeping: snapshot unreachable, buckets re-run. Crash between
-        # bookkeeping and publish: rolled forward at next job start.
         out_sid = shim.prepare_snapshot(
-            extracted, output_root(work_dir), partition_by=["bucket"],
-            snapshot_id=f"{input_sid[:8]}-{run_id}-w{w}",
-            extra={"n_buckets": n_buckets},
-        )
-        if fail_after_waves is not None and (w + 1) >= fail_after_waves \
-                and fail_point == "after_stage":
-            raise RuntimeError(f"injected failure after stage, wave {w}")
+            extracted, root, partition_by=["bucket"],
+            snapshot_id=f"{input_sid[:8]}-{run_id}-w{w}")
+        crash_at("after_stage", w)
 
-        from ocr_spark.operators.extraction import EXTRACT_RESULT_SCHEMA
-        staged = shim.read_snapshot(spark, output_root(work_dir), out_sid,
-                                    schema=EXTRACT_RESULT_SCHEMA)
-        docs_total += commit_bucket_bookkeeping(
-            spark, staged, work_dir, snapshot_id=input_sid, run_id=run_id,
-            input_files=input_files,
-            big_threshold=big_threshold, skew_salt=big_partitions,
-            buckets=bucket_group, out_snapshot_id=out_sid,
-        )
-        if fail_after_waves is not None and (w + 1) >= fail_after_waves \
-                and fail_point == "after_bookkeeping":
-            raise RuntimeError(
-                f"injected failure after bookkeeping, wave {w}")
-
-        shim.publish_snapshot(output_root(work_dir), out_sid)
+        record = commit_bucket_bookkeeping(
+            shim.read_snapshot(spark, root, out_sid,
+                               schema=EXTRACT_RESULT_SCHEMA),
+            input_sid=input_sid, input_files=input_files, run_id=run_id,
+            buckets=bucket_group, n_buckets=n_buckets,
+            big_threshold=big_threshold, skew_salt=big_partitions)
+        manifest = shim.amend_manifest(root, out_sid, record)
+        shim.publish_snapshot(root, out_sid)
         out_sids.append(out_sid)
+        docs_total += sum(record["bucket_stats"]["docs"])
+        crash_at("after_publish", w)
 
-        if fail_after_waves is not None and (w + 1) >= fail_after_waves \
-                and fail_point == "after_wave":
-            raise RuntimeError(f"injected failure after wave {w}")
+        export_wave_tables(work_dir, manifest)
+        crash_at("after_wave", w)
 
     return {
         "run_id": run_id,
@@ -300,57 +290,37 @@ def run_incremental_extraction_job(spark: SparkSession,
     snapshot (shim.added_since diff) — Trigger.AvailableNow semantics
     over the snapshot chain, without Structured Streaming.
 
-    Logic: walk the input table's parent chain from CURRENT back to the
-    most recent snapshot whose bucket set is FULLY checkpointed (a
-    snapshot with only partial checkpoints is NOT a valid base — its
-    unfinished buckets would be silently lost); process everything
-    after it, each snapshot keyed on its own sid (so bucket-level resume
-    works within the increment too). Falls back to the full job when no
-    fully-processed ancestor exists — and the full job walks the ENTIRE
-    chain, skipping completed buckets per snapshot; no-ops when CURRENT
-    (and its ancestors) are already fully processed.
+    Logic: the base is the newest input snapshot whose bucket set is
+    FULLY committed (a snapshot with only some buckets committed is NOT
+    a valid base — its unfinished buckets would be silently lost);
+    everything after it is processed, each snapshot keyed on its own sid
+    (so bucket-level resume works within the increment too). With no
+    fully-processed snapshot this is the full job over the ENTIRE chain,
+    skipping completed buckets per snapshot; it no-ops when CURRENT (and
+    its ancestors) are already fully processed.
     """
     input_sid = shim.current_snapshot_id(input_table_root)
     if input_sid is None:
         raise FileNotFoundError(f"no input snapshot at {input_table_root}")
 
-    from ocr_spark.operators.bookkeeping import completed_buckets_by_snapshot
-    _check_n_buckets(work_dir, n_buckets)
-    done_by_sid = completed_buckets_by_snapshot(spark, work_dir)
-
-    def fully_done(sid: str) -> bool:
-        return len(done_by_sid.get(sid, ())) >= n_buckets
-
-    # newest FULLY-processed ancestor (or CURRENT itself)
-    base = None
-    sid = input_sid
-    while sid is not None:
-        if fully_done(sid):
-            base = sid
-            break
-        sid = shim.read_manifest(input_table_root, sid).get("parent_id")
-    if base is None:
-        return run_extraction_job(
-            spark, input_table_root, work_dir, partitions=partitions,
-            big_partitions=big_partitions, big_threshold=big_threshold,
-            n_buckets=n_buckets, waves=waves,
-            respect_robots=respect_robots)
-
-    # the snapshots strictly after base, oldest → newest, each processed
-    # keyed on ITS OWN sid (same (snapshot, bucket) checkpoint unit as
-    # the full job, so the two paths compose: a later full run sees the
-    # increment's per-snapshot checkpoints and skips them). base being
-    # fully done makes excluding it safe; any PARTIALLY-done snapshot is
-    # after base by construction and gets its remaining buckets resumed.
+    done_by_sid, repaired = _resume_state(work_dir, n_buckets)
     chain = shim.history(input_table_root)
-    added_sids = chain[chain.index(base) + 1:]
+    fully_done = [i for i, sid in enumerate(chain)
+                  if len(done_by_sid.get(sid, ())) >= n_buckets]
+    # the snapshots strictly after base, oldest → newest, each keyed on
+    # ITS OWN sid (the full job's (snapshot, bucket) unit, so the two
+    # paths compose). base being fully done makes excluding it safe; any
+    # PARTIALLY-done snapshot is after base by construction and gets its
+    # remaining buckets resumed.
+    start = fully_done[-1] + 1 if fully_done else 0
     summary = _run_chain(
-        spark, input_table_root, work_dir, added_sids, input_sid,
-        partitions=partitions, big_partitions=big_partitions,
-        big_threshold=big_threshold, n_buckets=n_buckets, waves=waves,
-        respect_robots=respect_robots)
-    summary["incremental_base"] = base
-    summary["added_dirs"] = len(added_sids)
+        spark, input_table_root, work_dir, chain[start:], input_sid,
+        done_by_sid, repaired, partitions=partitions,
+        big_partitions=big_partitions, big_threshold=big_threshold,
+        n_buckets=n_buckets, waves=waves, respect_robots=respect_robots)
+    if fully_done:
+        summary["incremental_base"] = chain[start - 1]
+        summary["added_dirs"] = len(chain) - start
     return summary
 
 
@@ -359,28 +329,27 @@ def compact_snapshots(spark: SparkSession, work_dir: str) -> dict:
     manifest compaction). After thousands of incremental commits the
     snapshot chain itself becomes metadata overhead; compaction reads
     the union (one multi-path scan), stages it as a fresh-chain snapshot
-    whose manifest records ``compacted_from``, and publishes atomically.
+    whose manifest records ``compacted_from`` and ``completed`` (the
+    folded resume state of every absorbed wave), and publishes
+    atomically.
 
     Crash-safe: a crash before publish leaves the old chain CURRENT and
-    the staged compaction unreachable (rerun simply re-compacts).
-    Roll-forward-safe: ``is_published`` treats compacted-away snapshot
-    ids as published, so checkpoint bookkeeping referencing them never
-    rewinds CURRENT to a pre-compaction snapshot. Orphans are rolled
-    forward FIRST: a checkpointed-but-unpublished wave snapshot is
-    committed data, so it must be published (and thus absorbed) before
-    the chain is rewritten — otherwise the next job's roll-forward
-    would swap CURRENT to the orphan, whose parent chain is the
-    pre-compaction history, silently undoing the compaction."""
-    _roll_forward_orphans(spark, work_dir)
+    the staged compaction unreachable (rerun simply re-compacts). Table
+    exports are repaired FIRST: a wave published just before a crash may
+    still lack its table rows, and its manifest leaves the chain here,
+    so afterwards nothing could write them."""
     root = output_root(work_dir)
-    sids = shim.history(root) if shim.current_snapshot_id(root) else []
-    if len(sids) <= 1:
-        return {"compacted": 0, "snapshot": sids[0] if sids else None}
+    manifests = shim.chain_manifests(root)
+    _roll_forward_orphans(work_dir, manifests)
+    if len(manifests) <= 1:
+        return {"compacted": 0,
+                "snapshot": manifests[0]["snapshot_id"] if manifests
+                else None}
     absorbed = []
-    for sid in sids:
-        absorbed.append(sid)
-        absorbed.extend(shim.read_manifest(root, sid)
-                        .get("compacted_from") or [])
+    for m in manifests:
+        absorbed.append(m["snapshot_id"])
+        absorbed.extend(m.get("compacted_from") or [])
+    completed = bookkeeping.completed_buckets_by_snapshot(manifests)
     # repartition ON the partition column before the partitionBy write:
     # without it every task writes a sliver into every bucket dir
     # (tasks × buckets small files — the problem compaction exists to
@@ -391,10 +360,10 @@ def compact_snapshots(spark: SparkSession, work_dir: str) -> dict:
         snapshot_id=f"compact-{uuid.uuid4().hex[:12]}",
         parent_id=None, extra={
             "compacted_from": sorted(set(absorbed)),
-            "n_buckets": shim.read_manifest(root, sids[-1])
-                         .get("n_buckets")})
+            "n_buckets": manifests[-1].get("n_buckets"),
+            "completed": {sid: sorted(b) for sid, b in completed.items()}})
     shim.publish_snapshot(root, new_sid)
-    return {"compacted": len(sids), "snapshot": new_sid}
+    return {"compacted": len(manifests), "snapshot": new_sid}
 
 
 def curation_root(work_dir: str) -> str:
@@ -1172,8 +1141,9 @@ def run_sampling_job(spark: SparkSession, work_dir: str, *,
 
 def read_extracted(spark: SparkSession, work_dir: str) -> DataFrame:
     """All committed extraction output across snapshots. The union is
-    exact: within one input snapshot, checkpointed buckets are never
-    reprocessed (two-phase commit); across input snapshots, both the
+    exact: within one input snapshot, committed buckets are never
+    reprocessed (a bucket is committed only by the pointer swap that
+    publishes its data); across input snapshots, both the
     full-chain and incremental paths process each input snapshot's own
     data dir keyed on its own sid, so their documents are disjoint by
     construction."""
@@ -1184,9 +1154,9 @@ def read_extracted(spark: SparkSession, work_dir: str) -> DataFrame:
             f"no extraction output committed yet under {root}")
     dirs = [shim.read_manifest(root, sid)["data_dir"] for sid in sids]
     # each snapshot dir is its own partitioned table root (bucket=N leaves);
-    # PUBLISHED snapshots hold disjoint buckets (two-phase commit: a
-    # bucket is only checkpointed together with its snapshot, and only
-    # checkpointed buckets are skipped), so a union is exact.
+    # PUBLISHED snapshots hold disjoint buckets (a bucket is committed
+    # only by the manifest that publishes its data, and only committed
+    # buckets are skipped), so a union is exact.
     # ONE multi-path scan (recursiveFileLookup skips per-dir partition
     # discovery, which rejects the snap-X level between root and
     # bucket=N): the plan stays a single scan node after thousands of

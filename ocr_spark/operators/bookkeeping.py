@@ -1,29 +1,42 @@
-"""Checkpoint / lineage / metrics bookkeeping (FIXTURES.md §4, SURVEY.md §7.6).
+"""Each extraction wave's commit record, and the checkpoint / lineage /
+metrics tables exported from it (FIXTURES.md §4, SURVEY.md §7.6).
 
 The reference's idempotency is two in-memory sets keyed by url-hash
-(/root/reference/service/api/main.py:21-48, J5). At cluster scale that
-becomes durable tables:
+(its ``service/api/main.py:21-48``, J5). At cluster scale the
+durable record is the wave's output manifest, as in an Iceberg snapshot
+commit: before the pointer swap the job writes into the staged manifest
+the input snapshot id, the wave's bucket group (empty buckets included),
+``n_buckets`` and per-bucket counters from ONE aggregation over the
+staged rows (``commit_bucket_bookkeeping``). The swap commits data and
+record together. Resume state is a fold over the published chain's
+manifests (``completed_buckets_by_snapshot``); nothing reads the tables.
 
-  * ``checkpoints`` — one row per committed url-hash bucket per input
-    snapshot; resume = anti-join/filter of input buckets against this table
-    (bucket-level skip → partition pruning, cheaper than per-url anti-join;
-    a per-url anti-join helper is also provided for finer-grained dedup).
-  * ``lineage``    — per-bucket doc counts, ok/failed counts, and a
-    failure-reason histogram (MAP<STRING,BIGINT>), plus the input snapshot
-    id and files.
-  * ``metrics``    — per-bucket wall-time/bytes/doc counters for the bench
-    harness and skew monitoring.
+The three tables keep their paths and schemas as write-only exports of
+the record, one parquet file per wave and table, named by the wave's
+output snapshot id (``export_wave_tables``):
 
-All three are computed with JVM-side aggregations over the extraction
-output (no extra Python pass) and appended as parquet.
+  * ``checkpoints`` — one row per bucket of the wave group per input
+    snapshot (``docs_done=0`` for a bucket with no input rows);
+  * ``lineage``    — per populated bucket doc, ok and failed counts, a
+    failure-reason histogram (MAP<STRING,BIGINT>), the input snapshot
+    id and files;
+  * ``metrics``    — per populated bucket wall-time/bytes/doc counters and
+    the per-doc extract-time spread, for skew monitoring.
+
+A file is written whole or not at all, and "already exported?" is a
+path check, so a crash between the swap and the export is repaired at
+the next job start from the manifest alone, with no Spark job.
 """
 
 from __future__ import annotations
 
 import os
 import time
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, functions as F
 
 CHECKPOINT_SCHEMA = ("snapshot_id string, partition_id int, "
                      "url_hash_bucket int, docs_done bigint, "
@@ -34,11 +47,9 @@ LINEAGE_SCHEMA = ("snapshot_id string, partition_id int, "
                   "failure_reasons map<string,bigint>")
 METRICS_SCHEMA = ("run_id string, stage string, partition_id int, "
                   "docs bigint, bytes_in bigint, wall_ms bigint, "
-                  "skew_salt int, oversized_count bigint")
-
-
-def _append(df: DataFrame, path: str) -> None:
-    df.write.mode("append").parquet(path)
+                  "skew_salt int, oversized_count bigint, "
+                  "max_doc_ms double, median_doc_ms double, "
+                  "p99_doc_ms double")
 
 
 def checkpoints_path(work_dir: str) -> str:
@@ -53,155 +64,146 @@ def metrics_path(work_dir: str) -> str:
     return os.path.join(work_dir, "metrics")
 
 
-def completed_buckets(spark: SparkSession, work_dir: str,
-                      snapshot_id: str) -> set[int]:
-    """Buckets already committed for this input snapshot (resume filter)."""
-    path = checkpoints_path(work_dir)
-    if not os.path.exists(path):
-        return set()
-    rows = (spark.read.schema(CHECKPOINT_SCHEMA).parquet(path)
-            .filter(F.col("snapshot_id") == snapshot_id)
-            .select("url_hash_bucket").distinct().collect())
-    return {r.url_hash_bucket for r in rows}
+_STAT_KEYS = ("bucket", "docs", "ok", "failed", "bytes_in", "wall_ms",
+              "oversized", "max_doc_ms", "median_doc_ms", "p99_doc_ms",
+              "failure_reasons")
 
 
-def anti_join_processed_urls(pages: DataFrame, processed: DataFrame) -> DataFrame:
-    """J5 as SQL: drop input rows whose url already appears in ``processed``.
-    Catalyst broadcasts the processed side automatically when it is small;
-    at scale both sides are bucketed on url so this is a co-located join."""
-    return pages.join(processed.select("url"), on="url", how="left_anti")
+def commit_bucket_bookkeeping(staged: DataFrame, *, input_sid: str,
+                              input_files: list[str], run_id: str,
+                              buckets: list[int], n_buckets: int,
+                              big_threshold: int, skew_salt: int) -> dict:
+    """The wave's commit record, for the job to write into the staged
+    manifest before the pointer swap. ONE groupBy("bucket") over the
+    staged rows collects at most ``n_buckets`` rows; ``bucket_stats``
+    holds them column-wise (populated buckets only), ``buckets`` the
+    whole wave group."""
+    reasons = F.collect_list(F.substring_index("error", ":", 1))
+    rows = staged.groupBy("bucket").agg(
+        F.count("*").alias("docs"),
+        (F.count("*") - F.count("error")).alias("ok"),
+        F.count("error").alias("failed"),
+        F.sum("bytes_in").alias("bytes_in"),
+        F.sum("extract_ms").cast("long").alias("wall_ms"),
+        F.count(F.when(F.col("bytes_in") > big_threshold, 1))
+         .alias("oversized"),
+        # straggler/skew observability (SURVEY §5.2.7): per-doc
+        # extract-time spread inside the bucket. percentile_approx is a
+        # distributed sketch (no per-bucket collect), so this survives
+        # 100 TB; hot buckets (max >> median) show without a re-run.
+        F.round(F.max("extract_ms"), 3).alias("max_doc_ms"),
+        F.round(F.percentile_approx("extract_ms", 0.5), 3)
+         .alias("median_doc_ms"),
+        F.round(F.percentile_approx("extract_ms", 0.99), 3)
+         .alias("p99_doc_ms"),
+        # exact failure-reason histogram, built executor-side so only
+        # the map reaches the driver
+        F.map_from_entries(F.transform(
+            F.array_distinct(reasons),
+            lambda r: F.struct(r, F.size(F.filter(reasons,
+                                                  lambda x: x == r))
+                               .cast("long")))).alias("failure_reasons"),
+    ).collect()
+    rows.sort(key=lambda r: r.bucket)
+    stats = {k: [r[k] for r in rows] for k in _STAT_KEYS}
+    stats["failure_reasons"] = [dict(sorted(h.items()))
+                                for h in stats["failure_reasons"]]
+    return {"input_snapshot": input_sid, "input_files": input_files,
+            "run_id": run_id, "skew_salt": skew_salt,
+            "n_buckets": n_buckets, "buckets": sorted(buckets),
+            "committed_at": time.time(), "bucket_stats": stats}
 
 
-def commit_bucket_bookkeeping(spark: SparkSession, extracted: DataFrame,
-                              work_dir: str, snapshot_id: str, run_id: str,
-                              input_files: list[str],
-                              big_threshold: int, skew_salt: int,
-                              buckets: list[int] | None = None,
-                              out_snapshot_id: str | None = None) -> int:
-    """Append checkpoint + lineage + metrics rows for every bucket in the
-    wave. Called AFTER the wave's data is staged but BEFORE it is
-    published (two-phase commit: a crash after this append is rolled
-    FORWARD at the next job start by publishing ``out_snapshot_id``; a
-    crash before it leaves an invisible staged snapshot that is simply
-    redone). ``buckets`` is the wave's full bucket group — buckets with
-    zero input rows still get a checkpoint row (docs_done=0) so a resume
-    never retries them. Returns the wave's total document count."""
-    per_bucket = (
-        extracted.groupBy("bucket").agg(
-            F.count("*").alias("doc_count"),
-            F.sum(F.when(F.col("error").isNull(), 1).otherwise(0)).alias("ok_count"),
-            F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("failed_count"),
-            F.sum("bytes_in").alias("bytes_in"),
-            F.sum("extract_ms").cast("long").alias("wall_ms"),
-            F.sum(F.when(F.col("bytes_in") > big_threshold, 1).otherwise(0))
-             .alias("oversized_count"),
-            # straggler/skew observability (SURVEY §5.2.7): per-doc
-            # extract-time spread inside the bucket. percentile_approx
-            # is a distributed sketch (no per-bucket collect), so this
-            # survives 100 TB; an operator reading the metrics table
-            # sees hot buckets (max >> median) without re-running.
-            F.round(F.max("extract_ms"), 3).alias("max_doc_ms"),
-            F.round(F.percentile_approx("extract_ms", 0.5), 3)
-             .alias("median_doc_ms"),
-            F.round(F.percentile_approx("extract_ms", 0.99), 3)
-             .alias("p99_doc_ms"),
-        )
-    ).cache()
-
-    now = time.time()
-    ckpt_base = per_bucket.select("bucket", "ok_count")
-    if buckets is not None:
-        all_buckets = spark.createDataFrame(
-            [(int(b),) for b in buckets], "bucket int")
-        ckpt_base = (all_buckets.join(ckpt_base, on="bucket", how="left")
-                     .withColumn("ok_count", F.coalesce("ok_count", F.lit(0))))
-    ckpt = ckpt_base.select(
-        F.lit(snapshot_id).alias("snapshot_id"),
-        F.col("bucket").alias("partition_id"),
-        F.col("bucket").alias("url_hash_bucket"),
-        F.col("ok_count").cast("long").alias("docs_done"),
-        F.lit(now).cast("timestamp").alias("committed_at"),
-        F.lit(out_snapshot_id).cast("string").alias("out_snapshot_id"),
-    )
-    _append(ckpt, checkpoints_path(work_dir))
-
-    # failure histogram: explode error prefixes and re-aggregate (exact)
-    failures = (
-        extracted.filter(F.col("error").isNotNull())
-        .groupBy("bucket", F.substring_index("error", ":", 1).alias("reason"))
-        .agg(F.count("*").cast("long").alias("n"))
-        .groupBy("bucket")
-        .agg(F.map_from_entries(
-            F.collect_list(F.struct("reason", "n"))).alias("failure_reasons"))
-    )
-    lineage = (
-        per_bucket.join(failures, on="bucket", how="left")
-        .select(
-            F.lit(snapshot_id).alias("snapshot_id"),
-            F.col("bucket").alias("partition_id"),
-            F.array([F.lit(p) for p in input_files]).alias("input_files"),
-            "doc_count", "ok_count", "failed_count",
-            F.coalesce("failure_reasons",
-                       F.map_from_arrays(F.array().cast("array<string>"),
-                                         F.array().cast("array<bigint>")))
-             .alias("failure_reasons"),
-        )
-    )
-    _append(lineage, lineage_path(work_dir))
-
-    metrics = per_bucket.select(
-        F.lit(run_id).alias("run_id"),
-        F.lit("extract").alias("stage"),
-        F.col("bucket").alias("partition_id"),
-        F.col("doc_count").alias("docs"),
-        "bytes_in", "wall_ms",
-        F.lit(skew_salt).alias("skew_salt"),
-        "oversized_count",
-        "max_doc_ms", "median_doc_ms", "p99_doc_ms",
-    )
-    _append(metrics, metrics_path(work_dir))
-    docs_total = (per_bucket.agg(F.sum("doc_count")).collect()[0][0]) or 0
-    per_bucket.unpersist()
-    return int(docs_total)
+def completed_buckets_by_snapshot(manifests: list[dict]
+                                  ) -> dict[str, set[int]]:
+    """Resume state: committed buckets per input snapshot, folded from the
+    published output chain's manifests (``shim.chain_manifests``). A wave
+    contributes its bucket group, a compaction the folded state of the
+    waves it absorbed."""
+    done: dict[str, set[int]] = {}
+    for m in manifests:
+        if "input_snapshot" in m:
+            folded = {m["input_snapshot"]: m["buckets"]}
+        elif "completed" in m:
+            folded = m["completed"]
+        else:
+            raise ValueError(
+                f"output snapshot {m['snapshot_id']} carries no commit "
+                "record (written by an older version); re-extract into a "
+                "fresh work dir")
+        for sid, buckets in folded.items():
+            done.setdefault(sid, set()).update(buckets)
+    return done
 
 
-def completed_buckets_by_snapshot(spark: SparkSession,
-                                  work_dir: str) -> dict[str, set[int]]:
-    """Committed buckets for EVERY input snapshot in one checkpoint-table
-    scan — the chain-processing loop and the incremental base walk both
-    need per-snapshot completion state, and N separate filtered reads of
-    a growing parquet would pay N Spark jobs for one table's content."""
-    path = checkpoints_path(work_dir)
-    if not os.path.exists(path):
-        return {}
-    rows = (spark.read.schema(CHECKPOINT_SCHEMA).parquet(path)
-            .select("snapshot_id", "url_hash_bucket").distinct().collect())
-    out: dict[str, set[int]] = {}
-    for r in rows:
-        out.setdefault(r.snapshot_id, set()).add(r.url_hash_bucket)
-    return out
+# the DDL types above, as written by export_wave_tables
+_ARROW_TYPES = {
+    "string": pa.string(), "int": pa.int32(), "bigint": pa.int64(),
+    "double": pa.float64(), "timestamp": pa.timestamp("us", tz="UTC"),
+    "array<string>": pa.list_(pa.string()),
+    "map<string,bigint>": pa.map_(pa.string(), pa.int64()),
+}
 
 
-def processed_input_snapshots(spark: SparkSession, work_dir: str) -> set[str]:
-    """Input snapshot ids with any checkpoint rows — the incremental
-    job walks the input snapshot chain back to the newest member of
-    this set and processes only data added after it."""
-    path = checkpoints_path(work_dir)
-    if not os.path.exists(path):
-        return set()
-    rows = (spark.read.schema(CHECKPOINT_SCHEMA).parquet(path)
-            .select("snapshot_id").distinct().collect())
-    return {r.snapshot_id for r in rows}
+def _arrow_schema(ddl: str) -> pa.Schema:
+    return pa.schema([(name, _ARROW_TYPES[kind]) for name, kind in
+                      (field.split(" ") for field in ddl.split(", "))])
 
 
-def checkpointed_out_snapshots(spark: SparkSession, work_dir: str) -> set[str]:
-    """Output snapshot ids referenced by ANY checkpoint row — the set the
-    job roll-forward publishes if a crash landed between the bookkeeping
-    append and the pointer swap."""
-    path = checkpoints_path(work_dir)
-    if not os.path.exists(path):
-        return set()
-    rows = (spark.read.schema(CHECKPOINT_SCHEMA).parquet(path)
-            .filter(F.col("out_snapshot_id").isNotNull())
-            .select("out_snapshot_id").distinct().collect())
-    return {r.out_snapshot_id for r in rows}
+def _checkpoint_rows(m: dict) -> dict:
+    buckets = m["buckets"]
+    ok = dict(zip(m["bucket_stats"]["bucket"], m["bucket_stats"]["ok"]))
+    n = len(buckets)
+    return {"snapshot_id": [m["input_snapshot"]] * n,
+            "partition_id": buckets, "url_hash_bucket": buckets,
+            "docs_done": [ok.get(b, 0) for b in buckets],
+            "committed_at": [int(m["committed_at"] * 1e6)] * n,
+            "out_snapshot_id": [m["snapshot_id"]] * n}
+
+
+def _lineage_rows(m: dict) -> dict:
+    s = m["bucket_stats"]
+    n = len(s["bucket"])
+    return {"snapshot_id": [m["input_snapshot"]] * n,
+            "partition_id": s["bucket"],
+            "input_files": [m["input_files"]] * n,
+            "doc_count": s["docs"], "ok_count": s["ok"],
+            "failed_count": s["failed"],
+            "failure_reasons": [list(h.items())
+                                for h in s["failure_reasons"]]}
+
+
+def _metrics_rows(m: dict) -> dict:
+    s = m["bucket_stats"]
+    n = len(s["bucket"])
+    return {"run_id": [m["run_id"]] * n, "stage": ["extract"] * n,
+            "partition_id": s["bucket"], "docs": s["docs"],
+            "bytes_in": s["bytes_in"], "wall_ms": s["wall_ms"],
+            "skew_salt": [m["skew_salt"]] * n,
+            "oversized_count": s["oversized"],
+            **{k: s[k] for k in ("max_doc_ms", "median_doc_ms",
+                                 "p99_doc_ms")}}
+
+
+def export_wave_tables(work_dir: str, manifest: dict) -> int:
+    """Write a committed wave's rows into each table that lacks its file
+    ``<table>/<out snapshot id>.parquet``, driver-side from the manifest
+    (no Spark job, no data scan). Returns the number of files written:
+    0 once the wave is fully exported."""
+    written = 0
+    for table_path, ddl, rows in (
+            (checkpoints_path, CHECKPOINT_SCHEMA, _checkpoint_rows),
+            (lineage_path, LINEAGE_SCHEMA, _lineage_rows),
+            (metrics_path, METRICS_SCHEMA, _metrics_rows)):
+        root = table_path(work_dir)
+        target = os.path.join(root, f"{manifest['snapshot_id']}.parquet")
+        if os.path.exists(target):
+            continue
+        os.makedirs(root, exist_ok=True)
+        # dot-prefixed: Spark's file listing skips it until the rename
+        tmp = os.path.join(root, f".{uuid.uuid4().hex[:8]}.tmp")
+        pq.write_table(pa.Table.from_pydict(rows(manifest),
+                                            schema=_arrow_schema(ddl)), tmp)
+        os.replace(tmp, target)
+        written += 1
+    return written

@@ -234,7 +234,11 @@ _ANCHOR_TEXT = r"<a [^>]*>([^<]*)</a>"
 
 def pages_html_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-page boilerplate-heuristic features from the raw bytes."""
-    pages = pages_from_documents(spark, sf_dir)
+    return html_features_frame(pages_from_documents(spark, sf_dir))
+
+
+def html_features_frame(pages: DataFrame) -> DataFrame:
+    """pages_html_features over any (url, html BINARY) frame."""
     h = F.decode(F.col("html"), "UTF-8")
     visible = F.regexp_replace(F.regexp_replace(h, _SCRIPT_STYLE, ""),
                                _TAG, "")
@@ -326,10 +330,13 @@ def route_for_html(html) -> F.Column:
     atexts = F.regexp_extract_all(h, F.lit(_ANCHOR_TEXT), 1)
     anchor_chars = F.aggregate(atexts, F.lit(0).cast("long"),
                                lambda acc, x: acc + F.length(x))
-    text_density = (F.length(visible)
-                    / F.greatest(F.length(h), F.lit(1)))
-    link_density = (anchor_chars
-                    / F.greatest(F.length(visible), F.lit(1)))
+    # rounded as the published table rounds them (FEAT_ROUND), so a
+    # density that rounds onto a cut routes the same on both surfaces
+    text_density = F.round(F.length(visible)
+                           / F.greatest(F.length(h), F.lit(1)), FEAT_ROUND)
+    link_density = F.round(anchor_chars
+                           / F.greatest(F.length(visible), F.lit(1)),
+                           FEAT_ROUND)
     return (
         F.when(F.length(html) > ROUTER_BIG_BYTES, F.lit("oversized"))
         .when(link_density >= ROUTER_LINK_HEAVY, F.lit("link_heavy"))
@@ -349,7 +356,12 @@ def pages_extract_router(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the features subplan's zero-shuffle narrow map plus a
     per-row CASE — still zero shuffles."""
-    feats = pages_html_features(spark, sf_dir)
+    return extract_router_frame(pages_from_documents(spark, sf_dir))
+
+
+def extract_router_frame(pages: DataFrame) -> DataFrame:
+    """pages_extract_router over any (url, html BINARY) frame."""
+    feats = html_features_frame(pages)
     route = (
         F.when(F.col("html_bytes") > ROUTER_BIG_BYTES, F.lit("oversized"))
         .when(F.col("link_density") >= ROUTER_LINK_HEAVY,

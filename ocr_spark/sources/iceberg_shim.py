@@ -53,6 +53,26 @@ def read_manifest(table_root: str, snapshot_id: str) -> dict:
         return json.load(fh)
 
 
+def _write_manifest(table_root: str, manifest: dict) -> None:
+    """Write ``manifest`` whole or not at all (temp file + os.replace)."""
+    os.makedirs(os.path.join(table_root, _SNAP_DIR), exist_ok=True)
+    tmp = os.path.join(table_root, _SNAP_DIR,
+                       f".snap.{uuid.uuid4().hex[:8]}")
+    with open(tmp, "w", encoding="utf-8") as fh:
+        json.dump(manifest, fh)
+    os.replace(tmp, _snap_path(table_root, manifest["snapshot_id"]))
+
+
+def amend_manifest(table_root: str, snapshot_id: str, extra: dict) -> dict:
+    """Merge ``extra`` into a STAGED snapshot's manifest and return it.
+    Only for snapshots not yet published: a published manifest is
+    immutable. The job uses this to write a wave's commit record, which
+    needs the staged rows, before the pointer swap."""
+    manifest = {**read_manifest(table_root, snapshot_id), **extra}
+    _write_manifest(table_root, manifest)
+    return manifest
+
+
 def prepare_snapshot(df: DataFrame, table_root: str,
                      partition_by: list[str] | None = None,
                      snapshot_id: str | None = None,
@@ -79,7 +99,7 @@ def prepare_snapshot(df: DataFrame, table_root: str,
     row_count = None  # avoid re-scan; callers that need it count the read-back
     parent = current_snapshot_id(table_root) if parent_id == "auto" \
         else parent_id
-    manifest = {
+    _write_manifest(table_root, {
         "snapshot_id": snapshot_id,
         "parent_id": parent,
         "created_at": time.time(),
@@ -87,38 +107,15 @@ def prepare_snapshot(df: DataFrame, table_root: str,
         "partition_by": partition_by or [],
         "row_count": row_count,
         **(extra or {}),
-    }
-    os.makedirs(os.path.join(table_root, _SNAP_DIR), exist_ok=True)
-    with open(_snap_path(table_root, snapshot_id), "w", encoding="utf-8") as fh:
-        json.dump(manifest, fh, indent=2)
+    })
     return snapshot_id
 
 
-def is_published(table_root: str, snapshot_id: str) -> bool:
-    """A snapshot counts as published if it is in the visible history OR
-    was absorbed into a published compacted snapshot (its rows are
-    visible through the compaction even though its own manifest left the
-    chain) — so crash roll-forward never re-publishes a compacted-away
-    snapshot and rewinds CURRENT."""
-    try:
-        chain = history(table_root)
-    except FileNotFoundError:
-        return False
-    if snapshot_id in chain:
-        return True
-    for sid in chain:
-        if snapshot_id in (read_manifest(table_root, sid)
-                           .get("compacted_from") or []):
-            return True
-    return False
-
-
 def publish_snapshot(table_root: str, snapshot_id: str) -> None:
-    """Atomic commit point: swap CURRENT to ``snapshot_id``. Idempotent —
-    republishing an already-visible snapshot is a no-op (used by crash
-    roll-forward in the job layer)."""
-    if is_published(table_root, snapshot_id):
-        return
+    """The commit point: atomically swap CURRENT to a staged
+    ``snapshot_id``, whose manifest already holds its parent link and
+    any commit record. Before the swap the snapshot is invisible and
+    crash-discardable; after it, committed."""
     if not os.path.exists(_snap_path(table_root, snapshot_id)):
         raise FileNotFoundError(
             f"cannot publish unknown snapshot {snapshot_id} at {table_root}")
@@ -181,14 +178,20 @@ def read_current(spark: SparkSession, table_root: str) -> DataFrame:
     return read_snapshot(spark, table_root, sid)
 
 
-def history(table_root: str) -> list[str]:
-    """Snapshot ids, oldest → newest, by following parent links."""
+def chain_manifests(table_root: str) -> list[dict]:
+    """Manifests of the visible history, oldest → newest, each read
+    once by following parent links (empty when nothing is published)."""
     sid = current_snapshot_id(table_root)
     chain = []
     while sid is not None:
-        chain.append(sid)
-        sid = read_manifest(table_root, sid).get("parent_id")
+        chain.append(read_manifest(table_root, sid))
+        sid = chain[-1].get("parent_id")
     return list(reversed(chain))
+
+
+def history(table_root: str) -> list[str]:
+    """Snapshot ids, oldest → newest, by following parent links."""
+    return [m["snapshot_id"] for m in chain_manifests(table_root)]
 
 
 def added_since(table_root: str, old_snapshot_id: str | None,
@@ -210,13 +213,12 @@ def vacuum_absorbed(table_root: str, dry_run: bool = False) -> dict:
     manifest's ``compacted_from`` (their rows are fully contained in
     the compacted snapshot) whose own manifests have left the chain.
 
-    Deliberately NEVER touches prepared-but-unpublished snapshots —
-    those are in-flight two-phase commits awaiting crash roll-forward,
-    and deleting them would turn a crash-recoverable run into data
-    loss. ``is_published`` keeps answering True for vacuumed ids (the
-    compaction manifest retains the ``compacted_from`` list), so a
-    later roll-forward attempt stays a no-op instead of resurrecting a
-    deleted snapshot.
+    Never touches staged-but-unpublished snapshots. Those are garbage
+    once their writer is gone (the pointer swap is the only commit
+    point, so nothing will ever publish or read them), but a running
+    job may be between its stage and its swap. Vacuumed ids stay
+    accounted for: the compaction manifest keeps ``compacted_from`` and
+    the folded resume state of every wave it absorbed (``completed``).
 
     Returns {"vacuumed": [ids], "dirs_deleted": n, "bytes_freed": n}
     (``dry_run`` computes without deleting)."""

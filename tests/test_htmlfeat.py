@@ -105,6 +105,36 @@ def test_extract_router_is_narrow_map_and_covers_routes(spark):
     assert {"extract", "link_heavy", "low_text"} <= got
 
 
+def test_router_boundary_same_route_on_both_surfaces(spark):
+    """The job's route_filter (route_for_html) and the published router
+    table threshold the SAME FEAT_ROUND-rounded densities. A page with
+    1,000,001 visible chars, 350,000 of them anchor text, has a raw link
+    density of 0.34999965: rounded it is 0.35, link_heavy on both
+    surfaces. One anchor char fewer rounds to 0.349999 and extracts."""
+    from pyspark.sql import functions as F
+
+    from ocr_spark.plans.htmlfeat import ROUTER_LINK_HEAVY, route_for_html
+
+    def page(anchor_chars: int) -> bytes:
+        return (b"<html><body><p>" + b"x" * (1_000_001 - anchor_chars)
+                + b'</p><a href="#">' + b"y" * anchor_chars
+                + b"</a></body></html>")
+
+    pages = spark.createDataFrame(
+        [("https://b.test/on", page(350_000)),
+         ("https://b.test/below", page(349_999))], "url string, html binary")
+    want = {"https://b.test/on": "link_heavy",
+            "https://b.test/below": "extract"}
+    job_side = {r.url: r.route for r in pages.select(
+        "url", route_for_html(F.col("html")).alias("route")).collect()}
+    assert job_side == want
+
+    from ocr_spark.plans.htmlfeat import extract_router_frame
+    table = {r.url: r for r in extract_router_frame(pages).collect()}
+    assert table["https://b.test/on"].link_density == ROUTER_LINK_HEAVY
+    assert {u: r.route for u, r in table.items()} == want
+
+
 def test_cell_drift_shares_sum_to_one(spark):
     """Per-snapshot cell shares are exact-count ratios: each side sums
     to ~1 and uses every trained cell's population."""

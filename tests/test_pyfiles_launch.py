@@ -48,6 +48,17 @@ def test_pyfiles_zip_is_reproducible(tmp_path):
     assert sha(first) == sha(second)
 
 
+def test_committed_zip_matches_tree(tmp_path):
+    """dist/ocr_spark.zip is what spark-submit ships: it must equal a
+    fresh build of the tree, so a change to ocr_spark/ without a rebuild
+    (``python scripts/make_pyfiles.py``) fails here, not on a cluster."""
+    fresh = _make_zip(str(tmp_path / "fresh.zip"))
+    with open(fresh, "rb") as a, \
+            open(os.path.join(REPO, "dist", "ocr_spark.zip"), "rb") as b:
+        assert a.read() == b.read(), \
+            "dist/ocr_spark.zip is stale: run python scripts/make_pyfiles.py"
+
+
 def test_spark_submit_pyfiles_launch(spark, tmp_path):
     spark_submit = shutil.which("spark-submit")
     if spark_submit is None:

@@ -122,6 +122,16 @@ def test_resume_after_injected_failure(spark, pages_table, tmp_path):
     assert all(r["count"] == 1 for r in per_bucket)
     assert lineage.groupBy().sum("doc_count").collect()[0][0] == N_ROWS
 
+    # the per-wave export files read back untyped under the declared
+    # table schemas
+    from ocr_spark.operators import bookkeeping as bk
+    for path, ddl in ((bk.checkpoints_path, bk.CHECKPOINT_SCHEMA),
+                      (bk.lineage_path, bk.LINEAGE_SCHEMA),
+                      (bk.metrics_path, bk.METRICS_SCHEMA)):
+        assert (spark.read.parquet(path(work)).schema.simpleString()
+                == spark.read.schema(ddl).parquet(path(work))
+                .schema.simpleString())
+
 
 def test_rerun_is_noop(spark, pages_table, tmp_path):
     from ocr_spark.job import run_extraction_job
@@ -182,12 +192,14 @@ def test_typed_struct_views(spark, pages_table):
 
 
 def test_crash_after_stage_no_duplicates(spark, pages_table, tmp_path):
-    """Crash window #1: data staged, no bookkeeping, no publish. The
-    staged snapshot is unreachable; resume re-runs its buckets and the
-    final table has exactly one row per url."""
+    """Crash window #1: data and manifest staged, nothing published. The
+    staged snapshot is unreachable garbage: resume re-runs its buckets,
+    the final table has exactly one row per url, and the tables never
+    hold rows for the discarded wave."""
     import pytest
 
     from ocr_spark.job import read_extracted, run_extraction_job
+    from ocr_spark.sources import iceberg_shim as shim
 
     root, _rows = pages_table
     work = str(tmp_path / "work_stage")
@@ -195,32 +207,70 @@ def test_crash_after_stage_no_duplicates(spark, pages_table, tmp_path):
         run_extraction_job(spark, root, work, partitions=16,
                            big_partitions=2, waves=4, fail_after_waves=2,
                            fail_point="after_stage")
+    out_root = os.path.join(work, "extracted")
+    published = shim.history(out_root)
+    staged = {f[len("snap-"):-len(".json")]
+              for f in os.listdir(os.path.join(out_root, "_snapshots"))
+              if f.startswith("snap-")} - set(published)
+    assert len(staged) == 1
+    lineage = os.path.join(work, "lineage")
+    assert sorted(os.listdir(lineage)) == sorted(
+        f"{sid}.parquet" for sid in published)
+    assert (spark.read.parquet(lineage).groupBy().sum("doc_count")
+            .collect()[0][0]) == read_extracted(spark, work).count()
+
     run_extraction_job(spark, root, work, partitions=16,
                        big_partitions=2, waves=4)
     urls = [r.url for r in read_extracted(spark, work).select("url").collect()]
     assert len(urls) == N_ROWS and len(set(urls)) == N_ROWS
+    assert not any(f"{sid}.parquet" in os.listdir(lineage) for sid in staged)
+    _assert_tables_complete(spark, work, N_ROWS)
 
 
-def test_crash_after_bookkeeping_rolls_forward(spark, pages_table, tmp_path):
-    """Crash window #2: bookkeeping appended, publish skipped. The next
-    run must roll the orphan snapshot forward (publish it), NOT skip its
-    buckets while their data stays invisible — that would silently lose
-    documents."""
+def _assert_tables_complete(spark, work: str, n_docs: int) -> None:
+    """lineage: one row per populated bucket, doc counts summing to
+    ``n_docs``; checkpoints: every bucket of the input snapshot."""
+    from ocr_spark.operators.bookkeeping import (
+        CHECKPOINT_SCHEMA, checkpoints_path, lineage_path,
+    )
+    from ocr_spark.operators.extraction import DEFAULT_BUCKETS
+
+    lineage = spark.read.parquet(lineage_path(work))
+    assert all(r["count"] == 1 for r in
+               lineage.groupBy("snapshot_id", "partition_id").count()
+               .collect())
+    assert lineage.groupBy().sum("doc_count").collect()[0][0] == n_docs
+    ckpt = {r.url_hash_bucket for r in
+            spark.read.schema(CHECKPOINT_SCHEMA)
+            .parquet(checkpoints_path(work)).collect()}
+    assert ckpt == set(range(DEFAULT_BUCKETS))
+
+
+def test_crash_after_publish_repairs_tables(spark, pages_table, tmp_path):
+    """Crash window #2: the pointer swap committed the wave, the table
+    export did not run. The next job start writes the missing table rows
+    from the manifest (``rolled_forward`` counts repaired waves) and
+    re-extracts nothing: the published wave's buckets are done."""
     import pytest
 
     from ocr_spark.job import read_extracted, run_extraction_job
 
     root, _rows = pages_table
-    work = str(tmp_path / "work_bk")
-    with pytest.raises(RuntimeError, match="after bookkeeping"):
+    work = str(tmp_path / "work_pub")
+    with pytest.raises(RuntimeError, match="after publish"):
         run_extraction_job(spark, root, work, partitions=16,
                            big_partitions=2, waves=4, fail_after_waves=2,
-                           fail_point="after_bookkeeping")
+                           fail_point="after_publish")
+    n_committed = read_extracted(spark, work).count()
     summary = run_extraction_job(spark, root, work, partitions=16,
                                  big_partitions=2, waves=4)
     assert summary["rolled_forward"] >= 1
+    assert summary["buckets_skipped"] == 32  # two 16-bucket waves
+    assert summary["buckets_processed"] == 32
+    assert summary["docs"] == N_ROWS - n_committed
     urls = [r.url for r in read_extracted(spark, work).select("url").collect()]
     assert len(urls) == N_ROWS and len(set(urls)) == N_ROWS
+    _assert_tables_complete(spark, work, N_ROWS)
 
 
 def test_resume_with_different_n_buckets_raises(spark, pages_table,
@@ -273,9 +323,8 @@ def test_null_html_becomes_failure_row(spark, tmp_path):
 
 def test_compact_snapshots(spark, pages_table, tmp_path):
     """Compaction rewrites N output snapshots as one: identical row set,
-    single-snapshot history, resume bookkeeping still a no-op (no
-    reprocessing), and crash roll-forward never rewinds CURRENT to a
-    compacted-away snapshot."""
+    single-snapshot history, and resume still a no-op (the compaction
+    manifest carries the folded record of the waves it absorbed)."""
     from ocr_spark.job import (
         compact_snapshots, read_extracted, run_extraction_job,
     )
@@ -304,51 +353,55 @@ def test_compact_snapshots(spark, pages_table, tmp_path):
     n_buckets_present = len(glob.glob(os.path.join(data_dir, "bucket=*")))
     assert len(files) == n_buckets_present, (len(files), n_buckets_present)
 
-    # resume over the compacted table: everything already checkpointed
+    # resume over the compacted table: everything already committed
     s2 = run_extraction_job(spark, root, work, partitions=16,
                             big_partitions=2, waves=4)
     assert s2["docs"] == 0 and s2["buckets_processed"] == 0
-    # roll-forward is a no-op: the compacted-away sids count as published
     assert shim.history(out_root) == [summary["snapshot"]]
     # idempotent: compacting a single-snapshot history is a no-op
     assert compact_snapshots(spark, work)["compacted"] == 0
 
 
 def test_compact_rolls_forward_orphans_first(spark, pages_table, tmp_path):
-    """A checkpointed-but-unpublished wave snapshot (crash window #2)
-    existing at compaction time must be published and ABSORBED by the
-    compacted snapshot — otherwise the next job's roll-forward swaps
-    CURRENT to the orphan (whose parent chain is the pre-compaction
-    history), making the compacted snapshot unreachable and silently
-    undoing the compaction."""
+    """A published wave whose table export a crash skipped (crash window
+    #2) leaves the chain at compaction: its table rows must be written
+    BEFORE the rewrite, since afterwards no chain manifest carries its
+    record. The run after compaction completes the rest, each url
+    exactly once."""
     from ocr_spark.job import (
         compact_snapshots, read_extracted, run_extraction_job,
     )
+    from ocr_spark.operators.bookkeeping import lineage_path
     from ocr_spark.sources import iceberg_shim as shim
 
     root, _rows = pages_table
     work = str(tmp_path / "work_compact_orphan")
-    with pytest.raises(RuntimeError, match="after bookkeeping"):
+    with pytest.raises(RuntimeError, match="after publish"):
         run_extraction_job(spark, root, work, partitions=16,
                            big_partitions=2, waves=4, fail_after_waves=2,
-                           fail_point="after_bookkeeping")
+                           fail_point="after_publish")
     out_root = os.path.join(work, "extracted")
+    assert len(os.listdir(lineage_path(work))) == 1  # wave 2 unexported
 
     summary = compact_snapshots(spark, work)
-    # the orphan was published first, so it is absorbed: single-snapshot
-    # history, orphan data included
     assert summary["compacted"] == 2
     assert shim.history(out_root) == [summary["snapshot"]]
+    # repaired before the rewrite: both waves' rows are in the tables
+    assert len(os.listdir(lineage_path(work))) == 2
+    assert (spark.read.parquet(lineage_path(work)).groupBy()
+            .sum("doc_count").collect()[0][0]
+            == read_extracted(spark, work).count())
 
-    # next run completes the remaining buckets WITHOUT resurrecting the
-    # pre-compaction chain: nothing left to roll forward, and the
-    # compacted snapshot stays reachable as an ancestor of CURRENT
+    # the compacted snapshot stays reachable as an ancestor of CURRENT,
+    # and its folded record keeps the absorbed waves' buckets done
     s2 = run_extraction_job(spark, root, work, partitions=16,
                             big_partitions=2, waves=4)
     assert s2["rolled_forward"] == 0
+    assert s2["buckets_skipped"] == 32
     assert summary["snapshot"] in shim.history(out_root)
     urls = [r.url for r in read_extracted(spark, work).select("url").collect()]
     assert len(urls) == N_ROWS and len(set(urls)) == N_ROWS
+    _assert_tables_complete(spark, work, N_ROWS)
 
 
 def test_first_run_on_multi_snapshot_table_reads_whole_chain(spark, tmp_path):
@@ -553,6 +606,50 @@ def test_skew_metrics_and_partition_balance(spark, pages_table, tmp_path):
     assert max(normal) <= 4.0 * statistics.median(normal), walls
 
 
+@pytest.mark.parametrize("n_waves", [50, 200])
+def test_job_start_reads_each_manifest_at_most_twice(tmp_path, monkeypatch,
+                                                     n_waves):
+    """Job-start cost is linear in the output chain: the repair and the
+    resume fold read each manifest at most twice (one walk here), so the
+    per-sid history walk the data roll-forward once made cannot return.
+    Synthetic wave manifests, no Spark. Every third wave lost its table
+    export (crash window #2) and is repaired from its manifest alone."""
+    import sys
+
+    from ocr_spark import job
+    from ocr_spark.operators.bookkeeping import lineage_path
+    from ocr_spark.sources import iceberg_shim as shim
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "scripts"))
+    try:
+        from chain_commit_bench import synthetic_wave_chain
+    finally:
+        sys.path.pop(0)
+    work = str(tmp_path / "work")
+    inputs = synthetic_wave_chain(work, n_waves)
+    lost = [f"wave-{i:05d}" for i in range(0, n_waves, 3)]
+    for sid in lost:
+        os.remove(os.path.join(lineage_path(work), f"{sid}.parquet"))
+
+    reads = []
+    read_manifest = shim.read_manifest
+    monkeypatch.setattr(shim, "read_manifest",
+                        lambda root, sid: reads.append(sid)
+                        or read_manifest(root, sid))
+    done, repaired = job._resume_state(work, 64)
+    assert len(reads) <= 2 * n_waves + 2, len(reads)
+    assert repaired == len(lost)
+    assert sorted(os.listdir(lineage_path(work))) == [
+        f"wave-{i:05d}.parquet" for i in range(n_waves)]
+    expected: dict = {}
+    for i in range(n_waves):  # wave i commits quarter i % 4 of in-{i // 4}
+        expected.setdefault(inputs[i // 4], set()).update(
+            range(i % 4 * 16, (i % 4 + 1) * 16))
+    assert done == expected
+    assert job._resume_state(work, 64)[1] == 0  # repaired once
+
+
 def test_respect_robots_drops_noindex_pages(spark, tmp_path):
     """respect_robots=True: pages whose meta-robots directive carries
     noindex (doc_id % 17 == 3 in the wrap corpus) are filtered before
@@ -585,9 +682,9 @@ def test_vacuum_absorbed_reclaims_only_compacted_dirs(spark, pages_table,
                                                       tmp_path):
     """Storage maintenance after compaction: vacuum deletes exactly the
     absorbed snapshots' manifests + data dirs (bytes actually freed),
-    the compacted table still reads identically, is_published keeps
-    answering True for vacuumed ids (crash roll-forward stays a no-op),
-    and a second vacuum finds nothing."""
+    the compacted table still reads identically, resume stays a no-op
+    (the compaction manifest's folded record outlives the vacuumed wave
+    manifests), and a second vacuum finds nothing."""
     from ocr_spark.job import (
         compact_snapshots, read_extracted, run_extraction_job,
     )
@@ -619,10 +716,12 @@ def test_vacuum_absorbed_reclaims_only_compacted_dirs(spark, pages_table,
     for s in absorbed:
         assert not os.path.exists(os.path.join(out_root, "_snapshots",
                                                f"snap-{s}.json"))
-        assert shim.is_published(out_root, s)  # roll-forward stays no-op
     after = sorted(r.url for r in
                    read_extracted(spark, work).select("url").collect())
     assert after == before
+    s2 = run_extraction_job(spark, root, work, partitions=16,
+                            big_partitions=2, waves=4)
+    assert s2["docs"] == 0 and s2["buckets_processed"] == 0
     again = shim.vacuum_absorbed(out_root)
     assert again["vacuumed"] == [] and again["dirs_deleted"] == 0
 
