@@ -7,7 +7,7 @@ Execution model (SURVEY.md §3.4): one Catalyst-planned job per commit wave —
       → [resume filter: skip committed buckets — partition-level skip]
       → salted repartition                    [the ONE shuffle]
       → mapInArrow(extract)                   [Arrow boundary]
-      → snapshot write partitioned by bucket  [shuffle-free]
+      → snapshot write, one file per task     [shuffle-free]
       → commit record: one groupBy(bucket) over the staged rows
 
 Buckets are grouped into ``waves``. A wave's output manifest is its commit
@@ -32,7 +32,8 @@ from ocr_spark.operators.bookkeeping import (
     commit_bucket_bookkeeping, export_wave_tables,
 )
 from ocr_spark.operators.extraction import (
-    DEFAULT_BIG_THRESHOLD, DEFAULT_BUCKETS, run_extraction, url_bucket,
+    DEFAULT_BIG_THRESHOLD, DEFAULT_BUCKETS, EXTRACT_RESULT_SCHEMA,
+    run_extraction, url_bucket,
 )
 from ocr_spark.sources import iceberg_shim as shim
 
@@ -226,8 +227,6 @@ def _run_waves(spark: SparkSession, pages: DataFrame, work_dir: str,
     publishes (the commit point), then exports the record's table rows.
     A crash before the swap leaves unreachable garbage whose buckets
     re-run; a crash after it is repaired at the next job start."""
-    from ocr_spark.operators.extraction import EXTRACT_RESULT_SCHEMA
-
     root = output_root(work_dir)
     all_buckets = list(range(n_buckets))
     todo = [b for b in all_buckets if b not in done]
@@ -249,8 +248,7 @@ def _run_waves(spark: SparkSession, pages: DataFrame, work_dir: str,
             big_threshold=big_threshold, n_buckets=n_buckets,
         )
         out_sid = shim.prepare_snapshot(
-            extracted, root, partition_by=["bucket"],
-            snapshot_id=f"{input_sid[:8]}-{run_id}-w{w}")
+            extracted, root, snapshot_id=f"{input_sid[:8]}-{run_id}-w{w}")
         crash_at("after_stage", w)
 
         record = commit_bucket_bookkeeping(
@@ -350,14 +348,11 @@ def compact_snapshots(spark: SparkSession, work_dir: str) -> dict:
         absorbed.append(m["snapshot_id"])
         absorbed.extend(m.get("compacted_from") or [])
     completed = bookkeeping.completed_buckets_by_snapshot(manifests)
-    # repartition ON the partition column before the partitionBy write:
-    # without it every task writes a sliver into every bucket dir
-    # (tasks × buckets small files — the problem compaction exists to
-    # fix); with it each bucket's rows land in one task → one file.
+    # each bucket's rows go to one task, so each bucket sits in exactly
+    # one file (a task may hold several buckets)
     df = read_extracted(spark, work_dir).repartition("bucket")
     new_sid = shim.prepare_snapshot(
-        df, root, partition_by=["bucket"],
-        snapshot_id=f"compact-{uuid.uuid4().hex[:12]}",
+        df, root, snapshot_id=f"compact-{uuid.uuid4().hex[:12]}",
         parent_id=None, extra={
             "compacted_from": sorted(set(absorbed)),
             "n_buckets": manifests[-1].get("n_buckets"),
@@ -1153,26 +1148,11 @@ def read_extracted(spark: SparkSession, work_dir: str) -> DataFrame:
         raise FileNotFoundError(
             f"no extraction output committed yet under {root}")
     dirs = [shim.read_manifest(root, sid)["data_dir"] for sid in sids]
-    # each snapshot dir is its own partitioned table root (bucket=N leaves);
-    # PUBLISHED snapshots hold disjoint buckets (a bucket is committed
-    # only by the manifest that publishes its data, and only committed
-    # buckets are skipped), so a union is exact.
-    # ONE multi-path scan (recursiveFileLookup skips per-dir partition
-    # discovery, which rejects the snap-X level between root and
-    # bucket=N): the plan stays a single scan node after thousands of
+    # ONE multi-path scan of flat snapshot dirs (``bucket`` is a data
+    # column): the plan stays a single scan node after thousands of
     # incremental commits, instead of a union chain that grows per
-    # snapshot. The bucket partition column is recovered from the file
-    # path — exact for any n_buckets.
-    from ocr_spark.operators.extraction import EXTRACT_RESULT_SCHEMA
-    from pyspark.sql.types import StructType
-    data_schema = StructType(
-        [f for f in EXTRACT_RESULT_SCHEMA if f.name != "bucket"])
-    out = (spark.read.schema(data_schema)
-           .option("recursiveFileLookup", "true").parquet(*dirs)
-           .withColumn("bucket",
-                       F.regexp_extract(F.input_file_name(),
-                                        r"bucket=(\d+)", 1).cast("int")))
-    return out.select(*[f.name for f in EXTRACT_RESULT_SCHEMA])
+    # snapshot.
+    return spark.read.schema(EXTRACT_RESULT_SCHEMA).parquet(*dirs)
 
 
 class ValidationError(RuntimeError):
@@ -1335,14 +1315,8 @@ def _snapshot_texts(spark: SparkSession, work_dir: str,
     """Extracted text of ONE committed extraction snapshot's own rows
     (snapshot dirs are disjoint by the two-phase bucket commit, so
     per-snapshot sketch frames tile the corpus with no overlap)."""
-    from pyspark.sql.types import StructType
-
-    from ocr_spark.operators.extraction import EXTRACT_RESULT_SCHEMA
-    data_schema = StructType(
-        [f for f in EXTRACT_RESULT_SCHEMA if f.name != "bucket"])
     d = shim.read_manifest(output_root(work_dir), sid)["data_dir"]
-    return (spark.read.schema(data_schema)
-            .option("recursiveFileLookup", "true").parquet(d)
+    return (spark.read.schema(EXTRACT_RESULT_SCHEMA).parquet(d)
             .filter(F.col("error").isNull() & F.col("text").isNotNull())
             .select("text"))
 

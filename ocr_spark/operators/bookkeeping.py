@@ -119,9 +119,16 @@ def completed_buckets_by_snapshot(manifests: list[dict]
     """Resume state: committed buckets per input snapshot, folded from the
     published output chain's manifests (``shim.chain_manifests``). A wave
     contributes its bucket group, a compaction the folded state of the
-    waves it absorbed."""
+    waves it absorbed. Output written in an older layout is refused:
+    ``bucket=N`` directories (``partition_by == ["bucket"]``) do not
+    read back as the flat snapshots later commits add."""
     done: dict[str, set[int]] = {}
     for m in manifests:
+        if m.get("partition_by"):
+            raise ValueError(
+                f"output snapshot {m['snapshot_id']} is partitioned by "
+                f"{m['partition_by']} (bucket directories, written by an "
+                "older version); re-extract into a fresh work dir")
         if "input_snapshot" in m:
             folded = {m["input_snapshot"]: m["buckets"]}
         elif "completed" in m:

@@ -60,8 +60,8 @@ def synthetic_wave_chain(work_dir: str, n_waves: int) -> list[str]:
         manifest = {
             "snapshot_id": f"wave-{i:05d}",
             "parent_id": shim.current_snapshot_id(root),
-            "created_at": float(i), "data_dir": "", "partition_by":
-            ["bucket"], "row_count": None,
+            "created_at": float(i), "data_dir": "", "partition_by": [],
+            "row_count": None,
             "input_snapshot": f"in-{i // WAVES_PER_INPUT}",
             "input_files": [f"in-{i // WAVES_PER_INPUT}/data"],
             "run_id": f"run-{i // WAVES_PER_INPUT}", "skew_salt": 1,

@@ -28,6 +28,21 @@ def pages_table(spark, tmp_path_factory):
     return root, rows
 
 
+def _synthetic_wave_chain(work_dir: str, n_waves: int) -> list[str]:
+    """``scripts/chain_commit_bench.synthetic_wave_chain``: published
+    wave manifests (with their table exports, no data) under
+    ``work_dir``; returns the input snapshot ids."""
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "scripts"))
+    try:
+        from chain_commit_bench import synthetic_wave_chain
+    finally:
+        sys.path.pop(0)
+    return synthetic_wave_chain(work_dir, n_waves)
+
+
 def test_spark_equals_sequential(spark, pages_table):
     """Bit-for-bit: the distributed mapInArrow run must equal the pure
     sequential run for every url (catches batching/order bugs)."""
@@ -305,6 +320,36 @@ def test_resume_with_different_n_buckets_raises(spark, pages_table,
     assert len(urls) == N_ROWS and len(set(urls)) == N_ROWS
 
 
+def test_bucket_directory_layout_is_refused(spark, pages_table, tmp_path):
+    """Output written with ``bucket=N`` directories (manifest
+    ``partition_by == ["bucket"]``) does not read back together with the
+    flat snapshots a new commit would add: Spark rejects the mixed
+    directory structures on read. Job start and compaction refuse it up
+    front, naming the snapshot, and commit nothing."""
+    from ocr_spark.job import (
+        compact_snapshots, output_root, run_extraction_job,
+        run_incremental_extraction_job,
+    )
+    from ocr_spark.sources import iceberg_shim as shim
+
+    root, _rows = pages_table
+    work = str(tmp_path / "work_old_layout")
+    _synthetic_wave_chain(work, 3)
+    out_root = output_root(work)
+    old = shim.read_manifest(out_root, "wave-00001")
+    shim._write_manifest(out_root, {**old, "partition_by": ["bucket"]})
+    history = shim.history(out_root)
+    kw = dict(partitions=4, big_partitions=1, n_buckets=64)
+    for run in (lambda: run_extraction_job(spark, root, work, **kw),
+                lambda: run_incremental_extraction_job(spark, root, work,
+                                                       **kw),
+                lambda: compact_snapshots(spark, work)):
+        with pytest.raises(ValueError,
+                           match=r"wave-00001 .*fresh work dir"):
+            run()
+    assert shim.history(out_root) == history
+
+
 def test_null_html_becomes_failure_row(spark, tmp_path):
     """NULL html must survive the salted repartition and surface as a
     kernel failure row (null_html), never vanish silently."""
@@ -345,13 +390,22 @@ def test_compact_snapshots(spark, pages_table, tmp_path):
     after = sorted(r.url for r in
                    read_extracted(spark, work).select("url").collect())
     assert after == before
-    # small-file compaction: one data file per populated bucket (the
-    # pre-write repartition("bucket") routes each bucket to one task)
+    # small-file compaction: each bucket's rows sit in exactly one file
+    # (the pre-write repartition("bucket") routes each bucket to one
+    # task), so there are no more files than populated buckets
     import glob
+
+    from pyspark.sql import functions as F
+    files_per_bucket = [
+        r.files for r in read_extracted(spark, work)
+        .withColumn("file", F.input_file_name()).groupBy("bucket")
+        .agg(F.countDistinct("file").alias("files")).collect()]
+    assert files_per_bucket and set(files_per_bucket) == {1}
     data_dir = shim.read_manifest(out_root, summary["snapshot"])["data_dir"]
-    files = glob.glob(os.path.join(data_dir, "bucket=*", "*.parquet"))
-    n_buckets_present = len(glob.glob(os.path.join(data_dir, "bucket=*")))
-    assert len(files) == n_buckets_present, (len(files), n_buckets_present)
+    files = glob.glob(os.path.join(data_dir, "**", "*.parquet"),
+                      recursive=True)
+    assert 0 < len(files) <= len(files_per_bucket), (
+        len(files), len(files_per_bucket))
 
     # resume over the compacted table: everything already committed
     s2 = run_extraction_job(spark, root, work, partitions=16,
@@ -360,6 +414,39 @@ def test_compact_snapshots(spark, pages_table, tmp_path):
     assert shim.history(out_root) == [summary["snapshot"]]
     # idempotent: compacting a single-snapshot history is a no-op
     assert compact_snapshots(spark, work)["compacted"] == 0
+
+
+def test_wave_writes_one_file_per_writer_task(spark, pages_table, tmp_path):
+    """A one-wave job stages at most one data file per writer task
+    (P normal + B oversized partitions), not one per (task, bucket):
+    ``bucket`` is stored as a data column, and every row's value is
+    ``url_bucket(n_buckets)`` of its url."""
+    import glob
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from ocr_spark.job import output_root, read_extracted, run_extraction_job
+    from ocr_spark.operators.extraction import url_bucket
+    from ocr_spark.sources import iceberg_shim as shim
+
+    root, _rows = pages_table
+    work = str(tmp_path / "work_files")
+    partitions, big_partitions, n_buckets = 6, 2, 64
+    run_extraction_job(spark, root, work, partitions=partitions,
+                       big_partitions=big_partitions, n_buckets=n_buckets,
+                       waves=1)
+    [sid] = shim.history(output_root(work))
+    data_dir = shim.read_manifest(output_root(work), sid)["data_dir"]
+    files = glob.glob(os.path.join(data_dir, "**", "*.parquet"),
+                      recursive=True)
+    assert 0 < len(files) <= partitions + big_partitions, len(files)
+    assert all("bucket" in pq.read_schema(f).names for f in files)
+
+    out = read_extracted(spark, work)
+    assert out.count() == N_ROWS
+    assert out.filter(~F.col("bucket").eqNullSafe(url_bucket(n_buckets))
+                      ).count() == 0
 
 
 def test_compact_rolls_forward_orphans_first(spark, pages_table, tmp_path):
@@ -614,20 +701,12 @@ def test_job_start_reads_each_manifest_at_most_twice(tmp_path, monkeypatch,
     per-sid history walk the data roll-forward once made cannot return.
     Synthetic wave manifests, no Spark. Every third wave lost its table
     export (crash window #2) and is repaired from its manifest alone."""
-    import sys
-
     from ocr_spark import job
     from ocr_spark.operators.bookkeeping import lineage_path
     from ocr_spark.sources import iceberg_shim as shim
 
-    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "scripts"))
-    try:
-        from chain_commit_bench import synthetic_wave_chain
-    finally:
-        sys.path.pop(0)
     work = str(tmp_path / "work")
-    inputs = synthetic_wave_chain(work, n_waves)
+    inputs = _synthetic_wave_chain(work, n_waves)
     lost = [f"wave-{i:05d}" for i in range(0, n_waves, 3)]
     for sid in lost:
         os.remove(os.path.join(lineage_path(work), f"{sid}.parquet"))
@@ -752,14 +831,12 @@ def test_validation_job_gate(spark, pages_table, tmp_path):
         "error_rate_bounded"}
     assert all(v[2] for v in got.values())
 
-    # corrupt: append a duplicate of one committed row into a bucket dir
+    # corrupt: append a duplicate of one committed row (bucket column
+    # included) into a committed snapshot's data dir
     sid = shim.history(output_root(work))[0]
     data_dir = shim.read_manifest(output_root(work), sid)["data_dir"]
-    bucket_dir = next(
-        os.path.join(data_dir, d) for d in sorted(os.listdir(data_dir))
-        if d.startswith("bucket="))
-    one = read_extracted(spark, work).limit(1).drop("bucket")
-    one.write.mode("append").parquet(bucket_dir)
+    one = read_extracted(spark, work).limit(1)
+    one.write.mode("append").parquet(data_dir)
 
     res2 = run_validation_job(spark, work)
     assert not res2["passed"]
