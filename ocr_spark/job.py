@@ -25,11 +25,11 @@ from __future__ import annotations
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ocr_spark.operators import bookkeeping
 from ocr_spark.operators.bookkeeping import (
-    commit_bucket_bookkeeping, export_wave_tables,
+    commit_bucket_bookkeeping, export_wave_tables, write_parquet_file,
 )
 from ocr_spark.operators.extraction import (
     DEFAULT_BIG_THRESHOLD, DEFAULT_BUCKETS, EXTRACT_RESULT_SCHEMA,
@@ -365,6 +365,20 @@ def curation_root(work_dir: str) -> str:
     return os.path.join(work_dir, "curated")
 
 
+def dup_2gram_frac(toks: Column) -> Column:
+    """Share of a doc's word 2-grams that repeat an earlier one, per row:
+    sum(c - 1) / sum(c) over its 2-gram counts c is (n - n_distinct) / n,
+    the same two integers divided; 0.0 for fewer than two tokens."""
+    grams = F.when(
+        F.size(toks) >= 2,
+        F.transform(F.sequence(F.lit(0), F.size(toks) - 2),
+                    lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 2))),
+    ).otherwise(F.array().cast("array<string>"))
+    n = F.size(grams)
+    return F.when(n > 0, (n - F.size(F.array_distinct(grams))) / n) \
+        .otherwise(F.lit(0.0))
+
+
 def run_curation_job(spark: SparkSession, work_dir: str, *,
                      shard_token_budget: int = 2000,
                      dedup: str = "para",
@@ -411,7 +425,10 @@ def run_curation_job(spark: SparkSession, work_dir: str, *,
     Filter thresholds are shared with the oracle-checked query surface
     (plans/dataops.py Gopher constants, plans/webops.py repetition
     bound) — the queries are the unit-verifiable form, this job is the
-    pipeline form."""
+    pipeline form.
+
+    Scale shape (default stages): ONE scan of the extraction output, three
+    exchanges (md5(para), url, stratum), no join, a driver-side metrics row."""
     from ocr_spark.plans.dataops import (
         _GF_MIN_ALPHA_FRAC, _GF_MIN_MEAN_WLEN, _GF_MIN_STOP_HITS,
         _GF_MIN_WORDS, _GF_MAX_MEAN_WLEN, _GF_MAX_WORDS, _GF_STOPWORDS,
@@ -562,19 +579,8 @@ def run_curation_job(spark: SparkSession, work_dir: str, *,
     with_quality = with_quality.withColumn("line_ok", line_ok)
 
     # ---- stage 3: 2-gram repetition over the deduped text
-    grams = F.when(
-        F.size("toks") >= 2,
-        F.transform(F.sequence(F.lit(0), F.size("toks") - 2),
-                    lambda i: F.concat_ws(" ", F.slice("toks", i + 1, 2))),
-    ).otherwise(F.array().cast("array<string>"))
-    gcounts = (with_quality.select("url", F.explode(grams).alias("g"))
-               .groupBy("url", "g").agg(F.count("*").alias("c"))
-               .groupBy("url")
-               .agg((F.sum(F.col("c") - 1) / F.sum("c"))
-                    .alias("dup_2gram_frac")))
-    verdict = (with_quality.join(gcounts, "url", "left")
-               .withColumn("dup_2gram_frac",
-                           F.coalesce("dup_2gram_frac", F.lit(0.0)))
+    verdict = (with_quality
+               .withColumn("dup_2gram_frac", dup_2gram_frac(F.col("toks")))
                .withColumn("repetition_ok",
                            F.col("dup_2gram_frac") <= DUP_2GRAM_MAX_FRAC)
                .withColumn("keep", F.col("quality_ok")
@@ -586,30 +592,29 @@ def run_curation_job(spark: SparkSession, work_dir: str, *,
 
     # ---- stage 4: token-budget shard packing of the kept set, windowed
     # per url-hash stratum (16 parallel streams; production packs per
-    # output partition — same shape)
+    # output partition — same shape); dropped docs add 0 tokens
     stratum = F.substring(F.md5("url"), 1, 1)
-    w_pack = (Window.partitionBy("stratum").orderBy("url")
+    w_pack = (Window.partitionBy(stratum).orderBy("url")
               .rowsBetween(Window.unboundedPreceding, -1))
-    prefix = F.coalesce(F.sum("n_words").over(w_pack), F.lit(0))
-    kept = (verdict.filter("keep").withColumn("stratum", stratum)
-            .withColumn("shard_id",
-                        F.concat_ws("-", "stratum",
-                                    F.floor(prefix / shard_token_budget)
-                                    .cast("string"))))
-    out = (verdict.join(kept.select("url", "shard_id"), "url", "left")
-           .select("url", "text_deduped", "n_paras", "n_kept", "n_words",
-                   F.round("dup_2gram_frac", 4).alias("dup_2gram_frac"),
-                   "quality_ok", "line_ok", "repetition_ok", "keep",
-                   "drop_reason", "shard_id"))
+    prefix = F.coalesce(
+        F.sum(F.when(F.col("keep"), F.col("n_words")).otherwise(0))
+        .over(w_pack), F.lit(0))
+    out = verdict.select(
+        "url", "text_deduped", "n_paras", "n_kept", "n_words",
+        F.round("dup_2gram_frac", 4).alias("dup_2gram_frac"),
+        "quality_ok", "line_ok", "repetition_ok", "keep", "drop_reason",
+        F.when(F.col("keep"),
+               F.concat_ws("-", stratum,
+                           F.floor(prefix / shard_token_budget)
+                           .cast("string"))).alias("shard_id"))
 
     out_sid = shim.prepare_snapshot(
         out, curation_root(work_dir), snapshot_id=f"cur-{run_id}",
         extra={"curated_from": input_sids, "dedup_mode": dedup,
-               "neardup": neardup,
-               "neardup_dropped": int(n_neardup_dropped),
+               "neardup": neardup, "neardup_dropped": n_neardup_dropped,
                "line_corrections": line_corrections,
-               "linefix_dropped": int(n_linefix_dropped),
-               "lines_removed": int(n_lines_removed)})
+               "linefix_dropped": n_linefix_dropped,
+               "lines_removed": n_lines_removed})
     shim.publish_snapshot(curation_root(work_dir), out_sid)
 
     stats = (shim.read_snapshot(spark, curation_root(work_dir), out_sid)
@@ -625,28 +630,21 @@ def run_curation_job(spark: SparkSession, work_dir: str, *,
                         .cast("long")).alias("dropped_line_format"),
                   F.countDistinct("shard_id").alias("shards"))
              .collect()[0])
-    metrics = spark.createDataFrame(
-        [(run_id, out_sid, int(stats.docs), int(stats.paras_total),
-          int(stats.paras_kept), int(stats.docs_kept),
-          int(stats.dropped_quality), int(stats.dropped_repetition),
-          int(stats.dropped_line_format), int(stats.shards))],
-        "run_id string, snapshot string, docs long, paras_total long, "
-        "paras_kept long, docs_kept long, dropped_quality long, "
-        "dropped_repetition long, dropped_line_format long, shards long")
-    metrics.coalesce(1).write.mode("append").parquet(
-        os.path.join(work_dir, "curation_metrics"))
+    counts = {k: int(v) for k, v in stats.asDict().items()}
+    write_parquet_file(
+        os.path.join(work_dir, "curation_metrics", f"{out_sid}.parquet"),
+        ", ".join(["run_id string", "snapshot string",
+                   *(f"{k} bigint" for k in counts)]),
+        {"run_id": [run_id], "snapshot": [out_sid],
+         **{k: [v] for k, v in counts.items()}})
 
     return {"run_id": run_id, "snapshot": out_sid, "dedup": dedup,
-            "neardup_dropped": int(n_neardup_dropped),
-            "linefix_dropped": int(n_linefix_dropped),
-            "lines_removed": int(n_lines_removed),
-            "input_snapshots": input_sids,
-            "docs": int(stats.docs), "docs_kept": int(stats.docs_kept),
-            "paras_removed": int(stats.paras_total - stats.paras_kept),
-            "dropped_quality": int(stats.dropped_quality),
-            "dropped_repetition": int(stats.dropped_repetition),
-            "dropped_line_format": int(stats.dropped_line_format),
-            "shards": int(stats.shards)}
+            "neardup_dropped": n_neardup_dropped,
+            "linefix_dropped": n_linefix_dropped,
+            "lines_removed": n_lines_removed, "input_snapshots": input_sids,
+            "paras_removed": counts["paras_total"] - counts["paras_kept"],
+            **{k: v for k, v in counts.items()
+               if k not in ("paras_total", "paras_kept")}}
 
 
 def export_root(work_dir: str) -> str:

@@ -143,7 +143,7 @@ def completed_buckets_by_snapshot(manifests: list[dict]
     return done
 
 
-# the DDL types above, as written by export_wave_tables
+# Spark DDL type → the arrow type write_parquet_file writes it as
 _ARROW_TYPES = {
     "string": pa.string(), "int": pa.int32(), "bigint": pa.int64(),
     "double": pa.float64(), "timestamp": pa.timestamp("us", tz="UTC"),
@@ -202,15 +202,23 @@ def export_wave_tables(work_dir: str, manifest: dict) -> int:
             (checkpoints_path, CHECKPOINT_SCHEMA, _checkpoint_rows),
             (lineage_path, LINEAGE_SCHEMA, _lineage_rows),
             (metrics_path, METRICS_SCHEMA, _metrics_rows)):
-        root = table_path(work_dir)
-        target = os.path.join(root, f"{manifest['snapshot_id']}.parquet")
+        target = os.path.join(table_path(work_dir),
+                              f"{manifest['snapshot_id']}.parquet")
         if os.path.exists(target):
             continue
-        os.makedirs(root, exist_ok=True)
-        # dot-prefixed: Spark's file listing skips it until the rename
-        tmp = os.path.join(root, f".{uuid.uuid4().hex[:8]}.tmp")
-        pq.write_table(pa.Table.from_pydict(rows(manifest),
-                                            schema=_arrow_schema(ddl)), tmp)
-        os.replace(tmp, target)
+        write_parquet_file(target, ddl, rows(manifest))
         written += 1
     return written
+
+
+def write_parquet_file(target: str, ddl: str, rows: dict) -> None:
+    """Write ``rows`` (column name → values) to the parquet file
+    ``target`` with the Spark schema ``ddl``, driver-side (no Spark job),
+    whole or not at all: the file is staged under a dot-prefixed name,
+    which Spark's file listing skips, then renamed into place."""
+    root = os.path.dirname(target)
+    os.makedirs(root, exist_ok=True)
+    tmp = os.path.join(root, f".{uuid.uuid4().hex[:8]}.tmp")
+    pq.write_table(pa.Table.from_pydict(rows, schema=_arrow_schema(ddl)),
+                   tmp)
+    os.replace(tmp, target)

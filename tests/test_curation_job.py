@@ -67,18 +67,6 @@ def test_verdict_and_shards_consistent(curated):
     assert summary["dropped_line_format"] > 0
 
 
-def test_metrics_row_appended(curated):
-    spark, work, summary = curated
-    import os
-
-    m = spark.read.parquet(os.path.join(work, "curation_metrics"))
-    rows = {r.run_id: r for r in m.collect()}
-    r = rows[summary["run_id"]]
-    assert r.docs == summary["docs"]
-    assert r.docs_kept == summary["docs_kept"]
-    assert r.snapshot == summary["snapshot"]
-
-
 def test_rerun_is_deterministic(curated):
     """A second run over the same immutable extraction output produces a
     new snapshot with identical content — the crash-recovery story."""
@@ -90,6 +78,25 @@ def test_rerun_is_deterministic(curated):
     cols = ["url", "text_deduped", "keep", "drop_reason", "shard_id"]
     assert sorted(map(tuple, a.select(cols).collect())) \
         == sorted(map(tuple, b.select(cols).collect()))
+
+
+def test_metrics_row_appended(curated):
+    """One metrics row per curation run: after the rerun above, every
+    published curated snapshot has exactly one row, keyed by its run."""
+    spark, work, summary = curated
+    import os
+
+    m = spark.read.parquet(os.path.join(work, "curation_metrics"))
+    rows = m.collect()
+    assert len({r.run_id for r in rows}) == len(rows)
+    assert sorted(r.snapshot for r in rows) \
+        == sorted(shim.history(curation_root(work)))
+    r = {r.run_id: r for r in rows}[summary["run_id"]]
+    assert r.docs == summary["docs"]
+    assert r.docs_kept == summary["docs_kept"]
+    assert r.snapshot == summary["snapshot"]
+    assert r.paras_total - r.paras_kept == summary["paras_removed"]
+    assert r.shards == summary["shards"]
 
 
 def test_span_mode_strips_duplicated_disclaimers(curated):
@@ -148,6 +155,105 @@ def test_substr_mode_excises_duplicated_token_runs(curated):
     heading_docs = [r for r in rows
                     if "overview and summary" in r.text_deduped]
     assert len(heading_docs) > 3
+
+
+def test_dup_2gram_frac_matches_count_reference(curated):
+    """The per-row repetition expression equals the count form it
+    replaced — explode the 2-grams, count each per doc, then
+    sum(c - 1) / sum(c), 0.0 for a doc without 2-grams — EXACTLY, on
+    every curated doc plus hand rows at the edges (empty, one token, two
+    tokens, one repeated token, no Gopher stopword). The snapshot's
+    stored column is that value rounded to 4 dp."""
+    from pyspark.sql import functions as F
+
+    from ocr_spark.job import dup_2gram_frac
+
+    spark, work, summary = curated
+    out = shim.read_snapshot(spark, curation_root(work),
+                             summary["snapshot"])
+    hand = spark.createDataFrame(
+        [("hand://empty", ""), ("hand://one", "word"),
+         ("hand://two", "two words"),
+         ("hand://same", "same same  same\nsame SAME"),
+         ("hand://nostop", "alpha beta gamma alpha beta delta alpha beta")],
+        "url string, text_deduped string")
+    docs = (out.select("url", "text_deduped").unionByName(hand)
+            .withColumn("toks", F.split(F.lower(F.trim("text_deduped")),
+                                        r"\s+")))
+    grams = F.when(
+        F.size("toks") >= 2,
+        F.transform(F.sequence(F.lit(0), F.size("toks") - 2),
+                    lambda i: F.concat_ws(" ", F.slice("toks", i + 1, 2))),
+    ).otherwise(F.array().cast("array<string>"))
+    counts = (docs.select("url", F.explode(grams).alias("g"))
+              .groupBy("url", "g").agg(F.count("*").alias("c"))
+              .groupBy("url")
+              .agg((F.sum(F.col("c") - 1) / F.sum("c")).alias("ref")))
+    got = dict(docs.select("url", dup_2gram_frac(F.col("toks"))).collect())
+    ref = {u: 0.0 for u in got}
+    ref.update(dict(counts.collect()))
+    assert got == ref
+    assert got["hand://same"] == 3 / 4 and got["hand://one"] == 0.0
+    assert got["hand://empty"] == 0.0 and got["hand://two"] == 0.0
+    assert got["hand://nostop"] == 2 / 7
+    assert 0 < sum(got.values())
+    stored = out.select("url", "dup_2gram_frac").join(
+        counts.select("url", F.round("ref", 4).alias("ref")), "url", "left")
+    assert stored.filter(~F.col("dup_2gram_frac").eqNullSafe(
+        F.coalesce("ref", F.lit(0.0)))).count() == 0
+
+
+def test_shard_packing_matches_kept_only_window(curated):
+    """One packing window over every doc, dropped docs adding 0 tokens,
+    gives each kept doc the shard the kept-only window + join gave: a
+    reference built here that way agrees url by url, and dropped docs
+    have no shard."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    spark, work, summary = curated
+    out = shim.read_snapshot(spark, curation_root(work),
+                             summary["snapshot"])
+    w = (Window.partitionBy("stratum").orderBy("url")
+         .rowsBetween(Window.unboundedPreceding, -1))
+    prefix = F.coalesce(F.sum("n_words").over(w), F.lit(0))
+    kept = (out.filter("keep")
+            .withColumn("stratum", F.substring(F.md5("url"), 1, 1))
+            .select("url", F.concat_ws(
+                "-", "stratum", F.floor(prefix / 2000).cast("string"))
+                .alias("ref")))
+    both = out.join(kept, "url", "left")
+    assert both.count() == summary["docs"]
+    assert both.filter(~F.col("shard_id").eqNullSafe(F.col("ref"))) \
+        .count() == 0
+    assert both.filter("NOT keep AND shard_id IS NOT NULL").count() == 0
+    shards = both.filter("ref IS NOT NULL").select("ref").distinct().count()
+    assert shards == summary["shards"] and shards > 1
+
+
+def test_default_curation_plan_is_one_scan_no_join(curated, monkeypatch):
+    """Plan-shape gate for the default curation: the frame it commits
+    scans the extraction output ONCE, shuffles at most three times
+    (md5(para) first-occurrence window, url reassembly, stratum packing
+    window) and joins nothing."""
+    import re
+
+    spark, work, _ = curated
+    frames = []
+    stage = shim.prepare_snapshot
+
+    def capture(df, table_root, *args, **kwargs):
+        if table_root == curation_root(work):
+            frames.append(df)
+        return stage(df, table_root, *args, **kwargs)
+
+    monkeypatch.setattr(shim, "prepare_snapshot", capture)
+    run_curation_job(spark, work)
+    (df,) = frames
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"FileScan parquet", plan)) == 1, plan
+    assert len(re.findall(r"Exchange hashpartitioning", plan)) <= 3, plan
+    assert "Join" not in plan, plan
 
 
 def test_neardup_stage_collapses_recrawls(spark, tmp_path_factory):
@@ -253,3 +359,37 @@ def test_line_corrections_stage_edits_before_dedup(spark,
     assert manifest["line_corrections"] is True
     assert manifest["lines_removed"] == s["lines_removed"]
     assert manifest["linefix_dropped"] == s["linefix_dropped"]
+
+
+def test_metrics_table_keeps_rows_written_by_spark(spark, tmp_path):
+    """A work dir whose ``curation_metrics`` already holds a row appended
+    by a Spark write (``long`` columns, part-file names) still reads as
+    one table after a curation adds its driver-written row: both rows,
+    the same column types."""
+    import os
+
+    from ocr_spark.plans.extract_queries import pages_from_documents
+
+    input_root, work = str(tmp_path / "in"), str(tmp_path / "work")
+    shim.write_snapshot(
+        pages_from_documents(spark, "/root/testdata/sf0.001").limit(40),
+        input_root)
+    run_extraction_job(spark, input_root, work, partitions=2,
+                       big_partitions=1, waves=1)
+    ddl = ("run_id string, snapshot string, docs long, paras_total long, "
+           "paras_kept long, docs_kept long, dropped_quality long, "
+           "dropped_repetition long, dropped_line_format long, shards long")
+    table = os.path.join(work, "curation_metrics")
+    spark.createDataFrame([("old-run", "cur-old", 1, 2, 3, 4, 5, 6, 7, 8)],
+                          ddl).coalesce(1).write.mode("append").parquet(table)
+    summary = run_curation_job(spark, work)
+
+    m = spark.read.parquet(table)
+    assert m.dtypes == spark.createDataFrame([], ddl).dtypes
+    rows = {r.run_id: r for r in m.collect()}
+    assert sorted(rows) == sorted(["old-run", summary["run_id"]])
+    assert tuple(rows["old-run"])[2:] == (1, 2, 3, 4, 5, 6, 7, 8)
+    new = rows[summary["run_id"]]
+    assert (new.snapshot, new.docs, new.docs_kept, new.shards) == (
+        summary["snapshot"], summary["docs"], summary["docs_kept"],
+        summary["shards"])
