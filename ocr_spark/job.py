@@ -368,15 +368,27 @@ def curation_root(work_dir: str) -> str:
 def dup_2gram_frac(toks: Column) -> Column:
     """Share of a doc's word 2-grams that repeat an earlier one, per row:
     sum(c - 1) / sum(c) over its 2-gram counts c is (n - n_distinct) / n,
-    the same two integers divided; 0.0 for fewer than two tokens."""
-    grams = F.when(
-        F.size(toks) >= 2,
-        F.transform(F.sequence(F.lit(0), F.size(toks) - 2),
-                    lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 2))),
-    ).otherwise(F.array().cast("array<string>"))
-    n = F.size(grams)
+    the same two integers divided; 0.0 for fewer than two tokens. Grams are
+    (token, next) structs cast to strings: tokens hold no space, so 1:1."""
+    n = F.greatest(F.size(toks) - 1, F.lit(0))
+    grams = F.arrays_zip(F.slice(toks, 1, n), F.slice(toks, 2, n)) \
+        .cast("array<string>")
     return F.when(n > 0, (n - F.size(F.array_distinct(grams))) / n) \
         .otherwise(F.lit(0.0))
+
+
+def verdict_counts(toks: Column, text: Column) -> dict[str, Column]:
+    """Per-row integers the curation verdict thresholds, lambda-free: the
+    token-length sum; ^[a-z]+$ tokens ($ also matches before a final U+0085,
+    U+2028 or U+2029, which a \\s+ split keeps); \\n-split lines (flag d)."""
+    return {"wlen_sum": F.length(F.array_join(toks, "")),
+            "n_alpha": F.regexp_count(F.array_join(toks, " "), F.lit(
+                r"(?<![^ ])[a-z]+[\u0085\u2028\u2029]?(?![^ ])")),
+            "n_lines": F.size(F.array_remove(F.split(text, "\n"), "")),
+            "n_bullet": F.regexp_count(
+                text, F.lit(r"(?md)^(?:\u2022 |- |\* )")),
+            "n_ellipsis": F.regexp_count(
+                text, F.lit(r"(?md)(?:\.\.\.|\u2026)$"))}
 
 
 def run_curation_job(spark: SparkSession, work_dir: str, *,
@@ -385,9 +397,9 @@ def run_curation_job(spark: SparkSession, work_dir: str, *,
                      neardup: bool = False,
                      line_corrections: bool = False) -> dict:
     """Corpus-wide curation stage over the committed extraction output:
-    C4-style corpus dedup → quality + line-format + repetition
-    filters → keep/drop verdict with drop reason → token-budget shard packing of the kept
-    set → ONE published snapshot + a metrics row.
+    C4-style corpus dedup → quality + line-format + repetition filters →
+    keep/drop verdict with drop reason → token-budget shard packing of the
+    kept set → ONE published snapshot + a metrics row.
 
     ``neardup=True`` prepends a DOCUMENT-level near-dup collapse
     (MinHash-LSH + signature-overlap verify + connected components,
@@ -428,7 +440,9 @@ def run_curation_job(spark: SparkSession, work_dir: str, *,
     pipeline form.
 
     Scale shape (default stages): ONE scan of the extraction output, three
-    exchanges (md5(para), url, stratum), no join, a driver-side metrics row."""
+    exchanges (md5(para), url, stratum), no join, no interpreted higher-order
+    function (every per-row decision is code-generated), and a metrics row
+    observed during the snapshot write instead of read back after publish."""
     from ocr_spark.plans.dataops import (
         _GF_MIN_ALPHA_FRAC, _GF_MIN_MEAN_WLEN, _GF_MIN_STOP_HITS,
         _GF_MIN_WORDS, _GF_MAX_MEAN_WLEN, _GF_MAX_WORDS, _GF_STOPWORDS,
@@ -436,7 +450,7 @@ def run_curation_job(spark: SparkSession, work_dir: str, *,
     from ocr_spark.plans.webops import (
         DUP_2GRAM_MAX_FRAC, GLF_MAX_BULLET_FRAC, GLF_MAX_ELLIPSIS_FRAC,
     )
-    from pyspark.sql.window import Window
+    from pyspark.sql import Observation, Window
 
     if dedup not in ("para", "span", "substr"):
         raise ValueError(
@@ -532,9 +546,7 @@ def run_curation_job(spark: SparkSession, work_dir: str, *,
                         F.sum((F.col("rn") == 1).cast("long"))
                         .alias("n_kept"),
                         F.array_join(
-                            F.transform(
-                                F.array_sort(F.collect_list(kept_struct)),
-                                lambda s: s["para"]),
+                            F.sort_array(F.collect_list(kept_struct))["para"],
                             "\n\n").alias("text_deduped")))
 
     # ---- stage 2: quality (Gopher bounds) over the DEDUPED text
@@ -543,15 +555,10 @@ def run_curation_job(spark: SparkSession, work_dir: str, *,
         "n_words",
         F.when((F.size("toks") == 1) & (F.col("toks")[0] == ""), F.lit(0))
         .otherwise(F.size("toks")))
-    mean_wlen = F.when(
-        F.col("n_words") > 0,
-        F.aggregate("toks", F.lit(0).cast("bigint"),
-                    lambda a, x: a + F.length(x)) / F.col("n_words")
-    ).otherwise(F.lit(0.0))
-    alpha_frac = F.when(
-        F.col("n_words") > 0,
-        F.size(F.filter("toks", lambda x: x.rlike("^[a-z]+$")))
-        / F.col("n_words")).otherwise(F.lit(0.0))
+    vc = verdict_counts(F.col("toks"), F.col("text_deduped"))
+    n_words = F.col("n_words")
+    mean_wlen = F.when(n_words > 0, vc["wlen_sum"] / n_words).otherwise(0.0)
+    alpha_frac = F.when(n_words > 0, vc["n_alpha"] / n_words).otherwise(0.0)
     stop_hits = F.size(F.array_intersect(
         F.array_distinct("toks"),
         F.array(*[F.lit(w) for w in _GF_STOPWORDS])))
@@ -566,16 +573,10 @@ def run_curation_job(spark: SparkSession, work_dir: str, *,
     # ---- stage 2.5: Gopher LINE-level format gate over the deduped
     # text (bullet-start / ellipsis-end line ratios — same thresholds
     # as the oracle-checked docs_gopher_line_filters); narrow map
-    lines = F.filter(F.split("text_deduped", "\n"), lambda x: x != "")
-    n_lines = F.size(lines)
-    n_bullet = F.size(F.filter(
-        lines, lambda x: x.startswith("\u2022 ") | x.startswith("- ")
-        | x.startswith("* ")))
-    n_ellipsis = F.size(F.filter(
-        lines, lambda x: x.endswith("...") | x.endswith("\u2026")))
-    line_ok = F.when(n_lines == 0, F.lit(True)).otherwise(
-        (F.round(n_bullet / n_lines, 4) <= GLF_MAX_BULLET_FRAC)
-        & (F.round(n_ellipsis / n_lines, 4) <= GLF_MAX_ELLIPSIS_FRAC))
+    line_ok = F.when(vc["n_lines"] == 0, F.lit(True)).otherwise(
+        (F.round(vc["n_bullet"] / vc["n_lines"], 4) <= GLF_MAX_BULLET_FRAC)
+        & (F.round(vc["n_ellipsis"] / vc["n_lines"], 4)
+           <= GLF_MAX_ELLIPSIS_FRAC))
     with_quality = with_quality.withColumn("line_ok", line_ok)
 
     # ---- stage 3: 2-gram repetition over the deduped text
@@ -599,15 +600,31 @@ def run_curation_job(spark: SparkSession, work_dir: str, *,
     prefix = F.coalesce(
         F.sum(F.when(F.col("keep"), F.col("n_words")).otherwise(0))
         .over(w_pack), F.lit(0))
+    shard_no = F.floor(prefix / shard_token_budget)
+    # a kept doc opens a shard unless the kept doc before it in its stratum
+    # (prefix - prev_words) sat in the same one: the flags sum to the shards
+    prev_words = F.last(F.when(F.col("keep"), F.col("n_words")),
+                        ignorenulls=True).over(w_pack)
+    new_shard = F.col("keep") & ~shard_no.eqNullSafe(
+        F.floor((prefix - prev_words) / shard_token_budget))
     out = verdict.select(
         "url", "text_deduped", "n_paras", "n_kept", "n_words",
         F.round("dup_2gram_frac", 4).alias("dup_2gram_frac"),
         "quality_ok", "line_ok", "repetition_ok", "keep", "drop_reason",
         F.when(F.col("keep"),
-               F.concat_ws("-", stratum,
-                           F.floor(prefix / shard_token_budget)
-                           .cast("string"))).alias("shard_id"))
+               F.concat_ws("-", stratum, shard_no.cast("string")))
+        .alias("shard_id"), new_shard.alias("_new_shard"))
 
+    # the metrics row is observed while the snapshot is written
+    metrics = Observation(f"curation-{run_id}")
+    sums = {"paras_total": F.col("n_paras"), "paras_kept": F.col("n_kept"),
+            "docs_kept": F.col("keep").cast("long"),
+            **{f"dropped_{r}": (F.col("drop_reason") == r).cast("long")
+               for r in ("quality", "repetition", "line_format")},
+            "shards": F.col("_new_shard").cast("long")}
+    out = out.observe(metrics, F.count("*").alias("docs"),
+                      *(F.sum(e).alias(k) for k, e in sums.items())) \
+        .drop("_new_shard")
     out_sid = shim.prepare_snapshot(
         out, curation_root(work_dir), snapshot_id=f"cur-{run_id}",
         extra={"curated_from": input_sids, "dedup_mode": dedup,
@@ -617,20 +634,7 @@ def run_curation_job(spark: SparkSession, work_dir: str, *,
                "lines_removed": n_lines_removed})
     shim.publish_snapshot(curation_root(work_dir), out_sid)
 
-    stats = (shim.read_snapshot(spark, curation_root(work_dir), out_sid)
-             .agg(F.count("*").alias("docs"),
-                  F.sum("n_paras").alias("paras_total"),
-                  F.sum("n_kept").alias("paras_kept"),
-                  F.sum(F.col("keep").cast("long")).alias("docs_kept"),
-                  F.sum((F.col("drop_reason") == "quality").cast("long"))
-                  .alias("dropped_quality"),
-                  F.sum((F.col("drop_reason") == "repetition").cast("long"))
-                  .alias("dropped_repetition"),
-                  F.sum((F.col("drop_reason") == "line_format")
-                        .cast("long")).alias("dropped_line_format"),
-                  F.countDistinct("shard_id").alias("shards"))
-             .collect()[0])
-    counts = {k: int(v) for k, v in stats.asDict().items()}
+    counts = {k: int(v or 0) for k, v in metrics.get.items()}  # 0 rows: NULL
     write_parquet_file(
         os.path.join(work_dir, "curation_metrics", f"{out_sid}.parquet"),
         ", ".join(["run_id string", "snapshot string",
@@ -711,10 +715,9 @@ def shard_digest_rows(df: DataFrame, key_cols: list[str],
             .groupBy("shard_id")
             .agg(F.count("*").alias("n_docs"),
                  F.sum("n_words").alias("n_tokens"),
-                 F.md5(F.concat_ws(",", F.transform(
-                     F.sort_array(
-                         F.collect_list(F.struct(*key_cols, "dg"))),
-                     lambda s: s["dg"]))).alias("content_digest"),
+                 F.md5(F.concat_ws(",", F.sort_array(F.collect_list(
+                     F.struct(*key_cols, "dg")))["dg"]))
+                 .alias("content_digest"),
                  # zone map: the url key range this shard covers, so a
                  # consumer can prune shards from the manifest alone
                  # (prune_export_shards) without scanning any data
@@ -918,8 +921,7 @@ def run_index_job(spark: SparkSession, work_dir: str,
     postings = assigned.select(
         "vec_id", "cell",
         F.round(_norm(F.col("v")), 6).alias("nrm"),
-        F.array_join(F.transform(_pq_code_arr(F.col("v")),
-                                 lambda c: c.cast("string")), ",")
+        F.array_join(_pq_code_arr(F.col("v")).cast("array<string>"), ",")
          .alias("codes"))
     cent_rows = (cent.select("cell", F.posexplode("cv")
                              .alias("pos", "cv_val")))
@@ -982,11 +984,9 @@ def ivf_topk_from_index(spark: SparkSession, work_dir: str,
     postings = shim.read_snapshot(spark, proot,
                                   shim.current_snapshot_id(proot)) \
         .select("vec_id", "cell")
-    cent = (cent_rows.groupBy("cell")
-            .agg(F.transform(F.array_sort(F.collect_list(
-                F.struct("pos", "cv_val"))), lambda s: s.cv_val)
-                .alias("cv")))
-    centrow = cent.agg(F.array_sort(
+    cent = cent_rows.groupBy("cell").agg(F.sort_array(F.collect_list(
+        F.struct("pos", "cv_val")))["cv_val"].alias("cv"))
+    centrow = cent.agg(F.sort_array(
         F.collect_list(F.struct("cell", "cv"))).alias("cents"))
     src = emb_t(spark, sf_dir).select("vec_id", _vecd().alias("v")) \
         .withColumn("nrm", _norm(F.col("v")))

@@ -254,6 +254,183 @@ def test_default_curation_plan_is_one_scan_no_join(curated, monkeypatch):
     assert len(re.findall(r"FileScan parquet", plan)) == 1, plan
     assert len(re.findall(r"Exchange hashpartitioning", plan)) <= 3, plan
     assert "Join" not in plan, plan
+    # no lambda higher-order function: those run interpreted, not codegen'd
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "lambdafunction" not in optimized.lower(), optimized
+
+
+def test_curation_does_not_read_back(curated, monkeypatch):
+    """The metrics row is observed while the snapshot is written: the
+    curation never reads a published snapshot back."""
+    spark, work, _ = curated
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("run_curation_job read a snapshot back")
+
+    monkeypatch.setattr(shim, "read_snapshot", refuse)
+    summary = run_curation_job(spark, work)
+    assert summary["docs"] > 0 and summary["shards"] > 0
+
+
+@pytest.mark.parametrize("budget", [50, 300, 2000])
+def test_observed_shards_equal_distinct_shard_ids(curated, budget):
+    """The observed ``shards`` (a sum of shard-opening flags) equals
+    countDistinct(shard_id) of the published snapshot, at budgets where
+    shards hold many docs and where nearly every doc opens its own (at 50
+    a doc can skip shard numbers)."""
+    from pyspark.sql import functions as F
+
+    spark, work, _ = curated
+    summary = run_curation_job(spark, work, shard_token_budget=budget)
+    out = shim.read_snapshot(spark, curation_root(work),
+                             summary["snapshot"])
+    agg = out.agg(F.countDistinct("shard_id").alias("shards"),
+                  F.count("*").alias("docs"),
+                  F.sum(F.col("keep").cast("long")).alias("kept")).first()
+    assert summary["shards"] == agg.shards > 1
+    assert (summary["docs"], summary["docs_kept"]) == (agg.docs, agg.kept)
+
+
+# Edge rows for the verdict-expression identities: empty, one token, a
+# leading newline, tokens ending in a Java line terminator, non-ASCII case
+# folds, \t / \x0b / \x0c separators, CR and CRLF lines, bullet and
+# ellipsis lines, trailing and repeated newlines, a brace-and-comma token
+# pair that the 2-gram struct cast must keep apart.
+HAND_TEXTS = [
+    "", "word", "\nleading newline here", "\n\n\n",
+    "abc\u0085 def\u2028 ghi\u2029 jk\u2028\u2028 l\u2028m \u2029 x",
+    "ends in a separator\u2028",
+    "\u0130stanbul \u212aelvin na\u00efve caf\u00e9",
+    "tab\tsep\x0bvt\x0cff mixed\x0c\x0bend",
+    "x....\nlast\u2026\n...\n\u2026\u2026\nmid... dots",
+    "- one\r\n* two\r\n\u2022 three\r\nend...\r\nplain\r\n",
+    "lone\r- dash after cr\rmore...\r\u2022 bullet\n",
+    "- a\n* b\n\u2022 c\n\u2022d\n-e\n*f\n -g\n--h",
+    "a...\n\n\nb\u2026\n\n", "x\n", "trailing\n\n\n\n",
+    "{a, b} c {a, b} c", "{a,, b} {a, b}} c",
+    "same same  same\nsame SAME", "alpha beta gamma alpha beta delta",
+]
+
+
+def test_verdict_expressions_match_lambda_reference(curated):
+    """Every lambda-free verdict count equals the lambda higher-order form
+    it replaced, with ==, on every curated doc plus HAND_TEXTS: the
+    token-length sum (aggregate), alphabetic tokens (filter + rlike), and
+    non-empty / bullet / ellipsis lines (filter over a \\n split), and
+    ``dup_2gram_frac`` against the transform-built 2-grams. The hand rows
+    are sharp: the alpha pattern without its line-terminator tail and the
+    line patterns without UNIX_LINES each disagree on some of them."""
+    from pyspark.sql import functions as F
+
+    from ocr_spark.job import dup_2gram_frac, verdict_counts
+
+    spark, work, summary = curated
+    out = shim.read_snapshot(spark, curation_root(work),
+                             summary["snapshot"])
+    hand = spark.createDataFrame(
+        [(f"hand://{i}", t) for i, t in enumerate(HAND_TEXTS)],
+        "url string, text_deduped string")
+    docs = (out.select("url", "text_deduped").unionByName(hand)
+            .withColumn("toks", F.split(F.lower(F.trim("text_deduped")),
+                                        r"\s+")))
+    toks, text = F.col("toks"), F.col("text_deduped")
+    lines = F.filter(F.split(text, "\n"), lambda x: x != "")
+    grams = F.when(
+        F.size(toks) >= 2,
+        F.transform(F.sequence(F.lit(0), F.size(toks) - 2),
+                    lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 2))),
+    ).otherwise(F.array().cast("array<string>"))
+    n_grams = F.size(grams)
+    ref = {
+        "wlen_sum": F.aggregate(toks, F.lit(0).cast("bigint"),
+                                lambda a, x: a + F.length(x)),
+        "n_alpha": F.size(F.filter(toks, lambda x: x.rlike("^[a-z]+$"))),
+        "n_lines": F.size(lines),
+        "n_bullet": F.size(F.filter(
+            lines, lambda x: x.startswith("\u2022 ") | x.startswith("- ")
+            | x.startswith("* "))),
+        "n_ellipsis": F.size(F.filter(
+            lines, lambda x: x.endswith("...") | x.endswith("\u2026"))),
+        "dup": F.when(n_grams > 0,
+                      (n_grams - F.size(F.array_distinct(grams))) / n_grams)
+        .otherwise(F.lit(0.0)),
+    }
+    got = {**verdict_counts(toks, text), "dup": dup_2gram_frac(toks)}
+    naive = {
+        "n_alpha": F.regexp_count(F.array_join(toks, " "),
+                                  F.lit(r"(?<![^ ])[a-z]+(?![^ ])")),
+        "n_bullet": F.regexp_count(text, F.lit(r"(?m)^(?:\u2022 |- |\* )")),
+        "n_ellipsis": F.regexp_count(text, F.lit(r"(?m)(?:\.\.\.|\u2026)$")),
+    }
+    rows = docs.select(
+        "url", *(ref[k].alias(f"ref_{k}") for k in ref),
+        *(got[k].alias(f"got_{k}") for k in ref),
+        *(naive[k].alias(f"naive_{k}") for k in naive)).collect()
+    assert len(rows) == summary["docs"] + len(HAND_TEXTS)
+    for k in ref:
+        bad = [(r.url, r[f"ref_{k}"], r[f"got_{k}"]) for r in rows
+               if r[f"ref_{k}"] != r[f"got_{k}"]]
+        assert not bad, (k, bad)
+    hand_rows = [r for r in rows if r.url.startswith("hand://")]
+    for k in naive:
+        assert any(r[f"naive_{k}"] != r[f"ref_{k}"] for r in hand_rows), k
+    assert all(sum(r[f"ref_{k}"] for r in hand_rows) > 0 for k in ref)
+
+
+def test_paragraph_reassembly_matches_lambda_reference(curated):
+    """Each doc's deduped text equals the kept paragraphs joined in order
+    the old way, ``transform(array_sort(collect_list(struct)), s -> s.para)``,
+    rebuilt here from the extraction output."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    from ocr_spark.job import read_extracted
+
+    spark, work, summary = curated
+    paras = (read_extracted(spark, work)
+             .filter("error IS NULL AND text IS NOT NULL AND text != ''")
+             .select("url", F.posexplode(F.split("text", "\n\n"))
+                     .alias("para_idx", "para")))
+    rn = F.row_number().over(
+        Window.partitionBy(F.md5("para")).orderBy("url", "para_idx"))
+    kept = F.when(F.col("rn") == 1, F.struct("para_idx", "para"))
+    ref = (paras.withColumn("rn", rn).groupBy("url")
+           .agg(F.array_join(F.transform(F.array_sort(F.collect_list(kept)),
+                                         lambda s: s["para"]), "\n\n")
+                .alias("ref")))
+    out = shim.read_snapshot(spark, curation_root(work),
+                             summary["snapshot"])
+    both = out.join(ref, "url", "full_outer")
+    assert both.count() == summary["docs"]
+    assert both.filter(~F.col("text_deduped").eqNullSafe(F.col("ref"))) \
+        .count() == 0
+    assert out.filter("n_kept < n_paras").count() > 0
+
+
+@pytest.mark.parametrize("key_cols", [["url"], ["url", "copy_idx"]])
+def test_shard_digest_rows_match_lambda_reference(curated, key_cols):
+    """The export / sampling / SFT shard digest equals the old form,
+    ``transform(sort_array(collect_list(struct(keys, dg))), s -> s.dg)``,
+    shard by shard; with two copies of every doc for the sampling key."""
+    from pyspark.sql import functions as F
+
+    from ocr_spark.job import shard_digest_rows
+
+    spark, work, summary = curated
+    kept = (shim.read_snapshot(spark, curation_root(work),
+                               summary["snapshot"])
+            .filter("keep AND shard_id IS NOT NULL")
+            .withColumn("copy_idx", F.explode(F.array(F.lit(0), F.lit(1)))))
+    if key_cols == ["url"]:
+        kept = kept.filter("copy_idx = 0").drop("copy_idx")
+    ref = (kept.withColumn("dg", F.md5("text_deduped")).groupBy("shard_id")
+           .agg(F.md5(F.concat_ws(",", F.transform(
+               F.sort_array(F.collect_list(F.struct(*key_cols, "dg"))),
+               lambda s: s["dg"]))).alias("ref")))
+    got = dict(shard_digest_rows(kept, key_cols)
+               .select("shard_id", "content_digest").collect())
+    assert got == dict(ref.collect())
+    assert len(got) == summary["shards"] > 1
 
 
 def test_neardup_stage_collapses_recrawls(spark, tmp_path_factory):
@@ -359,6 +536,41 @@ def test_line_corrections_stage_edits_before_dedup(spark,
     assert manifest["line_corrections"] is True
     assert manifest["lines_removed"] == s["lines_removed"]
     assert manifest["linefix_dropped"] == s["linefix_dropped"]
+
+
+def test_curation_of_empty_text_publishes_zero_metrics(spark, tmp_path):
+    """An extraction output in which every doc has empty text curates to
+    an empty published snapshot, a metrics row of zeros and zero counts
+    (its sums are NULL, which once raised after the publish)."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from ocr_spark.job import read_extracted
+
+    input_root, work = str(tmp_path / "in"), str(tmp_path / "work")
+    pages = spark.createDataFrame(
+        [(f"http://empty.example/{i}", "<html><body></body></html>")
+         for i in range(3)], "url string, html string")
+    shim.write_snapshot(pages.select(
+        "url", F.lit("2025-01-01 00:00:00").cast("timestamp").alias("warc_ts"),
+        F.col("html").cast("binary").alias("html"), F.lit("").alias("text"),
+        F.lit("en").alias("lang")), input_root)
+    run_extraction_job(spark, input_root, work, partitions=2,
+                       big_partitions=1, waves=1)
+    assert read_extracted(spark, work).filter("text = ''").count() == 3
+
+    summary = run_curation_job(spark, work)
+    names = ["docs", "docs_kept", "dropped_quality", "dropped_repetition",
+             "dropped_line_format", "shards", "paras_removed"]
+    assert {k: summary[k] for k in names} == dict.fromkeys(names, 0)
+    assert shim.history(curation_root(work)) == [summary["snapshot"]]
+    assert shim.read_snapshot(spark, curation_root(work),
+                              summary["snapshot"]).count() == 0
+    (row,) = spark.read.parquet(
+        os.path.join(work, "curation_metrics")).collect()
+    assert row.snapshot == summary["snapshot"]
+    assert tuple(row)[2:] == (0,) * 8
 
 
 def test_metrics_table_keeps_rows_written_by_spark(spark, tmp_path):
