@@ -25,7 +25,7 @@ from __future__ import annotations
 import os
 import uuid
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ocr_spark.operators import bookkeeping
 from ocr_spark.operators.bookkeeping import (
@@ -365,32 +365,6 @@ def curation_root(work_dir: str) -> str:
     return os.path.join(work_dir, "curated")
 
 
-def dup_2gram_frac(toks: Column) -> Column:
-    """Share of a doc's word 2-grams that repeat an earlier one, per row:
-    sum(c - 1) / sum(c) over its 2-gram counts c is (n - n_distinct) / n,
-    the same two integers divided; 0.0 for fewer than two tokens. Grams are
-    (token, next) structs cast to strings: tokens hold no space, so 1:1."""
-    n = F.greatest(F.size(toks) - 1, F.lit(0))
-    grams = F.arrays_zip(F.slice(toks, 1, n), F.slice(toks, 2, n)) \
-        .cast("array<string>")
-    return F.when(n > 0, (n - F.size(F.array_distinct(grams))) / n) \
-        .otherwise(F.lit(0.0))
-
-
-def verdict_counts(toks: Column, text: Column) -> dict[str, Column]:
-    """Per-row integers the curation verdict thresholds, lambda-free: the
-    token-length sum; ^[a-z]+$ tokens ($ also matches before a final U+0085,
-    U+2028 or U+2029, which a \\s+ split keeps); \\n-split lines (flag d)."""
-    return {"wlen_sum": F.length(F.array_join(toks, "")),
-            "n_alpha": F.regexp_count(F.array_join(toks, " "), F.lit(
-                r"(?<![^ ])[a-z]+[\u0085\u2028\u2029]?(?![^ ])")),
-            "n_lines": F.size(F.array_remove(F.split(text, "\n"), "")),
-            "n_bullet": F.regexp_count(
-                text, F.lit(r"(?md)^(?:\u2022 |- |\* )")),
-            "n_ellipsis": F.regexp_count(
-                text, F.lit(r"(?md)(?:\.\.\.|\u2026)$"))}
-
-
 def run_curation_job(spark: SparkSession, work_dir: str, *,
                      shard_token_budget: int = 2000,
                      dedup: str = "para",
@@ -434,22 +408,24 @@ def run_curation_job(spark: SparkSession, work_dir: str, *,
     the stage commits atomically through the same two-phase
     prepare/publish as the extraction waves.
 
-    Filter thresholds are shared with the oracle-checked query surface
-    (plans/dataops.py Gopher constants, plans/webops.py repetition
-    bound) — the queries are the unit-verifiable form, this job is the
-    pipeline form.
+    Each keep/drop decision IS the oracle-checked kernel, not a copy:
+    paragraph dedup is plans/webops.py::para_dedup_frame (the
+    pages_para_dedup query), the quality gate dataops.gopher_gate_cols +
+    gopher_keep (docs_gopher_filters, the streaming gate), the line gate
+    webops.gopher_line_cols + gopher_line_keep (docs_gopher_line_filters)
+    and repetition webops.dup_2gram_cols + dup_2gram_keep
+    (docs_repetition_metrics' rounded 2-gram rule) — so the job and the
+    queries agree on every row, rounding edges included. The queries are
+    the unit-verifiable form, this job is the pipeline form.
 
     Scale shape (default stages): ONE scan of the extraction output, three
     exchanges (md5(para), url, stratum), no join, no interpreted higher-order
     function (every per-row decision is code-generated), and a metrics row
     observed during the snapshot write instead of read back after publish."""
     from ocr_spark.plans.dataops import (
-        _GF_MIN_ALPHA_FRAC, _GF_MIN_MEAN_WLEN, _GF_MIN_STOP_HITS,
-        _GF_MIN_WORDS, _GF_MAX_MEAN_WLEN, _GF_MAX_WORDS, _GF_STOPWORDS,
-    )
+        _tokens, gopher_gate_cols, gopher_keep)
     from ocr_spark.plans.webops import (
-        DUP_2GRAM_MAX_FRAC, GLF_MAX_BULLET_FRAC, GLF_MAX_ELLIPSIS_FRAC,
-    )
+        dup_2gram_cols, dup_2gram_keep, gopher_line_cols, gopher_line_keep)
     from pyspark.sql import Observation, Window
 
     if dedup not in ("para", "span", "substr"):
@@ -535,55 +511,26 @@ def run_curation_job(spark: SparkSession, work_dir: str, *,
             .alias("n_kept"),
             "text_deduped")
     else:
-        paras = docs.select(
-            "url",
-            F.posexplode(F.split("text", "\n\n")).alias("para_idx", "para"))
-        w_first = Window.partitionBy(F.md5("para")).orderBy("url", "para_idx")
-        ranked = paras.withColumn("rn", F.row_number().over(w_first))
-        kept_struct = F.when(F.col("rn") == 1, F.struct("para_idx", "para"))
-        deduped = (ranked.groupBy("url")
-                   .agg(F.count("*").alias("n_paras"),
-                        F.sum((F.col("rn") == 1).cast("long"))
-                        .alias("n_kept"),
-                        F.array_join(
-                            F.sort_array(F.collect_list(kept_struct))["para"],
-                            "\n\n").alias("text_deduped")))
+        from ocr_spark.plans.webops import para_dedup_frame
+        deduped = para_dedup_frame(docs)
 
-    # ---- stage 2: quality (Gopher bounds) over the DEDUPED text
-    toks = F.split(F.lower(F.trim(F.col("text_deduped"))), r"\s+")
-    base = deduped.withColumn("toks", toks).withColumn(
-        "n_words",
-        F.when((F.size("toks") == 1) & (F.col("toks")[0] == ""), F.lit(0))
-        .otherwise(F.size("toks")))
-    vc = verdict_counts(F.col("toks"), F.col("text_deduped"))
-    n_words = F.col("n_words")
-    mean_wlen = F.when(n_words > 0, vc["wlen_sum"] / n_words).otherwise(0.0)
-    alpha_frac = F.when(n_words > 0, vc["n_alpha"] / n_words).otherwise(0.0)
-    stop_hits = F.size(F.array_intersect(
-        F.array_distinct("toks"),
-        F.array(*[F.lit(w) for w in _GF_STOPWORDS])))
-    quality_ok = ((F.col("n_words") >= _GF_MIN_WORDS)
-                  & (F.col("n_words") <= _GF_MAX_WORDS)
-                  & (mean_wlen >= _GF_MIN_MEAN_WLEN)
-                  & (mean_wlen <= _GF_MAX_MEAN_WLEN)
-                  & (alpha_frac >= _GF_MIN_ALPHA_FRAC)
-                  & (stop_hits >= _GF_MIN_STOP_HITS))
-    with_quality = base.withColumn("quality_ok", quality_ok)
-
-    # ---- stage 2.5: Gopher LINE-level format gate over the deduped
-    # text (bullet-start / ellipsis-end line ratios — same thresholds
-    # as the oracle-checked docs_gopher_line_filters); narrow map
-    line_ok = F.when(vc["n_lines"] == 0, F.lit(True)).otherwise(
-        (F.round(vc["n_bullet"] / vc["n_lines"], 4) <= GLF_MAX_BULLET_FRAC)
-        & (F.round(vc["n_ellipsis"] / vc["n_lines"], 4)
-           <= GLF_MAX_ELLIPSIS_FRAC))
-    with_quality = with_quality.withColumn("line_ok", line_ok)
-
-    # ---- stage 3: 2-gram repetition over the deduped text
-    verdict = (with_quality
-               .withColumn("dup_2gram_frac", dup_2gram_frac(F.col("toks")))
-               .withColumn("repetition_ok",
-                           F.col("dup_2gram_frac") <= DUP_2GRAM_MAX_FRAC)
+    # ---- stages 2-3: the Gopher quality gate, the Gopher line gate and
+    # the 2-gram repetition gate over the DEDUPED text: one split per row,
+    # each feature computed once, then the kernels' verdicts over them
+    toks = F.col("toks")
+    feats = {**gopher_gate_cols(toks), **dup_2gram_cols(toks),
+             **gopher_line_cols(F.col("text_deduped"))}
+    verdict = (deduped.withColumn("toks", _tokens("text_deduped"))
+               .select("url", "text_deduped", "n_paras", "n_kept",
+                       *(feats[c].alias(c) for c in (
+                           "n_words", "dup_2gram_frac", "mean_word_len",
+                           "alpha_frac", "distinct_stop_hits", "n_lines",
+                           "bullet_line_frac", "ellipsis_line_frac")))
+               .select("url", "text_deduped", "n_paras", "n_kept",
+                       "n_words", "dup_2gram_frac",
+                       gopher_keep().alias("quality_ok"),
+                       gopher_line_keep().alias("line_ok"),
+                       dup_2gram_keep().alias("repetition_ok"))
                .withColumn("keep", F.col("quality_ok")
                            & F.col("line_ok") & F.col("repetition_ok"))
                .withColumn("drop_reason",
@@ -607,13 +554,10 @@ def run_curation_job(spark: SparkSession, work_dir: str, *,
                         ignorenulls=True).over(w_pack)
     new_shard = F.col("keep") & ~shard_no.eqNullSafe(
         F.floor((prefix - prev_words) / shard_token_budget))
-    out = verdict.select(
-        "url", "text_deduped", "n_paras", "n_kept", "n_words",
-        F.round("dup_2gram_frac", 4).alias("dup_2gram_frac"),
-        "quality_ok", "line_ok", "repetition_ok", "keep", "drop_reason",
-        F.when(F.col("keep"),
-               F.concat_ws("-", stratum, shard_no.cast("string")))
-        .alias("shard_id"), new_shard.alias("_new_shard"))
+    shard_id = F.when(F.col("keep"),
+                      F.concat_ws("-", stratum, shard_no.cast("string")))
+    out = verdict.select("*", shard_id.alias("shard_id"),
+                         new_shard.alias("_new_shard"))
 
     # the metrics row is observed while the snapshot is written
     metrics = Observation(f"curation-{run_id}")

@@ -1430,6 +1430,38 @@ def docs_gopher_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return gopher_gate_frame(t(spark, sf_dir, "documents"), "doc_id")
 
 
+def gopher_gate_cols(toks: Column) -> dict[str, Column]:
+    """The Gopher gate's features over ``_tokens`` output, lambda-free:
+    ``n_alpha`` counts ^[a-z]+$ tokens ($ also matches before a final
+    U+0085, U+2028 or U+2029, which a \\s+ split keeps); the fractions
+    are rounded to 4 dp, as the oracle rounds them."""
+    size = F.size(toks)
+    n_words = F.when((size == 1) & (toks[0] == ""), F.lit(0)).otherwise(size)
+    wlen_sum = F.length(F.array_join(toks, ""))
+    n_alpha = F.regexp_count(F.array_join(toks, " "), F.lit(
+        r"(?<![^ ])[a-z]+[\u0085\u2028\u2029]?(?![^ ])"))
+    return {
+        "n_words": n_words, "wlen_sum": wlen_sum, "n_alpha": n_alpha,
+        "mean_word_len": F.round(F.when(n_words > 0, wlen_sum / n_words)
+                                 .otherwise(F.lit(0.0)), 4),
+        "alpha_frac": F.round(F.when(n_words > 0, n_alpha / n_words)
+                              .otherwise(F.lit(0.0)), 4),
+        "distinct_stop_hits": F.size(F.array_intersect(
+            F.array_distinct(toks),
+            F.array(*[F.lit(w) for w in _GF_STOPWORDS])))}
+
+
+def gopher_keep() -> Column:
+    """The Gopher verdict over the ``gopher_gate_cols`` columns, so each
+    feature is computed once."""
+    return ((F.col("n_words") >= _GF_MIN_WORDS)
+            & (F.col("n_words") <= _GF_MAX_WORDS)
+            & (F.col("mean_word_len") >= _GF_MIN_MEAN_WLEN)
+            & (F.col("mean_word_len") <= _GF_MAX_MEAN_WLEN)
+            & (F.col("alpha_frac") >= _GF_MIN_ALPHA_FRAC)
+            & (F.col("distinct_stop_hits") >= _GF_MIN_STOP_HITS))
+
+
 def gopher_gate_frame(df: DataFrame, key: str, text_col: str = "text",
                       carry: tuple = ()) -> DataFrame:
     """The Gopher gate as a frame kernel keyed on ``key`` — shared by
@@ -1439,35 +1471,12 @@ def gopher_gate_frame(df: DataFrame, key: str, text_col: str = "text",
     identical by construction. ``carry`` columns pass through
     untouched (the streaming form carries the detected language —
     joining it back would be a stream-stream join)."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    base = (df.select(key, *carry, toks.alias("toks"))
-            .withColumn("n_words",
-                        F.when((F.size("toks") == 1)
-                               & (F.col("toks")[0] == ""), F.lit(0))
-                        .otherwise(F.size("toks"))))
-    mean_wlen = F.round(
-        F.when(F.col("n_words") > 0,
-               F.aggregate("toks", F.lit(0).cast("bigint"),
-                           lambda acc, x: acc + F.length(x))
-               / F.col("n_words")).otherwise(F.lit(0.0)), 4)
-    alpha_frac = F.round(
-        F.when(F.col("n_words") > 0,
-               F.size(F.filter("toks", lambda x: x.rlike("^[a-z]+$")))
-               / F.col("n_words")).otherwise(F.lit(0.0)), 4)
-    stop_hits = F.size(F.array_intersect(
-        F.array_distinct("toks"),
-        F.array(*[F.lit(w) for w in _GF_STOPWORDS])))
-    feat = base.select(
-        key, *carry, "n_words", mean_wlen.alias("mean_word_len"),
-        alpha_frac.alias("alpha_frac"),
-        stop_hits.alias("distinct_stop_hits"))
-    keep = ((F.col("n_words") >= _GF_MIN_WORDS)
-            & (F.col("n_words") <= _GF_MAX_WORDS)
-            & (F.col("mean_word_len") >= _GF_MIN_MEAN_WLEN)
-            & (F.col("mean_word_len") <= _GF_MAX_MEAN_WLEN)
-            & (F.col("alpha_frac") >= _GF_MIN_ALPHA_FRAC)
-            & (F.col("distinct_stop_hits") >= _GF_MIN_STOP_HITS))
-    return feat.withColumn("keep", keep)
+    cols = gopher_gate_cols(F.col("toks"))
+    return (df.select(key, *carry, _tokens(text_col).alias("toks"))
+            .select(key, *carry, *(cols[c].alias(c) for c in (
+                "n_words", "mean_word_len", "alpha_frac",
+                "distinct_stop_hits")))
+            .withColumn("keep", gopher_keep()))
 
 
 _GOPHER_SQL = f"""

@@ -1207,6 +1207,19 @@ def _km_argmin(v: Column, cents: Column) -> Column:
     return F.array_min(scored).getField("cell")
 
 
+def _km_centroids(assigned: DataFrame) -> DataFrame:
+    """One Lloyd update over (cell, v): each cell's mean vector, components
+    rounded to KM_ROUND, regrouped in position order by ``sort_array``
+    (code-generated; ``array_sort`` and ``transform`` would run as
+    interpreted lambdas)."""
+    return (assigned.select("cell", F.posexplode("v").alias("pos", "x"))
+            .groupBy("cell", "pos")
+            .agg(F.round(F.avg("x"), KM_ROUND).alias("cv"))
+            .groupBy("cell")
+            .agg(F.sort_array(F.collect_list(F.struct("pos", "cv")))["cv"]
+                 .alias("cv")))
+
+
 def _kmeans(spark: SparkSession, sf_dir: str,
             k: int = KM_K) -> tuple[DataFrame, DataFrame]:
     """Lloyd's algorithm, KM_ITERS fixed rounds, init = the first KM_K
@@ -1226,21 +1239,14 @@ def _kmeans(spark: SparkSession, sf_dir: str,
             .select(F.col("vec_id").alias("cell"), F.col("v").alias("cv")))
     assigned = None
     for _ in range(KM_ITERS):
-        centrow = cent.agg(F.array_sort(
+        centrow = cent.agg(F.sort_array(
             F.collect_list(F.struct("cell", "cv"))).alias("cents"))
         assigned = (emb.crossJoin(F.broadcast(centrow))
                     .select("vec_id", "v",
                             _km_argmin(F.col("v"),
                                        F.col("cents")).alias("cell")))
-        cent = (assigned.select("cell", F.posexplode("v").alias("pos", "x"))
-                .groupBy("cell", "pos")
-                .agg(F.round(F.avg("x"), KM_ROUND).alias("cv"))
-                .groupBy("cell")
-                .agg(F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "cv"))),
-                    lambda s: s.cv).alias("cv"))
-                ).localCheckpoint(eager=False)
-    centrow = cent.agg(F.array_sort(
+        cent = _km_centroids(assigned).localCheckpoint(eager=False)
+    centrow = cent.agg(F.sort_array(
         F.collect_list(F.struct("cell", "cv"))).alias("cents"))
     assigned = (emb.crossJoin(F.broadcast(centrow))
                 .select("vec_id", "v",

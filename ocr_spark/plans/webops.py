@@ -2120,29 +2120,25 @@ def pages_para_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one exchange keyed md5(paragraph) for the
     first-occurrence window, one exchange keyed url for reassembly."""
     pages = pages_from_documents(spark, sf_dir)
-    extracted = run_extraction(pages, partitions=32, big_partitions=2)
-    paras = extracted.select(
+    return para_dedup_frame(
+        run_extraction(pages, partitions=32, big_partitions=2))
+
+
+def para_dedup_frame(docs: DataFrame) -> DataFrame:
+    """(url, text) → (url, n_paras, n_kept, text_deduped). ``sort_array``:
+    ``array_sort``'s default comparator is an interpreted lambda."""
+    paras = docs.select(
         "url",
         F.posexplode(F.split("text", "\n\n")).alias("para_idx", "para"),
     )
     w = Window.partitionBy(F.md5("para")).orderBy("url", "para_idx")
     ranked = paras.withColumn("rn", F.row_number().over(w))
-    kept_struct = F.when(
-        F.col("rn") == 1, F.struct("para_idx", "para"))  # null (skipped) else
-    return (
-        ranked.groupBy("url")
-        .agg(
-            F.count("*").alias("n_paras"),
-            F.sum((F.col("rn") == 1).cast("long")).alias("n_kept"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(kept_struct)),
-                    lambda s: s["para"],
-                ),
-                "\n\n",
-            ).alias("text_deduped"),
-        )
-    )
+    kept_struct = F.when(F.col("rn") == 1, F.struct("para_idx", "para"))
+    return ranked.groupBy("url").agg(
+        F.count("*").alias("n_paras"),
+        F.sum((F.col("rn") == 1).cast("long")).alias("n_kept"),
+        F.array_join(F.sort_array(F.collect_list(kept_struct))["para"],
+                     "\n\n").alias("text_deduped"))
 
 
 # RefinedWeb/MassiveText line-level dedup: a line that appears in at
@@ -2813,6 +2809,33 @@ LEFT JOIN (SELECT url, string_agg(sentence, ' ' ORDER BY sent_idx) AS text2
 # Gopher-style repetition metrics
 # ---------------------------------------------------------------------------
 
+def _2grams(toks: Column) -> Column:
+    """Word 2-grams as (token, next) structs cast to strings: 1:1, because
+    \\s+-split tokens hold no space; empty below two tokens."""
+    n = F.greatest(F.size(toks) - 1, F.lit(0))
+    return F.arrays_zip(F.slice(toks, 1, n), F.slice(toks, 2, n)) \
+        .cast("array<string>")
+
+
+def dup_2gram_frac(toks: Column) -> Column:
+    """Share of 2-grams repeating an earlier one, unrounded: sum(c - 1) /
+    sum(c) over the 2-gram counts c is (n - n_distinct) / n; 0.0 below
+    two tokens."""
+    n = F.greatest(F.size(toks) - 1, F.lit(0))
+    return F.when(n > 0, (n - F.size(F.array_distinct(_2grams(toks)))) / n) \
+        .otherwise(F.lit(0.0))
+
+
+def dup_2gram_cols(toks: Column) -> dict[str, Column]:
+    """The repetition feature, rounded as docs_repetition_metrics has it."""
+    return {"dup_2gram_frac": F.round(dup_2gram_frac(toks), 4)}
+
+
+def dup_2gram_keep() -> Column:
+    """The 2-gram rule over the ``dup_2gram_cols`` (rounded) column."""
+    return F.col("dup_2gram_frac") <= DUP_2GRAM_MAX_FRAC
+
+
 def docs_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document 2-gram repetition signals (Gopher family):
     fraction of 2-gram occurrences that are repeats, and the mass of
@@ -2825,14 +2848,7 @@ def docs_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-gram counts, not tokens."""
     docs = _docs(spark, sf_dir)
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    grams = F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - 2),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 2)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    g = docs.select("doc_id", F.explode(grams).alias("g"))
+    g = docs.select("doc_id", F.explode(_2grams(toks)).alias("g"))
     counts = g.groupBy("doc_id", "g").agg(F.count("*").alias("c"))
     agg = counts.groupBy("doc_id").agg(
         F.sum("c").alias("n_2grams"),
@@ -2846,9 +2862,8 @@ def docs_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_2grams",
         dup_frac.alias("dup_2gram_frac"),
         top_frac.alias("top_2gram_frac"),
-        ((dup_frac <= DUP_2GRAM_MAX_FRAC)
-         & (top_frac <= TOP_2GRAM_MAX_FRAC)).alias("keep_repetition"),
-    )
+    ).withColumn("keep_repetition", dup_2gram_keep()
+                 & (F.col("top_2gram_frac") <= TOP_2GRAM_MAX_FRAC))
 
 
 DOCS_REPETITION_SQL = f"""
@@ -3847,27 +3862,41 @@ def docs_gopher_line_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     own line).
 
     Shape: extraction's own 2 shuffles, then a narrow per-row map —
-    split, filter, two fraction columns, conjunction. Zero additional
-    exchanges at any corpus size."""
+    split, two regexp counts, two fraction columns, conjunction. Zero
+    additional exchanges at any corpus size."""
     pages = pages_from_documents(spark, sf_dir)
     extracted = run_extraction(pages, partitions=32, big_partitions=2)
     doc_id = F.regexp_extract("url", r"^doc://(\d+)$", 1).cast("long")
-    lines = F.filter(F.split("text", "\n"), lambda x: x != "")
-    base = extracted.select(doc_id.alias("doc_id"), lines.alias("lines"))
-    n_lines = F.size("lines")
-    n_bullet = F.size(F.filter(
-        "lines", lambda x: x.startswith("• ") | x.startswith("- ")
-        | x.startswith("* ")))
-    n_ellipsis = F.size(F.filter(
-        "lines", lambda x: x.endswith("...") | x.endswith("…")))
-    bf = F.round(n_bullet / n_lines, _GLF_ROUND)
-    ef = F.round(n_ellipsis / n_lines, _GLF_ROUND)
-    out = base.select(
-        "doc_id", n_lines.cast("long").alias("n_lines"),
-        bf.alias("bullet_line_frac"), ef.alias("ellipsis_line_frac"))
-    keep = ((F.col("bullet_line_frac") <= GLF_MAX_BULLET_FRAC)
-            & (F.col("ellipsis_line_frac") <= GLF_MAX_ELLIPSIS_FRAC))
-    return out.withColumn("keep_lines", keep)
+    cols = gopher_line_cols(F.col("text"))
+    return extracted.select(
+        doc_id.alias("doc_id"), cols["n_lines"].cast("long").alias("n_lines"),
+        *(cols[c].alias(c) for c in ("bullet_line_frac",
+                                     "ellipsis_line_frac"))
+    ).withColumn("keep_lines", gopher_line_keep())
+
+
+def gopher_line_cols(text: Column) -> dict[str, Column]:
+    """The line gate's features, lambda-free: non-empty \\n-split lines;
+    bullet / ellipsis lines by regexp_count (flag d: only \\n ends a
+    line); fractions rounded to 4 dp, NULL without a line, as in DuckDB
+    (try_divide: under ANSI ``/`` raises on zero)."""
+    n_lines = F.size(F.array_remove(F.split(text, "\n"), ""))
+    n_bullet = F.regexp_count(text, F.lit(r"(?md)^(?:\u2022 |- |\* )"))
+    n_ellipsis = F.regexp_count(text, F.lit(r"(?md)(?:\.\.\.|\u2026)$"))
+    return {"n_lines": n_lines, "n_bullet": n_bullet,
+            "n_ellipsis": n_ellipsis,
+            "bullet_line_frac": F.round(F.try_divide(n_bullet, n_lines),
+                                        _GLF_ROUND),
+            "ellipsis_line_frac": F.round(F.try_divide(n_ellipsis, n_lines),
+                                          _GLF_ROUND)}
+
+
+def gopher_line_keep() -> Column:
+    """The line-gate verdict over the ``gopher_line_cols`` columns; true
+    without a line, which breaks no line rule."""
+    return F.when(F.col("n_lines") == 0, F.lit(True)).otherwise(
+        (F.col("bullet_line_frac") <= GLF_MAX_BULLET_FRAC)
+        & (F.col("ellipsis_line_frac") <= GLF_MAX_ELLIPSIS_FRAC))
 
 
 _GOPHER_LINE_TAIL = """

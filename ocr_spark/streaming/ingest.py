@@ -561,9 +561,11 @@ def stream_quality_gate(spark: SparkSession, input_dir: str,
     """Incremental filter stage: pages stream in, extraction runs per
     micro-batch, and each extracted page gets the Gopher quality
     verdict + detected language through the SAME frame kernels as the
-    batch queries (dataops.gopher_gate_frame / langid_hit_cols), so a
-    page admitted by the streaming gate is exactly the page the batch
-    pipeline would keep. Output is all pages WITH their feature
+    batch queries (dataops.gopher_gate_frame / langid_hit_cols). The
+    batch curation job's quality gate is the same kernel
+    (dataops.gopher_gate_cols, rounded thresholds included), so a page
+    the streaming gate admits is exactly a page whose text passes the
+    batch pipeline's Gopher gate. Output is all pages WITH their feature
     columns and verdict (the audit row), not just the survivors — the
     downstream sink filters on ``keep``. Everything past extraction
     is a narrow JVM map; the parquet sink is natively exactly-once."""

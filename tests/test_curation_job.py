@@ -163,10 +163,14 @@ def test_dup_2gram_frac_matches_count_reference(curated):
     sum(c - 1) / sum(c), 0.0 for a doc without 2-grams — EXACTLY, on
     every curated doc plus hand rows at the edges (empty, one token, two
     tokens, one repeated token, no Gopher stopword). The snapshot's
-    stored column is that value rounded to 4 dp."""
+    stored column is that value rounded to 4 dp, and so is the
+    oracle-checked docs_repetition_metrics' ``dup_2gram_frac`` column on
+    every documents row (a doc without 2-grams has no row there)."""
     from pyspark.sql import functions as F
 
-    from ocr_spark.job import dup_2gram_frac
+    from ocr_spark.plans.dataops import _tokens, t
+    from ocr_spark.plans.webops import dup_2gram_frac, docs_repetition_metrics
+    from tests.test_webops import SF_TINY
 
     spark, work, summary = curated
     out = shim.read_snapshot(spark, curation_root(work),
@@ -201,6 +205,14 @@ def test_dup_2gram_frac_matches_count_reference(curated):
         counts.select("url", F.round("ref", 4).alias("ref")), "url", "left")
     assert stored.filter(~F.col("dup_2gram_frac").eqNullSafe(
         F.coalesce("ref", F.lit(0.0)))).count() == 0
+
+    kernel = t(spark, SF_TINY, "documents").select(
+        "doc_id", F.round(dup_2gram_frac(_tokens()), 4).alias("k"))
+    query = docs_repetition_metrics(spark, SF_TINY)
+    both = kernel.join(query, "doc_id", "left").select(
+        "k", F.coalesce("dup_2gram_frac", F.lit(0.0)).alias("q")).collect()
+    assert both and all(r.k == r.q for r in both)
+    assert query.count() > 0 and any(r.q > 0 for r in both)
 
 
 def test_shard_packing_matches_kept_only_window(curated):
@@ -313,8 +325,10 @@ HAND_TEXTS = [
 
 
 def test_verdict_expressions_match_lambda_reference(curated):
-    """Every lambda-free verdict count equals the lambda higher-order form
-    it replaced, with ==, on every curated doc plus HAND_TEXTS: the
+    """Every lambda-free verdict count of the shared kernels
+    (dataops.gopher_gate_cols, webops.gopher_line_cols and
+    webops.dup_2gram_frac) equals the lambda higher-order form it
+    replaced, with ==, on every curated doc plus HAND_TEXTS: the
     token-length sum (aggregate), alphabetic tokens (filter + rlike), and
     non-empty / bullet / ellipsis lines (filter over a \\n split), and
     ``dup_2gram_frac`` against the transform-built 2-grams. The hand rows
@@ -322,7 +336,8 @@ def test_verdict_expressions_match_lambda_reference(curated):
     line patterns without UNIX_LINES each disagree on some of them."""
     from pyspark.sql import functions as F
 
-    from ocr_spark.job import dup_2gram_frac, verdict_counts
+    from ocr_spark.plans.dataops import gopher_gate_cols
+    from ocr_spark.plans.webops import dup_2gram_frac, gopher_line_cols
 
     spark, work, summary = curated
     out = shim.read_snapshot(spark, curation_root(work),
@@ -355,7 +370,8 @@ def test_verdict_expressions_match_lambda_reference(curated):
                       (n_grams - F.size(F.array_distinct(grams))) / n_grams)
         .otherwise(F.lit(0.0)),
     }
-    got = {**verdict_counts(toks, text), "dup": dup_2gram_frac(toks)}
+    got = {**gopher_gate_cols(toks), **gopher_line_cols(text),
+           "dup": dup_2gram_frac(toks)}
     naive = {
         "n_alpha": F.regexp_count(F.array_join(toks, " "),
                                   F.lit(r"(?<![^ ])[a-z]+(?![^ ])")),
@@ -375,6 +391,80 @@ def test_verdict_expressions_match_lambda_reference(curated):
     for k in naive:
         assert any(r[f"naive_{k}"] != r[f"ref_{k}"] for r in hand_rows), k
     assert all(sum(r[f"ref_{k}"] for r in hand_rows) > 0 for k in ref)
+
+
+def _edge_texts() -> dict[str, str]:
+    """One-paragraph docs whose rounded and unrounded verdicts differ."""
+    words = [f"w{i}" for i in range(14_000)]
+    return {
+        # 99,999 letters over 50,000 tokens: mean word length 1.99998
+        "mean_low": " ".join(["the"] + ["ab"] * 49_997 + ["a"] * 2),
+        # 300,001 letters over 25,000 tokens: 12.00004
+        "mean_high": " ".join(["the"] + ["abcdefghijkl"] * 24_989
+                              + ["abcdefghijklm"] * 10),
+        # 14,999 alphabetic of 25,000 tokens: 0.59996 rounds up to 0.6
+        "alpha": " ".join(["the"] * 14_999 + ["42"] * 10_001),
+        # 6,001 repeated of 20,001 2-grams: 0.300035 rounds to 0.3
+        "dup": " ".join(words + words[:6_002]),
+        # 2 of 4 lines start with a bullet: exactly 0.5
+        "bullets": "- the first\nthe second line\n* the third\nthe end",
+        # no non-empty line
+        "newline": "\n",
+    }
+
+
+def test_job_and_kernels_agree_at_rounding_edges(curated, tmp_path):
+    """The job's quality_ok, line_ok and repetition_ok equal the keep
+    columns of the oracle-checked kernels on every row of an extraction
+    output that holds the fixture's docs plus docs at the rounding edges
+    (the kernels threshold 4-dp rounded values; a job that thresholds
+    unrounded ones drops the edge docs the kernels keep)."""
+    from pyspark.sql import functions as F
+
+    from ocr_spark.job import output_root, read_extracted
+    from ocr_spark.plans.dataops import _tokens, gopher_gate_frame
+    from ocr_spark.plans.webops import (
+        DUP_2GRAM_MAX_FRAC, dup_2gram_frac, gopher_line_cols,
+        gopher_line_keep)
+
+    spark, work, _ = curated
+    edges = _edge_texts()
+    extracted = read_extracted(spark, work)
+    hand = spark.createDataFrame(
+        [(f"edge://{k}", v) for k, v in edges.items()],
+        "url string, text string")
+    edge_rows = extracted.limit(1).drop("url", "text").crossJoin(hand) \
+        .withColumn("error", F.lit(None).cast("string"))
+    work2 = str(tmp_path)
+    shim.write_snapshot(extracted.unionByName(edge_rows),
+                        output_root(work2))
+    summary = run_curation_job(spark, work2)
+    out = shim.read_snapshot(spark, curation_root(work2),
+                             summary["snapshot"])
+    gate = gopher_gate_frame(out, "url", text_col="text_deduped") \
+        .select("url", F.col("keep").alias("ref_quality"))
+    lines = gopher_line_cols(F.col("text_deduped"))
+    ref = (out.join(gate, "url")
+           .select("*", *(lines[c].alias(c) for c in (
+               "n_lines", "bullet_line_frac", "ellipsis_line_frac")))
+           .select("url", "quality_ok", "line_ok", "repetition_ok",
+                   "ref_quality", gopher_line_keep().alias("ref_line"),
+                   (F.round(dup_2gram_frac(_tokens("text_deduped")), 4)
+                    <= DUP_2GRAM_MAX_FRAC).alias("ref_repetition")))
+    rows = {r.url: r for r in ref.collect()}
+    n_docs = extracted.filter(
+        "error IS NULL AND text IS NOT NULL AND text != ''").count()
+    assert len(rows) == summary["docs"] == n_docs + len(edges)
+    for name in ("quality", "line", "repetition"):
+        bad = [u for u, r in rows.items()
+               if r[f"{name}_ok"] != r[f"ref_{name}"]]
+        assert not bad, (name, bad)
+    # the edges sit where rounding decides, and the kernels keep them
+    for k in ("mean_low", "mean_high", "alpha"):
+        assert rows[f"edge://{k}"].quality_ok, k
+    assert rows["edge://dup"].repetition_ok
+    assert rows["edge://bullets"].line_ok and rows["edge://newline"].line_ok
+    assert not rows["edge://newline"].quality_ok
 
 
 def test_paragraph_reassembly_matches_lambda_reference(curated):

@@ -78,3 +78,29 @@ def test_ivf_topk_matches_lambda_centroid_reference(indexed):
     assert sorted(tuple(r[k] for k in key) for r in served) == sorted(
         tuple(r[k] for k in key)
         for r in emb_ivf_trained_topk(spark, SF).collect())
+
+
+def test_centroid_regrouping_is_lambda_free(spark):
+    """The k-means update regroups each cell's components with
+    ``sort_array(...)["cv"]``: equal to the old
+    ``transform(array_sort(collect_list(struct(pos, cv))), s -> s.cv)``
+    and planned without a lambda function."""
+    from pyspark.sql import functions as F
+
+    from ocr_spark.plans.simsearch import KM_ROUND, _km_centroids
+
+    assigned = spark.createDataFrame(
+        [(1, [3.0, -1.0, 0.5]), (0, [1.0, 2.0, 3.0]), (1, [1.0, 4.0, 0.25]),
+         (0, [2.0, 2.0, 1.0]), (2, [1e-7, 9.0, -2.0])],
+        "cell int, v array<double>")
+    got = _km_centroids(assigned)
+    optimized = got._jdf.queryExecution().optimizedPlan().toString()
+    assert "lambdafunction" not in optimized.lower(), optimized
+    ref = (assigned.select("cell", F.posexplode("v").alias("pos", "x"))
+           .groupBy("cell", "pos")
+           .agg(F.round(F.avg("x"), KM_ROUND).alias("cv"))
+           .groupBy("cell")
+           .agg(F.transform(F.array_sort(F.collect_list(
+               F.struct("pos", "cv"))), lambda s: s.cv).alias("cv")))
+    assert dict(got.collect()) == dict(ref.collect()) == {
+        0: [1.5, 2.0, 2.0], 1: [2.0, 1.5, 0.375], 2: [0.0, 9.0, -2.0]}

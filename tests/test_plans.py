@@ -6,6 +6,8 @@ though results stay correct.
 
 import re
 
+import pytest
+
 SF = "/root/testdata/sf0.01"
 
 
@@ -93,6 +95,25 @@ def test_gopher_filter_is_narrow_map(spark):
     from ocr_spark.plans.dataops import docs_gopher_filters
     plan = fmt(docs_gopher_filters(spark, SF))
     assert n_shuffles(plan) == 0 and "BroadcastExchange" not in plan
+
+
+@pytest.mark.parametrize("query", [
+    "docs_gopher_filters", "gopher_gate_frame", "docs_gopher_line_filters",
+    "pages_para_dedup"])
+def test_curation_kernels_are_lambda_free(spark, query):
+    """The oracle-checked curation kernels, which run_curation_job
+    composes, plan no lambda higher-order function: those run
+    interpreted, not code-generated (``array_sort`` without a comparator
+    plans one too)."""
+    from ocr_spark.plans import dataops, webops
+    if query == "gopher_gate_frame":
+        df = dataops.gopher_gate_frame(
+            dataops.t(spark, SF, "documents"), "doc_id")
+    else:
+        df = getattr(dataops, query, None) or getattr(webops, query)
+        df = df(spark, SF)
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "lambdafunction" not in optimized.lower(), optimized
 
 
 def test_extraction_has_exactly_two_shuffles_and_prunes(spark):

@@ -50,6 +50,33 @@ def test_para_dedup_shuffle_budget(spark):
     assert "md5" in plan.lower()
 
 
+def test_line_gate_of_text_without_lines(spark, monkeypatch):
+    """A doc with no non-empty line gets NULL line fractions, as the
+    DuckDB oracle gives, and keep_lines true: no line breaks a line rule
+    (run_curation_job's rule). Spark runs ANSI, so a fraction over zero
+    lines must not divide (it raised DIVIDE_BY_ZERO)."""
+    from ocr_spark.plans import webops
+
+    extract = webops.run_extraction
+
+    def with_blank_docs(pages, **kwargs):
+        blank = spark.createDataFrame(
+            [("doc://900001", ""), ("doc://900002", "\n\n\n")],
+            "url string, text string")
+        return extract(pages, **kwargs).select("url", "text") \
+            .unionByName(blank)
+
+    monkeypatch.setattr(webops, "run_extraction", with_blank_docs)
+    rows = {r.doc_id: r for r in
+            webops.docs_gopher_line_filters(spark, SF_TINY).collect()}
+    for doc_id in (900001, 900002):
+        r = rows.pop(doc_id)
+        assert r.n_lines == 0 and r.keep_lines
+        assert r.bullet_line_frac is None and r.ellipsis_line_frac is None
+    assert rows and all(r.n_lines > 0 and r.bullet_line_frac is not None
+                        for r in rows.values())
+
+
 def test_repetition_metrics_partial_agg(spark):
     """Two groupBys, both with map-side partial aggregation: the
     shuffled volume is distinct-gram counts, not token volume."""
