@@ -366,7 +366,7 @@ def curation_root(work_dir: str) -> str:
 
 
 def run_curation_job(spark: SparkSession, work_dir: str, *,
-                     shard_token_budget: int = 2000,
+                     shard_token_budget: int | None = None,
                      dedup: str = "para",
                      neardup: bool = False,
                      line_corrections: bool = False) -> dict:
@@ -416,12 +416,18 @@ def run_curation_job(spark: SparkSession, work_dir: str, *,
     and repetition webops.dup_2gram_cols + dup_2gram_keep
     (docs_repetition_metrics' rounded 2-gram rule) — so the job and the
     queries agree on every row, rounding edges included. The queries are
-    the unit-verifiable form, this job is the pipeline form.
+    the unit-verifiable form, this job is the pipeline form. Packing is
+    plans/curation.py::token_shard_no over its packing_window (the
+    docs_token_shards kernel, here per url-hash stratum; the budget
+    defaults to its SHARD_TOKEN_BUDGET), and the shard-opening flags of
+    the metrics row read the same window.
 
     Scale shape (default stages): ONE scan of the extraction output, three
     exchanges (md5(para), url, stratum), no join, no interpreted higher-order
     function (every per-row decision is code-generated), and a metrics row
     observed during the snapshot write instead of read back after publish."""
+    from ocr_spark.plans.curation import (
+        SHARD_TOKEN_BUDGET, packing_window, token_prefix, token_shard_no)
     from ocr_spark.plans.dataops import (
         _tokens, gopher_gate_cols, gopher_keep)
     from ocr_spark.plans.webops import (
@@ -431,6 +437,8 @@ def run_curation_job(spark: SparkSession, work_dir: str, *,
     if dedup not in ("para", "span", "substr"):
         raise ValueError(
             f"dedup must be 'para', 'span' or 'substr', got {dedup!r}")
+    budget = (SHARD_TOKEN_BUDGET if shard_token_budget is None
+              else shard_token_budget)
     run_id = uuid.uuid4().hex[:12]
     input_sids = shim.history(output_root(work_dir))
     docs = (read_extracted(spark, work_dir)
@@ -542,18 +550,15 @@ def run_curation_job(spark: SparkSession, work_dir: str, *,
     # per url-hash stratum (16 parallel streams; production packs per
     # output partition — same shape); dropped docs add 0 tokens
     stratum = F.substring(F.md5("url"), 1, 1)
-    w_pack = (Window.partitionBy(stratum).orderBy("url")
-              .rowsBetween(Window.unboundedPreceding, -1))
-    prefix = F.coalesce(
-        F.sum(F.when(F.col("keep"), F.col("n_words")).otherwise(0))
-        .over(w_pack), F.lit(0))
-    shard_no = F.floor(prefix / shard_token_budget)
+    w_pack = packing_window(stratum, "url")
+    kept_words = F.when(F.col("keep"), F.col("n_words"))
+    shard_no = token_shard_no(kept_words.otherwise(0), w_pack, budget)
     # a kept doc opens a shard unless the kept doc before it in its stratum
     # (prefix - prev_words) sat in the same one: the flags sum to the shards
-    prev_words = F.last(F.when(F.col("keep"), F.col("n_words")),
-                        ignorenulls=True).over(w_pack)
+    prefix = token_prefix(kept_words.otherwise(0), w_pack)
+    prev_words = F.last(kept_words, ignorenulls=True).over(w_pack)
     new_shard = F.col("keep") & ~shard_no.eqNullSafe(
-        F.floor((prefix - prev_words) / shard_token_budget))
+        F.floor((prefix - prev_words) / budget))
     shard_id = F.when(F.col("keep"),
                       F.concat_ws("-", stratum, shard_no.cast("string")))
     out = verdict.select("*", shard_id.alias("shard_id"),
@@ -654,14 +659,15 @@ def shard_digest_rows(df: DataFrame, key_cols: list[str],
     (export: url; sampling: url + copy_idx — two copies of one doc
     are distinct manifest entries); ``text_col`` names the payload
     column (export/sampling: text_deduped; SFT: the rendered
-    example)."""
+    example). The digest is plans/curation.py::shard_content_digest,
+    the shards_manifest kernel."""
+    from ocr_spark.plans.curation import shard_content_digest
+
     return (df.withColumn("dg", F.md5(text_col))
             .groupBy("shard_id")
             .agg(F.count("*").alias("n_docs"),
                  F.sum("n_words").alias("n_tokens"),
-                 F.md5(F.concat_ws(",", F.sort_array(F.collect_list(
-                     F.struct(*key_cols, "dg")))["dg"]))
-                 .alias("content_digest"),
+                 shard_content_digest(*key_cols).alias("content_digest"),
                  # zone map: the url key range this shard covers, so a
                  # consumer can prune shards from the manifest alone
                  # (prune_export_shards) without scanning any data
@@ -983,32 +989,37 @@ def sampling_root(work_dir: str) -> str:
 
 
 def run_sampling_job(spark: SparkSession, work_dir: str, *,
-                     shard_token_budget: int = 2000,
+                     shard_token_budget: int | None = None,
                      snapshot: str | None = None) -> dict:
     """Mixture-sampling stage between curation and the trainer — the
     pipeline form of the oracle-checked docs_mixture_realize /
     docs_training_set composition: language-ID the KEPT curated text
     (the production order — CCNet detects language downstream of
     extraction, using the SAME kernel as the oracle-checked
-    docs_langid via plans/dataops.py::langid_hit_cols), derive each
-    language's temperature-mixture effective epochs, give every
-    document floor(e) guaranteed copies plus a deterministic
-    md5-hash-selected fractional copy, explode the copies, and RE-pack
-    them into token-budget shards ((url, copy_idx) in the pack key so
-    two copies of one document land in independent shards). Committed
-    atomically with an export-style per-shard content-digest manifest,
-    so the sampled corpus is consumer-verifiable and bit-reproducible.
+    docs_langid via plans/dataops.py::langid_hit_cols), realize the
+    temperature mixture with plans/curation.py::mixture_realize_frame
+    (the docs_mixture_realize kernel: floor(e) guaranteed copies plus a
+    deterministic md5-hash-selected fractional copy per document),
+    explode the copies, and RE-pack them into token-budget shards with
+    plans/curation.py::token_shard_no ((url, copy_idx) in the pack key so
+    two copies of one document land in independent shards; the budget
+    defaults to SHARD_TOKEN_BUDGET). Committed atomically with an
+    export-style per-shard content-digest manifest, so the sampled
+    corpus is consumer-verifiable and bit-reproducible.
 
     Scale shape: langid + copy realization are narrow maps over the
     kept set; the mixture table is |langs| rows (broadcast); the only
     exchanges are the per-language token-total partial agg and the
     per-stratum packing window (16 parallel streams, same as the
     curation packer)."""
-    from pyspark.sql.window import Window
+    from ocr_spark.plans.curation import (
+        MIXTURE_PARAMS, SHARD_TOKEN_BUDGET, mixture_realize_frame,
+        packing_window, token_shard_no)
+    from ocr_spark.plans.dataops import (
+        _tokens, langid_hit_cols, langid_pred_col)
 
-    from ocr_spark.plans.curation import MIXTURE_ALPHA, _EPOCH_SCALE
-    from ocr_spark.plans.dataops import langid_hit_cols, langid_pred_col
-
+    budget = (SHARD_TOKEN_BUDGET if shard_token_budget is None
+              else shard_token_budget)
     run_id = uuid.uuid4().hex[:12]
     cur_root = curation_root(work_dir)
     sid = snapshot or shim.current_snapshot_id(cur_root)
@@ -1018,27 +1029,13 @@ def run_sampling_job(spark: SparkSession, work_dir: str, *,
             .filter(F.col("keep"))
             .select("url", "text_deduped", "n_words"))
 
-    toks = F.split(F.lower(F.trim(F.col("text_deduped"))), r"\s+")
     with_lang = kept.select(
-        "url", "text_deduped", "n_words", *langid_hit_cols(toks)
+        "url", "text_deduped", "n_words",
+        *langid_hit_cols(_tokens("text_deduped"))
     ).withColumn("lang", langid_pred_col()) \
      .select("url", "text_deduped", "n_words", "lang")
 
-    per = with_lang.groupBy("lang").agg(F.sum("n_words").alias("n_tokens"))
-    tot = per.agg(F.sum("n_tokens").alias("tot_tokens"),
-                  F.sum(F.pow("n_tokens", MIXTURE_ALPHA)).alias("z"))
-    e = (F.pow("n_tokens", MIXTURE_ALPHA) / F.col("z")
-         * F.col("tot_tokens") / F.col("n_tokens"))
-    mix = (per.crossJoin(F.broadcast(tot))
-           .select("lang", F.round(e * _EPOCH_SCALE).cast("long")
-                   .alias("e_micro")))
-    h = (F.conv(F.substring(F.md5(F.concat(F.lit("mix:"), F.col("url"))),
-                            1, 8), 16, 10).cast("long") % _EPOCH_SCALE)
-    extra = (h < F.col("e_micro") % _EPOCH_SCALE).cast("long")
-    copies = (with_lang.join(F.broadcast(mix), "lang")
-              .withColumn("n_copies",
-                          (F.floor(F.col("e_micro") / _EPOCH_SCALE)
-                           + extra).cast("long"))
+    copies = (mixture_realize_frame(with_lang, "url", n_tokens="n_words")
               .filter(F.col("n_copies") > 0)
               .select("url", "lang", "text_deduped", "n_words",
                       F.explode(F.sequence(
@@ -1047,14 +1044,11 @@ def run_sampling_job(spark: SparkSession, work_dir: str, *,
     stratum = F.substring(
         F.md5(F.concat("url", F.lit(":"), F.col("copy_idx").cast("string"))),
         1, 1)
-    w_pack = (Window.partitionBy("stratum").orderBy("url", "copy_idx")
-              .rowsBetween(Window.unboundedPreceding, -1))
-    prefix = F.coalesce(F.sum("n_words").over(w_pack), F.lit(0))
+    shard_no = token_shard_no(
+        "n_words", packing_window("stratum", "url", "copy_idx"), budget)
     packed = (copies.withColumn("stratum", stratum)
-              .withColumn("shard_id",
-                          F.concat_ws("-", "stratum",
-                                      F.floor(prefix / shard_token_budget)
-                                      .cast("string"))))
+              .withColumn("shard_id", F.concat_ws(
+                  "-", "stratum", shard_no.cast("string"))))
 
     manifest_rows = shard_digest_rows(
         packed, ["url", "copy_idx"]).collect()
@@ -1065,7 +1059,7 @@ def run_sampling_job(spark: SparkSession, work_dir: str, *,
         out.repartition("shard_id"), sampling_root(work_dir),
         partition_by=["shard_id"],
         snapshot_id=f"smp-{run_id}", parent_id=None,
-        extra={"sampled_from": sid, "alpha": MIXTURE_ALPHA,
+        extra={"sampled_from": sid, **MIXTURE_PARAMS,
                "shards": shard_manifest})
     shim.publish_snapshot(sampling_root(work_dir), out_sid)
     docs_in = with_lang.count()
@@ -1400,15 +1394,15 @@ def _labeling_batch(spark: SparkSession, work_dir: str,
 
     from ocr_spark.plans.curation import (
         SCORE_ROUND, classifier_score_frame)
-    from ocr_spark.plans.dataops import langid_hit_cols, langid_pred_col
+    from ocr_spark.plans.dataops import (
+        _tokens, langid_hit_cols, langid_pred_col)
 
     out = (read_extracted(spark, work_dir)
            .filter(F.col("error").isNull() & F.col("text").isNotNull()
                    & (F.length("text") > 0))
            .select("url", "text"))
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     with_lang = out.select(
-        "url", "text", *langid_hit_cols(toks)) \
+        "url", "text", *langid_hit_cols(_tokens("text"))) \
         .withColumn("lang", langid_pred_col()).select("url", "text", "lang")
     # THE classifier score, via the shared recipe (lang is
     # url-functional, so joining it back preserves the ranking)

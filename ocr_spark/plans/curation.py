@@ -45,7 +45,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
-from pyspark.sql.window import Window
+from pyspark.sql.window import Window, WindowSpec
 
 from ocr_spark.core.artifacts import load_artifact
 
@@ -62,6 +62,13 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _TOKS = r"\s+"
+
+
+def _n_tokens() -> Column:
+    """Whitespace tokens of ``text``, 0 when trim(text) = '' (as DuckDB)."""
+    toks = F.split(F.trim(F.col("text")), _TOKS)
+    return F.when((F.size(toks) == 1) & (toks[0] == ""), F.lit(0)) \
+        .otherwise(F.size(toks))
 
 
 def docs_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -218,23 +225,34 @@ WHERE substring(md5('sample:' || CAST(doc_id AS VARCHAR)), 1, 1)
 """
 
 
+def packing_window(stream, *order) -> WindowSpec:
+    """The packers' one window: the rows before this one in its stream."""
+    return (Window.partitionBy(stream).orderBy(*order)
+            .rowsBetween(Window.unboundedPreceding, -1))
+
+
+def token_prefix(n_tokens, window: WindowSpec) -> Column:
+    """Exclusive running token sum over a ``packing_window``, 0 first."""
+    return F.coalesce(F.sum(n_tokens).over(window), F.lit(0))
+
+
+def token_shard_no(n_tokens, window: WindowSpec,
+                   budget: int = SHARD_TOKEN_BUDGET) -> Column:
+    """THE token-budget shard number: floor(exclusive prefix / budget)."""
+    return F.floor(token_prefix(n_tokens, window) / budget)
+
+
 def docs_token_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy token-budget shard packing, windowed per language: each
     document lands in shard floor(exclusive-prefix-tokens / budget) of
     its language stream (doc_id order). The per-stratum window is what
     keeps this distributed — shards for different languages pack in
     parallel, and the production form windows per output partition."""
-    docs = _docs(spark, sf_dir)
-    toks = F.split(F.trim(F.col("text")), _TOKS)
-    n = F.when((F.size(toks) == 1) & (toks[0] == ""), F.lit(0)) \
-         .otherwise(F.size(toks))
-    base = docs.select("doc_id", "lang", n.cast("long").alias("n_tokens"))
-    w = (Window.partitionBy("lang").orderBy("doc_id")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    prefix = F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
-    return base.select(
-        "doc_id", "lang", "n_tokens",
-        F.floor(prefix / SHARD_TOKEN_BUDGET).cast("int").alias("shard_id"))
+    base = _docs(spark, sf_dir).select(
+        "doc_id", "lang", _n_tokens().cast("long").alias("n_tokens"))
+    shard_no = token_shard_no("n_tokens", packing_window("lang", "doc_id"))
+    return base.select("doc_id", "lang", "n_tokens",
+                       shard_no.cast("int").alias("shard_id"))
 
 
 TOKEN_SHARDS_SQL = f"""
@@ -279,8 +297,7 @@ def docs_chunk_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     stride = CHUNK_LEN - CHUNK_OVERLAP
     toks = F.split(F.trim(F.col("text")), _TOKS)
-    n = F.when((F.size(toks) == 1) & (toks[0] == ""), F.lit(0)) \
-         .otherwise(F.size(toks))
+    n = _n_tokens()
     starts = F.when(
         n > 0,
         F.filter(
@@ -544,8 +561,7 @@ def docs_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     array aggregate; zero shuffles at any corpus size."""
     docs = _docs(spark, sf_dir)
     toks = F.split(F.trim(F.col("text")), _TOKS)
-    w = F.when((F.size(toks) == 1) & (toks[0] == ""), F.lit(0)) \
-         .otherwise(F.size(toks))
+    w = _n_tokens()
     sents = F.size(F.filter(
         F.split(F.col("text"), r"[.!?]+"),
         lambda x: F.trim(x) != ""))
@@ -608,9 +624,7 @@ def docs_length_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx_percentile per language (same output contract, sketch-
     based) — the same exact-vs-approx note as the percentile gate."""
     docs = _docs(spark, sf_dir)
-    toks = F.split(F.trim(F.col("text")), _TOKS)
-    n = F.when((F.size(toks) == 1) & (toks[0] == ""), F.lit(0)) \
-         .otherwise(F.size(toks)).cast("long")
+    n = _n_tokens().cast("long")
     pct = F.percentile("n", F.lit(list(PCTS)))
     return (docs.select("lang", n.alias("n"))
             .groupBy("lang")
@@ -645,9 +659,7 @@ def hosts_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one partial-agg groupBy keyed host (host-cardinality
     rows), then a 1-row rollup — corpus bytes never move."""
     docs = _docs(spark, sf_dir)
-    toks = F.split(F.trim(F.col("text")), _TOKS)
-    n = F.when((F.size(toks) == 1) & (toks[0] == ""), F.lit(0)) \
-         .otherwise(F.size(toks)).cast("long")
+    n = _n_tokens().cast("long")
     host = F.concat(F.lit("site"), (F.col("doc_id") % 13).cast("string"))
     per = (docs.select(host.alias("host"), n.alias("n"))
            .groupBy("host")
@@ -703,14 +715,9 @@ def docs_seq_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     — token counting is a narrow map, the window input is one row per
     doc (not per token), and languages pack in parallel; the production
     form windows per output shard exactly like docs_token_shards."""
-    docs = _docs(spark, sf_dir)
-    toks = F.split(F.trim(F.col("text")), _TOKS)
-    n = F.when((F.size(toks) == 1) & (toks[0] == ""), F.lit(0)) \
-         .otherwise(F.size(toks))
-    base = docs.select("doc_id", "lang", n.cast("long").alias("n_tokens"))
-    w = (Window.partitionBy("lang").orderBy("doc_id")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    prefix = F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
+    base = _docs(spark, sf_dir).select(
+        "doc_id", "lang", _n_tokens().cast("long").alias("n_tokens"))
+    prefix = token_prefix("n_tokens", packing_window("lang", "doc_id"))
     seq_first = F.floor(prefix / SEQ_LEN)
     seq_last = F.floor((prefix + F.greatest(F.col("n_tokens"), F.lit(1))
                         - 1) / SEQ_LEN)
@@ -891,6 +898,18 @@ MIXTURE_ALPHA = 0.5   # temperature exponent; the multilingual alpha-
                       # uses 0.3) — upweights low-resource domains
 MIX_ROUND = 6
 EPOCH_ROUND = 4
+MIXTURE_PARAMS = {"alpha": MIXTURE_ALPHA}  # a sampled corpus records these
+
+
+def _mixture(per: DataFrame) -> DataFrame:
+    """``per``'s domain rows (lang, n_tokens) plus the temperature weight
+    ``w`` = n^α / Σ n^α and the effective epochs ``e`` = w · total / n."""
+    tot = per.agg(F.sum("n_tokens").alias("tot_tokens"),
+                  F.sum(F.pow("n_tokens", MIXTURE_ALPHA)).alias("z"))
+    w = F.pow("n_tokens", MIXTURE_ALPHA) / F.col("z")
+    return per.crossJoin(F.broadcast(tot)).select(
+        "*", w.alias("w"),
+        (w * F.col("tot_tokens") / F.col("n_tokens")).alias("e"))
 
 
 def docs_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -907,24 +926,16 @@ def docs_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     domain count, independent of corpus bytes. The reference has no
     corpus-level stages (SURVEY §2 absent lists)."""
     docs = _docs(spark, sf_dir)
-    toks = F.split(F.trim(F.col("text")), _TOKS)
-    n = F.when((F.size(toks) == 1) & (toks[0] == ""), F.lit(0)) \
-         .otherwise(F.size(toks)).cast("long")
+    n = _n_tokens().cast("long")
     per = (docs.select("lang", n.alias("n"))
            .groupBy("lang")
            .agg(F.count("*").alias("n_docs"), F.sum("n").alias("n_tokens")))
-    tot = per.agg(
-        F.sum("n_tokens").alias("tot_tokens"),
-        F.sum(F.pow("n_tokens", MIXTURE_ALPHA)).alias("z"))  # 1 row
-    w = F.pow("n_tokens", MIXTURE_ALPHA) / F.col("z")
-    return (per.crossJoin(F.broadcast(tot))
-            .select(
-                "lang", "n_docs", "n_tokens",
-                F.round(F.col("n_tokens") / F.col("tot_tokens"), MIX_ROUND)
-                 .alias("natural_frac"),
-                F.round(w, MIX_ROUND).alias("mixture_weight"),
-                F.round(w * F.col("tot_tokens") / F.col("n_tokens"),
-                        EPOCH_ROUND).alias("effective_epochs")))
+    return _mixture(per).select(
+        "lang", "n_docs", "n_tokens",
+        F.round(F.col("n_tokens") / F.col("tot_tokens"), MIX_ROUND)
+         .alias("natural_frac"),
+        F.round("w", MIX_ROUND).alias("mixture_weight"),
+        F.round("e", EPOCH_ROUND).alias("effective_epochs"))
 
 
 DOMAIN_MIXTURE_SQL = f"""
@@ -972,33 +983,32 @@ def docs_mixture_realize(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-shuffle map — hash, compare, add. Downstream, n_copies feeds
     sequence()+explode into the shard packer (not materialized here:
     the oracle pins the copy COUNTS, the explode is mechanical)."""
-    docs = _docs(spark, sf_dir)
-    toks = F.split(F.trim(F.col("text")), _TOKS)
-    n = F.when((F.size(toks) == 1) & (toks[0] == ""), F.lit(0)) \
-         .otherwise(F.size(toks)).cast("long")
-    per = (docs.select("lang", n.alias("n"))
-           .groupBy("lang")
-           .agg(F.sum("n").alias("n_tokens")))
-    tot = per.agg(
-        F.sum("n_tokens").alias("tot_tokens"),
-        F.sum(F.pow("n_tokens", MIXTURE_ALPHA)).alias("z"))
-    e = (F.pow("n_tokens", MIXTURE_ALPHA) / F.col("z")
-         * F.col("tot_tokens") / F.col("n_tokens"))
-    mix = (per.crossJoin(F.broadcast(tot))
-           .select("lang",
-                   F.round(e * _EPOCH_SCALE).cast("long")
-                    .alias("e_micro")))
-    h = (F.conv(F.substring(
-        F.md5(F.concat(F.lit("mix:"), F.col("doc_id").cast("string"))),
-        1, 8), 16, 10).cast("long") % _EPOCH_SCALE)
-    out = docs.select("doc_id", "lang").join(F.broadcast(mix), "lang")
-    extra = (h < F.col("e_micro") % _EPOCH_SCALE).cast("long")
-    return out.select(
+    docs = _docs(spark, sf_dir).select(
+        "doc_id", "lang", _n_tokens().cast("long").alias("n_tokens"))
+    return mixture_realize_frame(docs, "doc_id").select(
         "doc_id", "lang",
         F.round(F.col("e_micro") / _EPOCH_SCALE, EPOCH_ROUND)
          .alias("effective_epochs"),
-        (F.floor(F.col("e_micro") / _EPOCH_SCALE) + extra)
-        .cast("long").alias("n_copies"))
+        "n_copies")
+
+
+def mixture_realize_frame(df: DataFrame, key: str,
+                          n_tokens: str = "n_tokens") -> DataFrame:
+    """THE mixture realization over ``df``'s (key, lang, n_tokens) rows:
+    adds the language's micro-epochs ``e_micro`` and ``n_copies``, floor(e)
+    plus one when the md5("mix:" ‖ key) draw falls under the fraction. The
+    key hashes as its string cast, so doc_id and url draw as they did."""
+    per = df.groupBy("lang").agg(F.sum(n_tokens).alias("n_tokens"))
+    mix = _mixture(per).select(
+        "lang", F.round(F.col("e") * _EPOCH_SCALE).cast("long")
+        .alias("e_micro"))
+    h = (F.conv(F.substring(
+        F.md5(F.concat(F.lit("mix:"), F.col(key).cast("string"))),
+        1, 8), 16, 10).cast("long") % _EPOCH_SCALE)
+    extra = (h < F.col("e_micro") % _EPOCH_SCALE).cast("long")
+    return df.join(F.broadcast(mix), "lang").withColumn(
+        "n_copies", (F.floor(F.col("e_micro") / _EPOCH_SCALE) + extra)
+        .cast("long"))
 
 
 MIXTURE_REALIZE_SQL = f"""
@@ -1047,10 +1057,8 @@ def shards_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     what the DuckDB oracle asserts.
 
     Scale shape: reuses the per-language prefix-sum packing, then one
-    groupBy(lang, shard_id); sort_array makes the digest deterministic
-    under Spark's unordered collect_list. A shard is budget-bounded
-    (SHARD_TOKEN_BUDGET), so the collected list per group is small by
-    construction — no unbounded-group risk."""
+    groupBy(lang, shard_id) of shard_content_digest. A shard is
+    budget-bounded (SHARD_TOKEN_BUDGET), so its collected list is small."""
     packed = docs_token_shards(spark, sf_dir)
     docs = _docs(spark, sf_dir).select(
         "doc_id", F.md5(F.col("text")).alias("dg"))
@@ -1058,9 +1066,15 @@ def shards_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("lang", "shard_id")
             .agg(F.count("*").alias("n_docs"),
                  F.sum("n_tokens").alias("n_tokens"),
-                 F.md5(F.concat_ws(",", F.transform(
-                     F.sort_array(F.collect_list(F.struct("doc_id", "dg"))),
-                     lambda s: s["dg"]))).alias("content_digest")))
+                 shard_content_digest("doc_id").alias("content_digest")))
+
+
+def shard_content_digest(*keys: str, dg: str = "dg") -> Column:
+    """THE shard content digest, an aggregate: md5 of the per-doc digests
+    ``dg`` joined by ',' in ``keys`` order (sort_array pins it; a field
+    read, not a lambda, takes ``dg`` out)."""
+    return F.md5(F.concat_ws(",", F.sort_array(
+        F.collect_list(F.struct(*keys, dg)))[dg]))
 
 
 SHARDS_MANIFEST_SQL = f"""
@@ -1150,9 +1164,7 @@ def docs_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     languages x ~log2(max_len) — tiny at any corpus size; one
     partial-agg groupBy is the whole plan."""
     docs = _docs(spark, sf_dir)
-    toks = F.split(F.trim(F.col("text")), _TOKS)
-    n = F.when((F.size(toks) == 1) & (toks[0] == ""), F.lit(0)) \
-         .otherwise(F.size(toks)).cast("long")
+    n = _n_tokens().cast("long")
     base = docs.select("lang", n.alias("n"))
     # floor(log2(n)) computed EXACTLY as binary-digit count - 1:
     # float log2 can land on 5.999… vs 6.0 at powers of two and flip
@@ -3352,9 +3364,8 @@ def shards_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     files = (docs.groupBy("source")
              .agg(F.sum("n_chars").alias("file_bytes")))
     wo = Window.orderBy(F.desc("file_bytes"), F.asc("source"))
-    cum_excl = F.coalesce(
-        F.sum("file_bytes").over(
-            wo.rowsBetween(Window.unboundedPreceding, -1)), F.lit(0))
+    cum_excl = token_prefix(
+        "file_bytes", wo.rowsBetween(Window.unboundedPreceding, -1))
     planned = files.select(
         "source", F.col("file_bytes").cast("long").alias("file_bytes"),
         (cum_excl / F.lit(COMPACT_TARGET_BYTES)).cast("long")

@@ -1287,37 +1287,45 @@ _LANG_ORDER = ("en", "de", "fr", "es")
 def langid_hit_cols(toks_col) -> list[Column]:
     """Per-language stopword hit counters over a token-array column —
     the shared langid kernel (docs_langid and job.py's sampling stage
-    both call this, so query and pipeline language ID cannot drift)."""
+    both call this, so query and pipeline language ID cannot drift).
+    Lambda-free and exact: ``\\s+`` tokens hold no space, so whole-token
+    matches in the ' '-joined tokens count the stopword hits."""
+    joined = F.array_join(toks_col, " ")
     return [
-        F.size(F.filter(toks_col, lambda x: x.isin(*ws)))
+        F.regexp_count(joined, F.lit(f"(?<![^ ])(?:{'|'.join(ws)})(?![^ ])"))
          .alias(f"hits_{lg}")
         for lg, ws in _LANG_STOPWORDS.items()
     ]
 
 
+def _precedence_argmax(counts: dict, order: tuple) -> Column:
+    """The label of ``order`` with the most ``counts``, ties to the earlier
+    label; 'und' when none counts above 0. The one langid vote: per doc,
+    per segment and the segments' majority."""
+    pred = F.lit("und")
+    for lg in reversed(order):
+        cond = counts[lg] > 0
+        for o in order:
+            if o != lg:
+                cond = cond & (counts[lg] > counts[o]
+                               if order.index(o) < order.index(lg)
+                               else counts[lg] >= counts[o])
+        pred = F.when(cond, F.lit(lg)).otherwise(pred)
+    return pred
+
+
 def langid_pred_col() -> Column:
     """Argmax over the hits_<lang> columns with fixed precedence
     en>de>fr>es on ties; 'und' when nothing hits."""
-    pred = F.lit("und")
-    for lg in reversed(_LANG_ORDER):
-        others = [o for o in _LANG_ORDER if o != lg]
-        cond = (F.col(f"hits_{lg}") > 0)
-        for o in others:
-            earlier = _LANG_ORDER.index(o) < _LANG_ORDER.index(lg)
-            cond = cond & (
-                F.col(f"hits_{lg}") > F.col(f"hits_{o}") if earlier
-                else F.col(f"hits_{lg}") >= F.col(f"hits_{o}"))
-        pred = F.when(cond, F.lit(lg)).otherwise(pred)
-    return pred
+    return _precedence_argmax(
+        {lg: F.col(f"hits_{lg}") for lg in _LANG_ORDER}, _LANG_ORDER)
 
 
 def docs_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """n-gram-heuristic language ID: count stopword hits per language,
     argmax with fixed precedence en>de>fr>es on ties. Narrow map."""
-    docs = t(spark, sf_dir, "documents")
-    toks = _tokens()
-    base = docs.select("doc_id", "lang", toks.alias("toks"))
-    counts = base.select("doc_id", "lang", *langid_hit_cols("toks"))
+    counts = t(spark, sf_dir, "documents").select(
+        "doc_id", "lang", *langid_hit_cols(_tokens()))
     return counts.select(
         "doc_id", "lang",
         *[f"hits_{lg}" for lg in _LANG_ORDER],
@@ -3561,19 +3569,9 @@ _SEG_LANG_ORDER = _LANG_ORDER + ("und",)
 def _seg_pred(seg: Column) -> Column:
     """Per-segment argmax stopword vote — the docs_langid kernel
     applied to a token SLICE instead of the whole document."""
-    hits = {lg: F.size(F.filter(seg, _in_set(tuple(ws))))
-            for lg, ws in _LANG_STOPWORDS.items()}
-    pred = F.lit("und")
-    for lg in reversed(_LANG_ORDER):
-        cond = hits[lg] > 0
-        for o in _LANG_ORDER:
-            if o == lg:
-                continue
-            earlier = _LANG_ORDER.index(o) < _LANG_ORDER.index(lg)
-            cond = cond & ((hits[lg] > hits[o]) if earlier
-                           else (hits[lg] >= hits[o]))
-        pred = F.when(cond, F.lit(lg)).otherwise(pred)
-    return pred
+    return _precedence_argmax(
+        {lg: F.size(F.filter(seg, _in_set(tuple(ws))))
+         for lg, ws in _LANG_STOPWORDS.items()}, _LANG_ORDER)
 
 
 def docs_lang_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3612,17 +3610,7 @@ def docs_lang_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform(segments, _seg_pred).alias("langs"))
     counts = {lg: F.size(F.filter("langs", _eq_lit(lg)))
               for lg in _SEG_LANG_ORDER}
-    maj = F.lit("und")
-    for lg in reversed(_SEG_LANG_ORDER):
-        cond = counts[lg] > 0
-        for o in _SEG_LANG_ORDER:
-            if o == lg:
-                continue
-            earlier = (_SEG_LANG_ORDER.index(o)
-                       < _SEG_LANG_ORDER.index(lg))
-            cond = cond & ((counts[lg] > counts[o]) if earlier
-                           else (counts[lg] >= counts[o]))
-        maj = F.when(cond, F.lit(lg)).otherwise(maj)
+    maj = _precedence_argmax(counts, _SEG_LANG_ORDER)
     n = F.size("langs")
     switches = F.when(
         n >= 2,

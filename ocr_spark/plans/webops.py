@@ -3920,8 +3920,8 @@ _GOPHER_LINE_TAIL = """
   FROM l
 )
 SELECT doc_id, n_lines, bullet_line_frac, ellipsis_line_frac,
-       (bullet_line_frac <= {bf} AND ellipsis_line_frac <= {ef})
-         AS keep_lines
+       (n_lines = 0 OR (bullet_line_frac <= {bf}
+                        AND ellipsis_line_frac <= {ef})) AS keep_lines
 FROM m
 """.format(r=_GLF_ROUND, bf=GLF_MAX_BULLET_FRAC, ef=GLF_MAX_ELLIPSIS_FRAC)
 

@@ -570,15 +570,14 @@ def stream_quality_gate(spark: SparkSession, input_dir: str,
     downstream sink filters on ``keep``. Everything past extraction
     is a narrow JVM map; the parquet sink is natively exactly-once."""
     from ocr_spark.plans.dataops import (
-        gopher_gate_frame, langid_hit_cols, langid_pred_col,
+        _tokens, gopher_gate_frame, langid_hit_cols, langid_pred_col,
     )
 
     pages = read_pages_stream(spark, input_dir)
     extracted = extract_pages(pages)
     ok = extracted.filter(F.col("error").isNull()
                           & F.col("text").isNotNull())
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    with_lang = (ok.select("url", "text", *langid_hit_cols(toks))
+    with_lang = (ok.select("url", "text", *langid_hit_cols(_tokens()))
                  .withColumn("lang", langid_pred_col())
                  .select("url", "text", "lang"))
     out = gopher_gate_frame(with_lang, "url", carry=("lang",))

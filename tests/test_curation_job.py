@@ -523,6 +523,137 @@ def test_shard_digest_rows_match_lambda_reference(curated, key_cols):
     assert len(got) == summary["shards"] > 1
 
 
+# Langid edge rows: a \t-led text (a leading empty token), a trailing \t
+# (a trailing empty token), NBSP and U+2028 tails that \s+ does not split,
+# stopwords glued to punctuation or inside words, repeats, case folds and
+# blank lines.
+LANGID_TEXTS = [
+    "", "\tthe cat and the dog", "of the\t", "the\u00a0and the",
+    "der die\u2028 das und ist", "le la les\u2028", "y y y\u00a0 el",
+    "The THE the", "the-and the, and", "en de la los una para",
+    "nicht von mit auf ein  ein\n\nein", "\t\t", " the ",
+    "other under ein- lesson ellas",
+]
+
+
+def _member(ws):
+    return lambda x: x.isin(*ws)
+
+
+def test_langid_hits_match_lambda_reference(curated):
+    """dataops.langid_hit_cols counts, lambda-free, what
+    ``size(filter(toks, x -> x IN stopwords))`` counted, with ==, on every
+    curated doc plus LANGID_TEXTS and HAND_TEXTS. The rows are sharp: a
+    count without the whole-token lookarounds disagrees on some of them."""
+    from pyspark.sql import functions as F
+
+    from ocr_spark.plans.dataops import (
+        _LANG_STOPWORDS, _tokens, langid_hit_cols)
+
+    spark, work, summary = curated
+    out = shim.read_snapshot(spark, curation_root(work),
+                             summary["snapshot"])
+    texts = LANGID_TEXTS + HAND_TEXTS
+    hand = spark.createDataFrame(
+        [(f"hand://{i}", t) for i, t in enumerate(texts)],
+        "url string, text_deduped string")
+    docs = (out.select("url", "text_deduped").unionByName(hand)
+            .withColumn("toks", _tokens("text_deduped")))
+    joined = F.array_join("toks", " ")
+    rows = docs.select(
+        "url", *langid_hit_cols("toks"),
+        *(F.size(F.filter("toks", _member(ws))).alias(f"ref_{lg}")
+          for lg, ws in _LANG_STOPWORDS.items()),
+        *(F.regexp_count(joined, F.lit("|".join(ws))).alias(f"naive_{lg}")
+          for lg, ws in _LANG_STOPWORDS.items())).collect()
+    assert len(rows) == summary["docs"] + len(texts)
+    hand_rows = [r for r in rows if r.url.startswith("hand://")]
+    for lg in _LANG_STOPWORDS:
+        bad = [(r.url, r[f"ref_{lg}"], r[f"hits_{lg}"]) for r in rows
+               if r[f"ref_{lg}"] != r[f"hits_{lg}"]]
+        assert not bad, (lg, bad)
+        assert sum(r[f"ref_{lg}"] for r in hand_rows) > 0, lg
+        assert any(r[f"naive_{lg}"] != r[f"ref_{lg}"] for r in hand_rows), lg
+
+
+def test_mixture_kernel_matches_inline_reference(curated):
+    """curation.mixture_realize_frame gives every kept doc the e_micro and
+    n_copies of the copy the sampling job used to hold, spelled here: the
+    per-language token sums, z, epochs, e_micro and the md5("mix:" || url)
+    draw, over three unequal synthetic languages."""
+    from pyspark.sql import functions as F
+
+    from ocr_spark.plans.curation import (
+        _EPOCH_SCALE, MIXTURE_ALPHA, mixture_realize_frame)
+
+    spark, work, summary = curated
+    h1 = F.substring(F.md5("url"), 1, 1)
+    kept = (shim.read_snapshot(spark, curation_root(work),
+                               summary["snapshot"])
+            .filter("keep")
+            .select("url", "n_words",
+                    F.when(h1 < "3", "de").when(h1 < "6", "fr")
+                    .otherwise("en").alias("lang")))
+    per = kept.groupBy("lang").agg(F.sum("n_words").alias("n_tokens"))
+    tot = per.agg(F.sum("n_tokens").alias("tot_tokens"),
+                  F.sum(F.pow("n_tokens", MIXTURE_ALPHA)).alias("z"))
+    e = (F.pow("n_tokens", MIXTURE_ALPHA) / F.col("z")
+         * F.col("tot_tokens") / F.col("n_tokens"))
+    mix = per.crossJoin(tot).select(
+        "lang", F.round(e * _EPOCH_SCALE).cast("long").alias("ref_e"))
+    h = (F.conv(F.substring(F.md5(F.concat(F.lit("mix:"), F.col("url"))),
+                            1, 8), 16, 10).cast("long") % _EPOCH_SCALE)
+    ref = kept.join(mix, "lang").select(
+        "url", "ref_e",
+        (F.floor(F.col("ref_e") / _EPOCH_SCALE)
+         + (h < F.col("ref_e") % _EPOCH_SCALE).cast("long")).alias("ref_n"))
+    got = mixture_realize_frame(kept, "url", n_tokens="n_words")
+    rows = got.join(ref, "url").collect()
+    assert len(rows) == summary["docs_kept"]
+    assert all((r.e_micro, r.n_copies) == (r.ref_e, r.ref_n) for r in rows)
+    assert len({r.e_micro for r in rows}) == 3
+    assert len({r.n_copies for r in rows}) > 1
+
+
+def test_corpus_shaping_plans_hold_no_lambda(curated, monkeypatch):
+    """The optimized plans of shards_manifest, docs_langid and the frame
+    the sampling job commits hold no lambdafunction."""
+    from ocr_spark.job import run_sampling_job, sampling_root
+    from ocr_spark.plans.curation import shards_manifest
+    from ocr_spark.plans.dataops import docs_langid
+
+    spark, work, _ = curated
+    frames = []
+    stage = shim.prepare_snapshot
+
+    def capture(df, table_root, *args, **kwargs):
+        if table_root == sampling_root(work):
+            frames.append(df)
+        return stage(df, table_root, *args, **kwargs)
+
+    monkeypatch.setattr(shim, "prepare_snapshot", capture)
+    run_sampling_job(spark, work)
+    sf = "/root/testdata/sf0.001"
+    assert len(frames) == 1
+    for df in (shards_manifest(spark, sf), docs_langid(spark, sf), *frames):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "lambdafunction" not in plan.lower(), plan
+
+
+def test_line_gate_oracle_keeps_docs_without_lines():
+    """The DuckDB oracle of docs_gopher_line_filters keeps a doc without a
+    non-empty line (empty text, only newlines), as gopher_line_keep and
+    the job do: NULL fractions, keep_lines true."""
+    import duckdb
+
+    from ocr_spark.plans.webops import _GOPHER_LINE_TAIL
+
+    sql = ("WITH seq(doc_id, block_id, btext) AS (VALUES (1, 0, ''), "
+           "(2, 0, chr(10) || chr(10)))" + _GOPHER_LINE_TAIL)
+    assert sorted(duckdb.sql(sql).fetchall()) == [
+        (1, 0, None, None, True), (2, 0, None, None, True)]
+
+
 def test_neardup_stage_collapses_recrawls(spark, tmp_path_factory):
     """neardup=True collapses document-level near-duplicates: a corpus
     with re-crawled copies (same text ± a trailing edit, new url) must

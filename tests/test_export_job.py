@@ -216,9 +216,14 @@ def test_sampling_job_realizes_mixture(spark, tmp_path_factory):
         assert len(cset) <= 2 and max(cset) - min(cset) <= 1, (lang, cset)
 
     # shard token sums respect the budget up to one document overhang
+    from ocr_spark.plans.curation import SHARD_TOKEN_BUDGET
+
     shards = manifest["shards"]
+    widest = dict(out.groupBy("shard_id").agg(F.max("n_words")).collect())
+    assert set(widest) == set(shards)
     for sid_, m in shards.items():
         assert m["n_docs"] >= 1
+        assert m["n_tokens"] < SHARD_TOKEN_BUDGET + widest[sid_], (sid_, m)
     # determinism: a second run over the same curation snapshot
     # reproduces every content digest
     s2 = run_sampling_job(spark, work)
