@@ -4,20 +4,22 @@ extraction → snapshot write → per-wave commit record in the manifest.
 Execution model (SURVEY.md §3.4): one Catalyst-planned job per commit wave —
 
     input snapshot scan (url, html only — column pruning)
-      → [resume filter: skip committed buckets — partition-level skip]
+      → [bucket filter: this wave's bucket group — partition-level skip]
       → salted repartition                    [the ONE shuffle]
       → mapInArrow(extract)                   [Arrow boundary]
       → snapshot write, one file per task     [shuffle-free]
       → commit record: one groupBy(bucket) over the staged rows
 
-Buckets are grouped into ``waves``. A wave's output manifest is its commit
-record (input snapshot, bucket group, per-bucket counters) and the shim
-pointer swap is its only commit point; the checkpoint / lineage / metrics
-tables are exported from the record after the swap. Resume state is one
-fold over the published output chain's manifests, so a killed run resumes
-at wave granularity without reprocessing committed buckets — the
-cluster-scale version of the reference's processed-files dedup sets
-(/root/reference/service/api/main.py:21-48).
+The commit unit is (input snapshot, bucket group): a wave. A wave's
+output manifest is its commit record (input snapshot, bucket group,
+per-bucket counters) and the shim pointer swap is its only commit point;
+the checkpoint / lineage / metrics tables are exported from the record
+after the swap. Resume state is one fold over the published output
+chain's manifests, and the units it leaves are all a run does — so a
+first run, an increment after an append and a resume after a crash are
+one job, and none reprocesses a committed bucket. This is the
+cluster-scale version of the reference service's processed-files dedup
+sets (service/api/main.py:21-48).
 """
 
 from __future__ import annotations
@@ -84,6 +86,51 @@ def _resume_state(work_dir: str, n_buckets: int
     return bookkeeping.completed_buckets_by_snapshot(manifests), repaired
 
 
+def _commit_units(inputs: list[dict], done_by_sid: dict[str, set[int]],
+                  n_buckets: int, waves: int) -> list[tuple[dict, list[int]]]:
+    """The work the resume fold leaves: (input manifest, bucket group)
+    pairs, oldest snapshot first. Groups are sized from ``n_buckets``,
+    not from what is left, so a resumed wave is never wider than a
+    fresh one; a snapshot with no bucket left yields no unit."""
+    size = max(1, (n_buckets + waves - 1) // waves)
+    units = []
+    for m in inputs:
+        done = done_by_sid.get(m["snapshot_id"], set())
+        todo = [b for b in range(n_buckets) if b not in done]
+        units += [(m, todo[i:i + size]) for i in range(0, len(todo), size)]
+    return units
+
+
+def _snapshot_pages(spark: SparkSession, m: dict, work_dir: str,
+                    respect_robots: bool, route_filter: bool
+                    ) -> tuple[DataFrame, DataFrame | None]:
+    """One input snapshot's pages as its waves read them, and the
+    persisted routed frame to unpersist (``None`` without
+    ``route_filter``). The router runs ONCE per snapshot: census, kept
+    set and every wave read the persisted route column (the streaming
+    router_sink's discipline). Census first — condemned pages never
+    reach the kernel, but their counts are committed per snapshot
+    (idempotent overwrite keyed on sid)."""
+    from ocr_spark.sources import PAGES_SCHEMA
+
+    pages = spark.read.schema(PAGES_SCHEMA).parquet(m["data_dir"])
+    if respect_robots:
+        pages = pages.filter(
+            ~F.col("html").cast("string").rlike(_ROBOTS_NOINDEX))
+    if not route_filter:
+        return pages, None
+    from ocr_spark.plans.htmlfeat import route_for_html
+
+    routed = pages.withColumn(
+        "route", route_for_html(F.col("html"))).persist()
+    census = (routed.groupBy("route")
+              .agg(F.count("*").cast("long").alias("n_pages"),
+                   F.sum(F.length("html")).cast("long").alias("bytes_in")))
+    census.coalesce(1).write.mode("overwrite").parquet(os.path.join(
+        work_dir, "route_census", f"snapshot={m['snapshot_id']}"))
+    return routed.filter(F.col("route").isin("extract", "oversized")), routed
+
+
 def run_extraction_job(spark: SparkSession, input_table_root: str,
                        work_dir: str, partitions: int = 128,
                        big_partitions: int = 8,
@@ -95,10 +142,21 @@ def run_extraction_job(spark: SparkSession, input_table_root: str,
                        fail_after_waves: int | None = None,
                        fail_point: str = "after_wave") -> dict:
     """Run (or resume) extraction of the input table's full logical
-    content at CURRENT — the whole snapshot chain, processed
-    per-snapshot (oldest first) so commit records stay (snapshot,
-    bucket) granular and already-processed ancestors are skipped, not
-    re-extracted.
+    content at CURRENT: every snapshot of the chain, each keyed on its
+    own sid. An increment is the same call — the resume fold over the
+    output chain leaves only the (input snapshot, bucket group) commit
+    units not yet committed, so a first run extracts the whole chain, a
+    rerun after an append extracts the appended snapshot, a rerun after
+    a crash resumes the crashed snapshot's remaining buckets, and a
+    rerun over a fully committed chain runs no Spark job. A snapshot
+    with no unit left is never read, filtered, routed or counted.
+
+    Each unit is one wave: it stages its data and manifest, writes its
+    commit record into the still-unpublished manifest, publishes (the
+    commit point), then exports the record's table rows. A crash before
+    the swap leaves unreachable garbage whose buckets re-run; a crash
+    after it is repaired at the next job start. One run_id is shared by
+    every wave of the run.
 
     ``respect_robots=True`` drops pages whose meta-robots directive
     contains ``noindex`` BEFORE the Arrow boundary (a narrow JVM regexp
@@ -118,120 +176,34 @@ def run_extraction_job(spark: SparkSession, input_table_root: str,
 
     ``fail_after_waves``/``fail_point`` are test hooks simulating a
     mid-job crash for the resume tests (SURVEY.md §5.2.5): raise after N
-    waves, either ``after_stage`` (data and manifest staged, nothing
-    published), ``after_publish`` (pointer swapped, table export
+    waves of this run, either ``after_stage`` (data and manifest staged,
+    nothing published), ``after_publish`` (pointer swapped, table export
     skipped → exercises the repair) or ``after_wave`` (full commit
     done).
 
-    Returns a summary dict (snapshot ids, bucket/doc counts, skipped).
+    Returns a summary dict: output snapshot ids, ``buckets_skipped``
+    (committed buckets over the whole input chain), ``buckets_processed``
+    and ``docs`` of this run, and ``snapshots_processed`` (input
+    snapshots with work this run).
     """
-    input_sid = shim.current_snapshot_id(input_table_root)
-    if input_sid is None:
+    inputs = shim.chain_manifests(input_table_root)
+    if not inputs:
         raise FileNotFoundError(f"no input snapshot at {input_table_root}")
-    # The LOGICAL table at CURRENT = the whole snapshot chain (append-
-    # chain model), but resume state is bucket-granular PER SNAPSHOT —
-    # so the chain is processed one snapshot at a time, oldest first,
-    # each keyed on its own sid. A first-ever run on a multi-snapshot
-    # table covers every ancestor's rows; a rerun after an append skips
-    # fully-processed ancestors through their own commit records
-    # instead of re-extracting them (which would duplicate every
-    # ancestor document in the output).
     done_by_sid, repaired = _resume_state(work_dir, n_buckets)
-    return _run_chain(
-        spark, input_table_root, work_dir, shim.history(input_table_root),
-        input_sid, done_by_sid, repaired, partitions=partitions,
-        big_partitions=big_partitions, big_threshold=big_threshold,
-        n_buckets=n_buckets, waves=waves, respect_robots=respect_robots,
-        route_filter=route_filter, fail_after_waves=fail_after_waves,
-        fail_point=fail_point)
-
-
-def _run_chain(spark: SparkSession, input_table_root: str, work_dir: str,
-               sids: list[str], input_sid: str,
-               done_by_sid: dict[str, set[int]], rolled_forward: int, *,
-               partitions: int, big_partitions: int, big_threshold: int,
-               n_buckets: int, waves: int, respect_robots: bool = False,
-               route_filter: bool = False,
-               fail_after_waves: int | None = None,
-               fail_point: str = "after_wave") -> dict:
-    """Process ``sids`` (oldest → newest), each snapshot's own data dir
-    keyed on its own sid — the uniform (snapshot, bucket) commit
-    granularity that lets full runs, incremental runs, and reruns
-    compose without ever re-extracting (duplicating) a processed
-    snapshot's rows. ``done_by_sid`` is the job-start resume state;
-    one run_id is shared by every snapshot's waves."""
-    from ocr_spark.sources import PAGES_SCHEMA
-
+    units = _commit_units(inputs, done_by_sid, n_buckets, waves)
+    processed = sum(len(group) for _m, group in units)
     run_id = uuid.uuid4().hex[:12]
-    combined: dict = {"run_id": run_id, "input_snapshot": input_sid,
-                      "output_snapshots": [], "buckets_skipped": 0,
-                      "buckets_processed": 0, "docs": 0,
-                      "rolled_forward": rolled_forward,
-                      "snapshots_processed": 0}
+    summary: dict = {
+        "run_id": run_id, "input_snapshot": inputs[-1]["snapshot_id"],
+        "output_snapshots": [],
+        "buckets_skipped": len(inputs) * n_buckets - processed,
+        "buckets_processed": processed, "docs": 0,
+        "rolled_forward": repaired,
+        "snapshots_processed": len({m["snapshot_id"] for m, _g in units})}
     if respect_robots:
-        combined["respect_robots"] = True
+        summary["respect_robots"] = True
     if route_filter:
-        combined["route_filter"] = True
-    for sid in sids:
-        data_dir = shim.read_manifest(input_table_root, sid)["data_dir"]
-        pages = spark.read.schema(PAGES_SCHEMA).parquet(data_dir)
-        if respect_robots:
-            pages = pages.filter(
-                ~F.col("html").cast("string").rlike(_ROBOTS_NOINDEX))
-        routed = None
-        if route_filter:
-            from ocr_spark.plans.htmlfeat import route_for_html
-            # the router runs ONCE per snapshot: census, kept set and
-            # every wave read the persisted route column (the streaming
-            # router_sink's discipline). Census first — condemned pages
-            # never reach the kernel, but their counts are committed
-            # per snapshot (idempotent overwrite keyed on sid)
-            routed = pages.withColumn(
-                "route", route_for_html(F.col("html"))).persist()
-            census = (routed.groupBy("route")
-                      .agg(F.count("*").cast("long").alias("n_pages"),
-                           F.sum(F.length("html")).cast("long")
-                           .alias("bytes_in")))
-            census.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(work_dir, "route_census",
-                             f"snapshot={sid}"))
-            pages = routed.filter(F.col("route")
-                                  .isin("extract", "oversized"))
-        try:
-            s = _run_waves(
-                spark, pages, work_dir, sid, [data_dir],
-                run_id=run_id, done=done_by_sid.get(sid, set()),
-                partitions=partitions, big_partitions=big_partitions,
-                big_threshold=big_threshold, n_buckets=n_buckets,
-                waves=waves, fail_after_waves=fail_after_waves,
-                fail_point=fail_point)
-        finally:
-            if routed is not None:
-                routed.unpersist()
-        combined["output_snapshots"] += s["output_snapshots"]
-        combined["buckets_skipped"] += s["buckets_skipped"]
-        combined["buckets_processed"] += s["buckets_processed"]
-        combined["docs"] += s["docs"]
-        combined["snapshots_processed"] += 1
-    return combined
-
-
-def _run_waves(spark: SparkSession, pages: DataFrame, work_dir: str,
-               input_sid: str, input_files: list[str], *, run_id: str,
-               done: set[int], partitions: int, big_partitions: int,
-               big_threshold: int, n_buckets: int, waves: int,
-               fail_after_waves: int | None = None,
-               fail_point: str = "after_wave") -> dict:
-    """One snapshot's waves. Each wave stages its data and manifest,
-    writes its commit record into the still-unpublished manifest,
-    publishes (the commit point), then exports the record's table rows.
-    A crash before the swap leaves unreachable garbage whose buckets
-    re-run; a crash after it is repaired at the next job start."""
-    root = output_root(work_dir)
-    all_buckets = list(range(n_buckets))
-    todo = [b for b in all_buckets if b not in done]
-    wave_size = max(1, (len(all_buckets) + waves - 1) // waves)
-    wave_groups = [todo[i:i + wave_size] for i in range(0, len(todo), wave_size)]
+        summary["route_filter"] = True
 
     def crash_at(point: str, w: int) -> None:
         if fail_after_waves is not None and (w + 1) >= fail_after_waves \
@@ -239,87 +211,46 @@ def _run_waves(spark: SparkSession, pages: DataFrame, work_dir: str,
             raise RuntimeError(
                 f"injected failure {point.replace('_', ' ')}, wave {w}")
 
-    out_sids: list[str] = []
-    docs_total = 0
-    for w, bucket_group in enumerate(wave_groups):
-        extracted = run_extraction(
-            pages.filter(url_bucket(n_buckets).isin(bucket_group)),
-            partitions=partitions, big_partitions=big_partitions,
-            big_threshold=big_threshold, n_buckets=n_buckets,
-        )
-        out_sid = shim.prepare_snapshot(
-            extracted, root, snapshot_id=f"{input_sid[:8]}-{run_id}-w{w}")
-        crash_at("after_stage", w)
+    root = output_root(work_dir)
+    pages = routed = None
+    try:
+        for w, (m, group) in enumerate(units):
+            sid = m["snapshot_id"]
+            if w == 0 or units[w - 1][0] is not m:
+                if routed is not None:
+                    routed.unpersist()
+                pages, routed = _snapshot_pages(
+                    spark, m, work_dir, respect_robots, route_filter)
+            extracted = run_extraction(
+                pages.filter(url_bucket(n_buckets).isin(group)),
+                partitions=partitions, big_partitions=big_partitions,
+                big_threshold=big_threshold, n_buckets=n_buckets)
+            out_sid = shim.prepare_snapshot(
+                extracted, root, snapshot_id=f"{sid[:8]}-{run_id}-w{w}")
+            crash_at("after_stage", w)
 
-        record = commit_bucket_bookkeeping(
-            shim.read_snapshot(spark, root, out_sid,
-                               schema=EXTRACT_RESULT_SCHEMA),
-            input_sid=input_sid, input_files=input_files, run_id=run_id,
-            buckets=bucket_group, n_buckets=n_buckets,
-            big_threshold=big_threshold, skew_salt=big_partitions)
-        manifest = shim.amend_manifest(root, out_sid, record)
-        shim.publish_snapshot(root, out_sid)
-        out_sids.append(out_sid)
-        docs_total += sum(record["bucket_stats"]["docs"])
-        crash_at("after_publish", w)
+            record = commit_bucket_bookkeeping(
+                shim.read_snapshot(spark, root, out_sid,
+                                   schema=EXTRACT_RESULT_SCHEMA),
+                input_sid=sid, input_files=[m["data_dir"]], run_id=run_id,
+                buckets=group, n_buckets=n_buckets,
+                big_threshold=big_threshold, skew_salt=big_partitions)
+            manifest = shim.amend_manifest(root, out_sid, record)
+            shim.publish_snapshot(root, out_sid)
+            summary["output_snapshots"].append(out_sid)
+            summary["docs"] += sum(record["bucket_stats"]["docs"])
+            crash_at("after_publish", w)
 
-        export_wave_tables(work_dir, manifest)
-        crash_at("after_wave", w)
-
-    return {
-        "run_id": run_id,
-        "input_snapshot": input_sid,
-        "output_snapshots": out_sids,
-        "buckets_skipped": len(done),
-        "buckets_processed": len(todo),
-        "docs": docs_total,
-    }
-
-
-def run_incremental_extraction_job(spark: SparkSession,
-                                   input_table_root: str, work_dir: str,
-                                   partitions: int = 128,
-                                   big_partitions: int = 8,
-                                   big_threshold: int = DEFAULT_BIG_THRESHOLD,
-                                   n_buckets: int = DEFAULT_BUCKETS,
-                                   waves: int = 4,
-                                   respect_robots: bool = False) -> dict:
-    """Process ONLY the input data added since the last processed
-    snapshot (shim.added_since diff) — Trigger.AvailableNow semantics
-    over the snapshot chain, without Structured Streaming.
-
-    Logic: the base is the newest input snapshot whose bucket set is
-    FULLY committed (a snapshot with only some buckets committed is NOT
-    a valid base — its unfinished buckets would be silently lost);
-    everything after it is processed, each snapshot keyed on its own sid
-    (so bucket-level resume works within the increment too). With no
-    fully-processed snapshot this is the full job over the ENTIRE chain,
-    skipping completed buckets per snapshot; it no-ops when CURRENT (and
-    its ancestors) are already fully processed.
-    """
-    input_sid = shim.current_snapshot_id(input_table_root)
-    if input_sid is None:
-        raise FileNotFoundError(f"no input snapshot at {input_table_root}")
-
-    done_by_sid, repaired = _resume_state(work_dir, n_buckets)
-    chain = shim.history(input_table_root)
-    fully_done = [i for i, sid in enumerate(chain)
-                  if len(done_by_sid.get(sid, ())) >= n_buckets]
-    # the snapshots strictly after base, oldest → newest, each keyed on
-    # ITS OWN sid (the full job's (snapshot, bucket) unit, so the two
-    # paths compose). base being fully done makes excluding it safe; any
-    # PARTIALLY-done snapshot is after base by construction and gets its
-    # remaining buckets resumed.
-    start = fully_done[-1] + 1 if fully_done else 0
-    summary = _run_chain(
-        spark, input_table_root, work_dir, chain[start:], input_sid,
-        done_by_sid, repaired, partitions=partitions,
-        big_partitions=big_partitions, big_threshold=big_threshold,
-        n_buckets=n_buckets, waves=waves, respect_robots=respect_robots)
-    if fully_done:
-        summary["incremental_base"] = chain[start - 1]
-        summary["added_dirs"] = len(chain) - start
+            export_wave_tables(work_dir, manifest)
+            crash_at("after_wave", w)
+    finally:
+        if routed is not None:
+            routed.unpersist()
     return summary
+
+
+# every run resumes from the output chain, so an increment is a full run
+run_incremental_extraction_job = run_extraction_job
 
 
 def compact_snapshots(spark: SparkSession, work_dir: str) -> dict:
@@ -1072,18 +1003,15 @@ def run_sampling_job(spark: SparkSession, work_dir: str, *,
 
 def read_extracted(spark: SparkSession, work_dir: str) -> DataFrame:
     """All committed extraction output across snapshots. The union is
-    exact: within one input snapshot, committed buckets are never
-    reprocessed (a bucket is committed only by the pointer swap that
-    publishes its data); across input snapshots, both the
-    full-chain and incremental paths process each input snapshot's own
-    data dir keyed on its own sid, so their documents are disjoint by
-    construction."""
+    exact: a bucket of an input snapshot is committed only by the
+    pointer swap that publishes its data, and a committed (snapshot,
+    bucket) unit is never extracted again, so the output snapshots'
+    documents are disjoint by construction."""
     root = output_root(work_dir)
-    sids = shim.history(root) if shim.current_snapshot_id(root) else []
-    if not sids:
+    dirs = [m["data_dir"] for m in shim.chain_manifests(root)]
+    if not dirs:
         raise FileNotFoundError(
             f"no extraction output committed yet under {root}")
-    dirs = [shim.read_manifest(root, sid)["data_dir"] for sid in sids]
     # ONE multi-path scan of flat snapshot dirs (``bucket`` is a data
     # column): the plan stays a single scan node after thousands of
     # incremental commits, instead of a union chain that grows per
@@ -1246,13 +1174,11 @@ def stats_root(work_dir: str) -> str:
     return os.path.join(work_dir, "stats")
 
 
-def _snapshot_texts(spark: SparkSession, work_dir: str,
-                    sid: str) -> DataFrame:
+def _snapshot_texts(spark: SparkSession, data_dir: str) -> DataFrame:
     """Extracted text of ONE committed extraction snapshot's own rows
     (snapshot dirs are disjoint by the two-phase bucket commit, so
     per-snapshot sketch frames tile the corpus with no overlap)."""
-    d = shim.read_manifest(output_root(work_dir), sid)["data_dir"]
-    return (spark.read.schema(EXTRACT_RESULT_SCHEMA).parquet(d)
+    return (spark.read.schema(EXTRACT_RESULT_SCHEMA).parquet(data_dir)
             .filter(F.col("error").isNull() & F.col("text").isNotNull())
             .select("text"))
 
@@ -1299,21 +1225,19 @@ def run_stats_job(spark: SparkSession, work_dir: str) -> dict:
     partial rows) — no data-volume shuffle at any input size."""
     run_id = uuid.uuid4().hex[:12]
     sroot = stats_root(work_dir)
-    done = set()
-    if shim.current_snapshot_id(sroot):
-        for s in shim.history(sroot):
-            done.add(shim.read_manifest(sroot, s).get("stats_for"))
+    done = {m.get("stats_for") for m in shim.chain_manifests(sroot)}
     root = output_root(work_dir)
-    sids = shim.history(root) if shim.current_snapshot_id(root) else []
-    if not sids:
+    extracted = shim.chain_manifests(root)
+    if not extracted:
         raise FileNotFoundError(
             f"no extraction output committed yet under {root}")
-    new = [sid for sid in sids if sid not in done]
+    new = [m for m in extracted if m["snapshot_id"] not in done]
     committed = []
-    for sid in new:
-        frame = _sketch_long_frame(_snapshot_texts(spark, work_dir, sid))
+    for m in new:
+        sid = m["snapshot_id"]
+        frame = _sketch_long_frame(_snapshot_texts(spark, m["data_dir"]))
         # parent_id="auto" chains onto the current stats snapshot so
-        # history() reaches every committed frame
+        # the chain reaches every committed frame
         out_sid = shim.prepare_snapshot(
             frame.coalesce(1), sroot,
             snapshot_id=f"stats-{run_id}-{sid}",
@@ -1321,7 +1245,8 @@ def run_stats_job(spark: SparkSession, work_dir: str) -> dict:
         shim.publish_snapshot(sroot, out_sid)
         committed.append(out_sid)
     return {"run_id": run_id, "snapshots": committed,
-            "covered": sorted(done - {None}) + new, "skipped": len(done)}
+            "covered": sorted(done - {None})
+            + [m["snapshot_id"] for m in new], "skipped": len(done)}
 
 
 def combined_sketches(spark: SparkSession,
@@ -1334,10 +1259,9 @@ def combined_sketches(spark: SparkSession,
     from ocr_spark.plans.sketches import KMV_K
 
     sroot = stats_root(work_dir)
-    sids = shim.history(sroot) if shim.current_snapshot_id(sroot) else []
-    if not sids:
+    dirs = [m["data_dir"] for m in shim.chain_manifests(sroot)]
+    if not dirs:
         raise FileNotFoundError(f"no stats snapshots under {sroot}")
-    dirs = [shim.read_manifest(sroot, s)["data_dir"] for s in sids]
     allf = spark.read.parquet(*dirs)
     return {
         "hll": (allf.filter(F.col("kind") == "hll")

@@ -162,26 +162,6 @@ def rehydrate_blocks(text: str, blocks: list[dict]) -> list[dict]:
     return out
 
 
-def _arrow_result_schema(use_large: bool):
-    """EXTRACT_RESULT_SCHEMA as a pyarrow schema. Spark's mapInArrow
-    validates the returned batches against the DECLARED Spark schema
-    converted with the session's useLargeVarTypes setting, so the
-    string flavor must be captured driver-side and shipped in the
-    closure (the worker cannot read the session conf)."""
-    import pyarrow as pa
-
-    s = pa.large_string() if use_large else pa.string()
-    return pa.schema([
-        ("url", s), ("bucket", pa.int32()), ("kind", s), ("text", s),
-        ("n_pages", pa.int32()), ("n_blocks", pa.int32()),
-        ("n_spans", pa.int32()), ("n_matches", pa.int32()),
-        ("n_blocks_dropped", pa.int32()),
-        ("blocks_json", s), ("spans_json", s), ("matches_json", s),
-        ("error", s), ("bytes_in", pa.int64()),
-        ("extract_ms", pa.float64()),
-    ])
-
-
 def _kernel_fn(blocks_mode: str, use_large: bool):
     """Build the mapInArrow kernel closure. ``blocks_mode`` and the Arrow
     string flavor are captured in the closure (cloudpickle ships them to
@@ -217,9 +197,15 @@ def _kernel_fn(blocks_mode: str, use_large: bool):
                 # reused Python workers outlive jobs: clear any value a
                 # previous job exported, or this job silently inherits it
                 os.environ.pop(k, None)
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         from ocr_spark.core.extract import extract_document
 
-        schema = _arrow_result_schema(use_large)
+        # the conversion mapInArrow checks the returned batches with: the
+        # string flavor follows the session's useLargeVarTypes, captured
+        # driver-side (the worker cannot read the session conf)
+        schema = to_arrow_schema(EXTRACT_RESULT_SCHEMA,
+                                 prefers_large_types=use_large)
 
         for batch in batches:
             # input columns read straight off the RecordBatch: no pandas

@@ -10,13 +10,16 @@ swappable layer (SURVEY.md §7.0):
   2. **atomic pointer swap** — ``_snapshots/CURRENT`` is replaced with
      ``os.replace`` (atomic on POSIX), so readers see either the old or the
      new snapshot, never a torn state;
-  3. **incremental diff** — ``added_since(a, b)`` lists data paths present
-     in ``b`` but not ``a`` for incremental processing
+  3. **incremental processing** — ``chain_manifests`` returns the visible
+     history's manifests (each holding its own ``data_dir``) in one walk;
+     a reader folds them, as the extraction job folds its output chain
+     into the (snapshot, bucket) units still to do
      (Trigger.AvailableNow-style batch increments, SURVEY.md §2.10).
 
-The interface is deliberately narrow (`write_snapshot`, `read_current`,
-`read_snapshot`, `added_since`) so a real Iceberg catalog drops in by
-swapping this module (``spark.read.format("iceberg")...``).
+The interface is deliberately narrow (`prepare_snapshot`,
+`publish_snapshot`, `write_snapshot`, `read_snapshot`, `read_current`,
+`chain_manifests`) so a real Iceberg catalog drops in by swapping this
+module (``spark.read.format("iceberg")...``).
 
 On a real cluster this module's filesystem calls would target the shared
 object store (s3a/abfss path via the Hadoop FS API); locally plain ``os``
@@ -146,31 +149,6 @@ def read_snapshot(spark: SparkSession, table_root: str,
     return reader.parquet(manifest["data_dir"])
 
 
-def chain_data_dirs(table_root: str, snapshot_id: str) -> list[str]:
-    """All data dirs making up the LOGICAL table content at a snapshot
-    (append-chain model: each snapshot's dir holds only its added rows,
-    so the table at snapshot S = union of S's chain's dirs)."""
-    return added_since(table_root, None, snapshot_id)
-
-
-def read_table_at(spark: SparkSession, table_root: str, snapshot_id: str,
-                  schema=None) -> DataFrame:
-    """Full logical table content at ``snapshot_id``: ONE multi-path
-    parquet read over the snapshot chain's data dirs (a single scan node
-    — the plan stays O(1) no matter how many incremental commits exist,
-    unlike a per-snapshot union).
-
-    This is the READ-side API (analytics over an append-chain table).
-    The extraction JOB deliberately does not use it: processing walks
-    the chain per-snapshot so resume checkpoints stay (snapshot, bucket)
-    granular (see job._run_chain)."""
-    dirs = chain_data_dirs(table_root, snapshot_id)
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(*dirs)
-
-
 def read_current(spark: SparkSession, table_root: str) -> DataFrame:
     sid = current_snapshot_id(table_root)
     if sid is None:
@@ -194,18 +172,6 @@ def history(table_root: str) -> list[str]:
     return [m["snapshot_id"] for m in chain_manifests(table_root)]
 
 
-def added_since(table_root: str, old_snapshot_id: str | None,
-                new_snapshot_id: str) -> list[str]:
-    """Data dirs added strictly after ``old`` up to and including ``new``."""
-    added = []
-    sid = new_snapshot_id
-    while sid is not None and sid != old_snapshot_id:
-        m = read_manifest(table_root, sid)
-        added.append(m["data_dir"])
-        sid = m.get("parent_id")
-    return list(reversed(added))
-
-
 def vacuum_absorbed(table_root: str, dry_run: bool = False) -> dict:
     """Reclaim storage after compaction — the expire-snapshots /
     delete-orphan-files maintenance pair, restricted to what is
@@ -224,12 +190,9 @@ def vacuum_absorbed(table_root: str, dry_run: bool = False) -> dict:
     (``dry_run`` computes without deleting)."""
     import shutil
 
-    chain = set(history(table_root)) \
-        if current_snapshot_id(table_root) else set()
-    absorbed: list[str] = []
-    for sid in chain:
-        absorbed.extend(read_manifest(table_root, sid)
-                        .get("compacted_from") or [])
+    manifests = chain_manifests(table_root)
+    chain = {m["snapshot_id"] for m in manifests}
+    absorbed = [s for m in manifests for s in m.get("compacted_from") or []]
     victims = [s for s in absorbed if s not in chain
                and os.path.exists(_snap_path(table_root, s))]
     bytes_freed = 0

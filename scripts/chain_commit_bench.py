@@ -11,8 +11,8 @@ table, and the script times:
   * ``job_start_s`` — the job-start resume state (``job._resume_state``:
     one chain walk, the export repair check, the fold), and the number of
     manifests it reads;
-  * ``wave_s`` — ``run_incremental_extraction_job(waves=1)`` over the
-    500 pages: the whole one-wave incremental commit, job start included.
+  * ``wave_s`` — ``run_extraction_job(waves=1)`` over the 500 pages:
+    the whole one-wave incremental commit, job start included.
 
 Each figure is the median of ``--reps`` repetitions, the lengths
 interleaved within each; every wave run starts from a fresh copy of the
@@ -130,7 +130,7 @@ def one_wave(spark, template: str, input_root: str, work: str) -> float:
 
     shutil.copytree(template, work)
     t0 = time.perf_counter()
-    s = job.run_incremental_extraction_job(
+    s = job.run_extraction_job(
         spark, input_root, work, partitions=4, big_partitions=1, waves=1)
     elapsed = time.perf_counter() - t0
     assert s["docs"] == PAGES, s

@@ -33,9 +33,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--respect-robots", action="store_true",
                     help="drop pages whose meta-robots directive "
                          "contains noindex before extraction")
-    ap.add_argument("--incremental", action="store_true",
-                    help="process only data added since the last "
-                         "processed input snapshot (snapshot diff)")
     ap.add_argument("--compact", action="store_true",
                     help="after the job, compact the output history "
                          "into a single snapshot")
@@ -110,17 +107,12 @@ def main(argv: list[str] | None = None) -> int:
                     help="override master when not launched via spark-submit")
     args = ap.parse_args(argv)
 
-    from ocr_spark.job import (
-        compact_snapshots, run_extraction_job,
-        run_incremental_extraction_job,
-    )
+    from ocr_spark.job import compact_snapshots, run_extraction_job
     from ocr_spark.session import get_spark
 
     spark = get_spark("ocr_spark.extract", master=args.master)
     try:
-        run = (run_incremental_extraction_job if args.incremental
-               else run_extraction_job)
-        summary = run(
+        summary = run_extraction_job(
             spark, args.input, args.work_dir,
             partitions=args.partitions, big_partitions=args.big_partitions,
             big_threshold=args.big_threshold, n_buckets=args.buckets,

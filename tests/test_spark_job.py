@@ -549,7 +549,8 @@ def test_full_job_after_append_does_not_duplicate(spark, tmp_path):
     s2 = run_extraction_job(spark, root, work, partitions=8,
                             big_partitions=1, waves=2)
     assert s2["docs"] == 20, s2          # ONLY the appended rows
-    assert s2["snapshots_processed"] == 2  # a1 visited, fully skipped
+    assert s2["snapshots_processed"] == 1  # a1 fully committed: not read
+    assert s2["buckets_skipped"] == 64 and s2["buckets_processed"] == 64
 
     urls = [r.url for r in read_extracted(spark, work).select("url").collect()]
     assert len(urls) == 50 and len(set(urls)) == 50, "duplicates!"
@@ -557,8 +558,8 @@ def test_full_job_after_append_does_not_duplicate(spark, tmp_path):
 
 def test_incremental_resumes_partial_ancestor(spark, tmp_path):
     """Crash mid-chain: s1 fully processed, s2 partially checkpointed,
-    s3 appended. The incremental base walk must NOT treat partially-done
-    s2 as processed — its remaining buckets resume, s3 extracts, and the
+    s3 appended. The increment must NOT treat partially-done s2 as
+    processed — its remaining buckets resume, s3 extracts, and the
     final table is complete with no duplicates."""
     import pytest
 
@@ -594,7 +595,7 @@ def test_incremental_resumes_partial_ancestor(spark, tmp_path):
     shim.write_snapshot(to_df(rows[45:]), root, snapshot_id="p3")
     s = run_incremental_extraction_job(spark, root, work, partitions=8,
                                        big_partitions=1, waves=2)
-    assert s["incremental_base"] == "p1", s  # p2 partial -> NOT a base
+    assert s["snapshots_processed"] == 2, s  # p2's rest and p3, not p1
     assert s["docs"] == 60 - n_partial, s
 
     urls = [r.url for r in read_extracted(spark, work).select("url").collect()]
@@ -603,8 +604,9 @@ def test_incremental_resumes_partial_ancestor(spark, tmp_path):
 
 def test_incremental_job_processes_only_added_snapshot(spark, tmp_path):
     """Snapshot s1 processed fully; snapshot s2 appends new rows; the
-    incremental job must extract ONLY the added rows (added_since diff),
-    and the union of outputs covers both waves exactly once."""
+    incremental job must extract ONLY the added rows (s1's commit units
+    are all done), and the union of outputs covers both waves exactly
+    once."""
     from ocr_spark.job import (
         read_extracted, run_extraction_job, run_incremental_extraction_job,
     )
@@ -631,8 +633,8 @@ def test_incremental_job_processes_only_added_snapshot(spark, tmp_path):
     s2 = run_incremental_extraction_job(spark, root, work, partitions=8,
                                         big_partitions=1, waves=2)
     assert s2["docs"] == 30, s2
-    assert s2["incremental_base"] == "s1"
-    assert s2["added_dirs"] == 1
+    assert s2["snapshots_processed"] == 1
+    assert s2["buckets_skipped"] == 64 and s2["buckets_processed"] == 64
 
     urls = [r.url for r in read_extracted(spark, work).select("url").collect()]
     assert len(urls) == 80 and len(set(urls)) == 80
@@ -694,13 +696,15 @@ def test_skew_metrics_and_partition_balance(spark, pages_table, tmp_path):
 
 
 @pytest.mark.parametrize("n_waves", [50, 200])
-def test_job_start_reads_each_manifest_at_most_twice(tmp_path, monkeypatch,
-                                                     n_waves):
+def test_job_start_reads_each_manifest_at_most_twice(spark, tmp_path,
+                                                     monkeypatch, n_waves):
     """Job-start cost is linear in the output chain: the repair and the
     resume fold read each manifest at most twice (one walk here), so the
     per-sid history walk the data roll-forward once made cannot return.
-    Synthetic wave manifests, no Spark. Every third wave lost its table
-    export (crash window #2) and is repaired from its manifest alone."""
+    Synthetic wave manifests, no Spark job. Every third wave lost its
+    table export (crash window #2) and is repaired from its manifest
+    alone. A job over the fully committed (empty) inputs reads each
+    input manifest once."""
     from ocr_spark import job
     from ocr_spark.operators.bookkeeping import lineage_path
     from ocr_spark.sources import iceberg_shim as shim
@@ -714,7 +718,7 @@ def test_job_start_reads_each_manifest_at_most_twice(tmp_path, monkeypatch,
     reads = []
     read_manifest = shim.read_manifest
     monkeypatch.setattr(shim, "read_manifest",
-                        lambda root, sid: reads.append(sid)
+                        lambda root, sid: reads.append((root, sid))
                         or read_manifest(root, sid))
     done, repaired = job._resume_state(work, 64)
     assert len(reads) <= 2 * n_waves + 2, len(reads)
@@ -727,6 +731,24 @@ def test_job_start_reads_each_manifest_at_most_twice(tmp_path, monkeypatch,
             range(i % 4 * 16, (i % 4 + 1) * 16))
     assert done == expected
     assert job._resume_state(work, 64)[1] == 0  # repaired once
+
+    in_root = str(tmp_path / "input")
+    committed = inputs[:n_waves // 4]  # every bucket of these is done
+    for sid in committed:
+        data_dir = os.path.join(in_root, "data", sid)
+        os.makedirs(data_dir)
+        shim._write_manifest(in_root, {
+            "snapshot_id": sid, "parent_id": shim.current_snapshot_id(in_root),
+            "created_at": 0.0, "data_dir": data_dir, "partition_by": []})
+        shim.publish_snapshot(in_root, sid)
+    reads.clear()
+    s = job.run_extraction_job(spark, in_root, work, n_buckets=64)
+    in_reads = sorted(sid for root, sid in reads if root == in_root)
+    assert in_reads == sorted(committed)  # each input manifest once
+    assert len(reads) <= len(committed) + 2 * n_waves + 2, len(reads)
+    assert s["docs"] == 0 and s["output_snapshots"] == []
+    assert s["buckets_skipped"] == 64 * len(committed)
+    assert s["snapshots_processed"] == 0
 
 
 def test_respect_robots_drops_noindex_pages(spark, tmp_path):
@@ -893,3 +915,50 @@ def test_route_filter_drops_condemned_pages_only(spark, tmp_path):
               spark.read.parquet(census_dirs[0]).collect()}
     from collections import Counter
     assert census == dict(Counter(routes.values()))
+
+
+def test_committed_rerun_runs_no_spark_job(spark, tmp_path):
+    """A rerun of the route-filtered job over a fully committed
+    3-snapshot input finds no commit unit left: it reads no input
+    snapshot, so it runs no Spark job (none routes, censuses or scans
+    a committed snapshot) and leaves every route census file as it
+    was."""
+    from ocr_spark.job import read_extracted, run_extraction_job
+    from ocr_spark.sources import iceberg_shim as shim
+
+    root = str(tmp_path / "pages")
+    work = str(tmp_path / "work")
+    rows = generate_pages(45, seed=19, oversized_rows=0)
+    for k, sid in enumerate(("r1", "r2", "r3")):
+        shim.write_snapshot(spark.createDataFrame(
+            [(r["url"], r["warc_ts"], r["html"], r["text"], r["lang"])
+             for r in rows[15 * k:15 * (k + 1)]],
+            "url string, warc_ts timestamp, html binary, text string, "
+            "lang string"), root, snapshot_id=sid)
+    kw = dict(partitions=4, big_partitions=1, waves=2, route_filter=True)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def census_files() -> dict:
+        paths = [os.path.join(dp, fn) for dp, _dn, fns in
+                 os.walk(os.path.join(work, "route_census")) for fn in fns]
+        return {p: os.stat(p).st_mtime_ns for p in paths}
+
+    try:
+        sc.setJobGroup("first_run", "route-filtered first run")
+        first = run_extraction_job(spark, root, work, **kw)
+        sc.setJobGroup("rerun", "route-filtered rerun")
+        before = census_files()
+        again = run_extraction_job(spark, root, work, **kw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert first["snapshots_processed"] == 3
+    assert tracker.getJobIdsForGroup("first_run")
+    assert len(before) >= 3 and census_files() == before
+    assert list(tracker.getJobIdsForGroup("rerun")) == []
+    assert again["docs"] == 0 and again["buckets_processed"] == 0
+    assert again["buckets_skipped"] == 3 * 64
+    assert again["snapshots_processed"] == 0
+    urls = [r.url for r in read_extracted(spark, work).select("url").collect()]
+    assert len(set(urls)) == len(urls) == first["docs"]
