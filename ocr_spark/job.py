@@ -281,7 +281,7 @@ def compact_snapshots(spark: SparkSession, work_dir: str) -> dict:
     completed = bookkeeping.completed_buckets_by_snapshot(manifests)
     # each bucket's rows go to one task, so each bucket sits in exactly
     # one file (a task may hold several buckets)
-    df = read_extracted(spark, work_dir).repartition("bucket")
+    df = _scan_extracted(spark, work_dir, manifests).repartition("bucket")
     new_sid = shim.prepare_snapshot(
         df, root, snapshot_id=f"compact-{uuid.uuid4().hex[:12]}",
         parent_id=None, extra={
@@ -371,8 +371,10 @@ def run_curation_job(spark: SparkSession, work_dir: str, *,
     budget = (SHARD_TOKEN_BUDGET if shard_token_budget is None
               else shard_token_budget)
     run_id = uuid.uuid4().hex[:12]
-    input_sids = shim.history(output_root(work_dir))
-    docs = (read_extracted(spark, work_dir)
+    # one walk of the output chain feeds both the lineage and the scan
+    manifests = shim.chain_manifests(output_root(work_dir))
+    input_sids = [m["snapshot_id"] for m in manifests]
+    docs = (_scan_extracted(spark, work_dir, manifests)
             .filter(F.col("error").isNull() & F.col("text").isNotNull()
                     & (F.col("text") != ""))
             .select("url", "text"))
@@ -535,6 +537,91 @@ def export_root(work_dir: str) -> str:
     return os.path.join(work_dir, "export")
 
 
+def sampling_root(work_dir: str) -> str:
+    return os.path.join(work_dir, "sampled")
+
+
+def sft_root(work_dir: str) -> str:
+    return os.path.join(work_dir, "sft")
+
+
+# shard product → (table root, within-shard order keys, payload column)
+_SHARD_PRODUCTS = {
+    "export": (export_root, ("url",), "text_deduped"),
+    "sampling": (sampling_root, ("url", "copy_idx"), "text_deduped"),
+    "sft": (sft_root, ("url",), "rendered"),
+}
+
+
+def _resolve(root: str, snapshot: str | None = None) -> str:
+    """``snapshot``, or else the CURRENT snapshot of ``root``."""
+    sid = snapshot or shim.current_snapshot_id(root)
+    if sid is None:
+        raise FileNotFoundError(f"no snapshot under {root}")
+    return sid
+
+
+def _shard_manifest(spark: SparkSession, root: str, sid: str,
+                    product: str) -> dict:
+    """The per-shard manifest of ``product``'s snapshot ``sid``, digested
+    from its data: the producer's call on the staged snapshot and the
+    verifier's on the published one. Read with the schema recorded at
+    staging, so a product with no row (no file) digests to no shard."""
+    from pyspark.sql.types import StructType
+
+    _, keys, payload = _SHARD_PRODUCTS[product]
+    schema = shim.read_manifest(root, sid).get("schema")
+    df = shim.read_snapshot(
+        spark, root, sid,
+        schema=StructType.fromJson(schema) if schema else None)
+    return {r.shard_id: {"n_docs": r.n_docs, "n_tokens": int(r.n_tokens),
+                         "content_digest": r.content_digest,
+                         "min_url": r.min_url, "max_url": r.max_url}
+            for r in shard_digest_rows(df, list(keys), payload).collect()}
+
+
+def _commit_shards(spark: SparkSession, df: DataFrame, work_dir: str,
+                   product: str, snapshot_id: str,
+                   extra: dict) -> tuple[str, dict]:
+    """The one commit of a shard product: stage ``df`` as a fresh chain,
+    one file per shard, digest the STAGED rows with the verifier's own
+    function into the staged manifest, then publish — the only commit
+    point. Returns (snapshot id, shard manifest)."""
+    root = _SHARD_PRODUCTS[product][0](work_dir)
+    sid = shim.prepare_snapshot(
+        df.repartition("shard_id"), root, partition_by=["shard_id"],
+        snapshot_id=snapshot_id, parent_id=None,
+        extra={**extra, "schema": df.schema.jsonValue()})
+    shards = _shard_manifest(spark, root, sid, product)
+    shim.amend_manifest(root, sid, {"shards": shards})
+    shim.publish_snapshot(root, sid)
+    return sid, shards
+
+
+def verify_shards(spark: SparkSession, work_dir: str, product: str,
+                  snapshot: str | None = None) -> dict:
+    """Consumer-side verification of shard product ``product``: recompute
+    every shard's manifest entry FROM THE PUBLISHED DATA with the
+    producer's own function and diff it against the committed manifest.
+    Returns {"snapshot", "shards_checked", "mismatches": {shard_id:
+    reason}} — an empty mismatches dict is the integrity proof."""
+    root = _SHARD_PRODUCTS[product][0](work_dir)
+    sid = _resolve(root, snapshot)
+    expected = shim.read_manifest(root, sid).get("shards") or {}
+    actual = _shard_manifest(spark, root, sid, product)
+    mismatches: dict = {}
+    for shard in set(expected) | set(actual):
+        if shard not in expected:
+            mismatches[shard] = "not in manifest"
+        elif shard not in actual:
+            mismatches[shard] = "missing from data"
+        elif expected[shard] != actual[shard]:
+            mismatches[shard] = (f"manifest {expected[shard]}"
+                                 f" != data {actual[shard]}")
+    return {"snapshot": sid, "shards_checked": len(expected),
+            "mismatches": mismatches}
+
+
 def run_export_job(spark: SparkSession, work_dir: str, *,
                    snapshot: str | None = None) -> dict:
     """Training-data export stage — the pipeline's end product: the
@@ -548,32 +635,25 @@ def run_export_job(spark: SparkSession, work_dir: str, *,
     any cluster size (sort_array pins the order collect_list leaves
     unspecified), and a consumer can verify a downloaded shard against
     its manifest row without trusting the transport —
-    ``verify_export`` below is exactly that check, run from the
-    published data. Atomic via the same two-phase prepare/publish as
-    the other stages; the manifest rides INSIDE the snapshot manifest
-    json (small: one entry per shard), so data + digests commit
-    together or not at all.
+    ``verify_shards(spark, work_dir, "export")`` is exactly that check,
+    run from the published data. The commit is ``_commit_shards``: the
+    manifest is digested from the STAGED rows by the verifier's own
+    function and rides INSIDE the snapshot manifest json (small: one
+    entry per shard), so data + digests commit together or not at all.
 
-    Scale shape: one groupBy(shard_id) for the manifest (groups are
-    token-budget-bounded by construction) and a partitionBy(shard_id)
-    write fed by one repartition on the same key — each shard lands as
-    one file, no small-files explosion, no second shuffle."""
+    Scale shape: a partitionBy(shard_id) write fed by one repartition
+    on the same key — each shard lands as one file, no small-files
+    explosion — then one groupBy(shard_id) over the staged rows for the
+    manifest (groups are token-budget-bounded by construction)."""
     run_id = uuid.uuid4().hex[:12]
     cur_root = curation_root(work_dir)
-    sid = snapshot or shim.current_snapshot_id(cur_root)
-    if sid is None:
-        raise FileNotFoundError(f"no curated snapshot under {cur_root}")
+    sid = _resolve(cur_root, snapshot)
     kept = (shim.read_snapshot(spark, cur_root, sid)
             .filter(F.col("keep") & F.col("shard_id").isNotNull())
             .select("url", "text_deduped", "n_words", "shard_id"))
-    manifest_rows = shard_digest_rows(kept, ["url"]).collect()
-    shard_manifest = _manifest_dict(manifest_rows)
-    out_sid = shim.prepare_snapshot(
-        kept.repartition("shard_id"), export_root(work_dir),
-        partition_by=["shard_id"],
-        snapshot_id=f"exp-{run_id}", parent_id=None,
-        extra={"exported_from": sid, "shards": shard_manifest})
-    shim.publish_snapshot(export_root(work_dir), out_sid)
+    out_sid, shard_manifest = _commit_shards(
+        spark, kept, work_dir, "export", f"exp-{run_id}",
+        {"exported_from": sid})
     return {"run_id": run_id, "snapshot": out_sid, "exported_from": sid,
             "shards": len(shard_manifest),
             "docs": sum(m["n_docs"] for m in shard_manifest.values()),
@@ -587,11 +667,9 @@ def shard_digest_rows(df: DataFrame, key_cols: list[str],
     producers and by consumer-side verification, so a digest mismatch
     can only ever mean the data changed, never that two stages
     digested differently. ``key_cols`` pins the within-shard order
-    (export: url; sampling: url + copy_idx — two copies of one doc
-    are distinct manifest entries); ``text_col`` names the payload
-    column (export/sampling: text_deduped; SFT: the rendered
-    example). The digest is plans/curation.py::shard_content_digest,
-    the shards_manifest kernel."""
+    and ``text_col`` names the payload column (per product: the
+    _SHARD_PRODUCTS table). The digest is
+    plans/curation.py::shard_content_digest, the shards_manifest kernel."""
     from ocr_spark.plans.curation import shard_content_digest
 
     return (df.withColumn("dg", F.md5(text_col))
@@ -604,18 +682,6 @@ def shard_digest_rows(df: DataFrame, key_cols: list[str],
                  # (prune_export_shards) without scanning any data
                  F.min("url").alias("min_url"),
                  F.max("url").alias("max_url")))
-
-
-def _manifest_dict(rows) -> dict:
-    """Manifest-row dict shared by every producer AND the verifier —
-    one definition so a verify mismatch can only mean the data
-    changed, never that two stages serialized different fields."""
-    return {r.shard_id: {"n_docs": r.n_docs,
-                         "n_tokens": int(r.n_tokens),
-                         "content_digest": r.content_digest,
-                         "min_url": r.min_url,
-                         "max_url": r.max_url}
-            for r in rows}
 
 
 def prune_export_shards(work_dir: str, lo: str, hi: str, *,
@@ -632,65 +698,11 @@ def prune_export_shards(work_dir: str, lo: str, hi: str, *,
     — tests pin that the pruned read equals the full-scan filter
     row-for-row while touching strictly fewer shards."""
     root = export_root(work_dir)
-    sid = snapshot or shim.current_snapshot_id(root)
-    if sid is None:
-        raise FileNotFoundError(f"no export snapshot under {root}")
-    shards = shim.read_manifest(root, sid).get("shards") or {}
+    shards = shim.read_manifest(root, _resolve(root, snapshot)) \
+        .get("shards") or {}
     return sorted(
         shard for shard, m in shards.items()
         if not (m["max_url"] < lo or m["min_url"] > hi))
-
-
-def _verify_shards(spark: SparkSession, root: str, sid: str,
-                   key_cols: list[str],
-                   text_col: str = "text_deduped") -> dict:
-    manifest = shim.read_manifest(root, sid)
-    expected = manifest.get("shards") or {}
-    actual_rows = shard_digest_rows(
-        shim.read_snapshot(spark, root, sid), key_cols,
-        text_col=text_col).collect()
-    actual = _manifest_dict(actual_rows)
-    mismatches: dict = {}
-    for shard in set(expected) | set(actual):
-        if shard not in expected:
-            mismatches[shard] = "not in manifest"
-        elif shard not in actual:
-            mismatches[shard] = "missing from data"
-        elif expected[shard] != actual[shard]:
-            mismatches[shard] = (f"manifest {expected[shard]}"
-                                 f" != data {actual[shard]}")
-    return {"snapshot": sid, "shards_checked": len(expected),
-            "mismatches": mismatches}
-
-
-def verify_export(spark: SparkSession, work_dir: str,
-                  snapshot: str | None = None) -> dict:
-    """Consumer-side shard verification: recompute every shard's doc
-    count, token sum, and content digest FROM THE PUBLISHED DATA and
-    diff against the manifest committed with the snapshot. Returns
-    {"snapshot", "shards_checked", "mismatches": {shard_id: reason}} —
-    an empty mismatches dict is the integrity proof."""
-    root = export_root(work_dir)
-    sid = snapshot or shim.current_snapshot_id(root)
-    if sid is None:
-        raise FileNotFoundError(f"no export snapshot under {root}")
-    return _verify_shards(spark, root, sid, ["url"])
-
-
-def verify_sampling(spark: SparkSession, work_dir: str,
-                    snapshot: str | None = None) -> dict:
-    """verify_export's twin for the mixture-sampled corpus: same
-    digest definition, (url, copy_idx) order keys because realized
-    copies are distinct rows."""
-    root = sampling_root(work_dir)
-    sid = snapshot or shim.current_snapshot_id(root)
-    if sid is None:
-        raise FileNotFoundError(f"no sampling snapshot under {root}")
-    return _verify_shards(spark, root, sid, ["url", "copy_idx"])
-
-
-def sft_root(work_dir: str) -> str:
-    return os.path.join(work_dir, "sft")
 
 
 def run_sft_job(spark: SparkSession, work_dir: str, *,
@@ -703,9 +715,10 @@ def run_sft_job(spark: SparkSession, work_dir: str, *,
     url — plans/curation.py::sft_format_frame, so the pipeline
     artifact and the correctness gate render identically by
     construction), shard the examples, and commit them atomically
-    with the standard per-shard content-digest manifest over the
-    RENDERED bytes (the artifact a trainer consumes and must be able
-    to verify).
+    through ``_commit_shards``: the per-shard content-digest manifest
+    over the RENDERED bytes (the artifact a trainer consumes and must
+    be able to verify) is digested from the staged rows by the
+    verifier's own function.
 
     Shard assignment is a deterministic md5-hash bucket over url with
     the bucket count sized from the example count (ceil(n / target)) —
@@ -717,14 +730,13 @@ def run_sft_job(spark: SparkSession, work_dir: str, *,
 
     Scale shape: render is the kernel's zero-shuffle narrow map; one
     1-row count broadcast; one repartition on shard_id feeding the
-    partitioned write; one groupBy(shard_id) for the manifest."""
+    partitioned write; one groupBy(shard_id) over the staged rows for
+    the manifest."""
     run_id = uuid.uuid4().hex[:12]
     from ocr_spark.plans.curation import sft_format_frame
 
     cur_root = curation_root(work_dir)
-    sid = snapshot or shim.current_snapshot_id(cur_root)
-    if sid is None:
-        raise FileNotFoundError(f"no curation snapshot under {cur_root}")
+    sid = _resolve(cur_root, snapshot)
     kept = (shim.read_snapshot(spark, cur_root, sid)
             .filter(F.col("keep"))
             .select("url", F.col("text_deduped").alias("text")))
@@ -740,17 +752,10 @@ def run_sft_job(spark: SparkSession, work_dir: str, *,
             "sft-%05d",
             (F.conv(F.substring(F.md5("url"), 1, 13), 16, 10)
              .cast("long") % n_shards).cast("int")).alias("shard_id"))
-    manifest_rows = shard_digest_rows(
-        examples, ["url"], text_col="rendered").collect()
-    shard_manifest = _manifest_dict(manifest_rows)
-    out_sid = shim.prepare_snapshot(
-        examples.repartition("shard_id"), sft_root(work_dir),
-        partition_by=["shard_id"],
-        snapshot_id=f"sft-{run_id}", parent_id=None,
-        extra={"rendered_from": sid,
-               "examples_per_shard_target": examples_per_shard,
-               "shards": shard_manifest})
-    shim.publish_snapshot(sft_root(work_dir), out_sid)
+    out_sid, shard_manifest = _commit_shards(
+        spark, examples, work_dir, "sft", f"sft-{run_id}",
+        {"rendered_from": sid,
+         "examples_per_shard_target": examples_per_shard})
     return {"run_id": run_id, "snapshot": out_sid,
             "rendered_from": sid, "shards": len(shard_manifest),
             "examples": n,
@@ -758,20 +763,18 @@ def run_sft_job(spark: SparkSession, work_dir: str, *,
                                    for m in shard_manifest.values())}
 
 
-def verify_sft(spark: SparkSession, work_dir: str,
-               snapshot: str | None = None) -> dict:
-    """verify_export's twin for the SFT corpus: identical digest
-    definition over the RENDERED example bytes."""
-    root = sft_root(work_dir)
-    sid = snapshot or shim.current_snapshot_id(root)
-    if sid is None:
-        raise FileNotFoundError(f"no sft snapshot under {root}")
-    return _verify_shards(spark, root, sid, ["url"],
-                          text_col="rendered")
-
-
 def index_root(work_dir: str) -> str:
     return os.path.join(work_dir, "ann_index")
+
+
+def _postings_digest(postings: DataFrame) -> str:
+    """Content digest of a posting table: md5 over its sorted
+    ``vec_id:cell:codes`` strings. The build digests its staged postings
+    with it and verify_index the published ones, so a mismatch can only
+    mean the data changed."""
+    return postings.agg(F.md5(F.concat_ws("|", F.sort_array(
+        F.collect_list(F.concat_ws(":", "vec_id", "cell", "codes"))))
+    ).alias("d")).collect()[0]["d"]
 
 
 def run_index_job(spark: SparkSession, work_dir: str,
@@ -781,10 +784,12 @@ def run_index_job(spark: SparkSession, work_dir: str,
     (the oracle-checked Lloyd loop of emb_kmeans_train), assign every
     corpus vector to its cell, PQ-encode it, and COMMIT the index —
     centroids + a posting table of (vec_id, cell, nrm, codes) — as an
-    atomic snapshot with a content digest in the manifest. Queries
-    then run against the committed index (``ivf_topk_from_index``)
-    without re-deriving the quantizer, and only shortlist survivors
-    gather their full vectors from the source table by vec_id.
+    atomic snapshot whose manifest holds a content digest of the STAGED
+    postings (``_postings_digest``, the verifier's own function) and
+    the centroids snapshot they were assigned against. Queries then run
+    against the committed index (``ivf_topk_from_index``) without
+    re-deriving the quantizer, and only shortlist survivors gather
+    their full vectors from the source table by vec_id.
 
     The posting row is the storage tier: cell id + norm + PQ code
     string per vector, NOT the vector itself — the float table stays
@@ -793,7 +798,8 @@ def run_index_job(spark: SparkSession, work_dir: str,
     Scale shape: the build is emb_kmeans_train's audited iterative
     shape plus one narrow encode map; the commit is one snapshot
     write partitioned by cell (probes prune to probed cells at read
-    time — partition pruning is the IVF inverted list)."""
+    time — partition pruning is the IVF inverted list) and one
+    aggregate over the staged postings for the digest."""
     from ocr_spark.plans.simsearch import (
         _kmeans, _norm, _pq_code_arr)
 
@@ -806,21 +812,20 @@ def run_index_job(spark: SparkSession, work_dir: str,
          .alias("codes"))
     cent_rows = (cent.select("cell", F.posexplode("cv")
                              .alias("pos", "cv_val")))
-    digest = postings.agg(F.md5(F.concat_ws("|", F.sort_array(
-        F.collect_list(F.concat_ws(":", "vec_id", "cell", "codes"))))
-    ).alias("d")).collect()[0]["d"]
     root = index_root(work_dir)
+    croot, proot = os.path.join(root, "centroids"), \
+        os.path.join(root, "postings")
     csid = shim.prepare_snapshot(
-        cent_rows.coalesce(1), os.path.join(root, "centroids"),
+        cent_rows.coalesce(1), croot,
         snapshot_id=f"idxc-{run_id}", extra={"indexed_from": sf_dir})
-    shim.publish_snapshot(os.path.join(root, "centroids"), csid)
+    shim.publish_snapshot(croot, csid)
     psid = shim.prepare_snapshot(
-        postings.repartition("cell"), os.path.join(root, "postings"),
-        partition_by=["cell"],
+        postings.repartition("cell"), proot, partition_by=["cell"],
         snapshot_id=f"idxp-{run_id}",
-        extra={"indexed_from": sf_dir, "content_digest": digest,
-               "centroids_snapshot": csid})
-    shim.publish_snapshot(os.path.join(root, "postings"), psid)
+        extra={"indexed_from": sf_dir, "centroids_snapshot": csid})
+    digest = _postings_digest(shim.read_snapshot(spark, proot, psid))
+    shim.amend_manifest(proot, psid, {"content_digest": digest})
+    shim.publish_snapshot(proot, psid)
     return {"run_id": run_id, "centroids_snapshot": csid,
             "postings_snapshot": psid, "content_digest": digest}
 
@@ -829,17 +834,11 @@ def verify_index(spark: SparkSession, work_dir: str) -> dict:
     """Consumer-side index verification: recompute the posting-table
     digest from the published data and diff against the manifest."""
     root = os.path.join(index_root(work_dir), "postings")
-    sid = shim.current_snapshot_id(root)
-    if sid is None:
-        raise FileNotFoundError(f"no index snapshot under {root}")
-    manifest = shim.read_manifest(root, sid)
-    got = shim.read_snapshot(spark, root, sid).agg(F.md5(F.concat_ws(
-        "|", F.sort_array(F.collect_list(F.concat_ws(
-            ":", "vec_id", "cell", "codes"))))).alias("d")) \
-        .collect()[0]["d"]
-    ok = got == manifest.get("content_digest")
-    return {"snapshot": sid, "ok": ok,
-            "expected": manifest.get("content_digest"), "actual": got}
+    sid = _resolve(root)
+    expected = shim.read_manifest(root, sid).get("content_digest")
+    got = _postings_digest(shim.read_snapshot(spark, root, sid))
+    return {"snapshot": sid, "ok": got == expected,
+            "expected": expected, "actual": got}
 
 
 def ivf_topk_from_index(spark: SparkSession, work_dir: str,
@@ -851,7 +850,8 @@ def ivf_topk_from_index(spark: SparkSession, work_dir: str,
     from the SOURCE table by vec_id for the exact re-rank. Output
     contract is identical to the in-plan emb_ivf_trained_topk —
     pinned row-for-row in tests, which is the proof that build/serve
-    separation loses nothing."""
+    separation loses nothing. Centroids are the snapshot the postings
+    record: a rebuild stopped between its two publishes moves CURRENT."""
     from pyspark.sql.window import Window
 
     from ocr_spark.plans.simsearch import (
@@ -860,10 +860,11 @@ def ivf_topk_from_index(spark: SparkSession, work_dir: str,
     root = index_root(work_dir)
     croot, proot = os.path.join(root, "centroids"), \
         os.path.join(root, "postings")
-    cent_rows = shim.read_snapshot(spark, croot,
-                                   shim.current_snapshot_id(croot))
-    postings = shim.read_snapshot(spark, proot,
-                                  shim.current_snapshot_id(proot)) \
+    psid = _resolve(proot)
+    csid = _resolve(croot, shim.read_manifest(proot, psid)
+                    .get("centroids_snapshot"))
+    cent_rows = shim.read_snapshot(spark, croot, csid)
+    postings = shim.read_snapshot(spark, proot, psid) \
         .select("vec_id", "cell")
     cent = cent_rows.groupBy("cell").agg(F.sort_array(F.collect_list(
         F.struct("pos", "cv_val")))["cv_val"].alias("cv"))
@@ -893,15 +894,16 @@ def ivf_topk_from_index(spark: SparkSession, work_dir: str,
 
 
 def verify_all(spark: SparkSession, work_dir: str) -> dict:
-    """One consumer-side integrity call over every published shard
-    stage: verifies the export snapshot and, when the sampling or SFT
-    stages have run, those corpora too. ``ok`` is True iff every
-    present stage verifies clean; stages that never ran are reported
-    absent, not failed."""
+    """One consumer-side integrity call over every published product:
+    ``verify_shards`` for each shard product (export, sampling, SFT —
+    the function their producers digested the staged rows with), then
+    the labeling batches. ``ok`` is True iff every present stage
+    verifies clean; stages that never ran are reported absent."""
+    from functools import partial
+
     out: dict = {"stages": {}, "ok": True}
-    for name, fn in (("export", verify_export),
-                     ("sampling", verify_sampling),
-                     ("sft", verify_sft),
+    for name, fn in (*((p, partial(verify_shards, product=p))
+                       for p in _SHARD_PRODUCTS),
                      ("labeling", verify_labeling_all)):
         try:
             res = fn(spark, work_dir)
@@ -913,10 +915,6 @@ def verify_all(spark: SparkSession, work_dir: str) -> dict:
         if res["mismatches"]:
             out["ok"] = False
     return out
-
-
-def sampling_root(work_dir: str) -> str:
-    return os.path.join(work_dir, "sampled")
 
 
 def run_sampling_job(spark: SparkSession, work_dir: str, *,
@@ -934,9 +932,12 @@ def run_sampling_job(spark: SparkSession, work_dir: str, *,
     explode the copies, and RE-pack them into token-budget shards with
     plans/curation.py::token_shard_no ((url, copy_idx) in the pack key so
     two copies of one document land in independent shards; the budget
-    defaults to SHARD_TOKEN_BUDGET). Committed atomically with an
-    export-style per-shard content-digest manifest, so the sampled
-    corpus is consumer-verifiable and bit-reproducible.
+    defaults to SHARD_TOKEN_BUDGET). Committed atomically through
+    ``_commit_shards`` with an export-style per-shard content-digest
+    manifest, digested from the staged rows by the verifier's own
+    function, so the sampled corpus is consumer-verifiable and
+    bit-reproducible. The kept-doc count is taken before the commit
+    point: no Spark job runs after the publish.
 
     Scale shape: langid + copy realization are narrow maps over the
     kept set; the mixture table is |langs| rows (broadcast); the only
@@ -953,9 +954,7 @@ def run_sampling_job(spark: SparkSession, work_dir: str, *,
               else shard_token_budget)
     run_id = uuid.uuid4().hex[:12]
     cur_root = curation_root(work_dir)
-    sid = snapshot or shim.current_snapshot_id(cur_root)
-    if sid is None:
-        raise FileNotFoundError(f"no curation snapshot under {cur_root}")
+    sid = _resolve(cur_root, snapshot)
     kept = (shim.read_snapshot(spark, cur_root, sid)
             .filter(F.col("keep"))
             .select("url", "text_deduped", "n_words"))
@@ -981,22 +980,15 @@ def run_sampling_job(spark: SparkSession, work_dir: str, *,
               .withColumn("shard_id", F.concat_ws(
                   "-", "stratum", shard_no.cast("string"))))
 
-    manifest_rows = shard_digest_rows(
-        packed, ["url", "copy_idx"]).collect()
-    shard_manifest = _manifest_dict(manifest_rows)
-    out = packed.select("url", "copy_idx", "lang", "text_deduped",
-                        "n_words", "shard_id")
-    out_sid = shim.prepare_snapshot(
-        out.repartition("shard_id"), sampling_root(work_dir),
-        partition_by=["shard_id"],
-        snapshot_id=f"smp-{run_id}", parent_id=None,
-        extra={"sampled_from": sid, **MIXTURE_PARAMS,
-               "shards": shard_manifest})
-    shim.publish_snapshot(sampling_root(work_dir), out_sid)
-    docs_in = with_lang.count()
-    rows_out = sum(m["n_docs"] for m in shard_manifest.values())
+    docs_in = kept.count()
+    out_sid, shard_manifest = _commit_shards(
+        spark, packed.select("url", "copy_idx", "lang", "text_deduped",
+                             "n_words", "shard_id"),
+        work_dir, "sampling", f"smp-{run_id}",
+        {"sampled_from": sid, **MIXTURE_PARAMS})
     return {"run_id": run_id, "snapshot": out_sid, "sampled_from": sid,
-            "kept_docs": int(docs_in), "sampled_rows": int(rows_out),
+            "kept_docs": docs_in,
+            "sampled_rows": sum(m["n_docs"] for m in shard_manifest.values()),
             "shards": len(shard_manifest),
             "tokens": sum(m["n_tokens"] for m in shard_manifest.values())}
 
@@ -1007,11 +999,16 @@ def read_extracted(spark: SparkSession, work_dir: str) -> DataFrame:
     pointer swap that publishes its data, and a committed (snapshot,
     bucket) unit is never extracted again, so the output snapshots'
     documents are disjoint by construction."""
-    root = output_root(work_dir)
-    dirs = [m["data_dir"] for m in shim.chain_manifests(root)]
+    return _scan_extracted(
+        spark, work_dir, shim.chain_manifests(output_root(work_dir)))
+
+
+def _scan_extracted(spark: SparkSession, work_dir: str,
+                    manifests: list[dict]) -> DataFrame:
+    dirs = [m["data_dir"] for m in manifests]
     if not dirs:
-        raise FileNotFoundError(
-            f"no extraction output committed yet under {root}")
+        raise FileNotFoundError(f"no extraction output committed yet "
+                                f"under {output_root(work_dir)}")
     # ONE multi-path scan of flat snapshot dirs (``bucket`` is a data
     # column): the plan stays a single scan node after thousands of
     # incremental commits, instead of a union chain that grows per

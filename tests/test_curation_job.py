@@ -762,12 +762,14 @@ def test_line_corrections_stage_edits_before_dedup(spark,
 def test_curation_of_empty_text_publishes_zero_metrics(spark, tmp_path):
     """An extraction output in which every doc has empty text curates to
     an empty published snapshot, a metrics row of zeros and zero counts
-    (its sums are NULL, which once raised after the publish)."""
+    (its sums are NULL, which once raised after the publish), and its
+    empty export verifies clean."""
     import os
 
     from pyspark.sql import functions as F
 
-    from ocr_spark.job import read_extracted
+    from ocr_spark.job import (
+        read_extracted, run_export_job, verify_all, verify_shards)
 
     input_root, work = str(tmp_path / "in"), str(tmp_path / "work")
     pages = spark.createDataFrame(
@@ -792,6 +794,44 @@ def test_curation_of_empty_text_publishes_zero_metrics(spark, tmp_path):
         os.path.join(work, "curation_metrics")).collect()
     assert row.snapshot == summary["snapshot"]
     assert tuple(row)[2:] == (0,) * 8
+
+    # its export has no shard and no data file, and still verifies clean:
+    # the product is read with the schema it was staged with
+    assert run_export_job(spark, work)["shards"] == 0
+    check = verify_shards(spark, work, "export")
+    assert check["shards_checked"] == 0 and check["mismatches"] == {}
+    assert verify_all(spark, work)["ok"]
+
+
+def test_curation_walks_the_output_chain_once(spark, tmp_path, monkeypatch):
+    """One curation of a 4-wave extraction output reads each of its 4
+    manifests once: the lineage (``curated_from``) and the scan share
+    one walk of the chain."""
+    from ocr_spark.gen.corpus import generate_pages
+    from ocr_spark.job import output_root
+
+    input_root, work = str(tmp_path / "in"), str(tmp_path / "work")
+    shim.write_snapshot(spark.createDataFrame(
+        [(r["url"], r["warc_ts"], r["html"], r["text"], r["lang"])
+         for r in generate_pages(40, seed=23, oversized_rows=0)],
+        "url string, warc_ts timestamp, html binary, text string, "
+        "lang string"), input_root)
+    run_extraction_job(spark, input_root, work, partitions=2,
+                       big_partitions=1, waves=4)
+    chain = shim.history(output_root(work))
+    assert len(chain) == 4
+
+    reads = []
+    read_manifest = shim.read_manifest
+
+    def counted(table_root, snapshot_id):
+        reads.append(snapshot_id)
+        return read_manifest(table_root, snapshot_id)
+
+    monkeypatch.setattr(shim, "read_manifest", counted)
+    summary = run_curation_job(spark, work)
+    assert summary["input_snapshots"] == chain
+    assert sorted(reads) == sorted(chain)
 
 
 def test_metrics_table_keeps_rows_written_by_spark(spark, tmp_path):

@@ -1,6 +1,6 @@
 """Training-data export stage (job.py run_export_job): curated snapshot
 → kept docs partitioned by shard_id + per-shard content-digest manifest,
-verified consumer-side by verify_export."""
+verified consumer-side by verify_shards."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ import pytest
 
 from ocr_spark.job import (
     export_root, run_curation_job, run_export_job, run_extraction_job,
-    verify_export,
+    verify_shards,
 )
 from ocr_spark.sources import iceberg_shim as shim
 
@@ -88,7 +88,7 @@ def test_zone_map_prunes_without_scanning(exported):
 
 def test_verify_export_passes_and_catches_missing_shard(exported):
     spark, work, cur, summary = exported
-    ok = verify_export(spark, work)
+    ok = verify_shards(spark, work, "export")
     assert ok["snapshot"] == summary["snapshot"]
     assert ok["shards_checked"] == summary["shards"]
     assert ok["mismatches"] == {}
@@ -98,7 +98,7 @@ def test_verify_export_passes_and_catches_missing_shard(exported):
     victim = sorted(d for d in os.listdir(data_dir)
                     if d.startswith("shard_id="))[0]
     shutil.rmtree(os.path.join(data_dir, victim))
-    bad = verify_export(spark, work)
+    bad = verify_shards(spark, work, "export")
     shard = victim.split("=", 1)[1]
     assert bad["mismatches"] == {shard: "missing from data"}
 
@@ -164,7 +164,7 @@ def test_crash_resume_then_export_matches_clean_run(spark, tmp_path):
                        big_partitions=1, waves=3)
     run_curation_job(spark, crashed)
     crashed_exp = run_export_job(spark, crashed)
-    assert verify_export(spark, crashed)["mismatches"] == {}
+    assert verify_shards(spark, crashed, "export")["mismatches"] == {}
 
     clean = str(tmp_path / "clean")
     run_extraction_job(spark, input_root, clean, partitions=8,
@@ -236,9 +236,9 @@ def test_sampling_job_realizes_mixture(spark, tmp_path_factory):
     # sampled corpus verifies clean via the SAME digest definition the
     # producer committed; export never ran here so it reports absent,
     # not failed. Dropping a sampled shard partition flips ok.
-    from ocr_spark.job import verify_all, verify_sampling
+    from ocr_spark.job import verify_all
 
-    vs = verify_sampling(spark, work)
+    vs = verify_shards(spark, work, "sampling")
     assert vs["mismatches"] == {} and vs["shards_checked"] > 0
     va = verify_all(spark, work)
     assert va["ok"]
@@ -260,14 +260,14 @@ def test_sft_job_renders_shards_and_verifies(exported):
     rendered example, loss-mask spans slice the rendered string
     correctly, the committed manifest digests verify consumer-side,
     and a re-run reproduces every digest bit-for-bit."""
-    from ocr_spark.job import run_sft_job, sft_root, verify_all, verify_sft
+    from ocr_spark.job import run_sft_job, sft_root, verify_all
     from ocr_spark.plans.curation import SFT_END, SFT_USER_PRE
 
     spark, work, cur, _ = exported
     summary = run_sft_job(spark, work, examples_per_shard=50)
     assert summary["examples"] == cur["docs_kept"]
     assert summary["shards"] >= 1
-    check = verify_sft(spark, work)
+    check = verify_shards(spark, work, "sft")
     assert check["mismatches"] == {}
     allcheck = verify_all(spark, work)
     assert allcheck["ok"] and allcheck["stages"]["sft"]["present"]
@@ -315,3 +315,79 @@ def test_index_job_build_serve_parity(spark, tmp_path):
     assert served == inplan and served
     s2 = run_index_job(spark, work, sf)
     assert s2["content_digest"] == s1["content_digest"]
+
+
+def test_index_serves_the_centroids_its_postings_name(spark, tmp_path):
+    """A rebuild publishes centroids before postings; stopped between
+    the two publishes, CURRENT centroids are not the ones the published
+    postings were assigned with. Serving reads the centroids snapshot
+    the postings manifest records, so the served top-k still equals the
+    in-plan trained IVF top-k."""
+    from pyspark.sql import functions as F
+
+    from ocr_spark.job import (
+        index_root, ivf_topk_from_index, run_index_job, verify_index)
+    from ocr_spark.plans.simsearch import emb_ivf_trained_topk
+    from tests.test_index_job import SF as sf
+
+    work = str(tmp_path / "idx")
+    built = run_index_job(spark, work, sf)
+    croot = os.path.join(index_root(work), "centroids")
+    rows = shim.read_snapshot(spark, croot, built["centroids_snapshot"])
+    cells = sorted(r.cell for r in rows.select("cell").distinct().collect())
+    rotate = F.create_map(*(F.lit(x) for i, c in enumerate(cells)
+                            for x in (c, cells[(i + 1) % len(cells)])))
+    stray = shim.write_snapshot(
+        rows.select(rotate[F.col("cell")].alias("cell"), "pos", "cv_val")
+        .coalesce(1), croot)
+    assert shim.current_snapshot_id(croot) == stray != \
+        built["centroids_snapshot"]
+    assert verify_index(spark, work)["ok"]
+
+    key = ("q_id", "rank", "neighbor_id", "cos_sim", "cell")
+    served = sorted(tuple(r[k] for k in key)
+                    for r in ivf_topk_from_index(spark, work, sf).collect())
+    assert served and served == sorted(
+        tuple(r[k] for k in key)
+        for r in emb_ivf_trained_topk(spark, sf).collect())
+
+
+def test_shard_products_run_no_spark_job_after_publish(exported,
+                                                       monkeypatch):
+    """The publish is each shard product's commit point and its last
+    step: the job group's job count when the product's snapshot is
+    published equals the count when the job returns."""
+    from ocr_spark.job import (
+        run_sampling_job, run_sft_job, sampling_root, sft_root)
+
+    spark, work, cur, _ = exported
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+
+    def jobs(group: str) -> int:
+        bus.waitUntilEmpty()  # job-start events reach the tracker async
+        return len(tracker.getJobIdsForGroup(group))
+
+    at_publish: dict = {}
+    publish = shim.publish_snapshot
+
+    def record(table_root, snapshot_id):
+        publish(table_root, snapshot_id)
+        at_publish[table_root] = jobs(os.path.basename(table_root))
+
+    monkeypatch.setattr(shim, "publish_snapshot", record)
+    summaries = {}
+    try:
+        for root_of, run in ((export_root, run_export_job),
+                             (sampling_root, run_sampling_job),
+                             (sft_root, run_sft_job)):
+            group = os.path.basename(root_of(work))
+            sc.setJobGroup(group, f"{group} product commit")
+            summaries[group] = run(spark, work)
+            assert at_publish[root_of(work)] == jobs(group) > 0, group
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert summaries["sampled"]["kept_docs"] == cur["docs_kept"]
+    assert summaries["sft"]["examples"] == cur["docs_kept"]
