@@ -27,7 +27,7 @@ from __future__ import annotations
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ocr_spark.operators import bookkeeping
 from ocr_spark.operators.bookkeeping import (
@@ -167,7 +167,7 @@ def run_extraction_job(spark: SparkSession, input_table_root: str,
     plans/webops.py::pages_robots_filter.
 
     ``route_filter=True`` applies the pages_extract_router decision
-    (plans/htmlfeat.py::route_for_html — the SAME expression the query
+    (plans/htmlfeat.py::route_for_html — the route kernel the query
     table publishes) as a pre-Arrow JVM filter: link-farm and
     low-text-density pages are dropped before costing kernel CPU, the
     oversized and normal routes proceed. At 100 TB this is the router
@@ -1027,6 +1027,25 @@ def validation_root(work_dir: str) -> str:
     return os.path.join(work_dir, "validation")
 
 
+def row_checks() -> list[tuple[str, Column]]:
+    """The validation suite's row predicates as one ordered table of
+    (reason, violated): constraint_suite counts each, and the
+    streaming dead-letter sink (streaming/ingest.py dlq_reason_col)
+    tags a row with the FIRST that holds. The text and block checks
+    apply to error-free rows only."""
+    ok = F.col("error").isNull()
+    return [
+        ("url_missing", F.col("url").isNull() | (F.length("url") == 0)),
+        ("extract_error", ~ok),
+        ("empty_text",
+         ok & (F.col("text").isNull() | (F.length("text") == 0))),
+        ("no_blocks",
+         ok & (F.col("n_blocks").isNull() | (F.col("n_blocks") <= 0))),
+        ("bad_bytes_in",
+         F.col("bytes_in").isNull() | (F.col("bytes_in") <= 0)),
+    ]
+
+
 def constraint_suite(out: DataFrame,
                      max_error_frac: float = VALIDATION_MAX_ERROR_FRAC,
                      ) -> list[tuple[str, int, int]]:
@@ -1036,32 +1055,24 @@ def constraint_suite(out: DataFrame,
     validation job below AND the streaming per-micro-batch gate
     (streaming/ingest.py validation_gate_sink), so a batch failing
     the streaming gate is EXACTLY a table the batch gate would block
-    — one suite, two triggers."""
-    ok = F.col("error").isNull()
+    — one suite, two triggers. Its row predicates are ``row_checks``."""
+    checks = row_checks()
     row = out.agg(
         F.count(F.lit(1)).alias("checked"),
         F.count_distinct(F.col("url")).alias("n_urls"),
-        F.sum((F.col("url").isNull() | (F.length("url") == 0))
-              .cast("long")).alias("url_bad"),
-        F.sum((ok & (F.col("text").isNull() | (F.length("text") == 0)))
-              .cast("long")).alias("text_missing"),
-        F.sum((ok & (F.col("n_blocks").isNull() | (F.col("n_blocks") <= 0)))
-              .cast("long")).alias("blocks_bad"),
-        F.sum((F.col("bytes_in").isNull() | (F.col("bytes_in") <= 0))
-              .cast("long")).alias("bytes_bad"),
-        F.sum((~ok).cast("long")).alias("n_errors"),
+        *[F.sum(bad.cast("long")).alias(reason) for reason, bad in checks],
     ).collect()[0]
     checked = row["checked"] or 0
-    n_success = checked - (row["n_errors"] or 0)
-    err_over = ((row["n_errors"] or 0)
-                if (row["n_errors"] or 0) > max_error_frac * checked
-                else 0)
+    bad = {reason: row[reason] or 0 for reason, _ in checks}
+    n_success = checked - bad["extract_error"]
+    err_over = (bad["extract_error"]
+                if bad["extract_error"] > max_error_frac * checked else 0)
     return [
-        ("url_complete", checked, row["url_bad"] or 0),
+        ("url_complete", checked, bad["url_missing"]),
         ("url_unique", checked, checked - (row["n_urls"] or 0)),
-        ("text_present_on_success", n_success, row["text_missing"] or 0),
-        ("blocks_positive_on_success", n_success, row["blocks_bad"] or 0),
-        ("bytes_in_positive", checked, row["bytes_bad"] or 0),
+        ("text_present_on_success", n_success, bad["empty_text"]),
+        ("blocks_positive_on_success", n_success, bad["no_blocks"]),
+        ("bytes_in_positive", checked, bad["bad_bytes_in"]),
         ("error_rate_bounded", checked, err_over),
     ]
 
@@ -1253,24 +1264,24 @@ def combined_sketches(spark: SparkSession,
     elementwise max, CMS counters by elementwise add, KMV by bottom-k
     of the hash union — each a bounded aggregate over n_snapshots ×
     ≤~1300 stored rows."""
-    from ocr_spark.plans.sketches import KMV_K
+    from ocr_spark.plans.sketches import cms_fold, hll_fold, kmv_fold
 
     sroot = stats_root(work_dir)
     dirs = [m["data_dir"] for m in shim.chain_manifests(sroot)]
     if not dirs:
         raise FileNotFoundError(f"no stats snapshots under {sroot}")
     allf = spark.read.parquet(*dirs)
+
+    def kind(k: str) -> DataFrame:
+        return allf.filter(F.col("kind") == k)
+
     return {
-        "hll": (allf.filter(F.col("kind") == "hll")
-                .groupBy(F.col("k1").alias("reg"))
-                .agg(F.max("v").alias("m_reg"))),
-        "cms": (allf.filter(F.col("kind") == "cms")
-                .groupBy(F.col("k1").cast("int").alias("r"),
-                         F.col("k2").alias("b"))
-                .agg(F.sum("v").alias("counter"))),
-        "kmv": (allf.filter(F.col("kind") == "kmv")
-                .select(F.col("k1").alias("h")).distinct()
-                .orderBy("h").limit(KMV_K)),
+        "hll": hll_fold(kind("hll").select(F.col("k1").alias("reg"),
+                                           F.col("v").alias("m_reg"))),
+        "cms": cms_fold(kind("cms").select(
+            F.col("k1").cast("int").alias("r"), F.col("k2").alias("b"),
+            F.col("v").alias("counter"))),
+        "kmv": kmv_fold(kind("kmv").select(F.col("k1").alias("h"))),
     }
 
 

@@ -7,9 +7,10 @@ co-partitioning, so the sort-merge join reads bucket i of both tables
 on one task. This module wraps the write side; the plan-level guarantee
 is pinned by tests/test_plans.py::test_bucketed_join_has_no_shuffle.
 
-Usage shape for the extraction pipeline: the output table and the
-checkpoint/url-level dedup tables are bucketed by url-hash bucket, so
-resume anti-joins and output⋈metrics joins are exchange-free.
+Usage shape: two tables written with ``write_bucketed`` on the same key
+and bucket count join through ``bucketed_join`` without an exchange.
+The extraction pipeline does not use it: its resume is a fold over the
+manifest chain, with no join.
 """
 
 from __future__ import annotations

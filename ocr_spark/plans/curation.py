@@ -412,7 +412,7 @@ def docs_split_leakage_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     side against the zero-shuffle split map, and the signature
     equi-joins of the Jaccard estimator — no new shuffle classes."""
     from ocr_spark.plans.dataops import (
-        MINHASH_K, docs_minhash_lsh_pairs, minhash_sigs_frame,
+        docs_minhash_lsh_pairs, minhash_sigs_frame, sig_overlap_est,
     )
 
     pairs = docs_minhash_lsh_pairs(spark, sf_dir)
@@ -428,13 +428,10 @@ def docs_split_leakage_check(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.col("minvec").alias("va"))
     vb = sigs.select(F.col("doc_id").alias("doc_b"),
                      F.col("minvec").alias("vb"))
-    est = F.round(
-        F.aggregate(F.zip_with("va", "vb",
-                               lambda x, y: (x == y).cast("int")),
-                    F.lit(0), lambda acc, x: acc + x) / MINHASH_K, 4)
     return (leaks.join(va, "doc_a").join(vb, "doc_b")
             .select("doc_a", "doc_b", "split_a", "split_b",
-                    "n_shared_bands", est.alias("jaccard_est")))
+                    "n_shared_bands",
+                    sig_overlap_est("va", "vb").alias("jaccard_est")))
 
 
 def _split_leakage_sql() -> str:
@@ -2481,6 +2478,33 @@ def classifier_score_frame(df: DataFrame, key: str = "url") -> DataFrame:
 PSI_BINS = 10
 
 
+def psi_bin_col() -> Column:
+    """The score's PSI bin: floor(score·PSI_BINS), a score of 1.0
+    folded into the top bin."""
+    return F.least(F.lit(PSI_BINS - 1),
+                   F.floor(F.col("score") * PSI_BINS)).cast("int")
+
+
+def psi_terms_frame(per: DataFrame, n_ref: str, n_new: str) -> DataFrame:
+    """Per-bin counts (bin, ``n_ref``, ``n_new``) → the same rows plus
+    the Laplace-smoothed shares ``p`` (reference) and ``q`` (new), the
+    bin's PSI term in integer micro-units ``psi_term_micro`` =
+    round((q−p)·ln(q/p)·1e6), and the broadcast totals ``t_ref``,
+    ``t_new``, ``n_bins``. Smoothing is +1 per OBSERVED bin, so a bin
+    empty on both sides drops out identically on both engines. Shared
+    by docs_quality_psi and the streaming drift monitor
+    (streaming/ingest.py psi_sink)."""
+    tot = per.agg(F.sum(n_ref).cast("long").alias("t_ref"),
+                  F.sum(n_new).cast("long").alias("t_new"),
+                  F.count(F.lit(1)).cast("long").alias("n_bins"))
+    p = (F.col(n_ref) + 1) / (F.col("t_ref") + F.col("n_bins"))
+    q = (F.col(n_new) + 1) / (F.col("t_new") + F.col("n_bins"))
+    return per.crossJoin(F.broadcast(tot)).select(
+        "*", p.alias("p"), q.alias("q"),
+        F.round((q - p) * F.log(q / p) * 1e6).cast("long")
+        .alias("psi_term_micro"))
+
+
 def docs_quality_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population-Stability-Index drift monitor over the quality
     classifier's score distribution — the standard model-monitoring
@@ -2504,23 +2528,14 @@ def docs_quality_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs_snapshot_drift shape with the score as the dimension."""
     s = docs_classifier_score(spark, sf_dir).select("doc_id", "score")
     is_new = F.col("doc_id") % 3 == 2
-    b = F.least(F.lit(PSI_BINS - 1),
-                F.floor(F.col("score") * PSI_BINS)).cast("int")
-    per = (s.select(b.alias("bin"), is_new.alias("is_new"))
+    per = (s.select(psi_bin_col().alias("bin"), is_new.alias("is_new"))
            .groupBy("bin")
            .agg(F.sum((~F.col("is_new")).cast("long")).alias("n_prior"),
                 F.sum(F.col("is_new").cast("long")).alias("n_new")))
-    tot = per.agg(F.sum("n_prior").cast("long").alias("tp"),
-                  F.sum("n_new").cast("long").alias("tn"),
-                  F.count(F.lit(1)).cast("long").alias("nb"))
-    j = per.crossJoin(F.broadcast(tot))
-    p = (F.col("n_prior") + 1) / (F.col("tp") + F.col("nb"))
-    q = (F.col("n_new") + 1) / (F.col("tn") + F.col("nb"))
-    term_micro = F.round((q - p) * F.log(q / p) * 1e6).cast("long")
-    terms = j.select("bin", "n_prior", "n_new",
-                     F.round(p, 6).alias("share_prior"),
-                     F.round(q, 6).alias("share_new"),
-                     term_micro.alias("psi_term_micro"))
+    terms = psi_terms_frame(per, "n_prior", "n_new").select(
+        "bin", "n_prior", "n_new",
+        F.round("p", 6).alias("share_prior"),
+        F.round("q", 6).alias("share_new"), "psi_term_micro")
     total = terms.agg(F.sum("psi_term_micro").cast("long")
                       .alias("psi_micro"))
     return (terms.crossJoin(F.broadcast(total))

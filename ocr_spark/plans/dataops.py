@@ -118,6 +118,11 @@ def minhash_vec_py(text: str | None) -> list[int] | None:
     return mins
 
 
+def sig_overlap_py(va: list[int], vb: list[int]) -> float:
+    """sig_overlap_est over two Python signatures (per-row state code)."""
+    return round(sum(a == b for a, b in zip(va, vb)) / MINHASH_K, 4)
+
+
 def _minhash_vec_udf() -> Column:
     """MinHash signature as an Arrow-batched pandas UDF over ``text``.
 
@@ -351,6 +356,19 @@ def lsh_bands_frame(sigs: DataFrame, key: str = "doc_id",
     ).select(key, *carry, "bb.band", "bb.bucket")
 
 
+def sig_overlap_est(va: str, vb: str) -> Column:
+    """Broder's signature-overlap Jaccard estimate of two MinHash
+    signature columns, round(Σᵢ [va[i] = vb[i]] / MINHASH_K, 4): one
+    code-generated comparison per position, no lambda — the form the
+    DuckDB oracle spells (_jaccard_estimate_sql's cmp_terms). Every
+    full-signature estimate in the pipeline (batch queries, the
+    curation job's near-dup stage, the streaming near-dup sinks) is
+    this expression."""
+    eq = [F.when(F.col(va)[i] == F.col(vb)[i], 1).otherwise(0)
+          for i in range(MINHASH_K)]
+    return F.round(sum(eq[1:], eq[0]) / MINHASH_K, 4)
+
+
 def lsh_pairs_frame(sigs: DataFrame, key: str = "doc_id") -> DataFrame:
     """(key, minvec) → candidate pairs (key_a, key_b, n_shared_bands,
     jaccard_est) with the LSH_BUCKET_CAP guard applied BEFORE the
@@ -372,12 +390,9 @@ def lsh_pairs_frame(sigs: DataFrame, key: str = "doc_id") -> DataFrame:
                      F.col("minvec").alias("va"))
     sb = sigs.select(F.col(key).alias("key_b"),
                      F.col("minvec").alias("vb"))
-    matches = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: (x == y).cast("int")),
-        F.lit(0), lambda acc, x: acc + x)
     return (pairs.join(sa, "key_a").join(sb, "key_b")
             .select("key_a", "key_b", "n_shared_bands",
-                    F.round(matches / MINHASH_K, 4).alias("jaccard_est")))
+                    sig_overlap_est("va", "vb").alias("jaccard_est")))
 
 
 def _lsh_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -474,7 +489,7 @@ def docs_minhash_jaccard_estimate(spark: SparkSession,
     docs_jaccard_verify_candidates: the exact path re-materializes
     shingle sets for every candidate doc, while this one touches ONLY
     the K-long signatures already computed for banding — two
-    signature-table equi-joins and a zip_with, no gram recomputation,
+    signature-table equi-joins and K comparisons, no gram recomputation,
     at the price of ±1/√K estimator noise (K=16 → σ≈0.125; production
     raises K, not the verification cost). est_near_dup applies the
     same NEAR_DUP_JACCARD threshold the exact path uses."""
@@ -486,11 +501,7 @@ def docs_minhash_jaccard_estimate(spark: SparkSession,
                     F.col("minvec").alias("va"))
     b = sigs.select(F.col("doc_id").alias("doc_b"),
                     F.col("minvec").alias("vb"))
-    matches = F.aggregate(
-        F.zip_with("va", "vb",
-                   lambda x, y: (x == y).cast("int")),
-        F.lit(0), lambda acc, x: acc + x)
-    est = F.round(matches / MINHASH_K, 4)
+    est = sig_overlap_est("va", "vb")
     return (pairs.join(a, "doc_a").join(b, "doc_b")
             .select("doc_a", "doc_b", "n_shared_bands",
                     est.alias("jaccard_est"),
@@ -2809,12 +2820,9 @@ def docs_near_dup_vs_snapshot(spark: SparkSession,
                     F.col("minvec").alias("va"))
     b = sigs.select(F.col("doc_id").alias("prior_id"),
                     F.col("minvec").alias("vb"))
-    matches = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: (x == y).cast("int")),
-        F.lit(0), lambda acc, x: acc + x)
     est = (cand.join(a, "new_id").join(b, "prior_id")
            .select("new_id", "prior_id",
-                   F.round(matches / MINHASH_K, 4).alias("jaccard_est")))
+                   sig_overlap_est("va", "vb").alias("jaccard_est")))
     wbest = Window.partitionBy("new_id") \
         .orderBy(F.col("jaccard_est").desc(), "prior_id")
     best = (est

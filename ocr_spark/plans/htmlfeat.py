@@ -34,7 +34,7 @@ Iceberg scan.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from ocr_spark.plans.extract_queries import pages_from_documents
@@ -237,15 +237,20 @@ def pages_html_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return html_features_frame(pages_from_documents(spark, sf_dir))
 
 
-def html_features_frame(pages: DataFrame) -> DataFrame:
-    """pages_html_features over any (url, html BINARY) frame."""
-    h = F.decode(F.col("html"), "UTF-8")
+def _page_text(html: Column) -> tuple[Column, Column, Column]:
+    """(decoded page, visible text, anchor characters) of a raw html
+    BINARY column. Anchor characters are the length of the anchor
+    texts joined with no separator: their exact sum, lambda-free."""
+    h = F.decode(html, "UTF-8")
     visible = F.regexp_replace(F.regexp_replace(h, _SCRIPT_STYLE, ""),
                                _TAG, "")
     atexts = F.regexp_extract_all(h, F.lit(_ANCHOR_TEXT), 1)
-    anchor_chars = F.aggregate(
-        atexts, F.lit(0).cast("long"),
-        lambda acc, x: acc + F.length(x))
+    return h, visible, F.length(F.array_join(atexts, ""))
+
+
+def html_features_frame(pages: DataFrame) -> DataFrame:
+    """pages_html_features over any (url, html BINARY) frame."""
+    h, visible, anchor_chars = _page_text(F.col("html"))
     base = pages.select(
         "url",
         F.length("html").cast("long").alias("html_bytes"),
@@ -253,21 +258,16 @@ def html_features_frame(pages: DataFrame) -> DataFrame:
         F.length(visible).cast("long").alias("visible_chars"),
         F.size(F.regexp_extract_all(h, F.lit("<a "), 0))
             .cast("long").alias("n_anchors"),
-        anchor_chars.alias("anchor_chars"),
+        anchor_chars.cast("long").alias("anchor_chars"),
         F.size(F.regexp_extract_all(h, F.lit("<li>"), 0))
             .cast("long").alias("n_list_items"),
         F.size(F.regexp_extract_all(h, F.lit("<p>"), 0))
             .cast("long").alias("n_paragraphs"),
     )
-    return base.select(
-        "*",
-        F.round(F.col("visible_chars")
-                / F.greatest(F.col("html_chars"), F.lit(1)),
-                FEAT_ROUND).alias("text_density"),
-        F.round(F.col("anchor_chars")
-                / F.greatest(F.col("visible_chars"), F.lit(1)),
-                FEAT_ROUND).alias("link_density"),
-    )
+    text_density, link_density = _densities(
+        F.col("html_chars"), F.col("visible_chars"), F.col("anchor_chars"))
+    return base.select("*", text_density.alias("text_density"),
+                       link_density.alias("link_density"))
 
 
 PAGES_HTML_FEATURES_SQL = _HTML_CTE + f"""
@@ -317,31 +317,38 @@ ROUTER_LINK_HEAVY = 0.35
 ROUTER_LOW_TEXT = 0.33
 
 
-def route_for_html(html) -> F.Column:
-    """The pages_extract_router decision as ONE JVM expression tree
-    over a raw html BINARY column — factored so the extraction job
-    can apply the identical routing as a pre-Arrow filter
-    (job.run_extraction_job(route_filter=True)) without re-deriving
-    the feature queries: the query table and the job filter cannot
-    diverge because they are the same expression."""
-    h = F.decode(html, "UTF-8")
-    visible = F.regexp_replace(F.regexp_replace(h, _SCRIPT_STYLE, ""),
-                               _TAG, "")
-    atexts = F.regexp_extract_all(h, F.lit(_ANCHOR_TEXT), 1)
-    anchor_chars = F.aggregate(atexts, F.lit(0).cast("long"),
-                               lambda acc, x: acc + F.length(x))
-    # rounded as the published table rounds them (FEAT_ROUND), so a
-    # density that rounds onto a cut routes the same on both surfaces
-    text_density = F.round(F.length(visible)
-                           / F.greatest(F.length(h), F.lit(1)), FEAT_ROUND)
-    link_density = F.round(anchor_chars
-                           / F.greatest(F.length(visible), F.lit(1)),
-                           FEAT_ROUND)
+def _densities(html_chars: Column, visible_chars: Column,
+               anchor_chars: Column) -> tuple[Column, Column]:
+    """(text_density, link_density), rounded to FEAT_ROUND as the
+    published feature table rounds them, so a density that rounds onto
+    a cut routes the same on every surface."""
+    return (F.round(visible_chars / F.greatest(html_chars, F.lit(1)),
+                    FEAT_ROUND),
+            F.round(anchor_chars / F.greatest(visible_chars, F.lit(1)),
+                    FEAT_ROUND))
+
+
+def _route(html_bytes: Column, text_density: Column,
+           link_density: Column) -> Column:
+    """The pages_extract_router decision: the one route CASE that the
+    query table (extract_router_frame), the extraction job's
+    route_filter and the streaming router_sink (both through
+    route_for_html) evaluate."""
     return (
-        F.when(F.length(html) > ROUTER_BIG_BYTES, F.lit("oversized"))
+        F.when(html_bytes > ROUTER_BIG_BYTES, F.lit("oversized"))
         .when(link_density >= ROUTER_LINK_HEAVY, F.lit("link_heavy"))
         .when(text_density < ROUTER_LOW_TEXT, F.lit("low_text"))
         .otherwise(F.lit("extract")))
+
+
+def route_for_html(html: Column) -> Column:
+    """_route over a raw html BINARY column: one JVM expression
+    tree, so the extraction job can route as a pre-Arrow filter
+    (job.run_extraction_job(route_filter=True)) without the feature
+    table."""
+    h, visible, anchor_chars = _page_text(html)
+    return _route(F.length(html), *_densities(
+        F.length(h), F.length(visible), anchor_chars))
 
 
 def pages_extract_router(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -362,12 +369,8 @@ def pages_extract_router(spark: SparkSession, sf_dir: str) -> DataFrame:
 def extract_router_frame(pages: DataFrame) -> DataFrame:
     """pages_extract_router over any (url, html BINARY) frame."""
     feats = html_features_frame(pages)
-    route = (
-        F.when(F.col("html_bytes") > ROUTER_BIG_BYTES, F.lit("oversized"))
-        .when(F.col("link_density") >= ROUTER_LINK_HEAVY,
-              F.lit("link_heavy"))
-        .when(F.col("text_density") < ROUTER_LOW_TEXT, F.lit("low_text"))
-        .otherwise(F.lit("extract")))
+    route = _route(F.col("html_bytes"), F.col("text_density"),
+                      F.col("link_density"))
     return feats.select("url", "html_bytes", "text_density",
                         "link_density", route.alias("route"))
 
@@ -669,8 +672,7 @@ def _block_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
           .filter(F.col("inner") != ""))
     text = F.regexp_replace(F.col("inner"), _TAG, "")
     atexts = F.regexp_extract_all(F.col("inner"), F.lit(_ANCHOR_TEXT), 1)
-    anchor_chars = F.aggregate(atexts, F.lit(0).cast("long"),
-                               lambda acc, x: acc + F.length(x))
+    anchor_chars = F.length(F.array_join(atexts, "")).cast("long")
     words = F.split(F.trim(text), r"\s+")
     n_words = F.size(F.filter(words, lambda w: w != ""))
     n_stop = F.size(F.filter(words,

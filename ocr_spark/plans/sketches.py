@@ -83,6 +83,12 @@ def _register_frame(docs: DataFrame) -> DataFrame:
             .groupBy("reg").agg(F.max("rho").alias("m_reg")))
 
 
+def hll_fold(frames: DataFrame) -> DataFrame:
+    """Any number of stacked (reg, m_reg) register frames → one: the
+    HLL combine, elementwise max on reg."""
+    return frames.groupBy("reg").agg(F.max("m_reg").alias("m_reg"))
+
+
 def _sql_rho(tok: str) -> str:
     """The rho CASE expression over ``tok`` as DuckDB SQL — mirrors
     _rho_col exactly."""
@@ -275,6 +281,13 @@ def _cms_frame(occ: DataFrame) -> DataFrame:
     return (occ.select(F.explode(_cms_rows()).alias("rb"))
             .groupBy(F.col("rb.r").alias("r"), F.col("rb.b").alias("b"))
             .agg(F.count(F.lit(1)).cast("long").alias("counter")))
+
+
+def cms_fold(frames: DataFrame) -> DataFrame:
+    """Any number of stacked (r, b, counter) counter tables → one: the
+    CMS combine, elementwise sum on (r, b)."""
+    return (frames.groupBy("r", "b")
+            .agg(F.sum("counter").cast("long").alias("counter")))
 
 
 def docs_hll_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -513,6 +526,12 @@ def _kmv_frame(occ: DataFrame, k: int) -> DataFrame:
             .orderBy("h").limit(k))
 
 
+def kmv_fold(frames: DataFrame) -> DataFrame:
+    """Any number of stacked (h) KMV frames → one: the bottom-KMV_K of
+    their union (distinct, since a hash can sit in several frames)."""
+    return frames.select("h").distinct().orderBy("h").limit(KMV_K)
+
+
 def docs_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV (k-minimum-values, Bar-Yossef et al. 2002) distinct-count
     sketch over the corpus vocabulary: keep the {KMV_K} smallest md5
@@ -544,7 +563,7 @@ def docs_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.filter(F.col("doc_id") % 3 != 0).select(_tok_col()), KMV_K)
     delta = _kmv_frame(
         docs.filter(F.col("doc_id") % 3 == 0).select(_tok_col()), KMV_K)
-    merged = prior.union(delta).distinct().orderBy("h").limit(KMV_K)
+    merged = kmv_fold(prior.union(delta))
     pin = (merged.join(full, "h")
            .agg(F.count(F.lit(1)).alias("n_inter")))
     one = full.agg(F.max("h").alias("kth"))
@@ -612,7 +631,7 @@ def docs_kmv_resemblance(spark: SparkSession, sf_dir: str) -> DataFrame:
     td = docs.filter(F.col("doc_id") % 3 == 0).select(_tok_col())
     p = _kmv_frame(tp, KMV_K)
     d = _kmv_frame(td, KMV_K)
-    merged = p.union(d).distinct().orderBy("h").limit(KMV_K)
+    merged = kmv_fold(p.union(d))
     n_both = (merged.join(p, "h").join(d, "h")
               .agg(F.count(F.lit(1)).alias("n_both")))
     flags = (tp.select("tok", F.lit(1).alias("in_p"),
@@ -695,7 +714,7 @@ def docs_kmv_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     td = docs.filter(F.col("doc_id") % 3 == 0).select(sh)
     p = _kmv_frame(tp, KMV_K)
     d = _kmv_frame(td, KMV_K)
-    merged = (p.union(d).distinct().orderBy("h").limit(KMV_K)
+    merged = (kmv_fold(p.union(d))
               .join(p.select("h", F.lit(1).alias("ip")), "h", "left")
               .join(d.select("h", F.lit(1).alias("id_")), "h", "left"))
     m = merged.agg(

@@ -1,9 +1,11 @@
 """Structured Streaming ingestion for the extraction pipeline.
 
 The reference has NO streaming surface (synchronous request/response,
-SURVEY.md §2.10), and the batch job covers the north rule's resumability
-via snapshot diff + checkpoint anti-join. This module adds the
-Spark-native incremental path a production crawl ingest would use:
+SURVEY.md §2.10). The batch job covers the north rule's resumability
+with its manifest chain: a rerun folds the committed output snapshots
+and extracts only the (input snapshot, bucket) units they do not hold.
+This module adds the Spark-native incremental path a production crawl
+ingest would use:
 
   * ``stream_extract`` — a file-source stream over the pages table
     driven with ``Trigger.AvailableNow``: each invocation processes
@@ -22,14 +24,24 @@ Spark-native incremental path a production crawl ingest would use:
     emitting one update row per host per micro-batch. This is the
     streaming-state analogue of the batch job's per-bucket checkpoint
     bookkeeping.
+  * ``foreachBatch`` sinks (near-dup, PSI drift, dead-letter, validation
+    gate, router, sketch stores, ...) that decide through the batch
+    job's and the oracle-checked queries' own kernels, never a copy.
 
-All sinks here are parquet/memory for testability; swapping the sink
-for the Iceberg-shim writer is a one-line change at the writeStream.
+Every ``foreachBatch`` sink writes its micro-batch under a directory
+keyed by the batch id (``batch_id=<id>`` or ``batch=<id>``) with
+overwrite (``_write_batch``): Spark re-runs an epoch whose commit was
+not logged with the same batch id, and the re-run replaces that
+directory with identical content — exactly-once per micro-batch.
+All sinks here are parquet, text or memory; none writes into the
+extraction output chain, so the batch job's resume fold and curation
+do not see streamed output.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import os
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import pandas as pd
@@ -62,6 +74,25 @@ def read_pages_stream(spark: SparkSession, input_dir: str,
             .schema(PAGES_SCHEMA)
             .option("maxFilesPerTrigger", str(max_files_per_trigger))
             .parquet(input_dir))
+
+
+def _drain(frame: DataFrame, sink: Callable[[DataFrame, int], None],
+           checkpoint_dir: str) -> Any:
+    """Run ``sink`` on every micro-batch of ``frame`` under the
+    streaming checkpoint, stopping once the input present at start is
+    drained (Trigger.AvailableNow). Returns the query handle."""
+    return (frame.writeStream
+            .foreachBatch(sink)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start())
+
+
+def _write_batch(df: DataFrame, root: str, key: str, batch_id: int) -> None:
+    """Commit one micro-batch's rows as ``root/<key>=<batch_id>`` with
+    overwrite: a replayed epoch replaces its own directory."""
+    df.write.mode("overwrite").parquet(
+        os.path.join(root, f"{key}={batch_id}"))
 
 
 def stream_extract(spark: SparkSession, input_dir: str, output_dir: str,
@@ -123,8 +154,7 @@ def stream_extract_with_lineage(spark: SparkSession, input_dir: str,
     counts, bytes, wall time). Both the data and the lineage row are
     written under ``batch_id=<id>`` directories with mode=overwrite, so
     a batch replayed after a crash overwrites its own output
-    idempotently (exactly-once at the batch_id granularity, the
-    foreachBatch analogue of the batch job's two-phase bucket commit)."""
+    idempotently (exactly-once at the batch_id granularity)."""
     import time as _time
 
     from pyspark.sql.types import (
@@ -146,8 +176,7 @@ def stream_extract_with_lineage(spark: SparkSession, input_dir: str,
         t0 = _time.perf_counter()
         batch_df.persist()
         try:
-            batch_df.write.mode("overwrite").parquet(
-                f"{output_dir}/batch_id={batch_id}")
+            _write_batch(batch_df, output_dir, "batch_id", batch_id)
             stats = batch_df.agg(
                 F.count(F.lit(1)).alias("docs"),
                 F.count("error").alias("errors"),
@@ -156,18 +185,13 @@ def stream_extract_with_lineage(spark: SparkSession, input_dir: str,
             row = [(stats["docs"], stats["errors"],
                     int(stats["bytes_in"]),
                     round(_time.perf_counter() - t0, 3))]
-            (batch_df.sparkSession.createDataFrame(row, lineage_schema)
-             .coalesce(1).write.mode("overwrite")
-             .parquet(f"{lineage_dir}/batch_id={batch_id}"))
+            _write_batch(batch_df.sparkSession.createDataFrame(
+                row, lineage_schema).coalesce(1),
+                lineage_dir, "batch_id", batch_id)
         finally:
             batch_df.unpersist()
 
-    return (extracted.writeStream
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .outputMode("append")
-            .start())
+    return _drain(extracted, sink, checkpoint_dir)
 
 
 def stream_page_metrics(spark: SparkSession, input_dir: str,
@@ -207,9 +231,10 @@ def stream_host_sessions(spark: SparkSession, input_dir: str,
     ``gap``, and the closed session emits (append mode) once the
     watermark passes its end. State is bounded by open sessions per
     host — the watermark evicts closed ones — so this runs indefinitely
-    on an unbounded crawl feed. Sink = parquet via foreachBatch (the
-    memory sink cannot recover from a checkpoint, and session closure
-    spans restarts by design)."""
+    on an unbounded crawl feed. Sink = parquet via foreachBatch, one
+    ``batch_id=<id>`` directory per micro-batch (the memory sink cannot
+    recover from a checkpoint, and session closure spans restarts by
+    design)."""
     pages = read_pages_stream(spark, input_dir)
     hosts = pages.select(
         F.col("warc_ts"),
@@ -223,15 +248,11 @@ def stream_host_sessions(spark: SparkSession, input_dir: str,
            .select(F.col("s.start").alias("session_start"),
                    F.col("s.end").alias("session_end"),
                    "host", "n_pages", "bytes_in"))
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(output_dir)
 
-    return (agg.writeStream
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .outputMode("append")
-            .start())
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        _write_batch(batch_df, output_dir, "batch_id", batch_id)
+
+    return _drain(agg, sink, checkpoint_dir)
 
 
 def _update_host_state_fn(ttl_ms: int | None):
@@ -268,9 +289,10 @@ def stream_host_counters(spark: SparkSession, input_dir: str,
     """Custom stateful streaming operator via applyInPandasWithState:
     per-host running (docs, bytes) counters surviving across
     micro-batches AND across restarts in the state store. Update mode:
-    one row per host per batch with the new totals, appended to parquet
-    via foreachBatch (the memory sink cannot recover from a checkpoint;
-    foreachBatch is the production pattern for update-mode state).
+    one row per host per batch with the new totals, committed under
+    ``batch_id=<id>`` via foreachBatch (the memory sink cannot recover
+    from a checkpoint; foreachBatch is the production pattern for
+    update-mode state).
 
     ``ttl_ms``: idle-state TTL. None keeps state forever (exact
     all-time totals — correct when the host universe is bounded);
@@ -304,8 +326,7 @@ def stream_host_counters(spark: SparkSession, input_dir: str,
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_df.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(output_dir))
+        _write_batch(batch_df, output_dir, "batch_id", batch_id)
 
     ws = (counters.writeStream
           .foreachBatch(sink)
@@ -341,29 +362,27 @@ def stream_extract_near_dup(spark: SparkSession, input_dir: str,
     new urls) that url state can never see.
 
     Scale shape: the probe is the frame-level lsh_pairs machinery
-    restricted new×store via the (band, bucket) equi-join with the
-    LSH_BUCKET_CAP guard; the store holds one K-long signature row per
-    accepted doc (bytes per doc ~ 8·K — 10^9 docs ≈ 100 GB parquet, a
-    normal Spark table, pruned by the bucket join and the batch
-    partition filter, never the raw text); batch-internal duplicates
-    are collapsed within the batch first (cheapest work wins)."""
+    restricted new×store via the (band, bucket) equi-join; the store
+    holds one K-long signature row per accepted doc (bytes per doc ~
+    8·K — 10^9 docs ≈ 100 GB parquet, a normal Spark table, pruned by
+    the bucket join and the batch partition filter, never the raw
+    text); batch-internal duplicates are collapsed within the batch
+    first (cheapest work wins)."""
     pages = read_pages_stream(spark, input_dir)
-    extracted = extract_pages(pages)
-
-    return (extracted.writeStream
-            .foreachBatch(near_dup_sink(output_dir, sigstore_dir,
-                                        compact_every=compact_every))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .outputMode("append")
-            .start())
+    return _drain(extract_pages(pages),
+                  near_dup_sink(output_dir, sigstore_dir,
+                                compact_every=compact_every),
+                  checkpoint_dir)
 
 
 def near_dup_sink(output_dir: str, sigstore_dir: str,
                   compact_every: int = 0):
     """The foreachBatch body of stream_extract_near_dup, exposed so the
     exactly-once property (same batch_id twice → identical output) is
-    directly testable.
+    directly testable. The in-batch collapse is the curation job's
+    candidate step (lsh_pairs_frame at NEAR_DUP_JACCARD: the larger url
+    of a verified pair drops) and the store probe verifies with the
+    same sig_overlap_est.
 
     ``compact_every`` > 0 runs the signature-store small-files
     maintenance (compact_near_dup_store) inline every N batches, after
@@ -375,43 +394,22 @@ def near_dup_sink(output_dir: str, sigstore_dir: str,
     near-dup-collide with itself. The trigger predicate depends only
     on batch_id, so replays re-run (idempotent) compaction
     deterministically."""
-    import os as _os
-
     from ocr_spark.plans.dataops import (
-        LSH_BUCKET_CAP, MINHASH_K, NEAR_DUP_JACCARD, lsh_bands_frame,
-        minhash_sigs_frame,
+        NEAR_DUP_JACCARD, lsh_bands_frame, lsh_pairs_frame,
+        minhash_sigs_frame, sig_overlap_est,
     )
-    from pyspark.sql.window import Window as W
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         bdf = batch_df.filter(
             F.col("error").isNull() & F.col("text").isNotNull()
             & (F.col("text") != "")).persist()
+        sigs = minhash_sigs_frame(bdf, key="url", text_col="text").persist()
         try:
-            sigs = minhash_sigs_frame(bdf, key="url", text_col="text") \
-                .persist()
             # (1) collapse batch-internal near-dups (keep min url)
-            bands = lsh_bands_frame(sigs, "url")
-            wcap = W.partitionBy("band", "bucket")
-            capped = (bands.withColumn("n", F.count("*").over(wcap))
-                      .filter(F.col("n") <= LSH_BUCKET_CAP).drop("n"))
-            a, c = capped.alias("a"), capped.alias("c")
-            internal = (a.join(c, ["band", "bucket"])
-                        .filter(F.col("a.url") < F.col("c.url"))
-                        .select(F.col("a.url").alias("keep_url"),
-                                F.col("c.url").alias("drop_url"))
-                        .distinct())
-            sa = sigs.select(F.col("url").alias("keep_url"),
-                             F.col("minvec").alias("va"))
-            sb = sigs.select(F.col("url").alias("drop_url"),
-                             F.col("minvec").alias("vb"))
-            est = F.aggregate(
-                F.zip_with("va", "vb", lambda x, y: (x == y).cast("int")),
-                F.lit(0), lambda acc, x: acc + x) / MINHASH_K
-            internal_drops = (internal.join(sa, "keep_url")
-                              .join(sb, "drop_url")
-                              .filter(est >= NEAR_DUP_JACCARD)
-                              .select(F.col("drop_url").alias("url"))
+            internal_drops = (lsh_pairs_frame(sigs, "url")
+                              .filter(F.col("jaccard_est")
+                                      >= NEAR_DUP_JACCARD)
+                              .select(F.col("key_b").alias("url"))
                               .distinct())
             survivors = sigs.join(internal_drops, "url", "left_anti")
             # (2) probe the accumulated store — excluding the current
@@ -419,41 +417,34 @@ def near_dup_sink(output_dir: str, sigstore_dir: str,
             # probes its own half-committed signatures (partition
             # pruning makes the exclusion free)
             spark_l = batch_df.sparkSession
-            has_store = _os.path.isdir(sigstore_dir) and any(
+            has_store = os.path.isdir(sigstore_dir) and any(
                 f.startswith("batch=") and f != f"batch={batch_id}"
-                for f in _os.listdir(sigstore_dir))
+                for f in os.listdir(sigstore_dir))
             if has_store:
                 store = (spark_l.read.parquet(sigstore_dir)
                          .filter(F.col("batch") != batch_id)
                          .select("url", "minvec"))
                 nb = lsh_bands_frame(survivors, "url")
-                sb2 = lsh_bands_frame(store, "url") \
+                sb = lsh_bands_frame(store, "url") \
                     .withColumnRenamed("url", "store_url")
-                cand = (nb.join(sb2, ["band", "bucket"])
+                cand = (nb.join(sb, ["band", "bucket"])
                         .select("url", "store_url").distinct())
                 va = survivors.select("url", F.col("minvec").alias("va"))
                 vb = store.select(F.col("url").alias("store_url"),
                                   F.col("minvec").alias("vb"))
-                est2 = F.aggregate(
-                    F.zip_with("va", "vb",
-                               lambda x, y: (x == y).cast("int")),
-                    F.lit(0), lambda acc, x: acc + x) / MINHASH_K
                 store_drops = (cand.join(va, "url").join(vb, "store_url")
-                               .filter(est2 >= NEAR_DUP_JACCARD)
+                               .filter(sig_overlap_est("va", "vb")
+                                       >= NEAR_DUP_JACCARD)
                                .select("url").distinct())
                 survivors = survivors.join(store_drops, "url", "left_anti")
-            kept = bdf.join(survivors.select("url"), "url")
-            # batch_id-keyed overwrite: re-delivery of the same epoch
-            # replaces the partition with identical content instead of
-            # appending duplicates — exactly-once output
-            kept.write.mode("overwrite").parquet(
-                _os.path.join(output_dir, f"batch={batch_id}"))
-            (survivors.select("url", "minvec")
-             .write.mode("overwrite").parquet(
-                 _os.path.join(sigstore_dir, f"batch={batch_id}")))
+            _write_batch(bdf.join(survivors.select("url"), "url"),
+                         output_dir, "batch", batch_id)
+            _write_batch(survivors.select("url", "minvec"),
+                         sigstore_dir, "batch", batch_id)
             if compact_every > 0 and (batch_id + 1) % compact_every == 0:
                 compact_near_dup_store(spark_l, sigstore_dir, keep_last=1)
         finally:
+            sigs.unpersist()
             bdf.unpersist()
 
     return sink
@@ -513,25 +504,15 @@ def stream_cdx_index(spark: SparkSession, input_dir: str,
     done here — merging sorted runs incrementally is
     pages_cdx_merge's job, exactly how CC accumulates per-crawl CDX
     shards into the cumulative index."""
-    import os as _os
-
     from ocr_spark.plans.indexing import cdx_columns
-
-    pages = read_pages_stream(spark, input_dir)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         run = (cdx_columns(batch_df)
                .repartitionByRange(8, "surt_key", "ts14")
                .sortWithinPartitions("surt_key", "ts14"))
-        run.write.mode("overwrite").parquet(
-            _os.path.join(output_dir, f"batch={batch_id}"))
+        _write_batch(run, output_dir, "batch", batch_id)
 
-    return (pages.writeStream
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .outputMode("append")
-            .start())
+    return _drain(read_pages_stream(spark, input_dir), sink, checkpoint_dir)
 
 
 def stream_wat_export(spark: SparkSession, input_dir: str,
@@ -593,79 +574,53 @@ PSI_FLAG = 0.25   # the standard PSI rule of thumb: >0.25 = investigate
 
 
 def quality_reference_counts(extracted: DataFrame) -> DataFrame:
-    """(bin, n_ref): the quality classifier's score histogram over a
-    reference extraction output — the committed yardstick
-    stream_quality_psi monitors drift against. Counts, not shares, so
-    the streaming side can apply the same Laplace smoothing as
-    docs_quality_psi with exact integers."""
-    from ocr_spark.plans.curation import (
-        PSI_BINS, classifier_score_frame,
-    )
+    """(bin, n_ref): the quality classifier's score histogram over an
+    extraction output, binned by docs_quality_psi's own bin kernel —
+    the committed yardstick stream_quality_psi monitors drift against,
+    and each micro-batch's side of that comparison. Counts, not
+    shares, so the Laplace smoothing runs on exact integers."""
+    from ocr_spark.plans.curation import classifier_score_frame, psi_bin_col
 
     ok = extracted.filter(F.col("error").isNull()
                           & F.col("text").isNotNull()
                           & (F.length("text") > 0))
     scored = classifier_score_frame(ok.select("url", "text"))
-    b = F.least(F.lit(PSI_BINS - 1),
-                F.floor(F.col("score") * PSI_BINS)).cast("int")
-    return (scored.select(b.alias("bin"))
+    return (scored.select(psi_bin_col().alias("bin"))
             .groupBy("bin")
             .agg(F.count(F.lit(1)).cast("long").alias("n_ref")))
 
 
 def psi_sink(reference_dir: str, out_dir: str):
     """foreachBatch body of stream_quality_psi: extract the batch,
-    score it with the SHARED classifier recipe
-    (curation.classifier_score_frame — the same scores the batch
-    queries and the labeling job see), histogram the scores into
-    PSI_BINS, and compute the Population Stability Index against the
-    committed reference histogram with docs_quality_psi's exact
-    discipline (Laplace +1 over the union of observed bins, integer
-    micro-unit terms). One row per micro-batch (batch_id-keyed
-    overwrite): doc count, bin count, PSI, and the >0.25 flag — the
-    alarm that tells an operator the CRAWL changed before a bad batch
-    trains anything."""
-    import os as _os
-
-    from ocr_spark.plans.curation import (
-        PSI_BINS, classifier_score_frame,
-    )
+    histogram its classifier scores (quality_reference_counts — the
+    SHARED classifier recipe, curation.classifier_score_frame, the same
+    scores the batch queries and the labeling job see), and compute
+    the Population Stability Index against the committed reference
+    histogram with docs_quality_psi's own term kernel
+    (curation.psi_terms_frame: Laplace +1 over the union of observed
+    bins, integer micro-unit terms). One row per micro-batch
+    (batch_id-keyed overwrite): doc count, bin count, PSI, and the
+    >0.25 flag — the alarm that tells an operator the CRAWL changed
+    before a bad batch trains anything."""
+    from ocr_spark.plans.curation import psi_terms_frame
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        ref = spark.read.parquet(reference_dir)  # ≤ PSI_BINS rows
-        extracted = extract_pages(batch_df)
-        ok = extracted.filter(F.col("error").isNull()
-                              & F.col("text").isNotNull()
-                              & (F.length("text") > 0))
-        scored = classifier_score_frame(ok.select("url", "text"))
-        b = F.least(F.lit(PSI_BINS - 1),
-                    F.floor(F.col("score") * PSI_BINS)).cast("int")
-        per = (scored.select(b.alias("bin"))
-               .groupBy("bin")
-               .agg(F.count(F.lit(1)).cast("long").alias("n_new")))
-        u = (ref.join(per, "bin", "full_outer")
+        ref = batch_df.sparkSession.read.parquet(reference_dir)
+        new = quality_reference_counts(extract_pages(batch_df)) \
+            .withColumnRenamed("n_ref", "n_new")
+        u = (ref.join(new, "bin", "full_outer")
              .select("bin",
                      F.coalesce("n_ref", F.lit(0)).alias("n_ref"),
                      F.coalesce("n_new", F.lit(0)).alias("n_new")))
-        tot = u.agg(F.sum("n_ref").cast("long").alias("tr"),
-                    F.sum("n_new").cast("long").alias("tn"),
-                    F.count(F.lit(1)).cast("long").alias("nb"))
-        j = u.crossJoin(F.broadcast(tot))
-        p = (F.col("n_ref") + 1) / (F.col("tr") + F.col("nb"))
-        q = (F.col("n_new") + 1) / (F.col("tn") + F.col("nb"))
-        term_micro = F.round((q - p) * F.log(q / p) * 1e6).cast("long")
-        row = (j.select(term_micro.alias("tm"),
-                        F.col("tn").alias("n_docs"),
-                        F.col("nb").alias("n_bins"))
-               .groupBy("n_docs", "n_bins")
-               .agg(F.sum("tm").cast("long").alias("psi_micro")))
+        row = (psi_terms_frame(u, "n_ref", "n_new")
+               .groupBy(F.col("t_new").alias("n_docs"), "n_bins")
+               .agg(F.sum("psi_term_micro").cast("long")
+                    .alias("psi_micro")))
         out = row.select(
             "n_docs", "n_bins",
             F.round(F.col("psi_micro") / 1e6, 6).alias("psi"),
             (F.col("psi_micro") > int(PSI_FLAG * 1e6)).alias("flagged"))
-        (out.coalesce(1).write.mode("overwrite")
-         .parquet(_os.path.join(out_dir, f"batch_id={batch_id}")))
+        _write_batch(out.coalesce(1), out_dir, "batch_id", batch_id)
 
     return sink
 
@@ -679,31 +634,22 @@ def stream_quality_psi(spark: SparkSession, input_dir: str,
     the committed reference histogram (quality_reference_counts).
     Exactly-once via batch_id-keyed overwrite; deterministic, so
     epoch re-delivery reproduces the identical verdict row."""
-    pages = read_pages_stream(spark, input_dir)
-    return (pages.writeStream
-            .foreachBatch(psi_sink(reference_dir, out_dir))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _drain(read_pages_stream(spark, input_dir),
+                  psi_sink(reference_dir, out_dir), checkpoint_dir)
 
 
 def dlq_reason_col() -> Column:
-    """FIRST-failing-constraint classifier over extraction output rows
-    — the row-level form of job.run_validation_job's table-level suite
-    (same predicates, same order), shared by the streaming DLQ sink so
-    a row quarantined in streaming is exactly a row the batch gate
-    would count as a violation. NULL = row is clean."""
-    return (
-        F.when(F.col("url").isNull() | (F.length("url") == 0),
-               "url_missing")
-        .when(F.col("error").isNotNull(), "extract_error")
-        .when(F.col("text").isNull() | (F.length("text") == 0),
-              "empty_text")
-        .when(F.col("n_blocks").isNull() | (F.col("n_blocks") <= 0),
-              "no_blocks")
-        .when(F.col("bytes_in").isNull() | (F.col("bytes_in") <= 0),
-              "bad_bytes_in")
-    )
+    """FIRST-failing row check over extraction output rows, in the
+    order of job.row_checks — the same predicates run_validation_job's
+    suite counts — so a row quarantined in streaming is exactly a row
+    the batch gate would count as a violation. NULL = row is clean."""
+    from ocr_spark.job import row_checks
+
+    (reason, bad), *rest = row_checks()
+    tag = F.when(bad, reason)
+    for reason, bad in rest:
+        tag = tag.when(bad, reason)
+    return tag
 
 
 def dlq_sink(output_dir: str, quarantine_dir: str):
@@ -716,20 +662,14 @@ def dlq_sink(output_dir: str, quarantine_dir: str):
     how crawl pipelines lose corpus mass unaccounted). Both sides are
     batch_id-keyed overwrites, so epoch re-delivery replaces partitions
     with identical content instead of appending duplicates."""
-    import os as _os
-
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         tagged = batch_df.withColumn("dlq_reason", dlq_reason_col()) \
             .persist()
         try:
-            (tagged.filter(F.col("dlq_reason").isNull())
-             .drop("dlq_reason")
-             .write.mode("overwrite")
-             .parquet(_os.path.join(output_dir, f"batch={batch_id}")))
-            (tagged.filter(F.col("dlq_reason").isNotNull())
-             .write.mode("overwrite")
-             .parquet(_os.path.join(quarantine_dir,
-                                    f"batch={batch_id}")))
+            _write_batch(tagged.filter(F.col("dlq_reason").isNull())
+                         .drop("dlq_reason"), output_dir, "batch", batch_id)
+            _write_batch(tagged.filter(F.col("dlq_reason").isNotNull()),
+                         quarantine_dir, "batch", batch_id)
         finally:
             tagged.unpersist()
 
@@ -746,12 +686,8 @@ def stream_extract_dlq(spark: SparkSession, input_dir: str,
     byte accounting) to the quarantine table with their reason.
     Exactly-once on both sides via batch_id-keyed overwrite commits."""
     pages = read_pages_stream(spark, input_dir)
-    extracted = extract_pages(pages)
-    return (extracted.writeStream
-            .foreachBatch(dlq_sink(output_dir, quarantine_dir))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _drain(extract_pages(pages),
+                  dlq_sink(output_dir, quarantine_dir), checkpoint_dir)
 
 
 def validation_gate_sink(output_dir: str, lineage_dir: str,
@@ -771,8 +707,6 @@ def validation_gate_sink(output_dir: str, lineage_dir: str,
     re-evaluates to the identical verdict and replaces both the data
     partition (if committed) and the lineage partition with identical
     content."""
-    import os as _os
-
     from ocr_spark.job import VALIDATION_MAX_ERROR_FRAC, constraint_suite
 
     frac = (VALIDATION_MAX_ERROR_FRAC
@@ -784,18 +718,15 @@ def validation_gate_sink(output_dir: str, lineage_dir: str,
             constraints = constraint_suite(batch_df, frac)
             failed = {n: int(v) for n, _c, v in constraints if v}
             if not failed:
-                batch_df.write.mode("overwrite").parquet(
-                    _os.path.join(output_dir, f"batch_id={batch_id}"))
+                _write_batch(batch_df, output_dir, "batch_id", batch_id)
             rows = [(name, int(checked), int(viol), viol == 0,
                      not failed)
                     for name, checked, viol in constraints]
-            (batch_df.sparkSession.createDataFrame(
+            _write_batch(batch_df.sparkSession.createDataFrame(
                 rows, "constraint string, checked long, "
                       "violations long, passed boolean, "
-                      "batch_committed boolean")
-             .coalesce(1).write.mode("overwrite")
-             .parquet(_os.path.join(lineage_dir,
-                                    f"batch_id={batch_id}")))
+                      "batch_committed boolean").coalesce(1),
+                lineage_dir, "batch_id", batch_id)
         finally:
             batch_df.unpersist()
 
@@ -822,21 +753,18 @@ def stream_extract_validated(spark: SparkSession, input_dir: str,
     the batch table: ``constraint_suite(spark.read.parquet(output_dir),
     frac)`` counts every url committed by any batch."""
     pages = read_pages_stream(spark, input_dir)
-    extracted = extract_pages(pages)
-    return (extracted.writeStream
-            .foreachBatch(validation_gate_sink(output_dir, lineage_dir,
-                                               max_error_frac))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _drain(extract_pages(pages),
+                  validation_gate_sink(output_dir, lineage_dir,
+                                       max_error_frac),
+                  checkpoint_dir)
 
 
 def router_sink(output_dir: str, lineage_dir: str):
     """foreachBatch body of stream_extract_routed: apply the published
     pre-extraction router (plans/htmlfeat.py::route_for_html — the
-    SAME Column expression the batch job's route_filter and the
-    pages_extract_router query table use, so the three surfaces
-    cannot drift) to each micro-batch BEFORE extraction: only
+    route kernel the batch job's route_filter and the
+    pages_extract_router query table also evaluate, so the three
+    surfaces cannot drift) to each micro-batch BEFORE extraction: only
     'extract' and 'oversized' pages proceed through the kernel and
     commit; condemned pages ('link_heavy' / 'low_text') are not
     extracted at all — the whole point: at crawl scale the router
@@ -848,8 +776,6 @@ def router_sink(output_dir: str, lineage_dir: str):
     Exactly-once: extraction output and lineage are batch_id-keyed
     overwrites; the router expression is deterministic, so epoch
     re-delivery reproduces both partitions byte-identically."""
-    import os as _os
-
     from ocr_spark.plans.htmlfeat import route_for_html
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -862,11 +788,10 @@ def router_sink(output_dir: str, lineage_dir: str):
                            .alias("bytes_in")))
             keep = routed.filter(F.col("route")
                                  .isin("extract", "oversized"))
-            extracted = extract_pages(keep)
-            extracted.write.mode("overwrite").parquet(
-                _os.path.join(output_dir, f"batch_id={batch_id}"))
-            census.coalesce(1).write.mode("overwrite").parquet(
-                _os.path.join(lineage_dir, f"batch_id={batch_id}"))
+            _write_batch(extract_pages(keep), output_dir, "batch_id",
+                         batch_id)
+            _write_batch(census.coalesce(1), lineage_dir, "batch_id",
+                         batch_id)
         finally:
             routed.unpersist()
 
@@ -881,150 +806,108 @@ def stream_extract_routed(spark: SparkSession, input_dir: str,
     per-batch route census committed as lineage. Note the routing
     runs INSIDE foreachBatch so the census and the kept-set are
     computed from the same epoch's rows under one persist."""
-    pages = read_pages_stream(spark, input_dir)
-    return (pages.writeStream
-            .foreachBatch(router_sink(output_dir, lineage_dir))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _drain(read_pages_stream(spark, input_dir),
+                  router_sink(output_dir, lineage_dir), checkpoint_dir)
 
 
-def stream_hll_sketch(spark: SparkSession, input_dir: str,
-                      store_dir: str, checkpoint_dir: str) -> Any:
-    """Streaming corpus-stat sketch sink: each micro-batch extracts
-    its pages and writes the 256-register HLL frame of its token
-    stream under a batch_id-keyed partition with overwrite (the
-    near_dup_sink exactly-once discipline: crash re-delivery replaces
-    the partition with identical content). The frame comes from the
-    SAME builder as the batch sketch queries
-    (plans/sketches.py::_register_frame), so a page contributes
-    identical registers on both paths, and the consolidated store
-    (hll_store_registers: elementwise max across batch partitions)
-    equals the from-scratch frame over everything ingested — the merge
-    property docs_hll_snapshot_merge pins. Vocabulary cardinality over
-    an accumulating crawl thus needs only ≤256 stored rows per batch,
-    never a rescan of history."""
-    import os as _os
-
-    from ocr_spark.plans.sketches import _register_frame
-
-    pages = read_pages_stream(spark, input_dir)
-
+def _stream_sketch(spark: SparkSession, input_dir: str, store_dir: str,
+                   checkpoint_dir: str,
+                   frame_of: Callable[[DataFrame], DataFrame]) -> Any:
+    """The sink of the three streaming sketch stores: each micro-batch
+    extracts its pages and writes ``frame_of`` its error-free rows
+    under ``batch=<id>`` with overwrite (exactly-once by replacement:
+    crash re-delivery rewrites the partition with identical
+    content)."""
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         extracted = extract_pages(batch_df)
         ok = extracted.filter(F.col("error").isNull()
                               & F.col("text").isNotNull())
-        _register_frame(ok).write.mode("overwrite").parquet(
-            _os.path.join(store_dir, f"batch={batch_id}"))
+        _write_batch(frame_of(ok), store_dir, "batch", batch_id)
 
-    return (pages.writeStream
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .outputMode("append")
-            .start())
+    return _drain(read_pages_stream(spark, input_dir), sink, checkpoint_dir)
+
+
+def stream_hll_sketch(spark: SparkSession, input_dir: str,
+                      store_dir: str, checkpoint_dir: str) -> Any:
+    """Streaming corpus-stat sketch sink: each micro-batch stores the
+    256-register HLL frame of its token stream. The frame comes from
+    the SAME builder as the batch sketch queries
+    (plans/sketches.py::_register_frame), so a page contributes
+    identical registers on both paths, and the consolidated store
+    (hll_store_registers: the sketches.hll_fold register max across
+    batch partitions) equals the from-scratch frame over everything
+    ingested — the merge property docs_hll_snapshot_merge pins.
+    Vocabulary cardinality over an accumulating crawl thus needs only
+    ≤256 stored rows per batch, never a rescan of history."""
+    from ocr_spark.plans.sketches import _register_frame
+
+    return _stream_sketch(spark, input_dir, store_dir, checkpoint_dir,
+                          _register_frame)
 
 
 def hll_store_registers(spark: SparkSession, store_dir: str) -> DataFrame:
     """Consolidated HLL register frame over every batch partition the
-    streaming sink has committed: elementwise max on the reg key —
-    a ≤256-row aggregate no matter how many batches accumulated."""
-    return (spark.read.parquet(store_dir)
-            .groupBy("reg").agg(F.max("m_reg").alias("m_reg")))
+    streaming sink has committed — a ≤256-row aggregate no matter how
+    many batches accumulated."""
+    from ocr_spark.plans.sketches import hll_fold
+
+    return hll_fold(spark.read.parquet(store_dir))
 
 
 def stream_cms_sketch(spark: SparkSession, input_dir: str,
                       store_dir: str, checkpoint_dir: str) -> Any:
     """Streaming count-min sink — the counter-ADD twin of
-    stream_hll_sketch: each micro-batch extracts its pages and writes
-    the depth×256 CMS counter frame of its token stream under a
-    batch_id-keyed partition with overwrite (exactly-once by
-    replacement: crash re-delivery rewrites the partition with
-    identical content). The frame comes from the SAME builder as the
-    batch sketch queries (plans/sketches.py::_cms_frame), so a page
-    contributes identical counters on both paths, and the consolidated
-    store (cms_store_counters: elementwise SUM across batch
-    partitions) equals the from-scratch frame over everything ingested
-    — the counter-add algebra docs_cms_snapshot_merge pins.
-    Heavy-hitter frequency estimates over an accumulating crawl thus
-    need only ≤ depth·256 stored rows per batch, never a rescan of
-    history."""
-    import os as _os
-
+    stream_hll_sketch: each micro-batch stores the depth×256 CMS
+    counter frame of its token stream, from the SAME builder as the
+    batch sketch queries (plans/sketches.py::_cms_frame), so the
+    consolidated store (cms_store_counters: the sketches.cms_fold
+    counter sum across batch partitions) equals the from-scratch frame
+    over everything ingested — the counter-add algebra
+    docs_cms_snapshot_merge pins. Heavy-hitter frequency estimates
+    over an accumulating crawl thus need only ≤ depth·256 stored rows
+    per batch, never a rescan of history."""
     from ocr_spark.plans.sketches import _cms_frame, _tok_col
 
-    pages = read_pages_stream(spark, input_dir)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        extracted = extract_pages(batch_df)
-        ok = extracted.filter(F.col("error").isNull()
-                              & F.col("text").isNotNull())
-        _cms_frame(ok.select(_tok_col())).write.mode("overwrite").parquet(
-            _os.path.join(store_dir, f"batch={batch_id}"))
-
-    return (pages.writeStream
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .outputMode("append")
-            .start())
+    return _stream_sketch(spark, input_dir, store_dir, checkpoint_dir,
+                          lambda ok: _cms_frame(ok.select(_tok_col())))
 
 
 def cms_store_counters(spark: SparkSession, store_dir: str) -> DataFrame:
     """Consolidated CMS counter frame over every batch partition the
-    streaming sink has committed: elementwise SUM on the (row, bucket)
-    key — a ≤ depth·256-row aggregate regardless of batch count."""
-    return (spark.read.parquet(store_dir)
-            .groupBy("r", "b")
-            .agg(F.sum("counter").cast("long").alias("counter")))
+    streaming sink has committed — a ≤ depth·256-row aggregate
+    regardless of batch count."""
+    from ocr_spark.plans.sketches import cms_fold
+
+    return cms_fold(spark.read.parquet(store_dir))
 
 
 def stream_kmv_sketch(spark: SparkSession, input_dir: str,
                       store_dir: str, checkpoint_dir: str) -> Any:
     """Streaming KMV sink — completes the streaming sketch trio
     (register-MAX HLL, counter-ADD CMS, bottom-k KMV): each
-    micro-batch extracts its pages and writes the k smallest distinct
-    token hashes of its stream under a batch_id-keyed partition with
-    overwrite (exactly-once by replacement). The frame comes from the
-    SAME builder as the batch queries (plans/sketches.py::_kmv_frame),
-    and bottom-k is a semilattice combine: the global k smallest
-    hashes are each inside their own batch's k smallest, so the
-    consolidated store (kmv_store_frame: bottom-k of the union of
-    batch frames) equals the from-scratch frame over everything
-    ingested — the algebra docs_kmv_distinct pins batch-side.
-    Distinct-vocabulary estimates over an accumulating crawl thus need
-    only ≤k stored rows per batch."""
-    import os as _os
-
+    micro-batch stores the k smallest distinct token hashes of its
+    stream, from the SAME builder as the batch queries
+    (plans/sketches.py::_kmv_frame). Bottom-k is a semilattice
+    combine: the global k smallest hashes are each inside their own
+    batch's k smallest, so the consolidated store (kmv_store_frame:
+    the sketches.kmv_fold bottom-k of the union) equals the
+    from-scratch frame over everything ingested — the algebra
+    docs_kmv_distinct pins batch-side. Distinct-vocabulary estimates
+    over an accumulating crawl thus need only ≤k stored rows per
+    batch."""
     from ocr_spark.plans.sketches import KMV_K, _kmv_frame, _tok_col
 
-    pages = read_pages_stream(spark, input_dir)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        extracted = extract_pages(batch_df)
-        ok = extracted.filter(F.col("error").isNull()
-                              & F.col("text").isNotNull())
-        _kmv_frame(ok.select(_tok_col()), KMV_K).write.mode(
-            "overwrite").parquet(
-            _os.path.join(store_dir, f"batch={batch_id}"))
-
-    return (pages.writeStream
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .outputMode("append")
-            .start())
+    return _stream_sketch(spark, input_dir, store_dir, checkpoint_dir,
+                          lambda ok: _kmv_frame(ok.select(_tok_col()),
+                                                KMV_K))
 
 
 def kmv_store_frame(spark: SparkSession, store_dir: str) -> DataFrame:
     """Consolidated KMV frame over every batch partition the streaming
-    sink has committed: bottom-k of the union (distinct, since the
-    same hash can appear in several batches) — ≤ k·batches rows in,
-    ≤ k rows out."""
-    from ocr_spark.plans.sketches import KMV_K
+    sink has committed — ≤ k·batches rows in, ≤ k rows out."""
+    from ocr_spark.plans.sketches import kmv_fold
 
-    return (spark.read.parquet(store_dir).select("h").distinct()
-            .orderBy("h").limit(KMV_K))
+    return kmv_fold(spark.read.parquet(store_dir))
 
 
 def compact_near_dup_store(spark: SparkSession, sigstore_dir: str,
@@ -1035,42 +918,51 @@ def compact_near_dup_store(spark: SparkSession, sigstore_dir: str,
     footer per batch per core adds up at 10^5 batches; the probe's
     scan cost follows file count, not byte count).
 
-    Crash-safe by idempotence, not locking: the consolidated partition
-    is written FIRST (overwrite), old batch dirs are removed after. A
-    crash between the two leaves duplicate signatures in the store,
-    which the probe tolerates (candidate pairs are ``distinct``-ed and
-    verdicts are per-pair, so duplicates change nothing), and the next
-    compaction run completes the removal. ``keep_last`` leaves the N
-    highest batch ids unconsolidated so an in-flight replaying batch's
-    partition is never touched."""
-    import os as _os
-    import shutil as _shutil
+    Crash-safe by idempotence, not locking: no signature leaves the
+    visible store before a visible copy of it exists.
+      1. The merged rows are written to the hidden ``_compact_tmp``,
+         which Spark's listing skips and the next run overwrites.
+      2. It is renamed (atomically) to a fresh consolidated id below
+         every existing one: the store now holds the merged signatures
+         twice, which the probe tolerates (candidate pairs are
+         ``distinct``-ed and verdicts are per-pair).
+      3. The old consolidated and merged batch dirs are removed; a
+         crash leaves duplicates only.
+      4. The new partition is renamed to ``batch=-1``.
+    Every negative id is a consolidated partition and the merge keeps
+    one row per distinct (url, minvec), so the next run folds whatever
+    a crash left behind into one copy of each. ``keep_last`` leaves the
+    N highest batch ids unconsolidated so an in-flight replaying
+    batch's partition is never touched."""
+    import shutil
 
-    if not _os.path.isdir(sigstore_dir):
+    if not os.path.isdir(sigstore_dir):
         return {"compacted_batches": 0, "rows": 0}
-    batches = sorted(
-        int(d.split("=", 1)[1]) for d in _os.listdir(sigstore_dir)
-        if d.startswith("batch=") and d.split("=", 1)[1].lstrip("-").isdigit()
-        and int(d.split("=", 1)[1]) >= 0)
-    to_merge = batches[:len(batches) - keep_last] if keep_last else batches
-    if not to_merge and not _os.path.isdir(
-            _os.path.join(sigstore_dir, "batch=-1")):
+    ids = sorted(int(d.split("=", 1)[1]) for d in os.listdir(sigstore_dir)
+                 if d.startswith("batch=")
+                 and d.split("=", 1)[1].lstrip("-").isdigit())
+    consolidated = [b for b in ids if b < 0]
+    fresh = [b for b in ids if b >= 0]
+    to_merge = fresh[:len(fresh) - keep_last] if keep_last else fresh
+    if not to_merge and not consolidated:
         return {"compacted_batches": 0, "rows": 0}
+
+    def part(b: int) -> str:
+        return os.path.join(sigstore_dir, f"batch={b}")
+
     store = (spark.read.parquet(sigstore_dir)
-             .filter(F.col("batch").isin([-1] + to_merge))
+             .filter(F.col("batch").isin(consolidated + to_merge))
              .select("url", "minvec"))
-    tmp = _os.path.join(sigstore_dir, "_compact_tmp")
-    store.coalesce(max(1, store.rdd.getNumPartitions() // 8)) \
+    tmp = os.path.join(sigstore_dir, "_compact_tmp")
+    store.distinct().coalesce(max(1, store.rdd.getNumPartitions() // 8)) \
          .write.mode("overwrite").parquet(tmp)
-    rows = spark.read.parquet(tmp).count()
-    base = _os.path.join(sigstore_dir, "batch=-1")
-    if _os.path.isdir(base):
-        _shutil.rmtree(base)
-    _os.rename(tmp, base)
-    for b in to_merge:
-        d = _os.path.join(sigstore_dir, f"batch={b}")
-        if _os.path.isdir(d):
-            _shutil.rmtree(d)
+    new = min(consolidated, default=0) - 1
+    os.rename(tmp, part(new))
+    rows = spark.read.parquet(part(new)).count()
+    for b in consolidated + to_merge:
+        shutil.rmtree(part(b))
+    if new != -1:
+        os.rename(part(new), part(-1))
     return {"compacted_batches": len(to_merge), "rows": rows}
 
 
@@ -1096,7 +988,10 @@ def _near_dup_state_fn(bucket_cap: int, threshold: float):
     LSH_BUCKET_CAP, and the same recall trade: a hot bucket stops
     admitting comparators once full). Batch rows process in url order
     for determinism; a row is a dup when its signature-overlap estimate
-    against any stored signature clears ``threshold``."""
+    (dataops.sig_overlap_py) against any stored signature clears
+    ``threshold``."""
+    from ocr_spark.plans.dataops import sig_overlap_py
+
     def fn(key: tuple, pdfs: Iterator[pd.DataFrame],
            state: GroupState) -> Iterator[pd.DataFrame]:
         band, bucket = key
@@ -1114,7 +1009,7 @@ def _near_dup_state_fn(bucket_cap: int, threshold: float):
             vec = list(r["minvec"])
             best, match = 0.0, None
             for u, s in zip(urls, sigs):
-                est = sum(1 for a, b in zip(vec, s) if a == b) / len(vec)
+                est = sig_overlap_py(vec, s)
                 if est > best:
                     best, match = est, u
             dup = best >= threshold
@@ -1151,9 +1046,11 @@ def stream_near_dup_state(spark: SparkSession, input_dir: str,
     O(n²) comparator guard and the state-size bound; MINHASH_K longs
     per signature ≈ 200 bytes, so worst-case state per bucket ~10 KB.
 
-    Exactly-once: the stateful operator's output commits through the
-    streaming checkpoint; a re-delivered epoch replays against the
-    checkpointed state version, yielding identical verdicts."""
+    Exactly-once: each micro-batch's verdicts are written under
+    ``batch_id=<id>`` with overwrite. A re-delivered epoch replays
+    against the checkpointed state version, yields identical verdicts,
+    and replaces its own directory instead of appending a second
+    copy."""
     from ocr_spark.plans.dataops import (
         LSH_BUCKET_CAP, NEAR_DUP_JACCARD, lsh_bands_frame,
         minhash_sigs_frame,
@@ -1175,12 +1072,6 @@ def stream_near_dup_state(spark: SparkSession, input_dir: str,
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_df.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(output_dir))
+        _write_batch(batch_df, output_dir, "batch_id", batch_id)
 
-    return (verdicts.writeStream
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start())
+    return _drain(verdicts, sink, checkpoint_dir)

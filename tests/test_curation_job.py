@@ -640,6 +640,46 @@ def test_corpus_shaping_plans_hold_no_lambda(curated, monkeypatch):
         assert "lambdafunction" not in plan.lower(), plan
 
 
+def test_sig_overlap_est_matches_lambda_reference(curated):
+    """sig_overlap_est equals the aggregate(zip_with(...)) fold it
+    replaced on every pair of the curated corpus's signatures and on
+    spliced pairs sharing each prefix length 0..MINHASH_K, and its plan
+    holds no lambdafunction."""
+    from pyspark.sql import functions as F
+
+    from ocr_spark.job import read_extracted
+    from ocr_spark.plans.dataops import (
+        MINHASH_K, minhash_sigs_frame, sig_overlap_est,
+    )
+
+    spark, work, _ = curated
+    docs = read_extracted(spark, work).filter(F.col("error").isNull())
+    sigs = minhash_sigs_frame(docs, key="url", text_col="text")
+    a = sigs.select(F.col("url").alias("ua"), F.col("minvec").alias("va"))
+    b = sigs.select(F.col("url").alias("ub"), F.col("minvec").alias("vb"))
+    pairs = a.crossJoin(b)
+    spliced = (pairs.crossJoin(spark.range(MINHASH_K + 1)
+                               .select(F.col("id").cast("int").alias("k")))
+               .select("va", F.concat(
+                   F.slice("va", 1, F.col("k")),
+                   F.slice("vb", F.col("k") + 1, MINHASH_K)).alias("vb")))
+    ref = F.round(F.aggregate(
+        F.zip_with("va", "vb", lambda x, y: (x == y).cast("int")),
+        F.lit(0), lambda acc, x: acc + x) / MINHASH_K, 4)
+    for df in (pairs.select("va", "vb"), spliced):
+        got = df.select(sig_overlap_est("va", "vb").alias("est"),
+                        ref.alias("ref"))
+        n, bad, n_est = got.agg(
+            F.count(F.lit(1)),
+            F.sum((~F.col("est").eqNullSafe(F.col("ref"))).cast("int")),
+            F.count_distinct("est")).collect()[0]
+        assert n > 0 and bad == 0
+    assert n_est == MINHASH_K + 1   # the splices reach every match count
+    plan = (pairs.select(sig_overlap_est("va", "vb"))
+            ._jdf.queryExecution().optimizedPlan().toString())
+    assert "lambdafunction" not in plan.lower(), plan
+
+
 def test_line_gate_oracle_keeps_docs_without_lines():
     """The DuckDB oracle of docs_gopher_line_filters keeps a doc without a
     non-empty line (empty text, only newlines), as gopher_line_keep and

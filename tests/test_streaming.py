@@ -224,6 +224,67 @@ def test_stream_host_sessions_gap_and_watermark(spark, stream_dirs):
     assert rows[0].session_start == t(0) and rows[1].session_start == t(21)
 
 
+def _session_pages(minutes):
+    from datetime import datetime
+
+    return [{"url": f"https://a.example/{m}",
+             "warc_ts": datetime(2024, 1, 1, 0, m), "html": b"<html>x",
+             "text": None, "lang": "en"} for m in minutes]
+
+
+def _replay_inputs(sink):
+    """Two waves of input files per appending sink; the second wave's
+    micro-batch emits rows (for sessions: the late event closes both)."""
+    if sink == "stream_host_sessions":
+        return _session_pages([0, 1, 21]), _session_pages([59])
+    rows = generate_pages(25, oversized_rows=0)
+    if sink == "stream_host_counters":
+        return rows[:12], rows[12:]
+    mirrors = [dict(r, url=r["url"].replace("doc://", "mirror://"))
+               for r in rows[:6]]
+    return rows[:19], mirrors + rows[19:]
+
+
+@pytest.mark.parametrize("sink", ["stream_host_counters",
+                                  "stream_host_sessions",
+                                  "stream_near_dup_state"])
+def test_appending_sink_replays_a_batch_exactly_once(spark, stream_dirs,
+                                                     sink):
+    """Spark re-runs an epoch whose commit was not logged (a crash
+    between the sink's write and the commit log). The replay must
+    replace that micro-batch's rows, not add a second copy: the output
+    after the replay equals the output before it, row for row."""
+    from ocr_spark.streaming import ingest
+
+    run = getattr(ingest, sink)
+    first, second = _replay_inputs(sink)
+
+    def drain():
+        run(spark, stream_dirs["in"], stream_dirs["out"],
+            stream_dirs["ckpt1"]).awaitTermination()
+
+    def rows():
+        pdf = spark.read.parquet(stream_dirs["out"]).toPandas()
+        return sorted(map(tuple, pdf[sorted(pdf.columns)]
+                          .astype(str).values.tolist()))
+
+    _write_pages_batch(spark, first, stream_dirs["in"])
+    drain()
+    _write_pages_batch(spark, second, stream_dirs["in"])
+    drain()
+    before = rows()
+    commits = os.path.join(stream_dirs["ckpt1"], "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    assert last >= 1
+    os.remove(os.path.join(commits, str(last)))
+    crc = os.path.join(commits, f".{last}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    drain()
+    assert len(before) > 0
+    assert rows() == before
+
+
 def test_stream_extract_near_dup_store(spark, tmp_path):
     """Streaming near-dup dedup against the accumulating signature
     store: wave 1 admits the wrapped docs and seeds the store; wave 2
@@ -392,6 +453,80 @@ def test_compact_near_dup_store(spark, tmp_path):
     assert res2["rows"] == 3
     dirs = sorted(d for d in os.listdir(sig_dir) if d.startswith("batch="))
     assert dirs == ["batch=-1"]
+
+
+def test_compact_near_dup_store_survives_a_crash_at_every_step(
+        spark, tmp_path, monkeypatch):
+    """A crash at any filesystem step of compact_near_dup_store (the
+    staging write, each rename, each directory removal) leaves every
+    signature readable from the store, and the next compaction commits
+    each exactly once into batch=-1."""
+    import itertools
+    import shutil
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from ocr_spark.streaming.ingest import compact_near_dup_store
+
+    base = str(tmp_path / "base")
+    urls = [f"doc://{i}" for i in range(15)]
+    # 10 consolidated signatures, 5 new ones in two batch partitions
+    for batch, idx in ((-1, range(10)), (0, range(10, 13)),
+                       (1, range(13, 15))):
+        spark.createDataFrame([(urls[i], [i] * 16) for i in idx],
+                              "url string, minvec array<long>") \
+            .coalesce(1).write.parquet(f"{base}/batch={batch}")
+
+    crash = {"root": None, "at": None, "n": 0, "hit": False}
+
+    def step(path):
+        if crash["at"] is None or not str(path).startswith(crash["root"]):
+            return
+        crash["n"] += 1
+        if crash["n"] == crash["at"]:
+            crash["hit"] = True
+            raise OSError(f"injected crash at step {crash['n']}")
+
+    real_rename, real_rmtree = os.rename, shutil.rmtree
+    real_parquet = DataFrameWriter.parquet
+
+    def rename(src, dst, *a, **k):
+        step(src)
+        return real_rename(src, dst, *a, **k)
+
+    def rmtree(path, *a, **k):
+        step(path)
+        return real_rmtree(path, *a, **k)
+
+    def parquet(self, path, *a, **k):
+        step(path)
+        return real_parquet(self, path, *a, **k)
+
+    monkeypatch.setattr(os, "rename", rename)
+    monkeypatch.setattr(shutil, "rmtree", rmtree)
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+
+    def store_urls(store):
+        return sorted(r.url for r in spark.read.parquet(store)
+                      .select("url").collect())
+
+    for at in itertools.count(1):
+        store = str(tmp_path / f"store{at}")
+        shutil.copytree(base, store)
+        crash.update(root=store, at=at, n=0, hit=False)
+        try:
+            compact_near_dup_store(spark, store)
+        except OSError as exc:
+            assert "injected crash" in str(exc)
+        if not crash["hit"]:
+            break
+        assert set(store_urls(store)) == set(urls), at
+        crash["at"] = None
+        assert compact_near_dup_store(spark, store)["rows"] == 15
+        assert store_urls(store) == sorted(urls), at
+        assert sorted(d for d in os.listdir(store)
+                      if d.startswith("batch=")) == ["batch=-1"], at
+    assert at > 5   # the write, >=1 rename and 3 removals each crashed
 
 
 def test_near_dup_sink_periodic_compaction(spark, tmp_path):
