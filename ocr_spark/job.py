@@ -101,34 +101,16 @@ def _commit_units(inputs: list[dict], done_by_sid: dict[str, set[int]],
     return units
 
 
-def _snapshot_pages(spark: SparkSession, m: dict, work_dir: str,
-                    respect_robots: bool, route_filter: bool
-                    ) -> tuple[DataFrame, DataFrame | None]:
-    """One input snapshot's pages as its waves read them, and the
-    persisted routed frame to unpersist (``None`` without
-    ``route_filter``). The router runs ONCE per snapshot: census, kept
-    set and every wave read the persisted route column (the streaming
-    router_sink's discipline). Census first — condemned pages never
-    reach the kernel, but their counts are committed per snapshot
-    (idempotent overwrite keyed on sid)."""
+def _snapshot_pages(spark: SparkSession, m: dict,
+                    respect_robots: bool) -> DataFrame:
+    """One input snapshot's pages as its waves read them."""
     from ocr_spark.sources import PAGES_SCHEMA
 
     pages = spark.read.schema(PAGES_SCHEMA).parquet(m["data_dir"])
     if respect_robots:
         pages = pages.filter(
             ~F.col("html").cast("string").rlike(_ROBOTS_NOINDEX))
-    if not route_filter:
-        return pages, None
-    from ocr_spark.plans.htmlfeat import route_for_html
-
-    routed = pages.withColumn(
-        "route", route_for_html(F.col("html"))).persist()
-    census = (routed.groupBy("route")
-              .agg(F.count("*").cast("long").alias("n_pages"),
-                   F.sum(F.length("html")).cast("long").alias("bytes_in")))
-    census.coalesce(1).write.mode("overwrite").parquet(os.path.join(
-        work_dir, "route_census", f"snapshot={m['snapshot_id']}"))
-    return routed.filter(F.col("route").isin("extract", "oversized")), routed
+    return pages
 
 
 def run_extraction_job(spark: SparkSession, input_table_root: str,
@@ -138,7 +120,6 @@ def run_extraction_job(spark: SparkSession, input_table_root: str,
                        n_buckets: int = DEFAULT_BUCKETS,
                        waves: int = 4,
                        respect_robots: bool = False,
-                       route_filter: bool = False,
                        fail_after_waves: int | None = None,
                        fail_point: str = "after_wave") -> dict:
     """Run (or resume) extraction of the input table's full logical
@@ -149,7 +130,7 @@ def run_extraction_job(spark: SparkSession, input_table_root: str,
     rerun after an append extracts the appended snapshot, a rerun after
     a crash resumes the crashed snapshot's remaining buckets, and a
     rerun over a fully committed chain runs no Spark job. A snapshot
-    with no unit left is never read, filtered, routed or counted.
+    with no unit left is never read, filtered or counted.
 
     Each unit is one wave: it stages its data and manifest, writes its
     commit record into the still-unpublished manifest, publishes (the
@@ -165,14 +146,6 @@ def run_extraction_job(spark: SparkSession, input_table_root: str,
     kernel CPU. Default off: the driver-contract corpora are extracted
     in full, and the robots signal stays queryable via
     plans/webops.py::pages_robots_filter.
-
-    ``route_filter=True`` applies the pages_extract_router decision
-    (plans/htmlfeat.py::route_for_html — the route kernel the query
-    table publishes) as a pre-Arrow JVM filter: link-farm and
-    low-text-density pages are dropped before costing kernel CPU, the
-    oversized and normal routes proceed. At 100 TB this is the router
-    table acting as the job planner it documents. Default off — the
-    driver-contract corpora extract in full.
 
     ``fail_after_waves``/``fail_point`` are test hooks simulating a
     mid-job crash for the resume tests (SURVEY.md §5.2.5): raise after N
@@ -202,8 +175,6 @@ def run_extraction_job(spark: SparkSession, input_table_root: str,
         "snapshots_processed": len({m["snapshot_id"] for m, _g in units})}
     if respect_robots:
         summary["respect_robots"] = True
-    if route_filter:
-        summary["route_filter"] = True
 
     def crash_at(point: str, w: int) -> None:
         if fail_after_waves is not None and (w + 1) >= fail_after_waves \
@@ -212,40 +183,32 @@ def run_extraction_job(spark: SparkSession, input_table_root: str,
                 f"injected failure {point.replace('_', ' ')}, wave {w}")
 
     root = output_root(work_dir)
-    pages = routed = None
-    try:
-        for w, (m, group) in enumerate(units):
-            sid = m["snapshot_id"]
-            if w == 0 or units[w - 1][0] is not m:
-                if routed is not None:
-                    routed.unpersist()
-                pages, routed = _snapshot_pages(
-                    spark, m, work_dir, respect_robots, route_filter)
-            extracted = run_extraction(
-                pages.filter(url_bucket(n_buckets).isin(group)),
-                partitions=partitions, big_partitions=big_partitions,
-                big_threshold=big_threshold, n_buckets=n_buckets)
-            out_sid = shim.prepare_snapshot(
-                extracted, root, snapshot_id=f"{sid[:8]}-{run_id}-w{w}")
-            crash_at("after_stage", w)
+    for w, (m, group) in enumerate(units):
+        sid = m["snapshot_id"]
+        if w == 0 or units[w - 1][0] is not m:
+            pages = _snapshot_pages(spark, m, respect_robots)
+        extracted = run_extraction(
+            pages.filter(url_bucket(n_buckets).isin(group)),
+            partitions=partitions, big_partitions=big_partitions,
+            big_threshold=big_threshold, n_buckets=n_buckets)
+        out_sid = shim.prepare_snapshot(
+            extracted, root, snapshot_id=f"{sid[:8]}-{run_id}-w{w}")
+        crash_at("after_stage", w)
 
-            record = commit_bucket_bookkeeping(
-                shim.read_snapshot(spark, root, out_sid,
-                                   schema=EXTRACT_RESULT_SCHEMA),
-                input_sid=sid, input_files=[m["data_dir"]], run_id=run_id,
-                buckets=group, n_buckets=n_buckets,
-                big_threshold=big_threshold, skew_salt=big_partitions)
-            manifest = shim.amend_manifest(root, out_sid, record)
-            shim.publish_snapshot(root, out_sid)
-            summary["output_snapshots"].append(out_sid)
-            summary["docs"] += sum(record["bucket_stats"]["docs"])
-            crash_at("after_publish", w)
+        record = commit_bucket_bookkeeping(
+            shim.read_snapshot(spark, root, out_sid,
+                               schema=EXTRACT_RESULT_SCHEMA),
+            input_sid=sid, input_files=[m["data_dir"]], run_id=run_id,
+            buckets=group, n_buckets=n_buckets,
+            big_threshold=big_threshold, skew_salt=big_partitions)
+        manifest = shim.amend_manifest(root, out_sid, record)
+        shim.publish_snapshot(root, out_sid)
+        summary["output_snapshots"].append(out_sid)
+        summary["docs"] += sum(record["bucket_stats"]["docs"])
+        crash_at("after_publish", w)
 
-            export_wave_tables(work_dir, manifest)
-            crash_at("after_wave", w)
-    finally:
-        if routed is not None:
-            routed.unpersist()
+        export_wave_tables(work_dir, manifest)
+        crash_at("after_wave", w)
     return summary
 
 

@@ -331,9 +331,8 @@ def _densities(html_chars: Column, visible_chars: Column,
 def _route(html_bytes: Column, text_density: Column,
            link_density: Column) -> Column:
     """The pages_extract_router decision: the one route CASE that the
-    query table (extract_router_frame), the extraction job's
-    route_filter and the streaming router_sink (both through
-    route_for_html) evaluate."""
+    query table (extract_router_frame) and the streaming router_sink
+    (through route_for_html) evaluate."""
     return (
         F.when(html_bytes > ROUTER_BIG_BYTES, F.lit("oversized"))
         .when(link_density >= ROUTER_LINK_HEAVY, F.lit("link_heavy"))
@@ -343,9 +342,8 @@ def _route(html_bytes: Column, text_density: Column,
 
 def route_for_html(html: Column) -> Column:
     """_route over a raw html BINARY column: one JVM expression
-    tree, so the extraction job can route as a pre-Arrow filter
-    (job.run_extraction_job(route_filter=True)) without the feature
-    table."""
+    tree, so the streaming router_sink routes each micro-batch as a
+    pre-Arrow filter without the feature table."""
     h, visible, anchor_chars = _page_text(html)
     return _route(F.length(html), *_densities(
         F.length(h), F.length(visible), anchor_chars))

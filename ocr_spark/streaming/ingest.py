@@ -762,9 +762,9 @@ def stream_extract_validated(spark: SparkSession, input_dir: str,
 def router_sink(output_dir: str, lineage_dir: str):
     """foreachBatch body of stream_extract_routed: apply the published
     pre-extraction router (plans/htmlfeat.py::route_for_html — the
-    route kernel the batch job's route_filter and the
-    pages_extract_router query table also evaluate, so the three
-    surfaces cannot drift) to each micro-batch BEFORE extraction: only
+    route kernel the pages_extract_router query table also evaluates,
+    so the two surfaces cannot drift) to each micro-batch BEFORE
+    extraction: only
     'extract' and 'oversized' pages proceed through the kernel and
     commit; condemned pages ('link_heavy' / 'low_text') are not
     extracted at all — the whole point: at crawl scale the router
@@ -801,9 +801,8 @@ def router_sink(output_dir: str, lineage_dir: str):
 def stream_extract_routed(spark: SparkSession, input_dir: str,
                           output_dir: str, lineage_dir: str,
                           checkpoint_dir: str) -> Any:
-    """Incremental extraction behind the pre-extraction router: the
-    streaming twin of run_extraction_job(route_filter=True), with the
-    per-batch route census committed as lineage. Note the routing
+    """Incremental extraction behind the pre-extraction router, with
+    the per-batch route census committed as lineage. Note the routing
     runs INSIDE foreachBatch so the census and the kept-set are
     computed from the same epoch's rows under one persist."""
     return _drain(read_pages_stream(spark, input_dir),

@@ -24,13 +24,14 @@ import time
 
 sys.path.insert(0, __file__.rsplit("/scripts/", 1)[0])
 
+from ocr_spark.session import ARROW_BATCH_ROWS as DEFAULT  # noqa: E402
+
 N_DOCS = int(sys.argv[1]) if len(sys.argv) > 1 else 60000
 CYCLES = int(sys.argv[2]) if len(sys.argv) > 2 else 3
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 BATCH_SIZES = tuple(
     int(x) for x in os.environ.get(
         "ARROW_SWEEP_SIZES", "32,128,512,2048,8192").split(","))
-DEFAULT = 128  # ocr_spark.session.ARROW_BATCH_ROWS default
 
 
 def main() -> int:
@@ -81,7 +82,7 @@ def main() -> int:
         "cycles": CYCLES,
         "docs_per_sec_cycles": {str(b): per_batch[b] for b in BATCH_SIZES},
         "docs_per_sec_median": {str(b): medians[b] for b in BATCH_SIZES},
-        "ratio_vs_default_128_median_per_cycle": {
+        f"ratio_vs_default_{DEFAULT}_median_per_cycle": {
             str(b): ratios[b] for b in BATCH_SIZES},
         "best_batch": best,
         "best_ratio_vs_default": ratios[best],

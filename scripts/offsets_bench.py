@@ -3,7 +3,8 @@
 round-1 verdict #2): measure the local[32] extraction throughput with
 full block dicts vs offsets-only blocks, interleaved per cycle so host
 drift cancels in the ratio, plus the raw-mp kernel ceiling per cycle so
-the Spark/mp ratio move is visible.
+the Spark/mp ratio move is visible. Batches run at the session's
+shipped Arrow caps; the recorded BENCH/offsets.json ran at 512 rows.
 
 Usage: python scripts/offsets_bench.py   # → BENCH/offsets.json
 """
@@ -22,7 +23,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from scripts.scaling_bench import (  # noqa: E402
-    ARROW_BATCH, CORPUS_DIR, _mp_init, _mp_work, build_corpus,
+    CORPUS_DIR, _mp_init, _mp_work, build_corpus,
 )
 
 LEVEL = 32
@@ -30,8 +31,8 @@ CYCLES = int(os.environ.get("OFFSETS_BENCH_CYCLES", "3"))
 
 
 def _spark_run(mode: str) -> float:
-    env = {**os.environ, "OCR_SPARK_ARROW_BATCH": ARROW_BATCH,
-           "SCALING_BENCH_REPEATS": "1", "OCR_SPARK_BLOCKS_MODE": mode}
+    env = {**os.environ, "SCALING_BENCH_REPEATS": "1",
+           "OCR_SPARK_BLOCKS_MODE": mode}
     out = subprocess.run(
         [sys.executable, os.path.join(REPO, "scripts", "scaling_bench.py"),
          "--measure", str(LEVEL), CORPUS_DIR],

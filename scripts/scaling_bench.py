@@ -25,6 +25,10 @@ executors on a real cluster are), and it is a shared/noisy box. So:
     spark_thr / mp_thr at the same level separates framework overhead
     from frequency scaling.
 
+Arrow batches run at the session's shipped caps
+(``session.ARROW_BATCH_ROWS``); the BENCH/scaling*.json sessions
+recorded before those caps became constants ran at 512 rows.
+
 Usage:
     python scripts/scaling_bench.py                   # full → BENCH/BASELINE.md
     python scripts/scaling_bench.py --measure P DIR   # one Spark level (internal)
@@ -49,7 +53,6 @@ CYCLES = int(os.environ.get("SCALING_BENCH_CYCLES", "4"))
 PAIRS = ((2, 8), (8, 32))
 LEVELS = (2, 8, 32)
 CORPUS_DIR = os.path.join(REPO, ".bench_tmp", f"corpus_{N_DOCS}")
-ARROW_BATCH = "512"   # corpus pages are ~3 KB; 512 rows ≈ 1.5 MB batches
 
 
 def build_corpus() -> None:
@@ -415,8 +418,7 @@ def main() -> int:
         return 0
 
     build_corpus()
-    env = {**os.environ, "OCR_SPARK_ARROW_BATCH": ARROW_BATCH,
-           "SCALING_BENCH_REPEATS": "1"}
+    env = {**os.environ, "SCALING_BENCH_REPEATS": "1"}
 
     # Interleaved cycles: this host's throughput drifts +-20% on
     # minute scales (shared box), so levels measured minutes apart are

@@ -7,6 +7,9 @@ Modes (each runs in its own JVM via --measure-like child):
                  shuffle)
   full         - run_extraction as shipped (salt shuffle + kernel)
 
+Arrow batches run at the session's shipped caps; the probe's earlier
+runs exported a 512-row batch size.
+
 Usage: python scripts/scaling_probe.py            # all modes, p in {2,8}
        python scripts/scaling_probe.py --child MODE P DIR
 """
@@ -71,15 +74,13 @@ def main() -> int:
     if len(sys.argv) > 1 and sys.argv[1] == "--child":
         child(sys.argv[2], int(sys.argv[3]), sys.argv[4])
         return 0
-    env = {**os.environ, "OCR_SPARK_ARROW_BATCH": "512"}
     res: dict = {}
     # interleave: mode-major, level-minor back-to-back per mode
     for mode in ("passthrough", "noshuffle", "full"):
         for p in (2, 8):
             out = subprocess.run(
                 [sys.executable, __file__, "--child", mode, str(p), CORPUS],
-                capture_output=True, text=True, cwd=REPO, check=True,
-                env=env)
+                capture_output=True, text=True, cwd=REPO, check=True)
             line = [ln for ln in out.stdout.splitlines()
                     if ln.startswith("{")][-1]
             r = json.loads(line)

@@ -10,8 +10,10 @@ Usage (north-rule launch shape — the pure-Python core ships as a zip):
         submit.py --input /tmp/pages_tbl --work-dir /tmp/ocr_work \
                   --partitions 128
 
-On a real cluster only --master/--conf change; the job itself is
-partition-count/skew agnostic (explicit salting, SURVEY.md §4.2.1).
+On a real cluster only --master/--conf change: spark-submit's own
+settings configure the session (they override get_spark's defaults),
+and the job itself is partition-count/skew agnostic (explicit salting,
+SURVEY.md §4.2.1). ``--driver-memory`` sizes the driver heap.
 """
 
 from __future__ import annotations

@@ -106,8 +106,9 @@ def test_extract_router_is_narrow_map_and_covers_routes(spark):
 
 
 def test_router_boundary_same_route_on_both_surfaces(spark):
-    """The job's route_filter (route_for_html) and the published router
-    table threshold the SAME FEAT_ROUND-rounded densities. A page with
+    """The raw-html router (route_for_html, which the streaming
+    router_sink applies) and the published router table threshold the
+    SAME FEAT_ROUND-rounded densities. A page with
     1,000,001 visible chars, 350,000 of them anchor text, has a raw link
     density of 0.34999965: rounded it is 0.35, link_heavy on both
     surfaces. One anchor char fewer rounds to 0.349999 and extracts."""

@@ -115,3 +115,34 @@ def test_spark_submit_pyfiles_launch(spark, tmp_path):
     assert shim.current_snapshot_id(output_root(work)) is not None
     out = read_extracted(spark, work)
     assert out.filter("error IS NULL").count() > 0
+
+
+def test_spark_submit_flags_configure_the_session(tmp_path):
+    """spark-submit's own --master and --conf reach the session:
+    get_spark()'s defaults (local[*], 32 shuffle partitions, 2048-row
+    Arrow batches) yield to the launcher, so a cluster submit runs on
+    the cluster it names."""
+    spark_submit = shutil.which("spark-submit")
+    if spark_submit is None:
+        pytest.skip("spark-submit not on PATH")
+    zip_path = _make_zip(str(tmp_path / "ocr_spark.zip"))
+    probe = tmp_path / "probe.py"
+    probe.write_text(
+        "from ocr_spark.session import get_spark\n"
+        "spark = get_spark()\n"
+        "print(spark.sparkContext.master,\n"
+        "      spark.conf.get('spark.sql.shuffle.partitions'),\n"
+        "      spark.conf.get("
+        "'spark.sql.execution.arrow.maxRecordsPerBatch'))\n"
+        "spark.stop()\n")
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["PYSPARK_PYTHON"] = env["PYSPARK_DRIVER_PYTHON"] = sys.executable
+    proc = subprocess.run(
+        [spark_submit, "--master", "local[2]", "--py-files", zip_path,
+         "--conf", "spark.sql.shuffle.partitions=8",
+         "--conf", "spark.sql.execution.arrow.maxRecordsPerBatch=100",
+         str(probe)],
+        cwd=str(tmp_path), env=env, capture_output=True, text=True,
+        timeout=300)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert proc.stdout.split() == ["local[2]", "8", "100"]

@@ -867,63 +867,14 @@ def test_validation_job_gate(spark, pages_table, tmp_path):
         run_validation_job(spark, work, gate=True)
 
 
-def test_route_filter_drops_condemned_pages_only(spark, tmp_path):
-    """route_filter=True: the job drops EXACTLY the pages the
-    published pages_extract_router table condemns (link_heavy /
-    low_text) before the Arrow boundary — same expression, no drift —
-    and every surviving page's extracted text is byte-identical to
-    the unrouted run's."""
-    from ocr_spark.job import read_extracted, run_extraction_job
-    from ocr_spark.plans.extract_queries import pages_from_documents
-    from ocr_spark.plans.htmlfeat import pages_extract_router
-    from ocr_spark.sources import iceberg_shim as shim
-
-    sf = "/root/testdata/sf0.001"
-    in_root = str(tmp_path / "in")
-    shim.write_snapshot(pages_from_documents(spark, sf), in_root)
-
-    work_full = str(tmp_path / "work_full")
-    work_routed = str(tmp_path / "work_routed")
-    run_extraction_job(spark, in_root, work_full, partitions=8,
-                       big_partitions=1, waves=2)
-    run_extraction_job(spark, in_root, work_routed, partitions=8,
-                       big_partitions=1, waves=2, route_filter=True)
-
-    routes = {r.url: r.route
-              for r in pages_extract_router(spark, sf).collect()}
-    keep = {u for u, r in routes.items() if r in ("extract", "oversized")}
-    drop = set(routes) - keep
-    assert drop, "fixture must exercise the condemned routes"
-
-    full = {r.url: r.text for r in
-            read_extracted(spark, work_full).collect()}
-    routed = {r.url: r.text for r in
-              read_extracted(spark, work_routed).collect()}
-    assert set(routed) == keep
-    assert set(full) == set(routes)
-    for u in routed:
-        assert routed[u] == full[u]  # byte-identical survivors
-
-    # route census committed per snapshot: condemned pages are
-    # accounted, not silently vanished
-    import glob
-    import os as _os
-    census_dirs = glob.glob(_os.path.join(work_routed, "route_census",
-                                          "snapshot=*"))
-    assert len(census_dirs) == 1
-    census = {r.route: r.n_pages for r in
-              spark.read.parquet(census_dirs[0]).collect()}
-    from collections import Counter
-    assert census == dict(Counter(routes.values()))
-
-
 def test_committed_rerun_runs_no_spark_job(spark, tmp_path):
-    """A rerun of the route-filtered job over a fully committed
-    3-snapshot input finds no commit unit left: it reads no input
-    snapshot, so it runs no Spark job (none routes, censuses or scans
-    a committed snapshot) and leaves every route census file as it
-    was."""
-    from ocr_spark.job import read_extracted, run_extraction_job
+    """A rerun over a fully committed 3-snapshot input finds no commit
+    unit left: it reads no input snapshot, so it runs no Spark job
+    (none scans a committed snapshot) and leaves every manifest of the
+    output chain as it was."""
+    from ocr_spark.job import (
+        output_root, read_extracted, run_extraction_job,
+    )
     from ocr_spark.sources import iceberg_shim as shim
 
     root = str(tmp_path / "pages")
@@ -935,27 +886,23 @@ def test_committed_rerun_runs_no_spark_job(spark, tmp_path):
              for r in rows[15 * k:15 * (k + 1)]],
             "url string, warc_ts timestamp, html binary, text string, "
             "lang string"), root, snapshot_id=sid)
-    kw = dict(partitions=4, big_partitions=1, waves=2, route_filter=True)
+    kw = dict(partitions=4, big_partitions=1, waves=2)
     sc = spark.sparkContext
     tracker = sc.statusTracker()
 
-    def census_files() -> dict:
-        paths = [os.path.join(dp, fn) for dp, _dn, fns in
-                 os.walk(os.path.join(work, "route_census")) for fn in fns]
-        return {p: os.stat(p).st_mtime_ns for p in paths}
-
     try:
-        sc.setJobGroup("first_run", "route-filtered first run")
+        sc.setJobGroup("first_run", "first run")
         first = run_extraction_job(spark, root, work, **kw)
-        sc.setJobGroup("rerun", "route-filtered rerun")
-        before = census_files()
+        before = shim.chain_manifests(output_root(work))
+        sc.setJobGroup("rerun", "rerun")
         again = run_extraction_job(spark, root, work, **kw)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert first["snapshots_processed"] == 3
     assert tracker.getJobIdsForGroup("first_run")
-    assert len(before) >= 3 and census_files() == before
+    assert len(before) == len(first["output_snapshots"]) >= 3
+    assert shim.chain_manifests(output_root(work)) == before
     assert list(tracker.getJobIdsForGroup("rerun")) == []
     assert again["docs"] == 0 and again["buckets_processed"] == 0
     assert again["buckets_skipped"] == 3 * 64
