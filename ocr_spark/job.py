@@ -17,9 +17,10 @@ the checkpoint / lineage / metrics tables are exported from the record
 after the swap. Resume state is one fold over the published output
 chain's manifests, and the units it leaves are all a run does — so a
 first run, an increment after an append and a resume after a crash are
-one job, and none reprocesses a committed bucket. This is the
-cluster-scale version of the reference service's processed-files dedup
-sets (service/api/main.py:21-48).
+one job, and none reprocesses a committed bucket. A streamed
+micro-batch is a unit of the same chain, committed by the same step
+(``commit_unit``). This is the cluster-scale version of the reference
+service's processed-files dedup sets (service/api/main.py:21-48).
 """
 
 from __future__ import annotations
@@ -113,15 +114,38 @@ def _snapshot_pages(spark: SparkSession, m: dict,
     return pages
 
 
+def commit_unit(spark: SparkSession, rows: DataFrame, work_dir: str,
+                out_sid: str, *, input_sid: str, input_files: list[str],
+                run_id: str, buckets: list[int], n_buckets: int,
+                big_threshold: int, skew_salt: int) -> dict:
+    """One commit unit into ``work_dir``'s output chain: stage ``rows``
+    as snapshot ``out_sid``, write the commit record from the staged
+    rows into its manifest, publish (the commit point), then export the
+    record's table rows. A crash before the swap leaves garbage whose
+    unit re-runs; one after it is repaired by the next ``_resume_state``.
+    Called per batch wave and per streamed micro-batch (streaming/
+    ingest.py). Returns the published manifest."""
+    root = output_root(work_dir)
+    shim.prepare_snapshot(rows, root, snapshot_id=out_sid)
+    record = commit_bucket_bookkeeping(
+        shim.read_snapshot(spark, root, out_sid,
+                           schema=EXTRACT_RESULT_SCHEMA),
+        input_sid=input_sid, input_files=input_files, run_id=run_id,
+        buckets=buckets, n_buckets=n_buckets,
+        big_threshold=big_threshold, skew_salt=skew_salt)
+    manifest = shim.amend_manifest(root, out_sid, record)
+    shim.publish_snapshot(root, out_sid)
+    export_wave_tables(work_dir, manifest)
+    return manifest
+
+
 def run_extraction_job(spark: SparkSession, input_table_root: str,
                        work_dir: str, partitions: int = 128,
                        big_partitions: int = 8,
                        big_threshold: int = DEFAULT_BIG_THRESHOLD,
                        n_buckets: int = DEFAULT_BUCKETS,
                        waves: int = 4,
-                       respect_robots: bool = False,
-                       fail_after_waves: int | None = None,
-                       fail_point: str = "after_wave") -> dict:
+                       respect_robots: bool = False) -> dict:
     """Run (or resume) extraction of the input table's full logical
     content at CURRENT: every snapshot of the chain, each keyed on its
     own sid. An increment is the same call — the resume fold over the
@@ -132,12 +156,11 @@ def run_extraction_job(spark: SparkSession, input_table_root: str,
     rerun over a fully committed chain runs no Spark job. A snapshot
     with no unit left is never read, filtered or counted.
 
-    Each unit is one wave: it stages its data and manifest, writes its
-    commit record into the still-unpublished manifest, publishes (the
-    commit point), then exports the record's table rows. A crash before
-    the swap leaves unreachable garbage whose buckets re-run; a crash
-    after it is repaired at the next job start. One run_id is shared by
-    every wave of the run.
+    Each unit is one wave, committed by ``commit_unit`` (stage, commit
+    record, publish, table export). One run_id is shared by every wave
+    of the run. Streamed micro-batches commit into the same chain
+    through the same step (streaming/ingest.py); until publish is a
+    compare-and-swap, run one writer per work dir at a time.
 
     ``respect_robots=True`` drops pages whose meta-robots directive
     contains ``noindex`` BEFORE the Arrow boundary (a narrow JVM regexp
@@ -146,13 +169,6 @@ def run_extraction_job(spark: SparkSession, input_table_root: str,
     kernel CPU. Default off: the driver-contract corpora are extracted
     in full, and the robots signal stays queryable via
     plans/webops.py::pages_robots_filter.
-
-    ``fail_after_waves``/``fail_point`` are test hooks simulating a
-    mid-job crash for the resume tests (SURVEY.md §5.2.5): raise after N
-    waves of this run, either ``after_stage`` (data and manifest staged,
-    nothing published), ``after_publish`` (pointer swapped, table export
-    skipped → exercises the repair) or ``after_wave`` (full commit
-    done).
 
     Returns a summary dict: output snapshot ids, ``buckets_skipped``
     (committed buckets over the whole input chain), ``buckets_processed``
@@ -176,13 +192,6 @@ def run_extraction_job(spark: SparkSession, input_table_root: str,
     if respect_robots:
         summary["respect_robots"] = True
 
-    def crash_at(point: str, w: int) -> None:
-        if fail_after_waves is not None and (w + 1) >= fail_after_waves \
-                and fail_point == point:
-            raise RuntimeError(
-                f"injected failure {point.replace('_', ' ')}, wave {w}")
-
-    root = output_root(work_dir)
     for w, (m, group) in enumerate(units):
         sid = m["snapshot_id"]
         if w == 0 or units[w - 1][0] is not m:
@@ -191,24 +200,13 @@ def run_extraction_job(spark: SparkSession, input_table_root: str,
             pages.filter(url_bucket(n_buckets).isin(group)),
             partitions=partitions, big_partitions=big_partitions,
             big_threshold=big_threshold, n_buckets=n_buckets)
-        out_sid = shim.prepare_snapshot(
-            extracted, root, snapshot_id=f"{sid[:8]}-{run_id}-w{w}")
-        crash_at("after_stage", w)
-
-        record = commit_bucket_bookkeeping(
-            shim.read_snapshot(spark, root, out_sid,
-                               schema=EXTRACT_RESULT_SCHEMA),
+        manifest = commit_unit(
+            spark, extracted, work_dir, f"{sid[:8]}-{run_id}-w{w}",
             input_sid=sid, input_files=[m["data_dir"]], run_id=run_id,
             buckets=group, n_buckets=n_buckets,
             big_threshold=big_threshold, skew_salt=big_partitions)
-        manifest = shim.amend_manifest(root, out_sid, record)
-        shim.publish_snapshot(root, out_sid)
-        summary["output_snapshots"].append(out_sid)
-        summary["docs"] += sum(record["bucket_stats"]["docs"])
-        crash_at("after_publish", w)
-
-        export_wave_tables(work_dir, manifest)
-        crash_at("after_wave", w)
+        summary["output_snapshots"].append(manifest["snapshot_id"])
+        summary["docs"] += sum(manifest["bucket_stats"]["docs"])
     return summary
 
 
@@ -957,11 +955,10 @@ def run_sampling_job(spark: SparkSession, work_dir: str, *,
 
 
 def read_extracted(spark: SparkSession, work_dir: str) -> DataFrame:
-    """All committed extraction output across snapshots. The union is
-    exact: a bucket of an input snapshot is committed only by the
-    pointer swap that publishes its data, and a committed (snapshot,
-    bucket) unit is never extracted again, so the output snapshots'
-    documents are disjoint by construction."""
+    """All committed extraction output, batch waves and streamed
+    micro-batches alike. The union is exact: a unit is committed only by
+    the pointer swap that publishes its data and never extracted again.
+    A url captured by two units (a re-crawl) appears twice."""
     return _scan_extracted(
         spark, work_dir, shim.chain_manifests(output_root(work_dir)))
 

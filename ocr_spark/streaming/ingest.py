@@ -9,9 +9,9 @@ ingest would use:
 
   * ``stream_extract`` — a file-source stream over the pages table
     driven with ``Trigger.AvailableNow``: each invocation processes
-    exactly the files that arrived since the last run, exactly once,
-    tracked by Spark's own streaming checkpoint (offsets + commits).
-    The transformation is the batch job's own Python boundary,
+    exactly the files that arrived since the last run, tracked by
+    Spark's own streaming checkpoint (offsets + commits). The
+    transformation is the batch job's own Python boundary,
     ``extract_pages`` (one mapInArrow stage, same ``bucket`` column),
     without its salted repartition — streaming micro-batches are
     already bounded, so the explicit two-level salting of the batch job
@@ -28,19 +28,28 @@ ingest would use:
     gate, router, sketch stores, ...) that decide through the batch
     job's and the oracle-checked queries' own kernels, never a copy.
 
-Every ``foreachBatch`` sink writes its micro-batch under a directory
-keyed by the batch id (``batch_id=<id>`` or ``batch=<id>``) with
-overwrite (``_write_batch``): Spark re-runs an epoch whose commit was
-not logged with the same batch id, and the re-run replaces that
-directory with identical content — exactly-once per micro-batch.
-All sinks here are parquet, text or memory; none writes into the
-extraction output chain, so the batch job's resume fold and curation
-do not see streamed output.
+A micro-batch is a commit unit of the extraction output chain. Every
+sink that writes extraction rows (``stream_extract``,
+``stream_extract_dedup``, the near-dup, dead-letter, validation-gate
+and router sinks) takes the job's ``work_dir`` and commits its kept
+rows through the batch job's commit step (``job.commit_unit``), so the
+job's tables, ``read_extracted``, curation, validation, stats and
+export see streamed output. Exactly-once on replay is the chain fold:
+Spark re-runs an epoch whose commit was not logged with the same batch
+id, and a batch whose unit the fold holds commits nothing. Until
+publish is a compare-and-swap, run one writer per work dir at a time
+(a stream is a second writer beside the batch job).
+
+The other sinks, and the extraction sinks' side outputs (signature
+store, quarantine, gate report, route census), write each micro-batch
+under ``<key>=<batch id>`` with overwrite (``_write_batch``): a re-run
+epoch replaces its own directory with identical content.
 """
 
 from __future__ import annotations
 
 import os
+import uuid
 from collections.abc import Callable, Iterator
 from typing import Any
 
@@ -49,7 +58,11 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from ocr_spark.operators.extraction import extract_pages
+from ocr_spark.job import _resume_state, commit_unit
+from ocr_spark.operators.extraction import (
+    DEFAULT_BIG_THRESHOLD, DEFAULT_BUCKETS, EXTRACT_RESULT_SCHEMA,
+    extract_pages,
+)
 from ocr_spark.sources import PAGES_SCHEMA
 
 HOST_STATE_SCHEMA = StructType([
@@ -88,6 +101,15 @@ def _drain(frame: DataFrame, sink: Callable[[DataFrame, int], None],
             .start())
 
 
+def _append_files(frame: DataFrame, fmt: str, path: str,
+                  checkpoint_dir: str) -> Any:
+    """Drain ``frame`` into Spark's ``fmt`` file sink at ``path``
+    (AvailableNow, append): its manifest log is natively exactly-once."""
+    return (frame.writeStream.format(fmt).option("path", path)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True).start())
+
+
 def _write_batch(df: DataFrame, root: str, key: str, batch_id: int) -> None:
     """Commit one micro-batch's rows as ``root/<key>=<batch_id>`` with
     overwrite: a replayed epoch replaces its own directory."""
@@ -95,30 +117,70 @@ def _write_batch(df: DataFrame, root: str, key: str, batch_id: int) -> None:
         os.path.join(root, f"{key}={batch_id}"))
 
 
-def stream_extract(spark: SparkSession, input_dir: str, output_dir: str,
-                   checkpoint_dir: str) -> Any:
-    """Incremental extraction: AvailableNow drains all pending files in
-    bounded micro-batches, then stops — rerunning after new files land
-    processes ONLY the new files (exactly-once via the streaming
-    checkpoint). Returns the query handle (caller awaits termination)."""
-    pages = read_pages_stream(spark, input_dir)
-    extracted = extract_pages(pages)
+Commit = Callable[[DataFrame], None]
 
-    return (extracted.writeStream
-            .format("parquet")
-            .option("path", output_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .outputMode("append")
-            .start())
+
+def _chain_sink(work_dir: str, body: Callable[[DataFrame, int, Commit], None]
+                ) -> Callable[[DataFrame, int], None]:
+    """A foreachBatch sink committing each micro-batch into ``work_dir``'s
+    extraction output chain as the unit ``stream:<query id>:<batch id>``.
+    ``body(batch_df, batch_id, commit)`` writes the batch's side outputs,
+    then calls ``commit`` with the rows it keeps (or never).
+
+    The query id is the one Spark keeps in the streaming checkpoint: the
+    same across restarts of one query, new for a new checkpoint, so a
+    fresh checkpoint at an old path never inherits committed keys. First
+    ``_resume_state`` repairs skipped table exports, refuses a chain
+    recorded under another ``n_buckets`` and folds the chain: a batch
+    whose key the fold holds (a replayed epoch, compacted or not) runs
+    no Spark job. The record holds the whole bucket range, ``skew_salt``
+    0 and the micro-batch's input files; the snapshot id
+    ``stream-<query id>-b<batch id>`` is deterministic, so a re-stage
+    after a crash before publish overwrites its own staged dir."""
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        query = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
+        if query is None:
+            raise RuntimeError("a chain sink runs inside a streaming query")
+        unit = f"stream:{query}:{batch_id}"
+        if unit in _resume_state(work_dir, DEFAULT_BUCKETS)[0]:
+            return
+        files = sorted(batch_df.inputFiles())
+
+        def commit(rows: DataFrame) -> None:
+            commit_unit(
+                spark, rows.select(*EXTRACT_RESULT_SCHEMA.fieldNames()),
+                work_dir, f"stream-{query}-b{batch_id}", input_sid=unit,
+                input_files=files, run_id=uuid.uuid4().hex[:12],
+                buckets=list(range(DEFAULT_BUCKETS)), skew_salt=0,
+                n_buckets=DEFAULT_BUCKETS, big_threshold=DEFAULT_BIG_THRESHOLD)
+
+        body(batch_df, batch_id, commit)
+
+    return sink
+
+
+def stream_extract(spark: SparkSession, input_dir: str, work_dir: str,
+                   checkpoint_dir: str) -> Any:
+    """Incremental extraction into ``work_dir``'s extraction output
+    chain: AvailableNow drains all pending files in bounded
+    micro-batches, then stops; each micro-batch commits as one unit, so
+    it lands in the job's checkpoint, lineage and metrics tables. A
+    rerun processes ONLY new files, and a replayed epoch is skipped by
+    the chain fold. Returns the query handle (caller awaits it)."""
+    return _drain(extract_pages(read_pages_stream(spark, input_dir)),
+                  _chain_sink(work_dir, lambda df, _b, commit: commit(df)),
+                  checkpoint_dir)
 
 
 def stream_extract_dedup(spark: SparkSession, input_dir: str,
-                         output_dir: str, checkpoint_dir: str,
+                         work_dir: str, checkpoint_dir: str,
                          dedup_window: str = "10 minutes") -> Any:
     """``stream_extract`` with a streaming re-crawl dedup stage: a url
     seen again within ``dedup_window`` of event time (warc_ts) is
-    dropped BEFORE the expensive Python extraction kernel runs.
+    dropped BEFORE the expensive Python extraction kernel runs; the
+    survivors commit into ``work_dir``'s chain, one unit per
+    micro-batch, exactly once by the chain fold.
 
     ``dropDuplicatesWithinWatermark`` keys state by url and — unlike
     plain ``dropDuplicates`` on a streaming frame, whose state grows
@@ -127,71 +189,16 @@ def stream_extract_dedup(spark: SparkSession, input_dir: str,
     the stream runs. That bounded-state property is the 100 TB
     requirement: a continuous crawl ingests the same hot urls
     repeatedly, and unbounded url state would OOM the state store in
-    days. Duplicates arriving FARTHER apart than the window are handled
-    by the batch layer's exact dedup (plans/queries.py
-    docs_exact_dedup / docs_dedup_keepers) — the classic
-    streaming-approximate + batch-exact split."""
-    pages = read_pages_stream(spark, input_dir)
-    deduped = (pages
+    days. A url re-captured FARTHER apart than the window reaches the
+    chain twice, as a re-crawl committed by a later batch snapshot does:
+    the latest-capture-wins rule the chain still lacks (ROADMAP
+    direction 1) is what will retract the older row."""
+    deduped = (read_pages_stream(spark, input_dir)
                .withWatermark("warc_ts", dedup_window)
                .dropDuplicatesWithinWatermark(["url"]))
-    extracted = extract_pages(deduped)
-
-    return (extracted.writeStream
-            .format("parquet")
-            .option("path", output_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .outputMode("append")
-            .start())
-
-
-def stream_extract_with_lineage(spark: SparkSession, input_dir: str,
-                                output_dir: str, lineage_dir: str,
-                                checkpoint_dir: str) -> Any:
-    """``stream_extract`` plus per-micro-batch lineage rows — parity
-    with the batch job's checkpoint/lineage tables (batch_id, doc/error
-    counts, bytes, wall time). Both the data and the lineage row are
-    written under ``batch_id=<id>`` directories with mode=overwrite, so
-    a batch replayed after a crash overwrites its own output
-    idempotently (exactly-once at the batch_id granularity)."""
-    import time as _time
-
-    from pyspark.sql.types import (
-        DoubleType as _D, LongType as _L, StructField as _F,
-        StructType as _S,
-    )
-
-    pages = read_pages_stream(spark, input_dir)
-    extracted = extract_pages(pages)
-
-    # batch_id lives in the partition directory name, not the data —
-    # partition discovery restores it on read without a column clash
-    lineage_schema = _S([
-        _F("docs", _L()), _F("errors", _L()),
-        _F("bytes_in", _L()), _F("wall_sec", _D()),
-    ])
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        t0 = _time.perf_counter()
-        batch_df.persist()
-        try:
-            _write_batch(batch_df, output_dir, "batch_id", batch_id)
-            stats = batch_df.agg(
-                F.count(F.lit(1)).alias("docs"),
-                F.count("error").alias("errors"),
-                F.coalesce(F.sum("bytes_in"), F.lit(0)).alias("bytes_in"),
-            ).collect()[0]
-            row = [(stats["docs"], stats["errors"],
-                    int(stats["bytes_in"]),
-                    round(_time.perf_counter() - t0, 3))]
-            _write_batch(batch_df.sparkSession.createDataFrame(
-                row, lineage_schema).coalesce(1),
-                lineage_dir, "batch_id", batch_id)
-        finally:
-            batch_df.unpersist()
-
-    return _drain(extracted, sink, checkpoint_dir)
+    return _drain(extract_pages(deduped),
+                  _chain_sink(work_dir, lambda df, _b, commit: commit(df)),
+                  checkpoint_dir)
 
 
 def stream_page_metrics(spark: SparkSession, input_dir: str,
@@ -338,7 +345,7 @@ def stream_host_counters(spark: SparkSession, input_dir: str,
 
 
 def stream_extract_near_dup(spark: SparkSession, input_dir: str,
-                            output_dir: str, sigstore_dir: str,
+                            work_dir: str, sigstore_dir: str,
                             checkpoint_dir: str,
                             compact_every: int = 0) -> Any:
     """Streaming NEAR-dup dedup against an accumulating signature
@@ -347,14 +354,12 @@ def stream_extract_near_dup(spark: SparkSession, input_dir: str,
     pages, MinHash-signs the extracted text, LSH-probes the signatures
     of EVERYTHING ACCEPTED SO FAR (the parquet signature store), drops
     arrivals whose best signature-overlap Jaccard estimate clears
-    NEAR_DUP_JACCARD, and commits the survivors' output rows AND
-    signatures under batch_id-keyed partitions with overwrite — the
-    canonical foreachBatch exactly-once recipe: Spark re-delivers a
-    crashed epoch with the SAME batch_id, the overwrite replaces the
-    partial partition with identical content, and the store probe
-    excludes the current batch's own partition so a re-delivered batch
-    never collides with its own half-committed signatures
-    (test_stream_near_dup_sink_idempotent pins both halves).
+    NEAR_DUP_JACCARD, stores the survivors' signatures under
+    ``batch=<id>`` with overwrite, then commits their rows into
+    ``work_dir``'s extraction output chain. A re-delivered epoch whose
+    unit is committed is skipped by the chain fold; otherwise the store
+    probe excludes the batch's own partition, so it never collides with
+    its own half-committed signatures (test_stream_near_dup_sink_idempotent).
 
     Exact-url revisits are handled upstream by
     dropDuplicatesWithinWatermark (stream_extract_dedup); THIS stage
@@ -370,12 +375,12 @@ def stream_extract_near_dup(spark: SparkSession, input_dir: str,
     first (cheapest work wins)."""
     pages = read_pages_stream(spark, input_dir)
     return _drain(extract_pages(pages),
-                  near_dup_sink(output_dir, sigstore_dir,
+                  near_dup_sink(work_dir, sigstore_dir,
                                 compact_every=compact_every),
                   checkpoint_dir)
 
 
-def near_dup_sink(output_dir: str, sigstore_dir: str,
+def near_dup_sink(work_dir: str, sigstore_dir: str,
                   compact_every: int = 0):
     """The foreachBatch body of stream_extract_near_dup, exposed so the
     exactly-once property (same batch_id twice → identical output) is
@@ -387,19 +392,19 @@ def near_dup_sink(output_dir: str, sigstore_dir: str,
     ``compact_every`` > 0 runs the signature-store small-files
     maintenance (compact_near_dup_store) inline every N batches, after
     the batch's own commits, with ``keep_last=1`` so the partition
-    just written for THIS batch_id is never folded into ``batch=-1``
-    — a crash-replay of the triggering epoch must still find its own
-    signatures excluded by the ``batch != batch_id`` probe filter, and
-    folding them into the consolidated partition would make the replay
-    near-dup-collide with itself. The trigger predicate depends only
-    on batch_id, so replays re-run (idempotent) compaction
-    deterministically."""
+    just written for THIS batch_id is never folded into ``batch=-1``,
+    where the ``batch != batch_id`` probe filter could not exclude it.
+    The trigger depends only on batch_id; a committed epoch's replay is
+    skipped by the chain fold and leaves the fold to the next trigger.
+    The survivors' rows commit into ``work_dir``'s chain through
+    ``_chain_sink``, after their signatures are stored."""
     from ocr_spark.plans.dataops import (
         NEAR_DUP_JACCARD, lsh_bands_frame, lsh_pairs_frame,
         minhash_sigs_frame, sig_overlap_est,
     )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    def body(batch_df: DataFrame, batch_id: int,
+             commit: Commit) -> None:
         bdf = batch_df.filter(
             F.col("error").isNull() & F.col("text").isNotNull()
             & (F.col("text") != "")).persist()
@@ -437,17 +442,16 @@ def near_dup_sink(output_dir: str, sigstore_dir: str,
                                        >= NEAR_DUP_JACCARD)
                                .select("url").distinct())
                 survivors = survivors.join(store_drops, "url", "left_anti")
-            _write_batch(bdf.join(survivors.select("url"), "url"),
-                         output_dir, "batch", batch_id)
             _write_batch(survivors.select("url", "minvec"),
                          sigstore_dir, "batch", batch_id)
+            commit(bdf.join(survivors.select("url"), "url"))
             if compact_every > 0 and (batch_id + 1) % compact_every == 0:
                 compact_near_dup_store(spark_l, sigstore_dir, keep_last=1)
         finally:
             sigs.unpersist()
             bdf.unpersist()
 
-    return sink
+    return _chain_sink(work_dir, body)
 
 
 def stream_wet_export(spark: SparkSession, input_dir: str,
@@ -481,13 +485,8 @@ def stream_wet_export(spark: SparkSession, input_dir: str,
             F.lit("Content-Type: text/plain"),
             F.concat(F.lit("Content-Length: "), clen.cast("string"))),
         F.lit("\r\n\r\n"), F.col("text"))
-    return (ok.select(record.alias("value"))
-            .writeStream.format("text")
-            .option("path", output_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .outputMode("append")
-            .start())
+    return _append_files(ok.select(record.alias("value")), "text",
+                         output_dir, checkpoint_dir)
 
 
 def stream_cdx_index(spark: SparkSession, input_dir: str,
@@ -528,13 +527,9 @@ def stream_wat_export(spark: SparkSession, input_dir: str,
     from ocr_spark.plans.indexing import wat_columns
 
     pages = read_pages_stream(spark, input_dir)
-    return (wat_columns(pages).select(F.col("wat_record").alias("value"))
-            .writeStream.format("text")
-            .option("path", output_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .outputMode("append")
-            .start())
+    return _append_files(
+        wat_columns(pages).select(F.col("wat_record").alias("value")),
+        "text", output_dir, checkpoint_dir)
 
 
 def stream_quality_gate(spark: SparkSession, input_dir: str,
@@ -562,12 +557,7 @@ def stream_quality_gate(spark: SparkSession, input_dir: str,
                  .withColumn("lang", langid_pred_col())
                  .select("url", "text", "lang"))
     out = gopher_gate_frame(with_lang, "url", carry=("lang",))
-    return (out.writeStream.format("parquet")
-            .option("path", output_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .outputMode("append")
-            .start())
+    return _append_files(out, "parquet", output_dir, checkpoint_dir)
 
 
 PSI_FLAG = 0.25   # the standard PSI rule of thumb: >0.25 = investigate
@@ -652,73 +642,75 @@ def dlq_reason_col() -> Column:
     return tag
 
 
-def dlq_sink(output_dir: str, quarantine_dir: str):
+def dlq_sink(work_dir: str, quarantine_dir: str):
     """foreachBatch body of stream_extract_dlq, exposed so exactly-once
     (same batch_id twice → identical output AND quarantine) is directly
-    testable. Clean rows land in ``output_dir``; violating rows are NOT
-    dropped — they land in ``quarantine_dir`` tagged with the first
-    failing constraint (the dead-letter-queue pattern: a malformed page
-    must stay inspectable and replayable, silently vanishing rows are
-    how crawl pipelines lose corpus mass unaccounted). Both sides are
-    batch_id-keyed overwrites, so epoch re-delivery replaces partitions
-    with identical content instead of appending duplicates."""
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    testable. Clean rows commit into ``work_dir``'s extraction output
+    chain (``_chain_sink``); violating rows are NOT dropped — they land
+    in ``quarantine_dir`` tagged with the first failing constraint (the
+    dead-letter-queue pattern: a malformed page must stay inspectable
+    and replayable, silently vanishing rows are how crawl pipelines lose
+    corpus mass unaccounted). The quarantine is a batch_id-keyed
+    overwrite written before the commit, and a re-delivered epoch whose
+    unit is committed is skipped by the chain fold, so replay never
+    appends duplicates on either side."""
+    def body(batch_df: DataFrame, batch_id: int,
+             commit: Commit) -> None:
         tagged = batch_df.withColumn("dlq_reason", dlq_reason_col()) \
             .persist()
         try:
-            _write_batch(tagged.filter(F.col("dlq_reason").isNull())
-                         .drop("dlq_reason"), output_dir, "batch", batch_id)
             _write_batch(tagged.filter(F.col("dlq_reason").isNotNull()),
                          quarantine_dir, "batch", batch_id)
+            commit(tagged.filter(F.col("dlq_reason").isNull()))
         finally:
             tagged.unpersist()
 
-    return sink
+    return _chain_sink(work_dir, body)
 
 
 def stream_extract_dlq(spark: SparkSession, input_dir: str,
-                       output_dir: str, quarantine_dir: str,
+                       work_dir: str, quarantine_dir: str,
                        checkpoint_dir: str) -> Any:
     """Incremental extraction with a dead-letter queue: every
     micro-batch extracts, then routes rows through the shared
-    row-level constraint classifier — clean rows to the output table,
-    violating rows (extract errors, empty text, missing blocks, bad
-    byte accounting) to the quarantine table with their reason.
-    Exactly-once on both sides via batch_id-keyed overwrite commits."""
+    row-level constraint classifier — clean rows into ``work_dir``'s
+    extraction output chain, violating rows (extract errors, empty text,
+    missing blocks, bad byte accounting) to the quarantine table with
+    their reason. Exactly-once by the chain fold on the output side and
+    by batch_id-keyed overwrite on the quarantine side."""
     pages = read_pages_stream(spark, input_dir)
     return _drain(extract_pages(pages),
-                  dlq_sink(output_dir, quarantine_dir), checkpoint_dir)
+                  dlq_sink(work_dir, quarantine_dir), checkpoint_dir)
 
 
-def validation_gate_sink(output_dir: str, lineage_dir: str,
+def validation_gate_sink(work_dir: str, report_dir: str,
                          max_error_frac: float | None = None):
     """foreachBatch body of stream_extract_validated: run the batch
     job's FULL Deequ-style constraint suite (job.constraint_suite —
     literally the same function run_validation_job commits reports
     from) over each micro-batch, with a FAIL-THE-BATCH policy: a
-    batch with any violated constraint is NOT committed to the output
-    table at all (vs dlq_sink's row routing) — its rows stay
-    replayable at the source, and the gate decision itself is
-    lineage: every batch writes a per-constraint report row set under
-    ``lineage_dir/batch_id=<id>`` with a ``batch_committed`` flag.
+    batch with any violated constraint is NOT committed to the
+    extraction output chain at all (vs dlq_sink's row routing) — its
+    rows stay replayable at the source, and the gate decision itself is
+    kept: every batch writes a per-constraint report row set under
+    ``report_dir/batch_id=<id>`` with a ``batch_committed`` flag, before
+    a passing batch commits into ``work_dir``'s chain (``_chain_sink``).
 
-    Exactly-once: both sides are batch_id-keyed overwrites and the
-    suite is deterministic, so crash re-delivery of an epoch
-    re-evaluates to the identical verdict and replaces both the data
-    partition (if committed) and the lineage partition with identical
-    content."""
+    Exactly-once: the suite is deterministic, so crash re-delivery of an
+    uncommitted epoch re-evaluates to the identical verdict and replaces
+    its report partition with identical content; an epoch whose unit is
+    committed is skipped by the chain fold."""
     from ocr_spark.job import VALIDATION_MAX_ERROR_FRAC, constraint_suite
 
     frac = (VALIDATION_MAX_ERROR_FRAC
             if max_error_frac is None else max_error_frac)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    def body(batch_df: DataFrame, batch_id: int,
+             commit: Commit) -> None:
         batch_df.persist()
         try:
             constraints = constraint_suite(batch_df, frac)
             failed = {n: int(v) for n, _c, v in constraints if v}
-            if not failed:
-                _write_batch(batch_df, output_dir, "batch_id", batch_id)
             rows = [(name, int(checked), int(viol), viol == 0,
                      not failed)
                     for name, checked, viol in constraints]
@@ -726,59 +718,63 @@ def validation_gate_sink(output_dir: str, lineage_dir: str,
                 rows, "constraint string, checked long, "
                       "violations long, passed boolean, "
                       "batch_committed boolean").coalesce(1),
-                lineage_dir, "batch_id", batch_id)
+                report_dir, "batch_id", batch_id)
+            if not failed:
+                commit(batch_df)
         finally:
             batch_df.unpersist()
 
-    return sink
+    return _chain_sink(work_dir, body)
 
 
 def stream_extract_validated(spark: SparkSession, input_dir: str,
-                             output_dir: str, lineage_dir: str,
+                             work_dir: str, report_dir: str,
                              checkpoint_dir: str,
                              max_error_frac: float | None = None) -> Any:
     """Incremental extraction behind the promotion gate: every
     micro-batch extracts, then the batch validation job's constraint
-    suite decides whether the WHOLE batch commits (round-4 verdict
-    #6 — the streaming twin of run_validation_job(gate=True), closing
-    the loop that dlq_sink's per-row routing leaves open: a
-    systemically bad batch must not promote even one row). Gate
-    verdicts land in the lineage table either way; exactly-once on
-    both sides via batch_id-keyed overwrite commits.
+    suite decides whether the WHOLE batch commits into ``work_dir``'s
+    extraction output chain (round-4 verdict #6 — the streaming twin of
+    run_validation_job(gate=True), closing the loop that dlq_sink's
+    per-row routing leaves open: a systemically bad batch must not
+    promote even one row). Gate verdicts land in the report table
+    either way; exactly-once by the chain fold and the report's
+    batch_id-keyed overwrite.
 
     The suite sees one micro-batch at a time, so ``url_unique`` holds
     per batch only: a url arriving in two different batches passes both
-    gates. Uniqueness across batches is checked by the same suite run
-    over the accumulated output, as ``job.run_validation_job`` does for
-    the batch table: ``constraint_suite(spark.read.parquet(output_dir),
-    frac)`` counts every url committed by any batch."""
+    gates. Every committed batch is a unit of the work dir's chain, so
+    ``job.run_validation_job(spark, work_dir)`` checks ``url_unique``
+    across micro-batches (and batch waves) alike."""
     pages = read_pages_stream(spark, input_dir)
     return _drain(extract_pages(pages),
-                  validation_gate_sink(output_dir, lineage_dir,
+                  validation_gate_sink(work_dir, report_dir,
                                        max_error_frac),
                   checkpoint_dir)
 
 
-def router_sink(output_dir: str, lineage_dir: str):
+def router_sink(work_dir: str, census_dir: str):
     """foreachBatch body of stream_extract_routed: apply the published
     pre-extraction router (plans/htmlfeat.py::route_for_html — the
     route kernel the pages_extract_router query table also evaluates,
     so the two surfaces cannot drift) to each micro-batch BEFORE
     extraction: only
     'extract' and 'oversized' pages proceed through the kernel and
-    commit; condemned pages ('link_heavy' / 'low_text') are not
-    extracted at all — the whole point: at crawl scale the router
+    commit into ``work_dir``'s extraction output chain
+    (``_chain_sink``); condemned pages ('link_heavy' / 'low_text') are
+    not extracted at all — the whole point: at crawl scale the router
     must refuse to pay Arrow + Python for pages a JVM regexp already
-    condemned — and their counts land in a per-batch route-census
-    lineage row so corpus mass stays accounted (the dlq_sink
-    nothing-silently-vanishes discipline, at the routing stage).
+    condemned — and their counts land in a per-batch route census so
+    corpus mass stays accounted (the dlq_sink nothing-silently-vanishes
+    discipline, at the routing stage).
 
-    Exactly-once: extraction output and lineage are batch_id-keyed
-    overwrites; the router expression is deterministic, so epoch
-    re-delivery reproduces both partitions byte-identically."""
+    Exactly-once: the census is a batch_id-keyed overwrite written
+    before the commit, the router expression is deterministic, and an
+    epoch whose unit is committed is skipped by the chain fold."""
     from ocr_spark.plans.htmlfeat import route_for_html
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    def body(batch_df: DataFrame, batch_id: int,
+             commit: Commit) -> None:
         routed = batch_df.withColumn(
             "route", route_for_html(F.col("html"))).persist()
         try:
@@ -786,27 +782,26 @@ def router_sink(output_dir: str, lineage_dir: str):
                       .agg(F.count("*").cast("long").alias("n_pages"),
                            F.sum(F.length("html")).cast("long")
                            .alias("bytes_in")))
-            keep = routed.filter(F.col("route")
-                                 .isin("extract", "oversized"))
-            _write_batch(extract_pages(keep), output_dir, "batch_id",
+            _write_batch(census.coalesce(1), census_dir, "batch_id",
                          batch_id)
-            _write_batch(census.coalesce(1), lineage_dir, "batch_id",
-                         batch_id)
+            commit(extract_pages(routed.filter(
+                F.col("route").isin("extract", "oversized"))))
         finally:
             routed.unpersist()
 
-    return sink
+    return _chain_sink(work_dir, body)
 
 
 def stream_extract_routed(spark: SparkSession, input_dir: str,
-                          output_dir: str, lineage_dir: str,
+                          work_dir: str, census_dir: str,
                           checkpoint_dir: str) -> Any:
     """Incremental extraction behind the pre-extraction router, with
-    the per-batch route census committed as lineage. Note the routing
-    runs INSIDE foreachBatch so the census and the kept-set are
-    computed from the same epoch's rows under one persist."""
+    the per-batch route census written beside the extraction output
+    chain. Note the routing runs INSIDE foreachBatch so the census and
+    the kept-set are computed from the same epoch's rows under one
+    persist."""
     return _drain(read_pages_stream(spark, input_dir),
-                  router_sink(output_dir, lineage_dir), checkpoint_dir)
+                  router_sink(work_dir, census_dir), checkpoint_dir)
 
 
 def _stream_sketch(spark: SparkSession, input_dir: str, store_dir: str,

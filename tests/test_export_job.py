@@ -144,7 +144,7 @@ def test_submit_cli_export_chain(spark, tmp_path):
     assert summary["export"]["docs"] == summary["curation"]["docs_kept"]
 
 
-def test_crash_resume_then_export_matches_clean_run(spark, tmp_path):
+def test_crash_resume_then_export_matches_clean_run(spark, tmp_path, crash):
     """Full-chain crash safety: extraction killed mid-job (injected
     after wave 1), resumed, then curated and exported — the export's
     shard manifest must be IDENTICAL to a clean never-crashed run over
@@ -157,9 +157,10 @@ def test_crash_resume_then_export_matches_clean_run(spark, tmp_path):
     shim.write_snapshot(pages, input_root)
 
     crashed = str(tmp_path / "crashed")
-    with pytest.raises(RuntimeError, match="injected failure"):
+    with crash("after_wave", 1), \
+            pytest.raises(RuntimeError, match="injected failure"):
         run_extraction_job(spark, input_root, crashed, partitions=8,
-                           big_partitions=1, waves=3, fail_after_waves=1)
+                           big_partitions=1, waves=3)
     run_extraction_job(spark, input_root, crashed, partitions=8,
                        big_partitions=1, waves=3)
     run_curation_job(spark, crashed)

@@ -106,7 +106,8 @@ def test_offsets_blocks_mode_roundtrips(spark, pages_table):
         assert ob == fb, url
 
 
-def test_resume_after_injected_failure(spark, pages_table, tmp_path):
+def test_resume_after_injected_failure(spark, pages_table, tmp_path,
+                                       crash):
     """Kill-after-K-waves → rerun → identical final table, no
     double-processing (SURVEY.md §5.2.5)."""
     from ocr_spark.job import read_extracted, run_extraction_job
@@ -114,9 +115,10 @@ def test_resume_after_injected_failure(spark, pages_table, tmp_path):
     root, rows = pages_table
     work = str(tmp_path / "work")
 
-    with pytest.raises(RuntimeError, match="injected failure"):
+    with crash("after_wave", 2), \
+            pytest.raises(RuntimeError, match="injected failure"):
         run_extraction_job(spark, root, work, partitions=16,
-                           big_partitions=2, waves=4, fail_after_waves=2)
+                           big_partitions=2, waves=4)
 
     partial = read_extracted(spark, work)
     n_partial = partial.count()
@@ -206,7 +208,8 @@ def test_typed_struct_views(spark, pages_table):
                                    "raw_text", "figure_text", "text_box"}
 
 
-def test_crash_after_stage_no_duplicates(spark, pages_table, tmp_path):
+def test_crash_after_stage_no_duplicates(spark, pages_table, tmp_path,
+                                         crash):
     """Crash window #1: data and manifest staged, nothing published. The
     staged snapshot is unreachable garbage: resume re-runs its buckets,
     the final table has exactly one row per url, and the tables never
@@ -218,10 +221,10 @@ def test_crash_after_stage_no_duplicates(spark, pages_table, tmp_path):
 
     root, _rows = pages_table
     work = str(tmp_path / "work_stage")
-    with pytest.raises(RuntimeError, match="after stage"):
+    with crash("after_stage", 2), \
+            pytest.raises(RuntimeError, match="after stage"):
         run_extraction_job(spark, root, work, partitions=16,
-                           big_partitions=2, waves=4, fail_after_waves=2,
-                           fail_point="after_stage")
+                           big_partitions=2, waves=4)
     out_root = os.path.join(work, "extracted")
     published = shim.history(out_root)
     staged = {f[len("snap-"):-len(".json")]
@@ -261,7 +264,8 @@ def _assert_tables_complete(spark, work: str, n_docs: int) -> None:
     assert ckpt == set(range(DEFAULT_BUCKETS))
 
 
-def test_crash_after_publish_repairs_tables(spark, pages_table, tmp_path):
+def test_crash_after_publish_repairs_tables(spark, pages_table, tmp_path,
+                                            crash):
     """Crash window #2: the pointer swap committed the wave, the table
     export did not run. The next job start writes the missing table rows
     from the manifest (``rolled_forward`` counts repaired waves) and
@@ -272,10 +276,10 @@ def test_crash_after_publish_repairs_tables(spark, pages_table, tmp_path):
 
     root, _rows = pages_table
     work = str(tmp_path / "work_pub")
-    with pytest.raises(RuntimeError, match="after publish"):
+    with crash("after_publish", 2), \
+            pytest.raises(RuntimeError, match="after publish"):
         run_extraction_job(spark, root, work, partitions=16,
-                           big_partitions=2, waves=4, fail_after_waves=2,
-                           fail_point="after_publish")
+                           big_partitions=2, waves=4)
     n_committed = read_extracted(spark, work).count()
     summary = run_extraction_job(spark, root, work, partitions=16,
                                  big_partitions=2, waves=4)
@@ -289,7 +293,7 @@ def test_crash_after_publish_repairs_tables(spark, pages_table, tmp_path):
 
 
 def test_resume_with_different_n_buckets_raises(spark, pages_table,
-                                                tmp_path):
+                                                tmp_path, crash):
     """Checkpoints name buckets by number, so a 32-bucket resume of a
     partial 64-bucket run would count docs with h mod 64 in 32..47 as
     done and never extract them. It must raise instead, from the full
@@ -304,9 +308,9 @@ def test_resume_with_different_n_buckets_raises(spark, pages_table,
     work = str(tmp_path / "work_nb")
     kw = dict(partitions=8, big_partitions=1, waves=4)
     for _ in range(2):  # two partial runs → two output snapshots
-        with pytest.raises(RuntimeError, match="injected failure"):
-            run_extraction_job(spark, root, work, n_buckets=64,
-                               fail_after_waves=1, **kw)
+        with crash("after_wave", 1), \
+                pytest.raises(RuntimeError, match="injected failure"):
+            run_extraction_job(spark, root, work, n_buckets=64, **kw)
     for job in (run_extraction_job, run_incremental_extraction_job):
         with pytest.raises(ValueError,
                            match="n_buckets=32 does not match n_buckets=64"):
@@ -449,7 +453,8 @@ def test_wave_writes_one_file_per_writer_task(spark, pages_table, tmp_path):
                       ).count() == 0
 
 
-def test_compact_rolls_forward_orphans_first(spark, pages_table, tmp_path):
+def test_compact_rolls_forward_orphans_first(spark, pages_table, tmp_path,
+                                             crash):
     """A published wave whose table export a crash skipped (crash window
     #2) leaves the chain at compaction: its table rows must be written
     BEFORE the rewrite, since afterwards no chain manifest carries its
@@ -463,10 +468,10 @@ def test_compact_rolls_forward_orphans_first(spark, pages_table, tmp_path):
 
     root, _rows = pages_table
     work = str(tmp_path / "work_compact_orphan")
-    with pytest.raises(RuntimeError, match="after publish"):
+    with crash("after_publish", 2), \
+            pytest.raises(RuntimeError, match="after publish"):
         run_extraction_job(spark, root, work, partitions=16,
-                           big_partitions=2, waves=4, fail_after_waves=2,
-                           fail_point="after_publish")
+                           big_partitions=2, waves=4)
     out_root = os.path.join(work, "extracted")
     assert len(os.listdir(lineage_path(work))) == 1  # wave 2 unexported
 
@@ -556,7 +561,7 @@ def test_full_job_after_append_does_not_duplicate(spark, tmp_path):
     assert len(urls) == 50 and len(set(urls)) == 50, "duplicates!"
 
 
-def test_incremental_resumes_partial_ancestor(spark, tmp_path):
+def test_incremental_resumes_partial_ancestor(spark, tmp_path, crash):
     """Crash mid-chain: s1 fully processed, s2 partially checkpointed,
     s3 appended. The increment must NOT treat partially-done s2 as
     processed — its remaining buckets resume, s3 extracts, and the
@@ -586,9 +591,10 @@ def test_incremental_resumes_partial_ancestor(spark, tmp_path):
     # s2 appended; the full run crashes after s2's first wave (s1 is
     # already fully checkpointed, so the failure hits s2's processing)
     shim.write_snapshot(to_df(rows[20:45]), root, snapshot_id="p2")
-    with pytest.raises(RuntimeError, match="injected failure"):
+    with crash("after_wave", 1), \
+            pytest.raises(RuntimeError, match="injected failure"):
         run_extraction_job(spark, root, work, partitions=8,
-                           big_partitions=1, waves=4, fail_after_waves=1)
+                           big_partitions=1, waves=4)
     n_partial = read_extracted(spark, work).count()
     assert 20 < n_partial < 45  # s2 partially committed
 

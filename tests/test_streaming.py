@@ -1,5 +1,6 @@
-"""Structured Streaming: incremental extraction (exactly-once across
-restarts), watermark windowed metrics, custom stateful counters."""
+"""Structured Streaming: incremental extraction into the job's output
+chain (exactly-once across restarts by the chain fold), watermark
+windowed metrics, custom stateful counters."""
 
 import os
 
@@ -7,6 +8,8 @@ import pandas as pd
 import pytest
 
 from ocr_spark.gen.corpus import generate_pages
+from ocr_spark.job import output_root, read_extracted
+from ocr_spark.sources import iceberg_shim as shim
 from ocr_spark.streaming.ingest import (
     stream_extract, stream_host_counters, stream_host_sessions,
     stream_page_metrics,
@@ -23,27 +26,71 @@ def _write_pages_batch(spark, rows, path):
 
 @pytest.fixture()
 def stream_dirs(tmp_path):
-    d = {k: str(tmp_path / k) for k in ("in", "out", "ckpt1", "ckpt2", "ckpt3")}
+    d = {k: str(tmp_path / k)
+         for k in ("in", "out", "work", "ckpt1", "ckpt2", "ckpt3")}
     os.makedirs(d["in"], exist_ok=True)
     return d
+
+
+def _urls(spark, work):
+    """The urls committed to ``work``'s extraction output chain."""
+    return [r.url for r in read_extracted(spark, work).select("url")
+            .collect()]
+
+
+def _stream_units(work):
+    """Input snapshot keys of the chain's streamed units, in commit
+    order."""
+    keys = (m.get("input_snapshot", "") for m in shim.chain_manifests(
+        output_root(work)))
+    return [key for key in keys if key.startswith("stream:")]
+
+
+def _unit_batches(work):
+    return {int(key.rsplit(":", 1)[1]) for key in _stream_units(work)}
+
+
+@pytest.fixture()
+def epochs_of(spark):
+    """``epochs_of(query_id)``: micro-batches handed to a sink body by
+    hand from then on are epochs of streaming query ``query_id``. Spark
+    sets this local property while it runs a micro-batch, and the chain
+    sinks key their commit unit on it."""
+    sc = spark.sparkContext
+    yield lambda query_id: sc.setLocalProperty("sql.streaming.queryId",
+                                               str(query_id))
+    sc.setLocalProperty("sql.streaming.queryId", None)
+
+
+def _drop_last_commit(ckpt):
+    """Forget the streaming checkpoint's last commit (a crash between the
+    sink's commit and Spark's commit log): the next start re-runs that
+    epoch with the same batch id."""
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    os.remove(os.path.join(commits, str(last)))
+    crc = os.path.join(commits, f".{last}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    return last
 
 
 def test_stream_extract_incremental_exactly_once(spark, stream_dirs):
     rows = generate_pages(40, oversized_rows=0)
     _write_pages_batch(spark, rows[:25], stream_dirs["in"])
 
-    q = stream_extract(spark, stream_dirs["in"], stream_dirs["out"],
+    q = stream_extract(spark, stream_dirs["in"], stream_dirs["work"],
                        stream_dirs["ckpt1"])
     q.awaitTermination()
-    first = spark.read.parquet(stream_dirs["out"])
+    first = read_extracted(spark, stream_dirs["work"])
     assert first.count() == 25
 
     # second wave of files: ONLY the new ones are processed
     _write_pages_batch(spark, rows[25:], stream_dirs["in"])
-    q = stream_extract(spark, stream_dirs["in"], stream_dirs["out"],
+    q = stream_extract(spark, stream_dirs["in"], stream_dirs["work"],
                        stream_dirs["ckpt1"])
     q.awaitTermination()
-    result = spark.read.parquet(stream_dirs["out"])
+    result = read_extracted(spark, stream_dirs["work"])
     assert result.count() == 40
     # no duplicates: every url exactly once
     assert result.select("url").distinct().count() == 40
@@ -178,10 +225,10 @@ def test_stream_extract_dedup_within_watermark(spark, stream_dirs):
         dups.append(d)
     _write_pages_batch(spark, rows + dups, stream_dirs["in"])
 
-    q = stream_extract_dedup(spark, stream_dirs["in"], stream_dirs["out"],
+    q = stream_extract_dedup(spark, stream_dirs["in"], stream_dirs["work"],
                              stream_dirs["ckpt1"], dedup_window="10 minutes")
     q.awaitTermination()
-    out = spark.read.parquet(stream_dirs["out"])
+    out = read_extracted(spark, stream_dirs["work"])
     assert out.count() == 20
     assert out.select("url").distinct().count() == 20
 
@@ -273,13 +320,7 @@ def test_appending_sink_replays_a_batch_exactly_once(spark, stream_dirs,
     _write_pages_batch(spark, second, stream_dirs["in"])
     drain()
     before = rows()
-    commits = os.path.join(stream_dirs["ckpt1"], "commits")
-    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
-    assert last >= 1
-    os.remove(os.path.join(commits, str(last)))
-    crc = os.path.join(commits, f".{last}.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
+    assert _drop_last_commit(stream_dirs["ckpt1"]) >= 1
     drain()
     assert len(before) > 0
     assert rows() == before
@@ -298,7 +339,7 @@ def test_stream_extract_near_dup_store(spark, tmp_path):
     from ocr_spark.streaming.ingest import stream_extract_near_dup
 
     d = {k: str(tmp_path / k)
-         for k in ("in", "out", "sigs", "ckpt")}
+         for k in ("in", "work", "sigs", "ckpt")}
     os.makedirs(d["in"], exist_ok=True)
 
     docs = {r.doc_id: r.text for r in spark.read.parquet(
@@ -320,11 +361,10 @@ def test_stream_extract_near_dup_store(spark, tmp_path):
         page("doc://mirror/11", 11, docs[11]),   # in-batch near-dup
     ]
     _write_pages_batch(spark, wave1, d["in"])
-    q = stream_extract_near_dup(spark, d["in"], d["out"], d["sigs"],
+    q = stream_extract_near_dup(spark, d["in"], d["work"], d["sigs"],
                                 d["ckpt"])
     q.awaitTermination()
-    out1 = {r.url for r in spark.read.parquet(d["out"])
-            .select("url").collect()}
+    out1 = set(_urls(spark, d["work"]))
     assert "doc://3" in out1 and "doc://5" in out1
     # exactly one of the in-batch mirror pair survives (min url wins)
     assert "doc://11" in out1 and "doc://mirror/11" not in out1
@@ -341,11 +381,10 @@ def test_stream_extract_near_dup_store(spark, tmp_path):
         page("doc://17", 17, docs2[17]),
     ]
     _write_pages_batch(spark, wave2, d["in"])
-    q = stream_extract_near_dup(spark, d["in"], d["out"], d["sigs"],
+    q = stream_extract_near_dup(spark, d["in"], d["work"], d["sigs"],
                                 d["ckpt"])
     q.awaitTermination()
-    out2 = {r.url for r in spark.read.parquet(d["out"])
-            .select("url").collect()}
+    out2 = set(_urls(spark, d["work"]))
     assert "doc://17" in out2
     assert "doc://recrawl/3" not in out2
     assert "doc://recrawl/5" not in out2
@@ -355,11 +394,13 @@ def test_stream_extract_near_dup_store(spark, tmp_path):
     assert {r.url for r in store.select("url").collect()} == out2
 
 
-def test_stream_near_dup_sink_idempotent(spark, tmp_path):
+def test_stream_near_dup_sink_idempotent(spark, tmp_path, crash,
+                                          epochs_of):
     """Exactly-once: re-delivering the SAME micro-batch (same batch_id
-    — what Spark does after a crash between the output write and the
-    checkpoint commit) must leave output and signature store
-    byte-identical to a single delivery, and the batch must not
+    — what Spark does after a crash between the sink's work and the
+    checkpoint commit) must leave the committed rows and the signature
+    store identical to a single delivery. A delivery that crashed after
+    storing its signatures but before its unit was published must not
     near-dup-collide with its own half-committed signatures."""
     from pyspark.sql import functions as F
 
@@ -367,7 +408,7 @@ def test_stream_near_dup_sink_idempotent(spark, tmp_path):
     from ocr_spark.operators.extraction import extract_pages
     from ocr_spark.streaming.ingest import near_dup_sink
 
-    out_dir = str(tmp_path / "out")
+    work = str(tmp_path / "work")
     sig_dir = str(tmp_path / "sigs")
 
     docs = spark.read.parquet(
@@ -380,14 +421,20 @@ def test_stream_near_dup_sink_idempotent(spark, tmp_path):
              "text": "", "lang": "en"} for r in docs]
     batch = extract_pages(spark.createDataFrame(rows))
 
-    sink = near_dup_sink(out_dir, sig_dir)
+    sink = near_dup_sink(work, sig_dir)
+    epochs_of("q-near-dup")
+    # crash after the signatures and the staged unit, before publish
+    with crash("after_stage", 1), \
+            pytest.raises(RuntimeError, match="after stage"):
+        sink(batch, 0)
+    assert shim.chain_manifests(output_root(work)) == []
+    sink(batch, 0)  # re-delivery: re-stages, publishes
+    first_out = sorted(_urls(spark, work))
+    chain = shim.chain_manifests(output_root(work))
+    # crash-replay of the committed epoch: the SAME batch_id again
     sink(batch, 0)
-    first_out = sorted(r.url for r in
-                       spark.read.parquet(out_dir).select("url").collect())
-    # crash-replay: the SAME batch_id delivered again
-    sink(batch, 0)
-    second_out = sorted(r.url for r in
-                        spark.read.parquet(out_dir).select("url").collect())
+    assert shim.chain_manifests(output_root(work)) == chain
+    second_out = sorted(_urls(spark, work))
     assert first_out == second_out == ["doc://3", "doc://5"]
     sigs = spark.read.parquet(sig_dir)
     assert sorted(r.url for r in sigs.select("url").collect()) \
@@ -400,14 +447,13 @@ def test_stream_near_dup_sink_idempotent(spark, tmp_path):
               "warc_ts": datetime.datetime(2025, 1, 2),
               "html": html_for_document(3, docs2[0].text),
               "text": "", "lang": "en"}]
-    batch2 = extract_pages(spark.createDataFrame(rows2))
-    sink(batch2, 1)
-    out = sorted(r.url for r in
-                 spark.read.parquet(out_dir).select("url").collect())
-    assert out == ["doc://3", "doc://5"]  # mirror dropped by the store
+    sink(extract_pages(spark.createDataFrame(rows2)), 1)
+    # mirror dropped by the store; its batch commits an empty unit
+    assert sorted(_urls(spark, work)) == ["doc://3", "doc://5"]
+    assert _unit_batches(work) == {0, 1}
 
 
-def test_compact_near_dup_store(spark, tmp_path):
+def test_compact_near_dup_store(spark, tmp_path, epochs_of):
     """Store compaction collapses per-batch partitions into batch=-1
     without changing probe verdicts: after compaction a mirror of an
     admitted doc is still dropped, and the store holds one partition."""
@@ -421,7 +467,7 @@ def test_compact_near_dup_store(spark, tmp_path):
         compact_near_dup_store, near_dup_sink,
     )
 
-    out_dir, sig_dir = str(tmp_path / "out"), str(tmp_path / "sigs")
+    work, sig_dir = str(tmp_path / "work"), str(tmp_path / "sigs")
 
     def batch_for(pairs):
         rows = [{"url": u,
@@ -433,7 +479,8 @@ def test_compact_near_dup_store(spark, tmp_path):
     docs = {r.doc_id: r.text for r in spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet")
         .filter(F.col("doc_id").isin(3, 5, 17)).collect()}
-    sink = near_dup_sink(out_dir, sig_dir)
+    sink = near_dup_sink(work, sig_dir)
+    epochs_of("q-compact")
     sink(batch_for([("doc://3", 3, docs[3])]), 0)
     sink(batch_for([("doc://5", 5, docs[5])]), 1)
 
@@ -445,9 +492,7 @@ def test_compact_near_dup_store(spark, tmp_path):
     # probe still works against the consolidated store
     sink(batch_for([("doc://mirror/3", 3, docs[3]),
                     ("doc://17", 17, docs[17])]), 2)
-    out = {r.url for r in spark.read.parquet(out_dir)
-           .select("url").collect()}
-    assert out == {"doc://3", "doc://5", "doc://17"}
+    assert set(_urls(spark, work)) == {"doc://3", "doc://5", "doc://17"}
     # compaction is re-runnable and absorbs the new batch
     res2 = compact_near_dup_store(spark, sig_dir)
     assert res2["rows"] == 3
@@ -529,7 +574,7 @@ def test_compact_near_dup_store_survives_a_crash_at_every_step(
     assert at > 5   # the write, >=1 rename and 3 removals each crashed
 
 
-def test_near_dup_sink_periodic_compaction(spark, tmp_path):
+def test_near_dup_sink_periodic_compaction(spark, tmp_path, epochs_of):
     """compact_every wires store maintenance into the sink itself:
     every N batches the per-batch partitions fold into batch=-1 with
     keep_last=1 protecting the just-written epoch, so a crash-replay
@@ -544,7 +589,7 @@ def test_near_dup_sink_periodic_compaction(spark, tmp_path):
     from ocr_spark.operators.extraction import extract_pages
     from ocr_spark.streaming.ingest import near_dup_sink
 
-    out_dir, sig_dir = str(tmp_path / "out"), str(tmp_path / "sigs")
+    work, sig_dir = str(tmp_path / "work"), str(tmp_path / "sigs")
 
     def batch_for(pairs):
         rows = [{"url": u,
@@ -556,7 +601,8 @@ def test_near_dup_sink_periodic_compaction(spark, tmp_path):
     docs = {r.doc_id: r.text for r in spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet")
         .filter(F.col("doc_id").isin(3, 5, 17, 23)).collect()}
-    sink = near_dup_sink(out_dir, sig_dir, compact_every=2)
+    sink = near_dup_sink(work, sig_dir, compact_every=2)
+    epochs_of("q-periodic")
 
     sink(batch_for([("doc://3", 3, docs[3])]), 0)
     dirs = sorted(d for d in os.listdir(sig_dir) if d.startswith("batch="))
@@ -570,9 +616,7 @@ def test_near_dup_sink_periodic_compaction(spark, tmp_path):
     # crash-replay of the triggering epoch: output unchanged, no
     # self-collision against batch=-1 (which must not hold doc://5)
     sink(b1, 1)
-    out = sorted(r.url for r in spark.read.parquet(out_dir)
-                 .select("url").collect())
-    assert out == ["doc://3", "doc://5"]
+    assert sorted(_urls(spark, work)) == ["doc://3", "doc://5"]
     dirs = sorted(d for d in os.listdir(sig_dir) if d.startswith("batch="))
     assert dirs == ["batch=-1", "batch=1"]
 
@@ -580,9 +624,7 @@ def test_near_dup_sink_periodic_compaction(spark, tmp_path):
     # compacted doc://3 is dropped, fresh content admitted
     sink(batch_for([("doc://mirror/3", 3, docs[3]),
                     ("doc://17", 17, docs[17])]), 2)
-    out = sorted(r.url for r in spark.read.parquet(out_dir)
-                 .select("url").collect())
-    assert out == ["doc://17", "doc://3", "doc://5"]
+    assert sorted(_urls(spark, work)) == ["doc://17", "doc://3", "doc://5"]
     # next trigger absorbs batches 1 and 2's survivors
     sink(batch_for([("doc://23", 23, docs[23])]), 3)
     store = spark.read.parquet(sig_dir)
@@ -957,18 +999,18 @@ def test_stream_dedup_under_rocksdb_state_store(spark, stream_dirs):
     key = "spark.sql.streaming.stateStore.providerClass"
     rocks = ("org.apache.spark.sql.execution.streaming.state."
              "RocksDBStateStoreProvider")
-    out2 = stream_dirs["out"] + "_rocks"
+    work2 = stream_dirs["work"] + "_rocks"
     try:
         old = spark.conf.get(key)
     except Exception:
         old = None
     # default provider run
-    q = stream_extract_dedup(spark, stream_dirs["in"], stream_dirs["out"],
+    q = stream_extract_dedup(spark, stream_dirs["in"], stream_dirs["work"],
                              stream_dirs["ckpt1"], dedup_window="10 minutes")
     q.awaitTermination()
     spark.conf.set(key, rocks)
     try:
-        q = stream_extract_dedup(spark, stream_dirs["in"], out2,
+        q = stream_extract_dedup(spark, stream_dirs["in"], work2,
                                  stream_dirs["ckpt2"],
                                  dedup_window="10 minutes")
         q.awaitTermination()
@@ -977,8 +1019,8 @@ def test_stream_dedup_under_rocksdb_state_store(spark, stream_dirs):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, old)
-    base = spark.read.parquet(stream_dirs["out"])
-    rocksdb_out = spark.read.parquet(out2)
+    base = read_extracted(spark, stream_dirs["work"])
+    rocksdb_out = read_extracted(spark, work2)
     assert rocksdb_out.count() == base.count() == 20
     assert ({r.url for r in rocksdb_out.select("url").collect()}
             == {r.url for r in base.select("url").collect()})
@@ -1036,8 +1078,9 @@ def test_stream_near_dup_state_remembers_across_batches(spark, stream_dirs):
         assert got[n["url"]]["dup"] == "false"
 
 
-def test_stream_extract_dlq_routing_and_exactly_once(spark, stream_dirs):
-    """Clean rows land in output, malformed rows land in quarantine
+def test_stream_extract_dlq_routing_and_exactly_once(spark, stream_dirs,
+                                                     epochs_of):
+    """Clean rows commit to the chain, malformed rows land in quarantine
     with the FIRST failing constraint named, nothing vanishes, and
     re-delivering the same epoch leaves both sides identical."""
     from ocr_spark.streaming.ingest import dlq_sink, stream_extract_dlq
@@ -1053,15 +1096,16 @@ def test_stream_extract_dlq_routing_and_exactly_once(spark, stream_dirs):
                  "text": "", "lang": "en"})
     _write_pages_batch(spark, rows, stream_dirs["in"])
 
-    qdir = str(os.path.join(os.path.dirname(stream_dirs["out"]), "dlq"))
-    q = stream_extract_dlq(spark, stream_dirs["in"], stream_dirs["out"],
-                           qdir, stream_dirs["ckpt1"])
+    work = stream_dirs["work"]
+    qdir = str(os.path.join(os.path.dirname(work), "dlq"))
+    q = stream_extract_dlq(spark, stream_dirs["in"], work, qdir,
+                           stream_dirs["ckpt1"])
     q.awaitTermination()
 
-    good = spark.read.parquet(stream_dirs["out"])
+    good = read_extracted(spark, work)
     bad = spark.read.parquet(qdir)
     assert good.count() + bad.count() == len(rows)   # nothing vanishes
-    good_urls = {r.url for r in good.select("url").collect()}
+    good_urls = set(_urls(spark, work))
     reasons = {r.url: r.dlq_reason for r in bad.collect()}
     assert "doc://bad-bytes" not in good_urls
     assert "doc://no-content" not in good_urls
@@ -1069,45 +1113,47 @@ def test_stream_extract_dlq_routing_and_exactly_once(spark, stream_dirs):
     assert reasons["doc://bad-bytes"] in ("extract_error", "empty_text")
     assert len(good_urls) == len(rows) - len(reasons)
 
-    # exactly-once: re-running the sink body with the same batch_id
-    # replaces partitions with identical content
+    # exactly-once: re-running the sink body on the query's epoch with
+    # the same batch_id changes neither side
     batch_dir = sorted(os.listdir(qdir))[0]
     before = sorted(
         (r.url, r.dlq_reason) for r in
         spark.read.parquet(os.path.join(qdir, batch_dir)).collect())
-    sink = dlq_sink(stream_dirs["out"], qdir)
+    chain = shim.chain_manifests(output_root(work))
+    sink = dlq_sink(work, qdir)
     bid = int(batch_dir.split("=")[1])
-    full = spark.read.parquet(
-        os.path.join(stream_dirs["out"], batch_dir)).unionByName(
+    full = good.unionByName(
         spark.read.parquet(os.path.join(qdir, batch_dir))
-        .drop("dlq_reason")).localCheckpoint()  # break file lineage:
-    # the sink overwrites the very files this frame was read from
+        .drop("dlq_reason")).localCheckpoint()
+    epochs_of(q.id)
     sink(full, bid)
     after = sorted(
         (r.url, r.dlq_reason) for r in
         spark.read.parquet(os.path.join(qdir, batch_dir)).collect())
     assert after == before
-    assert spark.read.parquet(stream_dirs["out"]).count() == len(good_urls)
+    assert shim.chain_manifests(output_root(work)) == chain
+    assert read_extracted(spark, work).count() == len(good_urls)
 
 
-def test_stream_validation_gate_fails_batch_and_resumes(spark, stream_dirs):
+def test_stream_validation_gate_fails_batch_and_resumes(spark, stream_dirs,
+                                                        epochs_of):
     """Round-4 verdict #6: the streaming promotion gate runs the batch
     job's FULL constraint suite per micro-batch with a fail-the-batch
     policy — a constraint-failed batch commits NOTHING to the output
-    table (vs dlq row routing), its gate verdict lands in lineage,
+    chain (vs dlq row routing), its gate verdict lands in the report,
     and the stream resumes cleanly: a later clean batch commits, the
     failed batch stays uncommitted, and re-delivering the failed
     epoch re-evaluates to the identical verdict."""
     from ocr_spark.streaming.ingest import (
         stream_extract_validated, validation_gate_sink)
 
-    out, lineage = stream_dirs["out"], str(
-        os.path.join(os.path.dirname(stream_dirs["out"]), "gate_lineage"))
+    work, report = stream_dirs["work"], str(
+        os.path.join(os.path.dirname(stream_dirs["work"]), "gate_report"))
 
     # batch 0: clean → commits
     clean = generate_pages(20, oversized_rows=0)
     _write_pages_batch(spark, clean, stream_dirs["in"])
-    q = stream_extract_validated(spark, stream_dirs["in"], out, lineage,
+    q = stream_extract_validated(spark, stream_dirs["in"], work, report,
                                  stream_dirs["ckpt1"])
     q.awaitTermination()
 
@@ -1119,7 +1165,7 @@ def test_stream_validation_gate_fails_batch_and_resumes(spark, stream_dirs):
                        "html": b"\xff\xfe\xff invalid \xff",
                        "text": "", "lang": "en"})
     _write_pages_batch(spark, poison, stream_dirs["in"])
-    q = stream_extract_validated(spark, stream_dirs["in"], out, lineage,
+    q = stream_extract_validated(spark, stream_dirs["in"], work, report,
                                  stream_dirs["ckpt1"])
     q.awaitTermination()
 
@@ -1127,20 +1173,17 @@ def test_stream_validation_gate_fails_batch_and_resumes(spark, stream_dirs):
     clean2 = generate_pages(10, seed=11, oversized_rows=0)
     clean2 = [dict(r, url=r["url"] + "?v=2") for r in clean2]
     _write_pages_batch(spark, clean2, stream_dirs["in"])
-    q = stream_extract_validated(spark, stream_dirs["in"], out, lineage,
+    q = stream_extract_validated(spark, stream_dirs["in"], work, report,
                                  stream_dirs["ckpt1"])
     q.awaitTermination()
 
-    committed = spark.read.parquet(out)
-    urls = {r.url for r in committed.select("url").collect()}
+    urls = set(_urls(spark, work))
     # the failed batch contributed NOTHING; both clean batches fully in
     assert urls == ({r["url"] for r in clean}
                     | {r["url"] for r in clean2})
-    data_batches = {int(d.split("=")[1]) for d in os.listdir(out)
-                    if d.startswith("batch_id=")}
-    assert data_batches == {0, 2}
+    assert _unit_batches(work) == {0, 2}
 
-    lin = spark.read.parquet(lineage)
+    lin = spark.read.parquet(report)
     pdf = lin.toPandas()
     assert set(pdf["batch_id"]) == {0, 1, 2}   # verdicts for ALL batches
     by_batch = {b: g for b, g in pdf.groupby("batch_id")}
@@ -1166,14 +1209,14 @@ def test_stream_validation_gate_fails_batch_and_resumes(spark, stream_dirs):
     before = sorted(map(tuple, pdf[pdf["batch_id"] == 1]
                         [["constraint", "violations", "passed"]]
                         .itertuples(index=False)))
-    validation_gate_sink(out, lineage)(frame, 1)
-    after_pdf = spark.read.parquet(lineage).toPandas()
+    epochs_of(q.id)
+    validation_gate_sink(work, report)(frame, 1)
+    after_pdf = spark.read.parquet(report).toPandas()
     after = sorted(map(tuple, after_pdf[after_pdf["batch_id"] == 1]
                        [["constraint", "violations", "passed"]]
                        .itertuples(index=False)))
     assert after == before
-    assert {int(d.split("=")[1]) for d in os.listdir(out)
-            if d.startswith("batch_id=")} == {0, 2}
+    assert _unit_batches(work) == {0, 2}
 
 
 def test_stream_routed_matches_batch_router_and_censuses(spark, stream_dirs):
@@ -1188,10 +1231,10 @@ def test_stream_routed_matches_batch_router_and_censuses(spark, stream_dirs):
 
     rows = generate_pages(40, oversized_rows=1)
     _write_pages_batch(spark, rows, stream_dirs["in"])
-    out = stream_dirs["out"]
-    lineage = str(os.path.join(os.path.dirname(out), "route_census"))
+    work = stream_dirs["work"]
+    census_dir = str(os.path.join(os.path.dirname(work), "route_census"))
 
-    q = stream_extract_routed(spark, stream_dirs["in"], out, lineage,
+    q = stream_extract_routed(spark, stream_dirs["in"], work, census_dir,
                               stream_dirs["ckpt1"])
     q.awaitTermination()
 
@@ -1202,10 +1245,9 @@ def test_stream_routed_matches_batch_router_and_censuses(spark, stream_dirs):
         "url", route_for_html(F.col("html")).alias("route")).collect()}
     keep = {u for u, r in expect.items() if r in ("extract", "oversized")}
 
-    got = {r.url for r in spark.read.parquet(out).select("url").collect()}
-    assert got == keep
+    assert set(_urls(spark, work)) == keep
 
-    census = spark.read.parquet(lineage).collect()
+    census = spark.read.parquet(census_dir).collect()
     assert sum(r.n_pages for r in census) == len(rows)  # full accounting
     by_route = {r.route: r.n_pages for r in census}
     from collections import Counter
@@ -1279,3 +1321,198 @@ def test_stream_quality_psi_flags_distribution_shift(spark, stream_dirs,
     after = spark.read.parquet(
         os.path.join(out, "batch_id=1")).collect()[0].asDict()
     assert after == before
+
+
+def _pages_table(spark, rows, root, snapshot_id=None):
+    """Commit ``rows`` as one snapshot of an input pages table."""
+    shim.write_snapshot(spark.createDataFrame(
+        [(r["url"], r["warc_ts"], bytearray(r["html"]), r["text"],
+          r["lang"]) for r in rows],
+        "url string, warc_ts timestamp, html binary, text string, "
+        "lang string"), root, snapshot_id=snapshot_id)
+
+
+def test_stream_and_batch_commit_equal_rows(spark, stream_dirs, tmp_path):
+    """One write path: streaming two files of a corpus and running the
+    batch job over the same pages commit equal rows to the chain (every
+    column but the per-doc timing), and curation keeps the same urls."""
+    from ocr_spark.job import (
+        curation_root, run_curation_job, run_extraction_job,
+    )
+
+    rows = generate_pages(40)
+    for part in (rows[:20], rows[20:]):
+        _write_pages_batch(spark, part, stream_dirs["in"])
+    stream_extract(spark, stream_dirs["in"], stream_dirs["work"],
+                   stream_dirs["ckpt1"]).awaitTermination()
+    batch_work = str(tmp_path / "batch_work")
+    _pages_table(spark, rows, str(tmp_path / "pages"))
+    run_extraction_job(spark, str(tmp_path / "pages"), batch_work,
+                       partitions=4, big_partitions=1, waves=2)
+
+    def committed(work):
+        return sorted(tuple(r) for r in read_extracted(spark, work)
+                      .drop("extract_ms").collect())
+
+    streamed = committed(stream_dirs["work"])
+    assert len(streamed) == 40
+    assert streamed == committed(batch_work)
+
+    def kept(work):
+        run_curation_job(spark, work)
+        return {r.url for r in shim.read_current(spark, curation_root(work))
+                .filter("keep").select("url").collect()}
+
+    kept_streamed = kept(stream_dirs["work"])
+    assert kept_streamed and kept_streamed == kept(batch_work)
+
+
+def test_url_in_two_micro_batches_fails_validation(spark, stream_dirs):
+    """Each micro-batch's gate sees its own rows only, but every batch is
+    a unit of the work dir's chain: the batch validation job over the
+    work dir counts a url committed by two micro-batches."""
+    import datetime as dt
+
+    from ocr_spark.job import run_validation_job
+
+    rows = generate_pages(20, oversized_rows=0)
+    recrawl = dict(rows[0], warc_ts=rows[0]["warc_ts"] + dt.timedelta(1))
+    for part in (rows[:10], rows[10:] + [recrawl]):
+        _write_pages_batch(spark, part, stream_dirs["in"])
+        stream_extract(spark, stream_dirs["in"], stream_dirs["work"],
+                       stream_dirs["ckpt1"]).awaitTermination()
+    report = run_validation_job(spark, stream_dirs["work"])
+    assert report["failed"] == {"url_unique": 1}
+    assert len(_stream_units(stream_dirs["work"])) == 2
+
+
+def test_stream_replay_commits_nothing(spark, stream_dirs):
+    """Exactly-once on replay is the chain fold: an epoch Spark re-runs
+    (its commit log entry lost) finds its unit committed, runs no Spark
+    job and commits nothing — also after compaction folded the unit."""
+    from ocr_spark.job import compact_snapshots
+    from ocr_spark.operators.bookkeeping import lineage_path
+
+    rows = generate_pages(30, oversized_rows=0)
+    work, ckpt = stream_dirs["work"], stream_dirs["ckpt1"]
+    tracker = spark.sparkContext.statusTracker()
+
+    def drain():
+        q = stream_extract(spark, stream_dirs["in"], work, ckpt)
+        q.awaitTermination()
+        return list(tracker.getJobIdsForGroup(str(q.runId)))
+
+    for part in (rows[:18], rows[18:]):
+        _write_pages_batch(spark, part, stream_dirs["in"])
+        assert drain()  # the batch's own group runs its Spark jobs
+
+    def docs_in_lineage():
+        return (spark.read.parquet(lineage_path(work)).groupBy()
+                .sum("doc_count").collect()[0][0])
+
+    units = _stream_units(work)
+    assert len(units) == len(set(units)) == 2
+    assert docs_in_lineage() == 30
+    chain = shim.chain_manifests(output_root(work))
+
+    assert _drop_last_commit(ckpt) == 1
+    assert drain() == []
+    assert shim.chain_manifests(output_root(work)) == chain
+    assert docs_in_lineage() == 30
+
+    compact_snapshots(spark, work)
+    _drop_last_commit(ckpt)
+    assert drain() == []
+    assert _stream_units(work) == []  # folded into the compaction
+    assert sorted(_urls(spark, work)) == sorted(r["url"] for r in rows)
+    assert docs_in_lineage() == 30
+
+
+def test_stream_crash_after_publish_is_repaired(spark, stream_dirs,
+                                                tmp_path, crash):
+    """A crash between a micro-batch's publish and its table export
+    leaves a committed unit without table rows; the next stream start
+    (its replayed epoch) or the next batch job start writes them from
+    the manifest."""
+    from ocr_spark.job import run_extraction_job
+    from ocr_spark.operators.bookkeeping import lineage_path
+
+    rows = generate_pages(24, oversized_rows=0)
+    work, ckpt = stream_dirs["work"], stream_dirs["ckpt1"]
+
+    def drain():
+        stream_extract(spark, stream_dirs["in"], work,
+                       ckpt).awaitTermination()
+
+    def lineage_files():
+        d = lineage_path(work)
+        return sorted(os.listdir(d)) if os.path.isdir(d) else []
+
+    _write_pages_batch(spark, rows[:10], stream_dirs["in"])
+    with crash("after_publish", 1), \
+            pytest.raises(Exception, match="injected failure"):
+        drain()
+    assert len(_stream_units(work)) == 1 and lineage_files() == []
+    drain()  # the stream start: its replayed epoch repairs, commits none
+    assert len(_stream_units(work)) == 1 and len(lineage_files()) == 1
+
+    _write_pages_batch(spark, rows[10:20], stream_dirs["in"])
+    with crash("after_publish", 1), \
+            pytest.raises(Exception, match="injected failure"):
+        drain()
+    assert len(_stream_units(work)) == 2 and len(lineage_files()) == 1
+    _pages_table(spark, rows[20:], str(tmp_path / "pages"))
+    summary = run_extraction_job(spark, str(tmp_path / "pages"), work,
+                                 partitions=2, big_partitions=1, waves=1)
+    assert summary["rolled_forward"] == 1
+    assert (spark.read.parquet(lineage_path(work)).groupBy()
+            .sum("doc_count").collect()[0][0]) == 24
+    assert sorted(_urls(spark, work)) == sorted(r["url"] for r in rows)
+
+
+def test_stream_into_other_n_buckets_raises(spark, stream_dirs, tmp_path):
+    """Units name buckets by number: a stream (which commits under the
+    default bucket count) into a work dir whose chain recorded another
+    ``n_buckets`` raises before it commits anything."""
+    from ocr_spark.job import run_extraction_job
+
+    rows = generate_pages(12, oversized_rows=0)
+    _pages_table(spark, rows[:6], str(tmp_path / "pages"))
+    run_extraction_job(spark, str(tmp_path / "pages"), stream_dirs["work"],
+                       partitions=2, big_partitions=1, n_buckets=32,
+                       waves=1)
+    chain = shim.chain_manifests(output_root(stream_dirs["work"]))
+    _write_pages_batch(spark, rows[6:], stream_dirs["in"])
+    with pytest.raises(Exception, match="n_buckets=64 does not match"):
+        stream_extract(spark, stream_dirs["in"], stream_dirs["work"],
+                       stream_dirs["ckpt1"]).awaitTermination()
+    assert shim.chain_manifests(output_root(stream_dirs["work"])) == chain
+
+
+def test_stream_extract_lands_in_job_tables(spark, stream_dirs):
+    """A streamed micro-batch is a unit of the job's lineage, checkpoint
+    and metrics tables: doc counts cover every document once, with one
+    unit per micro-batch."""
+    from ocr_spark.operators import bookkeeping as bk
+    from ocr_spark.operators.extraction import DEFAULT_BUCKETS
+
+    rows = generate_pages(40, oversized_rows=0)
+    work = stream_dirs["work"]
+    for part in (rows[:25], rows[25:]):
+        _write_pages_batch(spark, part, stream_dirs["in"])
+        stream_extract(spark, stream_dirs["in"], work,
+                       stream_dirs["ckpt1"]).awaitTermination()
+
+    assert len(set(_urls(spark, work))) == 40
+    lin = spark.read.parquet(bk.lineage_path(work)).toPandas()
+    # one unit per micro-batch, covering every document exactly once
+    units = _stream_units(work)
+    assert len(units) == 2 and set(lin["snapshot_id"]) == set(units)
+    assert int(lin["doc_count"].sum()) == 40
+    assert int(lin["failed_count"].sum()) == 0
+    met = spark.read.parquet(bk.metrics_path(work)).toPandas()
+    assert (met["bytes_in"] > 0).all() and int(met["docs"].sum()) == 40
+    ckpt = spark.read.parquet(bk.checkpoints_path(work)).toPandas()
+    for unit in units:  # each unit checkpoints the whole bucket range
+        assert sorted(ckpt[ckpt["snapshot_id"] == unit]["url_hash_bucket"]) \
+            == list(range(DEFAULT_BUCKETS))
